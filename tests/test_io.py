@@ -261,3 +261,10 @@ def test_read_binary_files_extensionless_media_type(spark, tmp_path):
             read_binary_files(spark, str(d)).collect()}
     assert rows["README"] is None
     assert rows["clip.WAV"] == "wav"
+
+
+def test_session_factory_leaves_fifo_scheduler(spark):
+    """get_session sets no scheduler mode: the app runs Spark's default
+    FIFO pool, which the engine's driver-thread job overlaps rely on."""
+    assert spark.sparkContext.getConf().get("spark.scheduler.mode") is None
+    assert spark.sparkContext._jsc.sc().getSchedulingMode().toString() == "FIFO"

@@ -1321,43 +1321,3 @@ def test_pin_result_cap_bounds_work_and_raises(spark, tmp_path):
     assert sorted((r.id, r.v) for r in pinned.collect()) == [
         (i, i * 3) for i in range(7)
     ]
-
-
-def test_pin_result_reliable_checkpoint_flag(spark, tmp_path, monkeypatch):
-    """WSSPARK_PIN_CHECKPOINT_DIR switches the pin from localCheckpoint to
-    a reliable storage-backed checkpoint (for preemptible fleets); values
-    are unchanged and the pinned RDD is a RELIABLE (not local)
-    checkpoint. The flag's dir is only adopted when the context has no
-    checkpoint dir yet (it never clobbers one another component set), so
-    the assertion targets the checkpoint KIND, not a specific path."""
-    from wsspark.queries.llm import _pin_result
-
-    import os
-    from urllib.parse import unquote, urlparse
-
-    def _ckpt_files():
-        opt = spark.sparkContext._jsc.sc().getCheckpointDir()
-        if opt.isEmpty():
-            return None, frozenset()
-        raw = opt.get()
-        path = unquote(urlparse(raw).path) or raw
-        return path, frozenset(
-            os.path.join(dp, f)
-            for dp, _dn, fn in os.walk(path)
-            for f in fn
-        )
-
-    monkeypatch.setenv(
-        "WSSPARK_PIN_CHECKPOINT_DIR", str(tmp_path / "reliable")
-    )
-    _path_before, before = _ckpt_files()
-    df = spark.range(0, 9)
-    pinned = _pin_result(df, cap=100)
-    assert sorted(r.id for r in pinned.collect()) == list(range(9))
-    path_after, after = _ckpt_files()
-    assert path_after is not None, "no checkpoint dir after a reliable pin"
-    new_files = after - before
-    assert new_files, (
-        "no new files under the context checkpoint dir "
-        f"{path_after!r} — the pin did not checkpoint to reliable storage"
-    )

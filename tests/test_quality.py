@@ -696,6 +696,25 @@ def test_ks_drift_outlier_skew_keeps_buckets_populated(spark):
     assert spread["v"] > 100
 
 
+def test_ks_drift_big_path_failure_releases_grouped_cache(spark, monkeypatch):
+    """A failure AFTER the big path persisted its grouped frame (here:
+    the fold) must not leak the cached blocks — the persistent-RDD count
+    returns to its value from before the call."""
+    from wsspark import quality
+
+    def _boom(grouped):
+        raise RuntimeError("fold failed")
+
+    base = spark.range(0, 600).select((F.col("id") / 7).alias("v"))
+    cur = spark.range(200, 800).select((F.col("id") / 7).alias("v"))
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    monkeypatch.setattr(quality, "_ks_fold_best", _boom)
+    with pytest.raises(RuntimeError, match="fold failed"):
+        quality.ks_drift(base, cur, ["v"], small_distinct=10)
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_drift_topk_salted_rank_matches_plain(spark):
     """The two-phase salted top-k must select the same deterministic
     bucket set as a driver-side plain rank (count desc, value asc)."""

@@ -333,6 +333,30 @@ def test_stage_publish_on_detail_backed_store(spark, detail_mode, tmp_path):
     assert ss.snap_count(root) == 200
 
 
+def test_retired_part_stage_format_asks_for_restage(spark, tmp_path):
+    """A staged JSON whose metadata rides in ``detail_parts`` (the
+    retired task-written stage format) fails read and publish with a
+    clear re-stage error, and abort still removes it."""
+    root = str(tmp_path / "t")
+    ss.snap_commit(spark.range(0, 10).select(F.col("id")), root)
+    sid = ss.snap_stage(spark.range(10, 20).select(F.col("id")), root)
+    path = ss._staged_path(root, sid)
+    with open(path) as f:
+        st = json.load(f)
+    for k in ("files", "file_stats", "file_blooms"):
+        st.pop(k)
+    st.update({"detail_parts": ["s-x-00000.detail.parquet"], "file_count": 1})
+    with open(path, "w") as f:
+        json.dump(st, f)
+    with pytest.raises(ValueError, match="re-stage"):
+        ss.snap_read_staged(spark, root, sid)
+    with pytest.raises(ValueError, match="re-stage"):
+        ss.snap_publish_staged(root, sid)
+    ss.snap_abort_staged(root, sid)
+    assert not os.path.exists(path) and not os.path.exists(st["commit_dir"])
+    assert ss.snap_current_version(root) == 0 and ss.snap_count(root) == 10
+
+
 def test_lost_race_removes_its_sidecar(spark, detail_mode, tmp_path):
     root = str(tmp_path / "t")
     ss.snap_commit(spark.range(0, 50).select(F.col("id")), root)
@@ -1315,3 +1339,135 @@ def test_compact_details_loses_race_cleanly(spark, detail_mode, tmp_path, monkey
     # retry after the lost race succeeds
     assert ss.snap_compact_details(root) is not None
     assert ss.snap_count(root) == 31
+
+
+# ---------------------------------------------------------------------------
+# The stats type matrix through a forced-sidecar commit
+
+MATRIX_STATS = ["id", "big", "x", "s", "ts", "ntz", "d", "b", "dec"]
+MATRIX_BLOOMS = ["s", "id"]
+# ts/ntz/d are compared as the ISO text the manifest stores; the others
+# compare as Python values (int/float/Decimal mix compares exactly)
+_AS_TEXT = ("ts", "ntz", "d")
+
+
+def _typed_df(spark, n=800, parts=6):
+    """One column per stats family: >2^53 longs, doubles, strings,
+    session-tz timestamps, NTZ, dates, booleans, and decimals whose
+    float bounds need directional rounding."""
+    return (
+        spark.range(0, n)
+        .select(
+            F.col("id"),
+            (F.col("id") * 2 + 9_007_199_254_740_993).alias("big"),
+            (F.col("id").cast("double") / 3).alias("x"),
+            F.concat(F.lit("k"), (F.col("id") % 97).cast("string")).alias("s"),
+            F.timestamp_seconds(F.col("id") * 37 + 1_700_000_000).alias("ts"),
+            F.timestamp_seconds(F.col("id") * 41 + 1_650_000_000)
+            .cast("timestamp_ntz")
+            .alias("ntz"),
+            F.to_date(
+                F.timestamp_seconds(F.col("id") * 1337 + 1_600_000_000)
+            ).alias("d"),
+            (F.col("id") % 7 == 0).alias("b"),
+            # (id + 1) / 7: several file bounds whose nearest float lies
+            # on the unsafe side, so only directional rounding brackets
+            ((F.col("id") + 1).cast("decimal(38,4)") / 7).alias("dec"),
+        )
+        .repartitionByRange(parts, "id")
+    )
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
+def test_type_matrix_sidecar_stats_bracket_and_prune(spark, tmp_path, tz):
+    """Every supported stats type through the driver pass into a forced
+    sidecar with an O(1) head: each file's recorded [min, max] brackets
+    every value it holds (in the session-tz text domain for temporal
+    columns), and range / equality reads planned from those stats return
+    exactly the rows a plain filter returns."""
+    from urllib.parse import unquote, urlparse
+
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        root = str(tmp_path / "t")
+        with ss.snap_metadata_thresholds(detail_inline_max=0, files_inline_max=0):
+            v = ss.snap_commit(
+                _typed_df(spark), root, mode="overwrite",
+                stats_cols=MATRIX_STATS, bloom_cols=MATRIX_BLOOMS,
+                bloom_bits=1 << 12, bloom_k=4,
+            )
+        head = _head(root, v)
+        assert _parts(head) and head.get("files_in_detail")
+        assert head.get("detail_exact") and "file_stats" not in head
+        m = ss._read_manifest(root, v)
+        assert len(m["files"]) == 6 and set(m["file_stats"]) == set(m["files"])
+
+        full = ss.snap_read(spark, root)
+        # ts/ntz/d rendered as the stats text domain: ISO wall clock in
+        # the SESSION timezone (whole seconds, so no fraction)
+        rows = full.select(
+            F.col("_metadata.file_path").alias("_p"),
+            *[
+                F.regexp_replace(F.col(c).cast("string"), " ", "T").alias(c)
+                if c in _AS_TEXT
+                else F.col(c)
+                for c in MATRIX_STATS
+            ],
+        ).collect()
+        seen = set()
+        for r in rows:
+            path = unquote(urlparse(r["_p"]).path)
+            seen.add(path)
+            per = m["file_stats"][path]
+            for c in MATRIX_STATS:
+                lo, hi = per[c]
+                assert lo <= r[c] <= hi, (path, c, lo, r[c], hi)
+        assert seen == set(m["files"])
+
+        def _same(pruned, pred):
+            want = full.filter(pred)
+            assert pruned.count() == want.count()
+            assert pruned.exceptAll(want).count() == 0
+
+        by_id = {r["id"]: r for r in rows}
+        lo_r, hi_r = by_id[200], by_id[390]
+        for c in MATRIX_STATS:
+            lo, hi = sorted([lo_r[c], hi_r[c]])
+            _same(
+                ss.snap_read_between(spark, root, c, lo, hi),
+                F.col(c).between(F.lit(lo), F.lit(hi)),
+            )
+        kept, total = ss.snap_prune_files(root, "id", 200, 390)
+        assert 0 < len(kept) < total, "clustered id range prunes files"
+        probe = by_id[123]
+        for c in ("s", "id", "big", "d", "b"):
+            _same(
+                ss.snap_read_where_eq(spark, root, c, probe[c]),
+                F.col(c) == F.lit(probe[c]),
+            )
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+
+
+def test_unparseable_session_timezone_keeps_timestamp_stats(spark, tmp_path):
+    """A session timezone Spark accepts but zoneinfo cannot parse
+    (``GMT+08:00``) leaves timestamp stats in the system domain instead
+    of guessing — and the sidecar commit, its stats and its reads all
+    still work."""
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "GMT+08:00")
+    try:
+        assert ss._session_ts_normalizer(spark) is None
+        root = str(tmp_path / "t")
+        with ss.snap_metadata_thresholds(detail_inline_max=0):
+            v = ss.snap_commit(
+                _typed_df(spark, n=100, parts=2), root, mode="overwrite",
+                stats_cols=["ts", "id"],
+            )
+        stats = ss._read_manifest(root, v)["file_stats"]
+        assert len(stats) == 2
+        assert all("ts" in per and "id" in per for per in stats.values())
+        assert ss.snap_read(spark, root).count() == 100
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)

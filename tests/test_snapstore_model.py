@@ -808,34 +808,3 @@ class TestSnapstoreModel:
         ):
             case = SnapstoreMachine.TestCase()
             case.runTest()
-
-    def test_stateful_distributed_commits(self, spark, monkeypatch):
-        """The same machine with the distributed metadata rung FORCED
-        (WSSPARK_SNAP_DISTRIBUTED_COMMIT_MIN=0) atop O(1) heads: every
-        fresh-detail commit (initial builds, overwrites, COW rewrites)
-        and every bulk WAP stage (r16) has its sidecar parts written by
-        Spark tasks — then appends, dv-deletes, folds, restores, clones,
-        vacuums, and relocations interleave arbitrarily on top. The
-        retained-part-files-alive invariant now covers Spark-task-
-        written AND stage-adopted parts; the content invariants prove
-        the distributed chains read identically under every ordering
-        (the r14 shared-part race and the r15 clone-DV-rebase bug were
-        both found by hand — this configuration is the machine's net
-        for the next one)."""
-        monkeypatch.setenv("WSSPARK_SNAP_DISTRIBUTED_COMMIT_MIN", "0")
-        SnapstoreMachine.spark = spark
-        SnapstoreMachine.TestCase.settings = settings(
-            max_examples=4,
-            stateful_step_count=14,
-            deadline=None,
-            derandomize=True,
-            suppress_health_check=list(HealthCheck),
-        )
-        # parts_max=2: the inline fold fires every few commits, so
-        # STAGE-ADOPTED and task-written parts get folded, shared, and
-        # vacuumed mid-sequence — not just appended
-        with ss.snap_metadata_thresholds(
-            detail_inline_max=0, files_inline_max=0, detail_parts_max=2
-        ):
-            case = SnapstoreMachine.TestCase()
-            case.runTest()

@@ -327,89 +327,12 @@ def run(n_files: int, spark=None) -> None:
             shutil.rmtree(root, ignore_errors=True)
 
 
-def run_commit(n_files: int, spark) -> None:
-    """The r15 rung: the INITIAL commit's metadata pass, legacy driver
-    collection vs the distributed snapdist path, over the SAME real
-    data files (written once via maxRecordsPerFile). Each pass is timed
-    end-to-end over the identical commit dir — the Spark scans are
-    common, so the delta is exactly the driver term under test: the
-    legacy O(N x cols) collect + O(N) footer sweep + driver arrow build
-    vs the distributed pass's O(parts) summary. The phases split out:
-    legacy_driver_s is the pure post-collect driver work (dict build +
-    footer sweep + arrow serialize), the part that grows without bound.
-    """
-    from pyspark.sql import functions as F
-
-    rows_per_file = 40
-    df = spark.range(n_files * rows_per_file).select(
-        F.col("id"),
-        (F.col("id") % 9973).cast("string").alias("s"),
-        (F.col("id").cast("double") / 7).alias("x"),
-    )
-    old_max = spark.conf.get("spark.sql.files.maxRecordsPerFile", "0")
-    spark.conf.set("spark.sql.files.maxRecordsPerFile", str(rows_per_file))
-    commit_dir = tempfile.mkdtemp(prefix="commit-data-")
-    mdir = tempfile.mkdtemp(prefix="commit-mdir-")
-    try:
-        df.repartition(8).write.mode("overwrite").parquet(commit_dir)
-        new_files = ss._list_parquet(commit_dir)
-        stats_cols, bloom_cols = ["id", "x"], ["s"]
-
-        def legacy():
-            st = ss._collect_file_stats(spark, commit_dir, stats_cols)
-            bl = ss._collect_file_blooms(
-                spark, commit_dir, bloom_cols, N_BITS, K
-            )
-            t0 = time.perf_counter()
-            meta = {f: ss._footer_meta(f) for f in new_files}
-            table = ss._detail_table_from_dicts(
-                {"file_stats": st, "file_blooms": bl, "file_meta": meta},
-                paths=new_files,
-            )
-            import pyarrow.parquet as pq
-
-            pq.write_table(table, os.path.join(mdir, "legacy.detail.parquet"))
-            return time.perf_counter() - t0  # driver-only tail
-
-        def distributed():
-            from wsspark.snapdist import build_detail_parts_distributed
-
-            res = build_detail_parts_distributed(
-                spark, commit_dir, new_files, stats_cols, bloom_cols,
-                N_BITS, K, mdir, 0,
-            )
-            assert res is not None
-            names, ordered = res
-            assert len(ordered) == len(new_files)
-            return names
-
-        t_leg, driver_tail = _t(legacy)
-        t_dist, names = _t(distributed)
-        print(
-            json.dumps(
-                {
-                    "n_files": len(new_files),
-                    "mode": "initial_commit_metadata",
-                    "legacy_total_s": round(t_leg, 4),
-                    "legacy_driver_tail_s": round(driver_tail, 4),
-                    "distributed_total_s": round(t_dist, 4),
-                    "distributed_parts": len(names),
-                }
-            )
-        )
-    finally:
-        spark.conf.set("spark.sql.files.maxRecordsPerFile", old_max)
-        shutil.rmtree(commit_dir, ignore_errors=True)
-        shutil.rmtree(mdir, ignore_errors=True)
-
-
 def run_stage(n_files: int, spark) -> None:
-    """The r16 rung: a BULK WAP stage, legacy driver metadata pass vs
-    the distributed staged-parts path, over the same generated frame.
-    The two claims under test: the staged JSON stays O(1) bytes in
-    distributed mode (vs O(files x cols x bloom_bits) inline dicts),
-    and stage+publish wall time stays ~flat vs file count (the data
-    write is common to both modes; the delta is the metadata pass)."""
+    """A bulk WAP stage + publish over a generated frame written at
+    ``rows_per_file`` rows per file: the staged JSON carries the inline
+    per-file dicts (O(files x cols x bloom_bits) bytes), and the publish
+    builds the manifest (and sidecar, past the inline threshold) from
+    them. Reports stage and publish wall time and the staged JSON size."""
     from pyspark.sql import functions as F
 
     rows_per_file = 40
@@ -420,54 +343,30 @@ def run_stage(n_files: int, spark) -> None:
     ).repartition(8)
     old_max = spark.conf.get("spark.sql.files.maxRecordsPerFile", "0")
     spark.conf.set("spark.sql.files.maxRecordsPerFile", str(rows_per_file))
-    saved = {
-        k: os.environ.get(k)
-        for k in (
-            "WSSPARK_SNAP_DISTRIBUTED_COMMIT_MIN",
-            "WSSPARK_SNAP_DETAIL_INLINE_MAX",
-            "WSSPARK_SNAP_FILES_INLINE_MAX",
-        )
-    }
+    root = tempfile.mkdtemp(prefix="stage-")
     try:
-        for mode in ("legacy", "distributed"):
-            if mode == "legacy":
-                os.environ["WSSPARK_SNAP_DISTRIBUTED_COMMIT_MIN"] = "999999999"
-                os.environ.pop("WSSPARK_SNAP_DETAIL_INLINE_MAX", None)
-                os.environ.pop("WSSPARK_SNAP_FILES_INLINE_MAX", None)
-            else:
-                os.environ["WSSPARK_SNAP_DISTRIBUTED_COMMIT_MIN"] = "0"
-                os.environ["WSSPARK_SNAP_DETAIL_INLINE_MAX"] = "0"
-                os.environ["WSSPARK_SNAP_FILES_INLINE_MAX"] = "0"
-            root = tempfile.mkdtemp(prefix=f"stage-{mode}-")
-            try:
-                t_stage, sid = _t(
-                    ss.snap_stage, df, root,
-                    stats_cols=["id", "x"], bloom_cols=["s"],
-                    bloom_bits=N_BITS, bloom_k=K,
-                )
-                json_bytes = os.path.getsize(ss._staged_path(root, sid))
-                t_pub, v = _t(ss.snap_publish_staged, root, sid)
-                assert ss.snap_count(root) == n_files * rows_per_file
-                print(
-                    json.dumps(
-                        {
-                            "n_files": n_files,
-                            "mode": f"wap_stage_{mode}",
-                            "stage_s": round(t_stage, 4),
-                            "staged_json_bytes": json_bytes,
-                            "publish_s": round(t_pub, 4),
-                        }
-                    )
-                )
-            finally:
-                shutil.rmtree(root, ignore_errors=True)
+        t_stage, sid = _t(
+            ss.snap_stage, df, root,
+            stats_cols=["id", "x"], bloom_cols=["s"],
+            bloom_bits=N_BITS, bloom_k=K,
+        )
+        json_bytes = os.path.getsize(ss._staged_path(root, sid))
+        t_pub, _ = _t(ss.snap_publish_staged, root, sid)
+        assert ss.snap_count(root) == n_files * rows_per_file
+        print(
+            json.dumps(
+                {
+                    "n_files": n_files,
+                    "mode": "wap_stage",
+                    "stage_s": round(t_stage, 4),
+                    "staged_json_bytes": json_bytes,
+                    "publish_s": round(t_pub, 4),
+                }
+            )
+        )
     finally:
         spark.conf.set("spark.sql.files.maxRecordsPerFile", old_max)
-        for k, val in saved.items():
-            if val is None:
-                os.environ.pop(k, None)
-            else:
-                os.environ[k] = val
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def run_relocate(n_files: int) -> None:
@@ -564,7 +463,6 @@ def main() -> None:
         run_o1(n)
         run_relocate(n)
         if spark is not None:
-            run_commit(n, spark)
             run_stage(n, spark)
 
 

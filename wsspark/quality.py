@@ -817,7 +817,10 @@ def _ks_stat_rows(
     ``small_distinct`` cap the window sort was — the skew fallback
     re-groups on quantile spans exactly as before."""
     spark = pooled.sparkSession
-    if True:  # keep the original indentation of the extracted body
+    # the persisted grouped frame is released on every exit, raising
+    # ones included (the caller owns only ``pooled``)
+    grouped_cache = None
+    try:
         # one aggregation over the cached frame: per-column distinct
         # count (exact — pooled rows ARE the distinct values), bounds for
         # the bucketing, and the side totals
@@ -841,7 +844,6 @@ def _ks_stat_rows(
             )
         )
         c_alpha = math.sqrt(-math.log(alpha / 2.0) / 2.0)
-        grouped_cache = None
         if big:
             # cheap equal-width assignment first; the grouped sums we
             # collect anyway double as the SKEW PROBE (ndist = distinct
@@ -957,10 +959,10 @@ def _ks_stat_rows(
         ).orderBy("column")
         # eager one-row-per-column materialization (family convention:
         # driver-row results, hash-stable; lets the caller's cache go)
-        rows = [tuple(r) for r in result.collect()]
+        return [tuple(r) for r in result.collect()]
+    finally:
         if grouped_cache is not None:
             grouped_cache.unpersist()
-        return rows
 
 
 def embedding_drift(

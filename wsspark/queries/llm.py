@@ -2133,22 +2133,9 @@ def _pin_result(out, cap: int | None = None):
     first materializing the full oversized result. Cluster caveat,
     stated: localCheckpoint blocks die with their executor — acceptable
     for these oracle-gate-sized results (the failure mode is a recompute
-    error, never a wrong answer); deployments where executor loss is
-    routine (preemptible fleets) can set ``WSSPARK_PIN_CHECKPOINT_DIR``
-    to pin through a reliable ``checkpoint()`` to that storage path
-    instead."""
-    import os
-
+    error, never a wrong answer)."""
     cap = _result_cap() if cap is None else cap
-    ckpt_dir = os.environ.get("WSSPARK_PIN_CHECKPOINT_DIR")
-    guarded = _pin_cap_guard(out, cap)
-    if ckpt_dir:
-        sc = out.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
-            sc.setCheckpointDir(ckpt_dir)
-        pinned = guarded.checkpoint(eager=True)
-    else:
-        pinned = guarded.localCheckpoint(eager=True)
+    pinned = _pin_cap_guard(out, cap).localCheckpoint(eager=True)
     if pinned.count() > cap:
         raise ValueError(
             f"snapstore driver query result exceeds the {cap}-row "

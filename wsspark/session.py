@@ -79,15 +79,6 @@ def get_session(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", os.environ.get("WSSPARK_UI", "false"))
         .config("spark.driver.memory", os.environ.get("WSSPARK_DRIVER_MEM", "8g"))
-        # FIFO (default) gives concurrent driver-thread jobs the back-fill
-        # behavior guide §2.6 wants; WSSPARK_SCHEDULER_MODE=FAIR flips the
-        # whole app for deployments that prefer even sharing — the engine's
-        # thread overlaps are scheduler-agnostic (r17 FAIR smoke in
-        # OPTIMIZATION_r17.md pins that claim).
-        .config(
-            "spark.scheduler.mode",
-            os.environ.get("WSSPARK_SCHEDULER_MODE", "FIFO"),
-        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

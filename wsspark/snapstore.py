@@ -362,14 +362,6 @@ def _detail_parts_max() -> int:
     return raw if raw > 0 else (1 << 62)
 
 
-def _dist_commit_min() -> int:
-    """New-file count at which a fresh-detail commit switches to the
-    distributed metadata pass (``wsspark.snapdist``): the stats/bloom
-    aggregations stay a DataFrame and Spark tasks write the sidecar
-    parts. Tests pin 0 to force it; a huge value disables it."""
-    return int(os.environ.get("WSSPARK_SNAP_DISTRIBUTED_COMMIT_MIN", "20000"))
-
-
 def _pointer_names(head: dict) -> list[str]:
     """The sidecar part names a manifest head references, in
     concatenation order (legacy single-pointer heads read as one part)."""
@@ -943,7 +935,6 @@ def _write_manifest_file(root: str, manifest: dict, pre_publish=None) -> None:
     parent_parts = manifest.pop("_parent_detail_parts", None)
     parent_detail = manifest.pop("_parent_detail", None)
     parent_exact = manifest.pop("_parent_detail_exact", False)
-    prewritten = manifest.pop("_prewritten_detail_parts", None)
     new_files = manifest.pop("_new_files", None)
     deferred_count = manifest.pop("_file_count", None)
     # a detail-carrying write never inherits stale head bookkeeping
@@ -1020,18 +1011,7 @@ def _write_manifest_file(root: str, manifest: dict, pre_publish=None) -> None:
             | set(manifest.get("file_meta") or {})
         )
         universe = new_files if new_files is not None else sorted(new_dict_keys)
-        if prewritten is not None:
-            # r16: a bulk STAGED append onto a sidecar parent — the new
-            # files' rows already ride in adopted staged parts, so the
-            # chain is parent parts + staged parts BY NAME: zero dict
-            # work at publish however many files were staged (the
-            # prewritten contract guarantees the staged rows concat to
-            # exactly new_files in order).
-            part_names = list(parent_parts) + list(prewritten)
-            wrote.extend(prewritten)
-            prewritten = None
-            exact = bool(parent_exact) and new_files is not None
-        elif new_dict_keys <= set(universe):
+        if new_dict_keys <= set(universe):
             part_names = list(parent_parts)
             if universe:
                 part_names.append(
@@ -1108,14 +1088,6 @@ def _write_manifest_file(root: str, manifest: dict, pre_publish=None) -> None:
             exact = False
     manifest = _materialize(manifest)
     head = manifest
-    if prewritten is not None:
-        # Spark-task-written parts (distributed bulk commit): this call
-        # OWNS them — a failed publish removes them like driver-written
-        # ones — and their path rows were verified to concatenate to
-        # exactly the manifest's file list, so the chain is exact.
-        part_names = list(prewritten)
-        wrote.extend(part_names)
-        exact = True
     if split and not part_names:
         if detail_table is not None:
             part_names = [_write_part(detail_table)]
@@ -1742,19 +1714,11 @@ def _publish_commit(
     bloom_geometry: dict,
     new_file_meta: dict,
     cleanup_dir: str | None,
-    prewritten_parts: list[str] | None = None,
 ) -> int:
     """Shared second phase: assemble the manifest and publish it with
     O_EXCL + CURRENT advance. On a lost race the staged ``cleanup_dir``
     is removed and ``SnapshotConflict`` raised — exactly one committer
-    wins a version.
-
-    ``prewritten_parts``: detail sidecar parts already written by Spark
-    tasks (the distributed bulk-commit rung, ``wsspark.snapdist``) whose
-    path rows concatenate to exactly ``new_files`` in order — the detail
-    dicts and the footer sweep are skipped (everything per-file already
-    rides in the parts) and the manifest publishes the pointer. On any
-    publish failure the parts are removed like driver-written ones."""
+    wins a version."""
     # A long stats/bloom phase can outlive a concurrent vacuum's staged
     # grace window; publishing a manifest that references deleted files
     # would corrupt CURRENT for every reader. Verify the staged files
@@ -1770,9 +1734,6 @@ def _publish_commit(
             import shutil
 
             shutil.rmtree(cleanup_dir, ignore_errors=True)
-        for n in prewritten_parts or []:
-            with contextlib.suppress(OSError):
-                os.remove(os.path.join(_manifest_dir(root), n))
         raise StagedCommitVacuumed(
             f"{len(missing)} staged file(s) vanished before publish "
             f"(first: {missing[0]}) — a concurrent snap_vacuum likely "
@@ -1780,24 +1741,16 @@ def _publish_commit(
         )
     bloom_meta = dict(ctx["parent_bloom_meta"])
     bloom_meta.update(bloom_geometry)
-    if prewritten_parts is not None:
-        # distributed rung: every per-file row already rides in the
-        # Spark-written parts — no dicts, no O(files) footer sweep
-        file_stats: dict = {}
-        file_blooms: dict = {}
-        file_meta: dict = {}
-    else:
-        file_stats = dict(ctx["parent_stats"])
-        file_stats.update(new_stats)
-        file_blooms = dict(ctx["parent_blooms"])
-        for path, per_col in new_blooms.items():
-            file_blooms.setdefault(path, {}).update(per_col)
-        # rows/bytes per file from the just-written footers (hot, no
-        # data pages) -> COUNT(*) and table-size become manifest
-        # lookups forever
-        file_meta = dict(ctx["parent_file_meta"])
-        for nf in new_files:
-            file_meta[nf] = new_file_meta.get(nf) or _footer_meta(nf)
+    file_stats = dict(ctx["parent_stats"])
+    file_stats.update(new_stats)
+    file_blooms = dict(ctx["parent_blooms"])
+    for path, per_col in new_blooms.items():
+        file_blooms.setdefault(path, {}).update(per_col)
+    # rows/bytes per file from the just-written footers (hot, no data
+    # pages) -> COUNT(*) and table-size become manifest lookups forever
+    file_meta = dict(ctx["parent_file_meta"])
+    for nf in new_files:
+        file_meta[nf] = new_file_meta.get(nf) or _footer_meta(nf)
     deferred = ctx.get("parent_files") is None and "parent_file_count" in ctx
     manifest = {
         "version": ctx["version"],
@@ -1832,8 +1785,6 @@ def _publish_commit(
         # for the one-fresh-part concat in _write_manifest_file
         manifest["_parent_detail"] = ctx["parent_detail"]
         manifest["_parent_detail_exact"] = ctx.get("parent_detail_exact", False)
-    if prewritten_parts is not None:
-        manifest["_prewritten_detail_parts"] = list(prewritten_parts)
     manifest["_new_files"] = list(new_files)
     if deferred:
         manifest["_file_count"] = ctx["parent_file_count"] + len(new_files)
@@ -2006,53 +1957,6 @@ def snap_commit(
     # stay alive however long its jobs take.
     with _heartbeat(commit_dir):
         new_files = _list_parquet(commit_dir)
-        # Distributed bulk-commit rung: a FRESH-detail commit (initial
-        # build, overwrite, compact/optimize rewrite) past the threshold
-        # keeps the stats/bloom aggregations as a DataFrame, runs the
-        # exact _json_stat/_widen_float Python executor-side, and has
-        # Spark tasks write the sidecar parts — no O(files x cols)
-        # driver collection, no O(files) footer sweep. Appends atop a
-        # sidecar parent already pay only O(new files) and stay on the
-        # incremental path.
-        if (
-            new_files
-            and len(new_files) >= _dist_commit_min()
-            and len(new_files) > _detail_inline_max()
-            and not ctx.get("parent_files")
-            and "parent_detail_parts" not in ctx
-            and "parent_detail" not in ctx
-        ):
-            from wsspark.snapdist import build_detail_parts_distributed
-
-            dist = build_detail_parts_distributed(
-                df.sparkSession,
-                commit_dir,
-                new_files,
-                list(stats_cols or []),
-                list(bloom_cols or []),
-                bloom_bits,
-                bloom_k,
-                _manifest_dir(root),
-                ctx["version"],
-            )
-            if dist is not None:
-                part_names, files_ordered = dist
-                return _publish_commit(
-                    root,
-                    ctx,
-                    mode,
-                    tag,
-                    files_ordered,
-                    {},
-                    {},
-                    {
-                        c: {"n_bits": bloom_bits, "k": bloom_k}
-                        for c in (bloom_cols or [])
-                    },
-                    {},
-                    cleanup_dir=commit_dir,
-                    prewritten_parts=part_names,
-                )
         new_stats: dict = {}
         if stats_cols and new_files:
             new_stats = _collect_file_stats(
@@ -3893,18 +3797,10 @@ def snap_stage(
     lose the race (publish then raises ``StagedCommitVacuumed``; re-run
     the stage). Returns the staged id.
 
-    A BULK stage (file count past the distributed-commit threshold,
-    r16) runs the same distributed metadata rung as ``snap_commit``:
-    the stats/bloom aggregations stay a DataFrame and Spark tasks write
-    detail sidecar PARTS under ``<commit_dir>/_detail`` — no
-    O(files x cols) driver collection, no multi-GB dict blob in the
-    staged JSON (it stays O(1): part names + a file count; the parts
-    carry the per-file rows AND the exact file list). The staged parts
-    inherit the staged dir's grace protection and abort's rmtree;
-    publish hard-links them into ``_manifests`` under version names
-    (``snap_publish_staged``), so a lost publish race costs nothing —
-    the originals stay staged and the publish is retryable. Unprovable
-    shapes decline to this exact legacy pass, as in ``snap_commit``."""
+    The staged JSON carries the file list and the per-file stats/bloom
+    dicts inline, collected by the same driver pass as ``snap_commit``;
+    the publish builds the sidecar (if the table size calls for one)
+    exactly as a direct commit would."""
     commit_dir = os.path.join(
         _data_dir(root), f"commit-s-{uuid.uuid4().hex[:8]}"
     )
@@ -3926,72 +3822,33 @@ def snap_stage(
             "commit_dir": commit_dir,
             # relocation provenance, same contract as manifest heads
             "root": os.path.abspath(root),
+            "files": files,
+            "file_stats": (
+                _collect_file_stats(
+                    df.sparkSession, commit_dir, list(stats_cols)
+                )
+                if stats_cols and files
+                else {}
+            ),
+            "file_blooms": (
+                _collect_file_blooms(
+                    df.sparkSession,
+                    commit_dir,
+                    list(bloom_cols),
+                    bloom_bits,
+                    bloom_k,
+                )
+                if bloom_cols and files
+                else {}
+            ),
         }
-        dist = None
-        if (
-            files
-            and len(files) >= _dist_commit_min()
-            and len(files) > _detail_inline_max()
-        ):
-            from wsspark.snapdist import build_detail_parts_distributed
-
-            sdir = os.path.join(commit_dir, "_detail")
-            os.makedirs(sdir, exist_ok=True)
-            dist = build_detail_parts_distributed(
-                df.sparkSession,
-                commit_dir,
-                files,
-                list(stats_cols or []),
-                list(bloom_cols or []),
-                bloom_bits,
-                bloom_k,
-                sdir,
-                0,
-                part_root=os.path.abspath(root),
-                name_prefix=f"s-{staged_id}",
-            )
-            if dist is None:
-                with contextlib.suppress(OSError):
-                    os.rmdir(sdir)
-        if dist is not None:
-            part_names, files_ordered = dist
-            head.update(
-                {
-                    "detail_parts": part_names,
-                    "file_count": len(files_ordered),
-                }
-            )
-        else:
-            head.update(
-                {
-                    "files": files,
-                    "file_stats": (
-                        _collect_file_stats(
-                            df.sparkSession, commit_dir, list(stats_cols)
-                        )
-                        if stats_cols and files
-                        else {}
-                    ),
-                    "file_blooms": (
-                        _collect_file_blooms(
-                            df.sparkSession,
-                            commit_dir,
-                            list(bloom_cols),
-                            bloom_bits,
-                            bloom_k,
-                        )
-                        if bloom_cols and files
-                        else {}
-                    ),
-                }
-            )
     os.makedirs(os.path.join(os.path.abspath(root), "_staged"), exist_ok=True)
     with open(_staged_path(root, staged_id), "x") as f:
         json.dump(head, f)
     return staged_id
 
 
-def _read_staged(root: str, staged_id: str) -> dict:
+def _load_staged(root: str, staged_id: str) -> dict:
     p = _staged_path(root, staged_id)
     if not os.path.exists(p):
         raise FileNotFoundError(f"no staged commit {staged_id} in {root}")
@@ -4017,6 +3874,20 @@ def _read_staged(root: str, staged_id: str) -> dict:
     return st
 
 
+def _read_staged(root: str, staged_id: str) -> dict:
+    """The staged JSON, ready to audit or publish. A JSON whose per-file
+    metadata lives in task-written ``detail_parts`` comes from a retired
+    stage format that nothing reads or publishes any more: it is
+    rejected here (``snap_abort_staged`` still removes it)."""
+    st = _load_staged(root, staged_id)
+    if "detail_parts" in st:
+        raise ValueError(
+            f"staged commit {staged_id} in {root} uses the retired "
+            "sidecar-part stage format — abort it and re-stage the data"
+        )
+    return st
+
+
 def snap_read_staged(
     spark: SparkSession, root: str, staged_id: str
 ) -> DataFrame:
@@ -4025,11 +3896,6 @@ def snap_read_staged(
     st = _read_staged(root, staged_id)
     _touch(os.path.join(st["commit_dir"], "_heartbeat"))
     schema = T.StructType.fromJson(json.loads(st["schema"]))
-    if st.get("detail_parts"):
-        # bulk stage: the staged dir IS the file set (the _-prefixed
-        # _detail subdir and _heartbeat marker are invisible to the
-        # scan) — the audit never materializes the O(files) list
-        return spark.read.schema(schema).parquet(st["commit_dir"])
     if not st["files"]:
         return spark.createDataFrame([], schema)
     return spark.read.schema(schema).parquet(*st["files"])
@@ -4073,138 +3939,6 @@ def snap_publish_staged(
         _check_constraints(
             snap_read_staged(spark, root, staged_id), ctx["constraints"]
         )
-    staged_parts = st.get("detail_parts")
-    if staged_parts:
-        import pyarrow.parquet as pq
-
-        sdir = os.path.join(st["commit_dir"], "_detail")
-        recorded = st.get("root")
-        actual = os.path.abspath(root)
-        # the exact file list lives in the parts' path rows (the staged
-        # JSON stays O(1)); rebase across a relocation like _read_staged
-        # rebases the inline list
-        files: list[str] = []
-        try:
-            for n in staged_parts:
-                files.extend(
-                    pq.read_table(
-                        os.path.join(sdir, n), columns=["path"]
-                    ).column("path").to_pylist()
-                )
-        except (OSError, FileNotFoundError) as e:
-            raise StagedCommitVacuumed(
-                f"staged detail part missing ({e}) — a concurrent "
-                "snap_vacuum likely collected the staged commit; re-stage"
-            ) from e
-        if recorded and recorded != actual:
-            files = [_rebase_path(f, recorded, actual) for f in files]
-        parent_has_parts = "parent_detail_parts" in ctx
-        n_total = (
-            ctx.get("parent_file_count")
-            if ctx.get("parent_files") is None
-            else len(ctx.get("parent_files") or [])
-        ) + len(files)
-        adoptable = (
-            "parent_detail" not in ctx
-            and (not ctx.get("parent_files") or parent_has_parts)
-        )
-        if files and adoptable and n_total > _detail_inline_max():
-            # adopt the staged parts: hard-link (copy across devices)
-            # into _manifests under version names — a lost publish race
-            # removes only the links, the staged originals survive and
-            # the publish is retryable; success drops the originals.
-            # Works for a FRESH table and for an append onto a
-            # sidecar-backed parent alike (r16): the chain is then
-            # parent parts + staged parts by name — zero dict work at
-            # publish regardless of staged size
-            mdir = _manifest_dir(root)
-            linked: list[str] = []
-            try:
-                for n in staged_parts:
-                    newn = (
-                        f"v{ctx['version']:012d}-{uuid.uuid4().hex[:8]}"
-                        ".detail.parquet"
-                    )
-                    srcp = os.path.join(sdir, n)
-                    dstp = os.path.join(mdir, newn)
-                    try:
-                        os.link(srcp, dstp)
-                    except OSError:
-                        import shutil
-
-                        shutil.copy2(srcp, dstp)
-                    linked.append(newn)
-            except (OSError, FileNotFoundError) as e:
-                for n in linked:
-                    with contextlib.suppress(OSError):
-                        os.remove(os.path.join(mdir, n))
-                raise StagedCommitVacuumed(
-                    f"staged detail part vanished during publish ({e}) — "
-                    "re-stage and retry"
-                ) from e
-            version = _publish_commit(
-                root,
-                ctx,
-                mode,
-                tag,
-                files,
-                {},
-                {},
-                st["bloom_meta"],
-                {},
-                cleanup_dir=None,
-                prewritten_parts=linked,
-            )
-            import shutil
-
-            shutil.rmtree(sdir, ignore_errors=True)
-            os.remove(_staged_path(root, staged_id))
-            return version
-        # inline-mode parent (or a threshold drop below the table size):
-        # reconstruct the EXACT dicts from the parts and publish through
-        # the legacy path — O(staged files) driver work, correctness
-        # identical (the parts hold the same stats/bloom/meta rows)
-        stats: dict = {}
-        blooms: dict = {}
-        meta: dict = {}
-        for n in staged_parts:
-            # raw read, NOT _load_detail_table: its self-rebase derives
-            # the store root from the part's location, which for a part
-            # under <commit_dir>/_detail is wrong — the staged JSON's
-            # (recorded, actual) pair below is the authority here
-            s, b, fm = _detail_to_dicts(
-                pq.read_table(os.path.join(sdir, n))
-            )
-            stats.update(s)
-            blooms.update(b)
-            meta.update(fm)
-        if recorded and recorded != actual:
-            stats = {
-                _rebase_path(x, recorded, actual): v for x, v in stats.items()
-            }
-            blooms = {
-                _rebase_path(x, recorded, actual): v for x, v in blooms.items()
-            }
-            meta = {
-                _rebase_path(x, recorded, actual): v for x, v in meta.items()
-            }
-        version = _publish_commit(
-            root,
-            ctx,
-            mode,
-            tag,
-            files,
-            stats,
-            blooms,
-            st["bloom_meta"],
-            meta,
-            cleanup_dir=None,
-        )
-        import shutil
-
-        shutil.rmtree(sdir, ignore_errors=True)
-        os.remove(_staged_path(root, staged_id))
-        return version
     version = _publish_commit(
         root,
         ctx,
@@ -4226,7 +3960,7 @@ def snap_abort_staged(root: str, staged_id: str) -> None:
     failed and no reader ever saw the batch."""
     import shutil
 
-    st = _read_staged(root, staged_id)
+    st = _load_staged(root, staged_id)
     os.remove(_staged_path(root, staged_id))
     shutil.rmtree(st["commit_dir"], ignore_errors=True)
 
