@@ -173,6 +173,29 @@ def test_connected_components_probe_does_not_recompute_pairs(spark):
     assert not pairs.is_cached
 
 
+def test_connected_components_failure_releases_caches(spark, monkeypatch):
+    """A failure after the symmetric edge list was cached and filled (and
+    the probe persisted the pairs) must not leak either cache: the
+    persistent-RDD count returns to its value from before the call."""
+    import pytest
+
+    def _boom(self, *a, **kw):
+        self.count()  # fills the sym cache the seed labels read
+        raise RuntimeError("checkpoint failed")
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], ["doc_a", "doc_b"]
+    )
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    # the first checkpoint is the seed labels' one, right after sym's
+    # persist (a completed checkpoint would itself stay persisted)
+    monkeypatch.setattr(type(pairs), "localCheckpoint", _boom)
+    with pytest.raises(RuntimeError, match="checkpoint failed"):
+        dedup.connected_components(pairs, driver_threshold=3)
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_connected_components_raises_when_exhausted(spark):
     import pytest
 

@@ -142,6 +142,27 @@ def test_ivf_probe_for_recall_tunes_down_on_clustered_corpus(spark):
     )
 
 
+def test_ivf_probe_for_recall_failure_releases_caches(spark, monkeypatch):
+    """A probe search that fails after the tuner cached its ground truth
+    must not leak the cached blocks: the persistent-RDD count returns to
+    its value from before the call."""
+    import numpy as np
+
+    def _boom(*a, **kw):
+        raise RuntimeError("search failed")
+
+    rng = np.random.default_rng(5)
+    rows = [(i, [float(x) for x in rng.normal(size=8)]) for i in range(64)]
+    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    queries = emb.filter(F.col("vec_id") % 16 == 0)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    monkeypatch.setattr(similarity, "ivf_search", _boom)
+    with pytest.raises(RuntimeError, match="search failed"):
+        similarity.ivf_probe_for_recall(emb, queries, k=3)
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_embedding_dup_pairs_finds_planted_dups(spark):
     """Positive path for the cell-blocked near-dup operator: planted
     near-identical vectors must surface above a high threshold."""

@@ -2897,15 +2897,18 @@ def test_delete_dv_concurrent_sidecars_order_independent(
     """r17 (advisor pin): ``snap_delete_dv`` writes the DV sidecar (pooled
     job) and the CDF sidecar (main thread) concurrently. Forcing the
     pooled DV write to START after the CDF write completed (a delaying
-    ThreadPoolExecutor) must leave the same end state the default
-    interleaving produces."""
+    pool in ``wsspark.exec``, which every overlap uses) must leave the
+    same end state the default interleaving produces."""
     import concurrent.futures as _cf
     import time as _time
+
+    delayed = []
 
     class _DelayedPool(_cf.ThreadPoolExecutor):
         def submit(self, fn, *a, **kw):
             def _late():
                 _time.sleep(0.4)
+                delayed.append(fn)
                 return fn()
 
             return super().submit(_late, *a, **kw)
@@ -2914,9 +2917,7 @@ def test_delete_dv_concurrent_sidecars_order_independent(
         ss.snap_commit(_df(spark, 0, 10), root)                     # v0
         v_en = ss.snap_enable_cdf(root)                             # v1
         if delay:
-            monkeypatch.setattr(
-                "concurrent.futures.ThreadPoolExecutor", _DelayedPool
-            )
+            monkeypatch.setattr("wsspark.exec.ThreadPoolExecutor", _DelayedPool)
         try:
             ss.snap_delete_dv(spark, root, "id >= 6")               # v2
         finally:
@@ -2929,6 +2930,7 @@ def test_delete_dv_concurrent_sidecars_order_independent(
         return ss.snap_count(root), state, feed
 
     got_delayed = _run(str(tmp_path / "a"), delay=True)
+    assert len(delayed) == 1  # the pooled DV write really started late
     got_default = _run(str(tmp_path / "b"), delay=False)
     assert got_delayed == got_default
     assert got_delayed[0] == 6 and got_delayed[1] == list(range(6))

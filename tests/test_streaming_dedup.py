@@ -406,3 +406,46 @@ def test_streaming_cms_replay_and_empty_store(spark, tmp_path):
     assert once == again
     est = {r.key: r.est for r in counter.estimate(keys).collect()}
     assert est == {"a": 4, "b": 1}
+
+
+# ---------------------------------------------------------------------------
+# failure paths release the batch cache
+# ---------------------------------------------------------------------------
+
+
+def _fail_verify_after_filling_cache(cands, left, right):
+    left.count()  # the batch's band rows are cached and materialized now
+    raise RuntimeError("verify failed")
+
+
+def test_streaming_dedup_index_failure_releases_batch_cache(
+    spark, tmp_path, monkeypatch
+):
+    """A batch that fails after its band rows were cached must not leak
+    the cached blocks: the persistent-RDD count returns to its value
+    from before the call."""
+    index = streaming.StreamingDedupIndex(spark, str(tmp_path / "s"), threshold=0.6)
+    batch = spark.createDataFrame([(1, BASE), (2, NEAR), (3, OTHER)], SCHEMA)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    monkeypatch.setattr(index, "_verified_pairs", _fail_verify_after_filling_cache)
+    with pytest.raises(RuntimeError, match="verify failed"):
+        index.process_batch(batch, 0)
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_streaming_srp_index_failure_releases_batch_cache(
+    spark, tmp_path, monkeypatch
+):
+    """Same release-on-failure contract for the SRP vector index."""
+    vecs = _srp_vectors(n_base=10, n_dups=4, dim=32)
+    batch = spark.createDataFrame(_rows(vecs, range(len(vecs))), VEC_SCHEMA)
+    index = streaming.StreamingSrpIndex(
+        spark, str(tmp_path / "v"), threshold=0.95, dim=32
+    )
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    monkeypatch.setattr(index, "_verified_pairs", _fail_verify_after_filling_cache)
+    with pytest.raises(RuntimeError, match="verify failed"):
+        index.process_batch(batch, 0)
+    assert jsc.getPersistentRDDs().size() == before

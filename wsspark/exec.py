@@ -1,0 +1,70 @@
+"""Execution primitives shared by every module that runs Spark jobs.
+
+``overlap`` runs independent driver-side job chains concurrently. Spark
+schedules the jobs of one application concurrently only when the driver
+submits them from different threads, and in PySpark's pinned-thread mode a
+plain new thread starts with none of the caller's local properties (job
+group, job description, scheduler pool) or job tags — so a job it starts
+could not be cancelled through the caller's group nor attributed to the
+caller's span. ``overlap`` carries them into every thread it uses.
+
+``persisted`` scopes a cache to a ``with`` block: the frames are released
+on every exit, raising ones included.
+"""
+
+from __future__ import annotations
+
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
+from typing import Any, Callable, Iterator
+
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
+
+
+def _inheriting(thunk: Callable[[], Any]) -> Callable[[], Any]:
+    """``thunk`` wrapped to run with the calling thread's local properties
+    and tags. Must be called on the calling thread: the wrapper copies
+    them when it is made, not when it runs."""
+    # active() falls back to the default session in a thread that has no
+    # active one of its own, such as a thread of an enclosing overlap
+    session = SparkSession.active()
+    wrap = inheritable_thread_target(session)
+    # without pinned threads PySpark hands the session back: there is no
+    # per-thread JVM state to carry then
+    return thunk if wrap is session else wrap(thunk)
+
+
+def overlap(*thunks: Callable[[], Any]) -> list:
+    """Run zero-argument callables concurrently and return their results
+    in argument order. The first runs on the calling thread, the others on
+    one pool thread each. Every callable finishes before this returns; if
+    any raised, the exception of the first failing one in argument order
+    is raised."""
+    if len(thunks) < 2:
+        return [t() for t in thunks]
+    pooled = [_inheriting(t) for t in thunks[1:]]
+    with ThreadPoolExecutor(max_workers=len(pooled)) as pool:
+        futures = [pool.submit(t) for t in pooled]
+        head = thunks[0]()
+    return [head] + [f.result() for f in futures]
+
+
+@contextmanager
+def persisted(*dfs: DataFrame) -> Iterator[Any]:
+    """Persist ``dfs`` (default storage level) for the ``with`` block and
+    unpersist them when it exits, however it exits. Yields the frame, or
+    the tuple of frames when given several. A frame the caller had already
+    cached is left alone: neither persisted nor released here. The block
+    may release a frame early with ``unpersist()``; the exit call is then a
+    no-op."""
+    owned = []
+    try:
+        for df in dfs:
+            if not df.is_cached:
+                df.persist()
+                owned.append(df)
+        yield dfs[0] if len(dfs) == 1 else dfs
+    finally:
+        for df in owned:
+            df.unpersist()

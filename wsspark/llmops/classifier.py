@@ -43,6 +43,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from wsspark.exec import persisted
+
 
 def _standardize_moments(df: DataFrame, feature_cols: list[str]) -> dict:
     """Per-feature mean / population-stddev in one aggregation."""
@@ -96,8 +98,8 @@ def fit_logreg(
             ((F.col(c).cast("double") - F.lit(moments[c][0])) / F.lit(moments[c][1])).alias(c)
             for c in feature_cols
         ],
-    ).persist()
-    try:
+    )
+    with persisted(proj):
         proj.count()  # materializes the cache
         k = len(feature_cols)
         w = [0.0] * (k + 1)
@@ -129,8 +131,6 @@ def fit_logreg(
             "moments": moments,
             "loss": loss,
         }
-    finally:
-        proj.unpersist()
 
 
 def score_expr(model: dict) -> Column:

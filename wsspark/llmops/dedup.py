@@ -21,8 +21,12 @@ Scale design:
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from wsspark.exec import persisted
 
 DEFAULT_NUM_HASHES = 32
 DEFAULT_BANDS = 8
@@ -526,105 +530,100 @@ def connected_components(
     the symmetrized edge list is materialized. ``driver_threshold=0``
     forces the distributed path (and skips the probe persist).
     """
-    we_cached = False
-    if driver_threshold > 0:
-        if not pairs.is_cached:
+    with contextlib.ExitStack() as sym_scope:
+        probe_scope = sym_scope.enter_context(contextlib.ExitStack())
+        if driver_threshold > 0:
             # keep the probe's work: partitions computed by the bounded
             # collect persist, so the over-threshold fallthrough reuses
             # them instead of re-running the pair-generation plan
-            pairs = pairs.persist()
-            we_cached = True
-        # node/cluster_id keep the pair columns' own integer type, so the
-        # two paths are schema-identical
-        id_type = pairs.schema[id_a].dataType.simpleString()
-        out_schema = f"node {id_type}, cluster_id {id_type}"
-        probe = (
-            pairs.select(id_a, id_b).limit(driver_threshold + 1).collect()
-        )
-        if len(probe) <= driver_threshold:
-            spark = pairs.sparkSession
-            if we_cached:
-                pairs.unpersist()
-            if not probe:
-                return spark.createDataFrame([], out_schema)
-            parent: dict[int, int] = {}
-
-            def find(x: int) -> int:
-                parent.setdefault(x, x)
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]  # path halving
-                    x = parent[x]
-                return x
-
-            for a, b in probe:
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    # union by min: the smaller id becomes the root, so
-                    # roots ARE the canonical min labels at the end
-                    parent[max(ra, rb)] = min(ra, rb)
-            rows = sorted((x, find(x)) for x in parent)
-            return spark.createDataFrame(rows, out_schema)
-
-    # symmetrize with ONE evaluation of the (possibly expensive) pairs plan:
-    # a union of two projections would scan the pairs subtree twice while
-    # filling the cache; exploding a 2-struct array doesn't.
-    sym = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
-                F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst")),
+            probe_scope.enter_context(persisted(pairs))
+            # node/cluster_id keep the pair columns' own integer type, so the
+            # two paths are schema-identical
+            id_type = pairs.schema[id_a].dataType.simpleString()
+            out_schema = f"node {id_type}, cluster_id {id_type}"
+            probe = (
+                pairs.select(id_a, id_b).limit(driver_threshold + 1).collect()
             )
-        ).alias("e")
-    ).select("e.src", "e.dst")
-    sym = sym.cache()
-    labels = (
-        sym.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("cluster_id"))
-        .localCheckpoint()
-    )
-    if we_cached:
-        # the eager localCheckpoint above materialized sym (filling ITS
-        # cache), so the probe-time pairs cache has served its purpose
-        pairs.unpersist()
-    converged = False
-    for _ in range(max_iter):
-        nbr = sym.join(labels, sym["dst"] == labels["node"]).select(
-            sym["src"].alias("node"), "cluster_id"
-        )
-        mins = (
-            labels.union(nbr)
-            .groupBy("node")
-            .agg(F.min("cluster_id").alias("cluster_id"))
-        )
-        # pointer jump: label <- label(label). cluster_id is always itself a
-        # node (it's a min over node ids), so the lookup is a plain
-        # self-join; least() is belt-and-suspenders for monotonicity.
-        parent = mins.select(
-            F.col("node").alias("_cid"), F.col("cluster_id").alias("_parent")
-        )
-        new = (
-            mins.join(parent, mins["cluster_id"] == parent["_cid"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("cluster_id"),
-                    F.coalesce(F.col("_parent"), F.col("cluster_id")),
-                ).alias("cluster_id"),
-            )
+            if len(probe) <= driver_threshold:
+                spark = pairs.sparkSession
+                if not probe:
+                    return spark.createDataFrame([], out_schema)
+                parent: dict[int, int] = {}
+
+                def find(x: int) -> int:
+                    parent.setdefault(x, x)
+                    while parent[x] != x:
+                        parent[x] = parent[parent[x]]  # path halving
+                        x = parent[x]
+                    return x
+
+                for a, b in probe:
+                    ra, rb = find(a), find(b)
+                    if ra != rb:
+                        # union by min: the smaller id becomes the root, so
+                        # roots ARE the canonical min labels at the end
+                        parent[max(ra, rb)] = min(ra, rb)
+                rows = sorted((x, find(x)) for x in parent)
+                return spark.createDataFrame(rows, out_schema)
+
+        # symmetrize with ONE evaluation of the (possibly expensive) pairs plan:
+        # a union of two projections would scan the pairs subtree twice while
+        # filling the cache; exploding a 2-struct array doesn't.
+        sym = pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
+                    F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst")),
+                )
+            ).alias("e")
+        ).select("e.src", "e.dst")
+        sym_scope.enter_context(persisted(sym))
+        labels = (
+            sym.select(F.col("src").alias("node"))
+            .distinct()
+            .select("node", F.col("node").alias("cluster_id"))
             .localCheckpoint()
         )
-        changed = (
-            new.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .count()
-        )
-        labels = new
-        if changed == 0:
-            converged = True
-            break
-    sym.unpersist()
+        # the eager localCheckpoint above materialized sym (filling ITS
+        # cache), so the probe-time pairs cache has served its purpose
+        probe_scope.close()
+        converged = False
+        for _ in range(max_iter):
+            nbr = sym.join(labels, sym["dst"] == labels["node"]).select(
+                sym["src"].alias("node"), "cluster_id"
+            )
+            mins = (
+                labels.union(nbr)
+                .groupBy("node")
+                .agg(F.min("cluster_id").alias("cluster_id"))
+            )
+            # pointer jump: label <- label(label). cluster_id is always itself a
+            # node (it's a min over node ids), so the lookup is a plain
+            # self-join; least() is belt-and-suspenders for monotonicity.
+            parent = mins.select(
+                F.col("node").alias("_cid"), F.col("cluster_id").alias("_parent")
+            )
+            new = (
+                mins.join(parent, mins["cluster_id"] == parent["_cid"], "left")
+                .select(
+                    "node",
+                    F.least(
+                        F.col("cluster_id"),
+                        F.coalesce(F.col("_parent"), F.col("cluster_id")),
+                    ).alias("cluster_id"),
+                )
+                .localCheckpoint()
+            )
+            changed = (
+                new.alias("n")
+                .join(labels.alias("o"), "node")
+                .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
+                .count()
+            )
+            labels = new
+            if changed == 0:
+                converged = True
+                break
     if not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds; "

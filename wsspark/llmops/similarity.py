@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from wsspark.exec import persisted
+
 
 def as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
@@ -358,23 +360,19 @@ def ivf_probe_for_recall(
     truth = cosine_topk(vectors, queries, k, vec_col, id_col).select(
         "query_id", "neighbor_id"
     )
-    truth = truth.persist()
-    n_truth = truth.count()
     assigned, centroids, n_cells = ivf_build_index(vectors, None, vec_col, id_col)
-    assigned = assigned.persist()
-    n_probe, recall = 4, 0.0
-    while True:
-        res = ivf_search(
-            assigned, centroids, queries, k, n_probe, vec_col, id_col
-        ).select("query_id", "neighbor_id")
-        hits = truth.join(res, ["query_id", "neighbor_id"], "left_semi").count()
-        recall = hits / n_truth if n_truth else 1.0
-        if recall >= target_recall or n_probe >= n_cells:
-            break
-        n_probe = min(n_cells, n_probe * 2)
-    truth.unpersist()
-    assigned.unpersist()
-    return n_probe, recall
+    with persisted(truth, assigned):
+        n_truth = truth.count()
+        n_probe = 4
+        while True:
+            res = ivf_search(
+                assigned, centroids, queries, k, n_probe, vec_col, id_col
+            ).select("query_id", "neighbor_id")
+            hits = truth.join(res, ["query_id", "neighbor_id"], "left_semi").count()
+            recall = hits / n_truth if n_truth else 1.0
+            if recall >= target_recall or n_probe >= n_cells:
+                return n_probe, recall
+            n_probe = min(n_cells, n_probe * 2)
 
 
 def embedding_cosine_dup_pairs(

@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from wsspark.exec import overlap
+
 
 def pagerank(
     edges: DataFrame,
@@ -81,7 +83,13 @@ def pagerank(
     # build runs on a driver thread while the node checkpoint + count
     # run here, so the setup wall time is max(nodes, trans) instead of
     # their sum.
-    from concurrent.futures import ThreadPoolExecutor
+    def _build_nodes() -> tuple[DataFrame, int]:
+        nodes = _ckpt(
+            edges.select(F.col(src).alias("node"))
+            .unionByName(edges.select(F.col(dst).alias("node")))
+            .distinct()
+        )
+        return nodes, nodes.count()
 
     def _build_trans() -> DataFrame:
         out_w = edges.groupBy(src).agg(F.sum(weight).alias("_ow"))
@@ -94,15 +102,7 @@ def pagerank(
             )
         )
 
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        _f_trans = _pool.submit(_build_trans)
-        nodes = _ckpt(
-            edges.select(F.col(src).alias("node"))
-            .unionByName(edges.select(F.col(dst).alias("node")))
-            .distinct()
-        )
-        n = nodes.count()
-        trans = _f_trans.result()
+    (nodes, n), trans = overlap(_build_nodes, _build_trans)
     if n == 0:
         raise ValueError("pagerank: empty edge frame (no nodes)")
     has_out = trans.select(

@@ -21,12 +21,14 @@ aggregate; nothing collects to the driver except the final run-summary row.
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wsspark import adapters, quality
+from wsspark.exec import overlap
 from wsspark.io import load_tables, write_report
 from wsspark.ops import financial, inventory, warehouse
 from wsspark.ops import movements as movements_ops
@@ -209,15 +211,13 @@ def run_pipeline(
         # — submit them concurrently and let the scheduler pack the cluster
         # (local[N] or real executors) instead of draining one branch at a
         # time.
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _write(name: str) -> tuple[str, str]:
-            path = os.path.join(output_dir, name)
-            write_report(reports[name], path, fmt=fmt)
-            return name, path
-
-        with ThreadPoolExecutor(max_workers=min(len(REPORT_NAMES), 8)) as pool:
-            written = dict(pool.map(_write, REPORT_NAMES))
+        written = {name: os.path.join(output_dir, name) for name in REPORT_NAMES}
+        overlap(
+            *(
+                functools.partial(write_report, reports[name], path, fmt=fmt)
+                for name, path in written.items()
+            )
+        )
 
         if summary_table:
             from wsspark.io import append_table

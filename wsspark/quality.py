@@ -19,6 +19,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from wsspark.exec import overlap, persisted
+
 BAD_REFERENCE_ID = 9_999_999  # injected sentinel (gen/generate_data.py:344-348)
 POSITIVE_MOVEMENT_TYPES = ("IN", "RETURN")
 
@@ -330,17 +332,12 @@ def drift_report(
     edges = _drift_edges(base, numeric_cols)
     # the two stacked count aggregations are independent jobs once the
     # base-pinned edges exist — overlap them (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
+    def _counts(df: DataFrame) -> dict:
+        return _drift_counts(
+            df, numeric_cols, cat_cols, edges, n_buckets, max_cat_buckets
+        )
 
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        _f_bc = _pool.submit(
-            _drift_counts,
-            base, numeric_cols, cat_cols, edges, n_buckets, max_cat_buckets,
-        )
-        cc = _drift_counts(
-            current, numeric_cols, cat_cols, edges, n_buckets, max_cat_buckets
-        )
-        bc = _f_bc.result()
+    cc, bc = overlap(lambda: _counts(current), lambda: _counts(base))
     out = _psi_rows(numeric_cols, cat_cols, edges, bc, cc, psi_alert)
     return base.sparkSession.createDataFrame(
         sorted(out),
@@ -670,8 +667,7 @@ def _ks_bucket_spread(
     """Test/observability probe: populated QUANTILE-path bucket count per
     column (every column forced onto the skew fallback). A
     skew-degenerate bucketing shows up here as a count near 1."""
-    pooled = _ks_pooled(base, current, list(cols)).persist()
-    try:
+    with persisted(_ks_pooled(base, current, list(cols))) as pooled:
         meta = {
             r["col"]: r
             for r in pooled.groupBy("col")
@@ -685,8 +681,6 @@ def _ks_bucket_spread(
             .collect()
         )
         return {r["col"]: r["n"] for r in rows}
-    finally:
-        pooled.unpersist()
 
 
 def ks_drift(
@@ -707,47 +701,44 @@ def ks_drift(
 
     Distributed shape (the exact-AUC discipline, classifier.auc): ONE
     stacked map-side-combinable count aggregation per snapshot collapses
-    each column to its distinct values; the sup runs as a window cumsum
-    over the pooled DISTINCT-value frame ordered within each column —
-    the only sort is distinct-value-bounded, the fact is never globally
-    sorted, and nothing unbounded reaches the driver (the result is one
-    row per column). ECDFs are evaluated right-continuously at every
-    pooled distinct value, which is where the sup of a pair of step
-    functions lives — hence EXACT. NULLs are excluded (an ECDF has no
-    place for them; drift_report's NULL bucket covers that axis).
+    each column to its distinct values; the sup runs as an
+    ``aggregate()`` fold (``_ks_fold_best``) over each sorted run of the
+    pooled DISTINCT-value frame — the only sort is distinct-value-bounded,
+    the fact is never globally sorted, and nothing unbounded reaches the
+    driver (the result is one row per column). ECDFs are evaluated
+    right-continuously at every pooled distinct value, which is where the
+    sup of a pair of step functions lives — hence EXACT. NULLs are
+    excluded (an ECDF has no place for them; drift_report's NULL bucket
+    covers that axis).
 
     Returns (column, n_base, n_current, ks_stat, threshold, drifted),
-    deterministic, DuckDB-replayable (plain doubles + window sums).
+    deterministic, DuckDB-replayable (plain doubles; the twin replays the
+    fold as window sums).
 
     No single-reducer sort at ANY cardinality: columns whose pooled
-    distinct count fits ``small_distinct`` ride one per-column cumsum
-    window (a bounded sort); past that the TWO-PHASE bucketed ECDF runs
-    — equal-width order-preserving buckets over [lo, hi] (order is all
-    the cumsum needs; balance only affects parallelism), per-bucket
-    partial sums combined into exclusive prefix OFFSETS on the driver
-    (O(cols x KS_BUCKETS) rows), then the cumsum window. The partials
-    double as a SKEW PROBE: if any bucket holds more distinct values
-    than ``small_distinct`` (an extreme outlier stretched the range and
+    distinct count fits ``small_distinct`` fold one sorted run per column;
+    past that the TWO-PHASE bucketed ECDF runs — equal-width
+    order-preserving buckets over [lo, hi] (order is all the fold needs;
+    balance only affects parallelism), one grouped pass per (col, bucket)
+    that yields both the bucket's sorted run and its partial sums, the
+    partials combined into exclusive prefix OFFSETS on the driver
+    (O(cols x KS_BUCKETS) rows) and joined back (broadcast) so each
+    bucket's fold starts at its offset. The partials double as a SKEW
+    PROBE: if any bucket holds more distinct values than
+    ``small_distinct`` (an extreme outlier stretched the range and
     equal-width collapsed the bulk), the assignment reruns on
     QUANTILE-derived span edges (``_ks_bucketed_quantile``) — paid only
-    in that rare case, never on well-behaved data; then the cumsum window
-    partitions by (col, bucket): thousands of parallel bounded sorts
-    plus a broadcast offset join, exact to the bit. The per-column
-    distinct/min/max probe is one aggregation over the persisted pooled
-    counts frame.
+    in that rare case, never on well-behaved data — exact to the bit
+    either way. The per-column distinct/min/max probe is one aggregation
+    over the persisted pooled counts frame.
     """
     cols = list(cols)
     if not cols:
         raise ValueError("ks_drift: pass at least one column")
     if not (0.0 < alpha < 1.0):
         raise ValueError("ks_drift: alpha must be in (0, 1)")
-    from pyspark.sql import Window
-
-    pooled = _ks_pooled(base, current, cols).persist()
-    try:
+    with persisted(_ks_pooled(base, current, cols)) as pooled:
         rows = _ks_stat_rows(pooled, alpha, small_distinct)
-    finally:
-        pooled.unpersist()
     return base.sparkSession.createDataFrame(
         rows,
         "column string, n_base long, n_current long, ks_stat double, "
@@ -817,152 +808,151 @@ def _ks_stat_rows(
     ``small_distinct`` cap the window sort was — the skew fallback
     re-groups on quantile spans exactly as before."""
     spark = pooled.sparkSession
-    # the persisted grouped frame is released on every exit, raising
-    # ones included (the caller owns only ``pooled``)
-    grouped_cache = None
-    try:
-        # one aggregation over the cached frame: per-column distinct
-        # count (exact — pooled rows ARE the distinct values), bounds for
-        # the bucketing, and the side totals
-        meta = meta if meta is not None else {
-            r["col"]: r
-            for r in pooled.groupBy("col")
-            .agg(
-                F.count("*").alias("nd"),
-                F.min("val").alias("lo"),
-                F.max("val").alias("hi"),
-                F.sum("n_b").alias("nb"),
-                F.sum("n_c").alias("nc"),
-            )
-            .collect()
-        }
-        big = sorted(c for c, r in meta.items() if r["nd"] > small_distinct)
-        totals = F.broadcast(
-            spark.createDataFrame(
-                [(c, meta[c]["nb"], meta[c]["nc"]) for c in meta],
-                "col string, nb long, nc long",
-            )
+    # one aggregation over the cached frame: per-column distinct count
+    # (exact — pooled rows ARE the distinct values), bounds for the
+    # bucketing, and the side totals
+    meta = meta if meta is not None else {
+        r["col"]: r
+        for r in pooled.groupBy("col")
+        .agg(
+            F.count("*").alias("nd"),
+            F.min("val").alias("lo"),
+            F.max("val").alias("hi"),
+            F.sum("n_b").alias("nb"),
+            F.sum("n_c").alias("nc"),
         )
-        c_alpha = math.sqrt(-math.log(alpha / 2.0) / 2.0)
-        if big:
-            # cheap equal-width assignment first; the grouped sums we
-            # collect anyway double as the SKEW PROBE (ndist = distinct
-            # values per bucket = the size of that bucket's fold array)
-            bucketed = _ks_bucketed_uniform(pooled, meta, big)
-            grouped_cache = (
-                bucketed.groupBy("col", "_bk")
-                .agg(
-                    F.sum("n_b").alias("sb"),
-                    F.sum("n_c").alias("sc"),
-                    F.count("*").alias("ndist"),
-                    F.array_sort(
-                        F.collect_list(F.struct("val", "n_b", "n_c"))
-                    ).alias("_arr"),
-                )
-                .persist()
+        .collect()
+    }
+    big = sorted(c for c, r in meta.items() if r["nd"] > small_distinct)
+    totals = F.broadcast(
+        spark.createDataFrame(
+            [(c, meta[c]["nb"], meta[c]["nc"]) for c in meta],
+            "col string, nb long, nc long",
+        )
+    )
+    c_alpha = math.sqrt(-math.log(alpha / 2.0) / 2.0)
+    if not big:
+        grouped = (
+            pooled.join(totals, "col")
+            .groupBy("col")
+            .agg(
+                F.first("nb").alias("nb"),
+                F.first("nc").alias("nc"),
+                F.array_sort(
+                    F.collect_list(F.struct("val", "n_b", "n_c"))
+                ).alias("_arr"),
             )
-            partials = grouped_cache.select(
-                "col", "_bk", "sb", "sc", "ndist"
-            ).collect()
-            if any(r["ndist"] > small_distinct for r in partials):
-                # skew-degenerate: an extreme outlier stretched [lo, hi]
-                # and some bucket would single-task-fold more distinct
-                # values than the small path tolerates per column —
-                # rebucket on quantile-derived spans (one extra
-                # percentile_approx + pass over the persisted pooled
-                # frame, paid ONLY in this rare case)
-                grouped_cache.unpersist()
-                bucketed = _ks_bucketed_quantile(pooled, meta, big)
-                grouped_cache = (
-                    bucketed.groupBy("col", "_bk")
-                    .agg(
-                        F.sum("n_b").alias("sb"),
-                        F.sum("n_c").alias("sc"),
-                        F.array_sort(
-                            F.collect_list(F.struct("val", "n_b", "n_c"))
-                        ).alias("_arr"),
-                    )
-                    .persist()
-                )
-                partials = grouped_cache.select(
-                    "col", "_bk", "sb", "sc"
-                ).collect()
-            # exclusive prefix offsets per (col, bucket) on the driver:
-            # O(cols x KS_BUCKETS) integers
-            by_col: dict[str, list] = {}
-            for r in partials:
-                by_col.setdefault(r["col"], []).append(
-                    (r["_bk"], r["sb"], r["sc"])
-                )
-            off_rows = []
-            for c, lst in by_col.items():
-                ob = oc = 0
-                for bk, sb, sc in sorted(lst):
-                    off_rows.append((c, bk, ob, oc))
-                    ob += sb
-                    oc += sc
-            offsets = F.broadcast(
-                spark.createDataFrame(
-                    off_rows,
-                    "col string, _bk int, _ob long, _oc long",
-                )
+            .withColumn("_ob", F.lit(0).cast("long"))
+            .withColumn("_oc", F.lit(0).cast("long"))
+        )
+        out = _ks_fold_best(grouped).select(
+            "col",
+            F.col("nb").alias("n_base"),
+            F.col("nc").alias("n_current"),
+            F.col("_best").alias("ks_stat"),
+        )
+        return _ks_result_rows(out, c_alpha)
+    # cheap equal-width assignment first; the grouped sums we collect
+    # anyway double as the SKEW PROBE (ndist = distinct values per
+    # bucket = the size of that bucket's fold array)
+    with persisted(
+        _ks_grouped(
+            _ks_bucketed_uniform(pooled, meta, big),
+            F.count("*").alias("ndist"),
+        )
+    ) as grouped:
+        partials = grouped.select("col", "_bk", "sb", "sc", "ndist").collect()
+        if all(r["ndist"] <= small_distinct for r in partials):
+            return _ks_result_rows(
+                _ks_offset_fold(grouped, partials, totals), c_alpha
             )
-            folded = _ks_fold_best(
-                grouped_cache.join(offsets, ["col", "_bk"]).join(totals, "col")
+    # skew-degenerate: an extreme outlier stretched [lo, hi] and some
+    # bucket would single-task-fold more distinct values than the small
+    # path tolerates per column — rebucket on quantile-derived spans (one
+    # extra percentile_approx + pass over the persisted pooled frame, paid
+    # ONLY in this rare case)
+    with persisted(
+        _ks_grouped(_ks_bucketed_quantile(pooled, meta, big))
+    ) as grouped:
+        partials = grouped.select("col", "_bk", "sb", "sc").collect()
+        return _ks_result_rows(
+            _ks_offset_fold(grouped, partials, totals), c_alpha
+        )
+
+
+def _ks_grouped(bucketed: DataFrame, *extra: Column) -> DataFrame:
+    """One pass per (col, bucket): the side sums, any ``extra``
+    aggregates, and the bucket's sorted (val, n_b, n_c) run."""
+    return bucketed.groupBy("col", "_bk").agg(
+        F.sum("n_b").alias("sb"),
+        F.sum("n_c").alias("sc"),
+        *extra,
+        F.array_sort(F.collect_list(F.struct("val", "n_b", "n_c"))).alias(
+            "_arr"
+        ),
+    )
+
+
+def _ks_offset_fold(
+    grouped: DataFrame, partials: list, totals: DataFrame
+) -> DataFrame:
+    """Fold every bucket from its exclusive prefix offset — computed on
+    the driver from the collected ``partials``, O(cols x KS_BUCKETS)
+    integers — and take the per-column max. Returns (col, n_base,
+    n_current, ks_stat)."""
+    by_col: dict[str, list] = {}
+    for r in partials:
+        by_col.setdefault(r["col"], []).append((r["_bk"], r["sb"], r["sc"]))
+    off_rows = []
+    for c, lst in by_col.items():
+        ob = oc = 0
+        for bk, sb, sc in sorted(lst):
+            off_rows.append((c, bk, ob, oc))
+            ob += sb
+            oc += sc
+    offsets = F.broadcast(
+        grouped.sparkSession.createDataFrame(
+            off_rows,
+            "col string, _bk int, _ob long, _oc long",
+        )
+    )
+    folded = _ks_fold_best(
+        grouped.join(offsets, ["col", "_bk"]).join(totals, "col")
+    )
+    return folded.groupBy("col").agg(
+        F.first("nb").alias("n_base"),
+        F.first("nc").alias("n_current"),
+        F.max("_best").alias("ks_stat"),
+    )
+
+
+def _ks_result_rows(out: DataFrame, c_alpha: float) -> list[tuple]:
+    """The verdict columns over (col, n_base, n_current, ks_stat), eagerly
+    collected (family convention: driver-row results, hash-stable; lets
+    the caller's cache go)."""
+    result = out.select(
+        F.col("col").alias("column"),
+        "n_base",
+        "n_current",
+        F.round("ks_stat", 6).alias("ks_stat"),
+        F.round(
+            F.lit(c_alpha)
+            * F.sqrt(
+                (F.col("n_base") + F.col("n_current"))
+                / (F.col("n_base") * F.col("n_current"))
+            ),
+            6,
+        ).alias("threshold"),
+        (
+            F.col("ks_stat")
+            > F.lit(c_alpha)
+            * F.sqrt(
+                (F.col("n_base") + F.col("n_current"))
+                / (F.col("n_base") * F.col("n_current"))
             )
-            out = folded.groupBy("col").agg(
-                F.first("nb").alias("n_base"),
-                F.first("nc").alias("n_current"),
-                F.max("_best").alias("ks_stat"),
-            )
-        else:
-            grouped = (
-                pooled.join(totals, "col")
-                .groupBy("col")
-                .agg(
-                    F.first("nb").alias("nb"),
-                    F.first("nc").alias("nc"),
-                    F.array_sort(
-                        F.collect_list(F.struct("val", "n_b", "n_c"))
-                    ).alias("_arr"),
-                )
-                .withColumn("_ob", F.lit(0).cast("long"))
-                .withColumn("_oc", F.lit(0).cast("long"))
-            )
-            out = _ks_fold_best(grouped).select(
-                "col",
-                F.col("nb").alias("n_base"),
-                F.col("nc").alias("n_current"),
-                F.col("_best").alias("ks_stat"),
-            )
-        result = out.select(
-            F.col("col").alias("column"),
-            "n_base",
-            "n_current",
-            F.round("ks_stat", 6).alias("ks_stat"),
-            F.round(
-                F.lit(c_alpha)
-                * F.sqrt(
-                    (F.col("n_base") + F.col("n_current"))
-                    / (F.col("n_base") * F.col("n_current"))
-                ),
-                6,
-            ).alias("threshold"),
-            (
-                F.col("ks_stat")
-                > F.lit(c_alpha)
-                * F.sqrt(
-                    (F.col("n_base") + F.col("n_current"))
-                    / (F.col("n_base") * F.col("n_current"))
-                )
-            ).alias("drifted"),
-        ).orderBy("column")
-        # eager one-row-per-column materialization (family convention:
-        # driver-row results, hash-stable; lets the caller's cache go)
-        return [tuple(r) for r in result.collect()]
-    finally:
-        if grouped_cache is not None:
-            grouped_cache.unpersist()
+        ).alias("drifted"),
+    ).orderBy("column")
+    return [tuple(r) for r in result.collect()]
 
 
 def embedding_drift(
@@ -1031,12 +1021,7 @@ def _embedding_drift_row(
 
     # the two moment aggregations are independent jobs — overlap them
     # (guide §2.6); result dicts are keyed, so order cannot matter
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        _f_mb = _pool.submit(_moments, base)
-        mc = _moments(current)
-        mb = _f_mb.result()
+    mc, mb = overlap(lambda: _moments(current), lambda: _moments(base))
     if not mb or not mc:
         raise ValueError("embedding_drift: empty snapshot")
     if set(mb) != set(mc):
@@ -1306,153 +1291,126 @@ def drift_suite(
     if not (0.0 < alpha < 1.0):
         raise ValueError("drift_suite: alpha must be in (0, 1)")
     proj = numeric_cols + cat_cols + ([embedding_col] if embedding_col else [])
-    b = base.select(*proj).persist()
-    c = current.select(*proj).persist()
-    out: list[tuple] = []
+    b = base.select(*proj)
+    c = current.select(*proj)
     # r16: the three statistic families (numeric PSI+KS, categorical
     # top-k PSI, embedding Welch-z) are independent driver-composed job
-    # chains over the same two cached projections — submit them from a
-    # small thread pool so the scheduler overlaps their jobs (guide
-    # §2.6: actions are only sequential because the driver calls them
-    # sequentially) instead of draining one family's straggler tail at a
-    # time. Results are assembled in a fixed order (and sorted at the
-    # end), so the output is bit-identical to the sequential run.
-    from concurrent.futures import ThreadPoolExecutor
+    # chains over the same two cached projections — overlap them so the
+    # scheduler overlaps their jobs (guide §2.6: actions are only
+    # sequential because the driver calls them sequentially) instead of
+    # draining one family's straggler tail at a time. Results are
+    # assembled in a fixed order (and sorted at the end), so the output
+    # is bit-identical to the sequential run.
+    with persisted(b, c):
+        # the one fact read per snapshot: materializes both caches
+        # (concurrently — they are independent jobs) and provides the row
+        # totals PSI's NULL buckets need
+        nc_rows, nb_rows = overlap(c.count, b.count)
 
-    try:
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            # the one fact read per snapshot: materializes both caches
-            # (concurrently — they are independent jobs) and provides
-            # the row totals PSI's NULL buckets need
-            f_nb = pool.submit(b.count)
-            nc_rows = c.count()
-            nb_rows = f_nb.result()
-
-            def _numeric_family() -> list[tuple]:
-                rows: list[tuple] = []
-                pooled = _ks_pooled(b, c, numeric_cols).persist()
-                try:
-                    if plans_out is not None:
-                        plans_out["pooled"] = (
-                            pooled._jdf.queryExecution().toString()
-                        )
-                    # PSI edges + per-col non-null totals + the KS
-                    # meta probe (distinct count, pooled bounds), FUSED
-                    # into one agg over the DISTINCT-sized pooled frame
-                    # (base-side min/max == the fact's, distinct values
-                    # preserve extrema) — r15 paid this aggregation
-                    # twice (once here, once inside _ks_stat_rows)
-                    em = {
-                        r["col"]: r
-                        for r in pooled.groupBy("col")
-                        .agg(
-                            F.min(
-                                F.when(F.col("n_b") > 0, F.col("val"))
-                            ).alias("lo"),
-                            F.max(
-                                F.when(F.col("n_b") > 0, F.col("val"))
-                            ).alias("hi"),
-                            F.sum("n_b").alias("nnb"),
-                            F.sum("n_c").alias("nnc"),
-                            F.count("*").alias("nd"),
-                            F.min("val").alias("_plo"),
-                            F.max("val").alias("_phi"),
-                        )
-                        .collect()
-                    }
-                    edges = {
-                        c_: (em[c_]["lo"], em[c_]["hi"]) for c_ in numeric_cols
-                    }
-                    ks_meta = {
-                        c_: {
-                            "nd": em[c_]["nd"],
-                            "lo": em[c_]["_plo"],
-                            "hi": em[c_]["_phi"],
-                            "nb": em[c_]["nnb"],
-                            "nc": em[c_]["nnc"],
-                        }
-                        for c_ in em
-                    }
-                    # the PSI bucket-weighted counts and the KS cumsum
-                    # chain are independent job chains over the pooled
-                    # frame once the fused probe exists — overlap them
-                    with ThreadPoolExecutor(max_workers=1) as leg_pool:
-                        f_psi = leg_pool.submit(
-                            _suite_numeric_psi,
-                            pooled, numeric_cols, edges, em, nb_rows,
-                            nc_rows, n_buckets, psi_alert,
-                        )
-                        ks_rows = [
-                            ("ks", col, "numeric", n_b, n_c, stat, thr, dr)
-                            for col, n_b, n_c, stat, thr, dr in _ks_stat_rows(
-                                pooled, alpha, small_distinct, meta=ks_meta
-                            )
-                        ]
-                        rows += f_psi.result()
-                    rows += ks_rows
-                finally:
-                    pooled.unpersist()
-                return rows
-
-            def _cat_family() -> list[tuple]:
-                base_counts = _cat_value_counts(b, cat_cols)
+        def _numeric_family() -> list[tuple]:
+            with persisted(_ks_pooled(b, c, numeric_cols)) as pooled:
                 if plans_out is not None:
-                    plans_out["cat"] = (
-                        base_counts._jdf.queryExecution().toString()
+                    plans_out["pooled"] = pooled._jdf.queryExecution().toString()
+                # PSI edges + per-col non-null totals + the KS meta probe
+                # (distinct count, pooled bounds), FUSED into one agg over
+                # the DISTINCT-sized pooled frame (base-side min/max == the
+                # fact's, distinct values preserve extrema) — r15 paid this
+                # aggregation twice (once here, once inside _ks_stat_rows)
+                em = {
+                    r["col"]: r
+                    for r in pooled.groupBy("col")
+                    .agg(
+                        F.min(F.when(F.col("n_b") > 0, F.col("val"))).alias("lo"),
+                        F.max(F.when(F.col("n_b") > 0, F.col("val"))).alias("hi"),
+                        F.sum("n_b").alias("nnb"),
+                        F.sum("n_c").alias("nnc"),
+                        F.count("*").alias("nd"),
+                        F.min("val").alias("_plo"),
+                        F.max("val").alias("_phi"),
                     )
-                topk_rows = _topk_values(base_counts, k)
-                # the two folds are independent jobs over the pinned
-                # top-k bucket set — overlap them
-                with ThreadPoolExecutor(max_workers=2) as fold_pool:
-                    f_tb = fold_pool.submit(
-                        _fold_to_buckets, base_counts, topk_rows, cat_cols, k
-                    )
-                    tc = _fold_to_buckets(
-                        _cat_value_counts(c, cat_cols), topk_rows, cat_cols, k
-                    )
-                    tb = f_tb.result()
-                return [
-                    ("topk_psi", col, kind, n_b, n_c, psi, psi_alert, drifted)
-                    for col, kind, n_b, n_c, psi, drifted in _psi_rows(
-                        [], cat_cols, {}, tb, tc, psi_alert
-                    )
-                ]
-
-            def _emb_family() -> list[tuple]:
-                if plans_out is not None:
-                    plans_out["emb"] = (
-                        b.select(F.posexplode(embedding_col))
-                        ._jdf.queryExecution()
-                        .toString()
-                    )
-                (n_b, n_c, _dim, _cos, max_z, _mean_z, z_crit, drifted) = (
-                    _embedding_drift_row(b, c, embedding_col, alpha)
+                    .collect()
+                }
+                edges = {c_: (em[c_]["lo"], em[c_]["hi"]) for c_ in numeric_cols}
+                ks_meta = {
+                    c_: {
+                        "nd": em[c_]["nd"],
+                        "lo": em[c_]["_plo"],
+                        "hi": em[c_]["_phi"],
+                        "nb": em[c_]["nnb"],
+                        "nc": em[c_]["nnc"],
+                    }
+                    for c_ in em
+                }
+                # the PSI bucket-weighted counts and the KS fold chain are
+                # independent job chains over the pooled frame once the
+                # fused probe exists — overlap them
+                ks_rows, psi_rows = overlap(
+                    lambda: _ks_stat_rows(
+                        pooled, alpha, small_distinct, meta=ks_meta
+                    ),
+                    lambda: _suite_numeric_psi(
+                        pooled, numeric_cols, edges, em, nb_rows, nc_rows,
+                        n_buckets, psi_alert,
+                    ),
                 )
-                return [
-                    (
-                        "embedding",
-                        embedding_col,
-                        "embedding",
-                        n_b,
-                        n_c,
-                        max_z,
-                        z_crit,
-                        drifted,
-                    )
-                ]
+            return psi_rows + [
+                ("ks", col, "numeric", n_b, n_c, stat, thr, dr)
+                for col, n_b, n_c, stat, thr, dr in ks_rows
+            ]
 
-            futures = []
-            if numeric_cols:
-                futures.append(pool.submit(_numeric_family))
-            if cat_cols:
-                futures.append(pool.submit(_cat_family))
-            if embedding_col:
-                futures.append(pool.submit(_emb_family))
-            for f in futures:
-                out += f.result()
-    finally:
-        b.unpersist()
-        c.unpersist()
+        def _cat_family() -> list[tuple]:
+            base_counts = _cat_value_counts(b, cat_cols)
+            if plans_out is not None:
+                plans_out["cat"] = base_counts._jdf.queryExecution().toString()
+            topk_rows = _topk_values(base_counts, k)
+            # the two folds are independent jobs over the pinned top-k
+            # bucket set — overlap them
+            tc, tb = overlap(
+                lambda: _fold_to_buckets(
+                    _cat_value_counts(c, cat_cols), topk_rows, cat_cols, k
+                ),
+                lambda: _fold_to_buckets(base_counts, topk_rows, cat_cols, k),
+            )
+            return [
+                ("topk_psi", col, kind, n_b, n_c, psi, psi_alert, drifted)
+                for col, kind, n_b, n_c, psi, drifted in _psi_rows(
+                    [], cat_cols, {}, tb, tc, psi_alert
+                )
+            ]
+
+        def _emb_family() -> list[tuple]:
+            if plans_out is not None:
+                plans_out["emb"] = (
+                    b.select(F.posexplode(embedding_col))
+                    ._jdf.queryExecution()
+                    .toString()
+                )
+            (n_b, n_c, _dim, _cos, max_z, _mean_z, z_crit, drifted) = (
+                _embedding_drift_row(b, c, embedding_col, alpha)
+            )
+            return [
+                (
+                    "embedding",
+                    embedding_col,
+                    "embedding",
+                    n_b,
+                    n_c,
+                    max_z,
+                    z_crit,
+                    drifted,
+                )
+            ]
+
+        families = [
+            family
+            for family, wanted in (
+                (_numeric_family, numeric_cols),
+                (_cat_family, cat_cols),
+                (_emb_family, embedding_col),
+            )
+            if wanted
+        ]
+        out = [row for rows in overlap(*families) for row in rows]
     return base.sparkSession.createDataFrame(
         sorted(out),
         "family string, column string, kind string, n_base long, "

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from wsspark.exec import overlap
 from wsspark.io import read_table
 from wsspark.llmops import corpus, dedup, fingerprint, hashvec, pii, similarity, srp, textstats
 from wsspark.queries import Query
@@ -1023,17 +1024,15 @@ def q_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The two index checkpoints are independent of the codebook training
     # (a driver-side kmeans over a 500-row sample) — overlap them
     # (guide §2.6) so the training's collect hides the checkpoint jobs.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _f_assigned = _pool.submit(assigned.localCheckpoint)
-        _f_centroids = _pool.submit(centroids.localCheckpoint)
+    def _train_encode():
         books = pq.train_codebooks(emb, m=16, k=32, sample=500)
         # encode depends only on the trained books — start it on this
         # thread while the index checkpoints drain their tails (r17)
-        codes = pq.encode(emb, books).localCheckpoint()
-        assigned = _f_assigned.result()
-        centroids = _f_centroids.result()
+        return books, pq.encode(emb, books).localCheckpoint()
+
+    (books, codes), assigned, centroids = overlap(
+        _train_encode, assigned.localCheckpoint, centroids.localCheckpoint
+    )
     n_probe = similarity.auto_n_probe(n_cells)
     qvecs = {
         r.vec_id: np.asarray(r.embedding, dtype=np.float64)
@@ -2082,20 +2081,6 @@ def _result_cap() -> int:
     )
 
 
-def _collect_capped(out, cap: int | None = None):
-    """collect() with an explicit ceiling: limit(cap+1) bounds the driver
-    transfer even when the check fails, and overflowing raises instead of
-    OOMing the driver."""
-    cap = _result_cap() if cap is None else cap
-    rows = out.limit(cap + 1).collect()
-    if len(rows) > cap:
-        raise ValueError(
-            f"snapstore driver query result exceeds the {cap}-row driver "
-            "materialization cap — rescope the query or stream the result"
-        )
-    return rows
-
-
 def _pin_cap_guard(out, cap: int):
     """Per-partition row-position guard (LocalLimit semantics as a pure
     JVM expression): keep only the first ``cap + 1`` rows of EACH
@@ -2121,13 +2106,9 @@ def _pin_result(out, cap: int | None = None):
     WITHOUT a driver round-trip (r16 optimization): an eager
     ``localCheckpoint`` pins the computed partitions in the block store
     and truncates lineage, so the source files can be deleted while the
-    frame stays readable — where the old ``_collect_capped`` +
-    ``createDataFrame(rows)`` pattern shipped every row through the
-    driver twice via pickle (measured 6.5 s for the 591k-row q32 MV at
-    sf0.1 vs 0.25 s for the checkpoint; values bit-identical). The
-    row-count ceiling survives as a count over the already-materialized
-    blocks (one cheap job), and — r17, restoring ``_collect_capped``'s
-    bounded-work property — the pin itself runs under a per-partition
+    frame stays readable, and no row passes through the driver. The
+    row-count ceiling is a count over the already-materialized blocks
+    (one cheap job), and the pin itself runs under a per-partition
     ``cap + 1`` row guard (``_pin_cap_guard``), so an sf bump raises
     loudly after pinning at most (cap+1) x n_partitions rows instead of
     first materializing the full oversized result. Cluster caveat,
@@ -3018,21 +2999,18 @@ def q_ks_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eager job chains (different column sets; the second mixes in a
     # different table) — overlap them (guide §2.6). Output assembly
     # order is fixed, so results are bit-identical.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_stationary = pool.submit(
-            ks_drift,
-            li.filter(F.col("l_shipdate") < split),
-            li.filter(F.col("l_shipdate") >= split),
-            cols=["l_quantity"],
-        )
-        feed_swap = ks_drift(
+    feed_swap, stationary = overlap(
+        lambda: ks_drift(
             li.select(F.col("l_extendedprice").alias("price")),
             part.select(F.col("p_retailprice").alias("price")),
             cols=["price"],
-        )
-        stationary = f_stationary.result()
+        ),
+        lambda: ks_drift(
+            li.filter(F.col("l_shipdate") < split),
+            li.filter(F.col("l_shipdate") >= split),
+            cols=["l_quantity"],
+        ),
+    )
     return stationary.unionByName(feed_swap)
 
 
@@ -3455,24 +3433,21 @@ def q_drift_suite_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # different tables and share nothing — overlap their driver-composed
     # job chains (guide §2.6); each call is eager, so the sequential
     # form drained one suite's tail before starting the other.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_tab = pool.submit(
-            drift_suite,
+    emb = read_table(spark, sf_dir, "embeddings")
+    embedded, tabular = overlap(
+        lambda: drift_suite(
+            emb.filter(F.col("vec_id") % 4 < 2),
+            emb.filter(F.col("vec_id") % 4 >= 2),
+            embedding_col="embedding",
+        ),
+        lambda: drift_suite(
             li.filter(F.col("l_shipdate") < split),
             li.filter(F.col("l_shipdate") >= split),
             numeric_cols=["l_quantity", "l_extendedprice"],
             cat_cols=["l_returnflag"],
             k=100,
-        )
-        emb = read_table(spark, sf_dir, "embeddings")
-        embedded = drift_suite(
-            emb.filter(F.col("vec_id") % 4 < 2),
-            emb.filter(F.col("vec_id") % 4 >= 2),
-            embedding_col="embedding",
-        )
-        tabular = f_tab.result()
+        ),
+    )
     return tabular.unionByName(embedded)
 
 

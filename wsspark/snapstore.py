@@ -79,6 +79,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from wsspark.exec import overlap
+
 
 class SnapshotConflict(RuntimeError):
     """Another committer published this version first — re-read and retry."""
@@ -4663,8 +4665,6 @@ def _rewrite_commit(
     # mode("error") would have (a concurrent CDF write landing first
     # would otherwise trip the data job's existence check).
     if ctx["cdf"] and changes is not None:
-        from concurrent.futures import ThreadPoolExecutor
-
         os.makedirs(commit_dir, exist_ok=False)
         # belt-and-braces for the mode("append") data write below: the
         # makedirs just created this uuid-suffixed dir, so no pre-existing
@@ -4672,12 +4672,10 @@ def _rewrite_commit(
         # note) — assert the invariant where the append relies on it
         assert not _list_parquet(commit_dir), commit_dir
         cdf_dir = os.path.join(commit_dir, "_cdf")
-        with ThreadPoolExecutor(max_workers=1) as _pool:
-            _f_data = _pool.submit(
-                lambda: new_data.write.mode("append").parquet(commit_dir)
-            )
-            changes.write.mode("error").parquet(cdf_dir)
-            _f_data.result()
+        overlap(
+            lambda: changes.write.mode("error").parquet(cdf_dir),
+            lambda: new_data.write.mode("append").parquet(commit_dir),
+        )
         ctx["cdf_files"] = _list_parquet(cdf_dir)
     else:
         new_data.write.mode("error").parquet(commit_dir)
@@ -4867,15 +4865,13 @@ def snap_merge(
         # independent jobs over the source — overlap them (guide §2.6;
         # both are read-only, so raising the dup error after the bounds
         # land changes nothing observable)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1) as _pool:
-            _f_dup = _pool.submit(_dup_check)
-            bounds = keys.agg(
+        bounds, _ = overlap(
+            lambda: keys.agg(
                 *[F.min(c).alias(f"_lo{i}") for i, c in enumerate(on)],
                 *[F.max(c).alias(f"_hi{i}") for i, c in enumerate(on)],
-            ).collect()[0]
-            _f_dup.result()
+            ).collect()[0],
+            _dup_check,
+        )
         norm = _session_ts_normalizer(spark)
         ts_keys = {
             f.name
@@ -5143,19 +5139,14 @@ def snap_delete_dv(
             # §2.6). If the delete matched nothing, the whole staged dir
             # (both sidecars) is dropped, so the final state is
             # identical to the old sequential write-then-check form.
-            from concurrent.futures import ThreadPoolExecutor
-
             cdf_dir = os.path.join(dv_commit_dir, "_cdf")
-            with ThreadPoolExecutor(max_workers=1) as _pool:
-                _f_dv = _pool.submit(
-                    lambda: matched.coalesce(1).write.mode("error").parquet(
-                        dv_dir
-                    )
-                )
-                matched_rows.select(*schema_cols).withColumn(
-                    "_change_type", F.lit("delete")
-                ).write.mode("error").parquet(cdf_dir)
-                _f_dv.result()
+            overlap(
+                lambda: matched_rows.select(*schema_cols)
+                .withColumn("_change_type", F.lit("delete"))
+                .write.mode("error")
+                .parquet(cdf_dir),
+                lambda: matched.coalesce(1).write.mode("error").parquet(dv_dir),
+            )
         else:
             matched.coalesce(1).write.mode("error").parquet(dv_dir)
         files = _list_parquet(dv_dir)

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from wsspark.exec import persisted
 from wsspark.io import configure_timestamp_reads, convert_ns_timestamp
 from wsspark.ops.audit import snapshot_diff
 from wsspark.ops.functions import apply_movements
@@ -504,54 +505,53 @@ class StreamingDedupIndex:
         # bucket occupancy) or duplicate its verified pairs.
         if batch_id <= self._log.last_applied():
             return
-        new = self._banded(batch).cache()
-        history = _read_parquet_or_none(self.spark, self.index_path)
+        with persisted(self._banded(batch)) as new:
+            history = _read_parquet_or_none(self.spark, self.index_path)
 
-        n = new.select("doc_id", "band", "band_hash")
-        pair_sets = []
-        # new x new (within-batch dups)
-        a, b = n.alias("a"), n.alias("b")
-        nn = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.band_hash") == F.col("b.band_hash"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-            .distinct()
-        )
-        pair_sets.append(self._verified_pairs(nn, new, new))
-        # new x history (cross-batch dups); history side pruned via band join
-        if history is not None:
-            h = history.select("doc_id", "band", "band_hash")
-            nh = (
-                n.alias("a")
-                .join(
-                    h.alias("b"),
+            n = new.select("doc_id", "band", "band_hash")
+            pair_sets = []
+            # new x new (within-batch dups)
+            a, b = n.alias("a"), n.alias("b")
+            nn = (
+                a.join(
+                    b,
                     (F.col("a.band") == F.col("b.band"))
                     & (F.col("a.band_hash") == F.col("b.band_hash"))
-                    & (F.col("a.doc_id") != F.col("b.doc_id")),
+                    & (F.col("a.doc_id") < F.col("b.doc_id")),
                 )
-                .select(
-                    F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-                )
+                .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
                 .distinct()
             )
-            pair_sets.append(self._verified_pairs(nh, new, history))
+            pair_sets.append(self._verified_pairs(nn, new, new))
+            # new x history (cross-batch dups); history side pruned via band join
+            if history is not None:
+                h = history.select("doc_id", "band", "band_hash")
+                nh = (
+                    n.alias("a")
+                    .join(
+                        h.alias("b"),
+                        (F.col("a.band") == F.col("b.band"))
+                        & (F.col("a.band_hash") == F.col("b.band_hash"))
+                        & (F.col("a.doc_id") != F.col("b.doc_id")),
+                    )
+                    .select(
+                        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+                    )
+                    .distinct()
+                )
+                pair_sets.append(self._verified_pairs(nh, new, history))
 
-        pairs = pair_sets[0]
-        for p in pair_sets[1:]:
-            pairs = pairs.unionByName(p)
-        # Per-batch partition dirs + overwrite: replays of a partially
-        # applied batch rewrite in place instead of appending duplicates.
-        pairs.write.mode("overwrite").parquet(
-            os.path.join(self.pairs_path, f"batch_id={batch_id}")
-        )
-        new.write.mode("overwrite").parquet(
-            os.path.join(self.index_path, f"batch_id={batch_id}")
-        )
-        new.unpersist()
+            pairs = pair_sets[0]
+            for p in pair_sets[1:]:
+                pairs = pairs.unionByName(p)
+            # Per-batch partition dirs + overwrite: replays of a partially
+            # applied batch rewrite in place instead of appending duplicates.
+            pairs.write.mode("overwrite").parquet(
+                os.path.join(self.pairs_path, f"batch_id={batch_id}")
+            )
+            new.write.mode("overwrite").parquet(
+                os.path.join(self.index_path, f"batch_id={batch_id}")
+            )
         self._log.commit(batch_id)
 
     def attach(self, docs: DataFrame, checkpoint_dir: str):
@@ -645,48 +645,47 @@ class StreamingSrpIndex:
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         if batch_id <= self._log.last_applied():
             return
-        new = self._banded(batch).cache()
-        history = _read_parquet_or_none(self.spark, self.index_path)
+        with persisted(self._banded(batch)) as new:
+            history = _read_parquet_or_none(self.spark, self.index_path)
 
-        n = new.select("vec_id", "band", "band_key")
-        a, b = n.alias("a"), n.alias("b")
-        nn = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.band_key") == F.col("b.band_key"))
-                & (F.col("a.vec_id") < F.col("b.vec_id")),
-            )
-            .select(
-                F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b")
-            )
-            .distinct()
-        )
-        pairs = self._verified_pairs(nn, new, new)
-        if history is not None:
-            h = history.select("vec_id", "band", "band_key")
-            nh = (
-                n.alias("a")
-                .join(
-                    h.alias("b"),
+            n = new.select("vec_id", "band", "band_key")
+            a, b = n.alias("a"), n.alias("b")
+            nn = (
+                a.join(
+                    b,
                     (F.col("a.band") == F.col("b.band"))
                     & (F.col("a.band_key") == F.col("b.band_key"))
-                    & (F.col("a.vec_id") != F.col("b.vec_id")),
+                    & (F.col("a.vec_id") < F.col("b.vec_id")),
                 )
                 .select(
-                    F.col("a.vec_id").alias("id_a"),
-                    F.col("b.vec_id").alias("id_b"),
+                    F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b")
                 )
                 .distinct()
             )
-            pairs = pairs.unionByName(self._verified_pairs(nh, new, history))
-        pairs.write.mode("overwrite").parquet(
-            os.path.join(self.pairs_path, f"batch_id={batch_id}")
-        )
-        new.write.mode("overwrite").parquet(
-            os.path.join(self.index_path, f"batch_id={batch_id}")
-        )
-        new.unpersist()
+            pairs = self._verified_pairs(nn, new, new)
+            if history is not None:
+                h = history.select("vec_id", "band", "band_key")
+                nh = (
+                    n.alias("a")
+                    .join(
+                        h.alias("b"),
+                        (F.col("a.band") == F.col("b.band"))
+                        & (F.col("a.band_key") == F.col("b.band_key"))
+                        & (F.col("a.vec_id") != F.col("b.vec_id")),
+                    )
+                    .select(
+                        F.col("a.vec_id").alias("id_a"),
+                        F.col("b.vec_id").alias("id_b"),
+                    )
+                    .distinct()
+                )
+                pairs = pairs.unionByName(self._verified_pairs(nh, new, history))
+            pairs.write.mode("overwrite").parquet(
+                os.path.join(self.pairs_path, f"batch_id={batch_id}")
+            )
+            new.write.mode("overwrite").parquet(
+                os.path.join(self.index_path, f"batch_id={batch_id}")
+            )
         self._log.commit(batch_id)
 
     def attach(self, vectors: DataFrame, checkpoint_dir: str):
@@ -786,8 +785,8 @@ class StreamingChunkDedup:
             (F.col("_h_doc").isNotNull() | (F.col("_rn") > 1)).alias("is_dup"),
             F.coalesce("_h_doc", "_batch_first_doc").alias("first_doc_id"),
             F.coalesce("_h_chunk", "_batch_first_chunk").alias("first_chunk_id"),
-        ).cache()
-        try:
+        )
+        with persisted(out):
             out.write.mode("overwrite").parquet(
                 os.path.join(self.assignments_path, f"batch_id={batch_id}")
             )
@@ -799,8 +798,6 @@ class StreamingChunkDedup:
             novel.write.mode("overwrite").parquet(
                 os.path.join(self.index_path, f"batch_id={batch_id}")
             )
-        finally:
-            out.unpersist()
         self._log.commit(batch_id)
 
     def attach(self, docs: DataFrame, checkpoint_dir: str):
