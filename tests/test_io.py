@@ -268,3 +268,11 @@ def test_session_factory_leaves_fifo_scheduler(spark):
     FIFO pool, which the engine's driver-thread job overlaps rely on."""
     assert spark.sparkContext.getConf().get("spark.scheduler.mode") is None
     assert spark.sparkContext._jsc.sc().getSchedulingMode().toString() == "FIFO"
+
+
+def test_session_factory_sizes_codegen_cache(spark):
+    """get_session raises Spark's compiled-class cache (default 100 entries)
+    above one ETL unit's ~153 generated classes, so a warm unit does not
+    recompile what the LRU would otherwise evict mid-unit."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.sql.codegen.cache.maxEntries") == "1000"

@@ -99,3 +99,40 @@ def test_build_reports_from_native_warehouse_frames(spark):
         assert summary["total_dead_stock_items"] == 1
     finally:
         reports.release()
+
+
+def _codegen_cache(spark):
+    """Spark's JVM-wide cache of compiled generated classes. It is private,
+    so it is reached by reflection; the test empties it to start cold."""
+    gw = spark.sparkContext._gateway
+    jvm = gw.jvm
+    owner = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    )
+    getter = owner.getDeclaredMethod("cache", gw.new_array(jvm.java.lang.Class, 0))
+    getter.setAccessible(True)
+    return getter.invoke(
+        owner.getField("MODULE$").get(None), gw.new_array(jvm.java.lang.Object, 0)
+    )
+
+
+def test_warm_incremental_run_reuses_compiled_code(spark, sf_dir, tmp_path):
+    """The reference runs as a repeated incremental job. A cold run compiles
+    ~150 generated classes; the session's codegen cache holds them all, so
+    the next run recompiles almost none (Spark's default 100-entry cache
+    evicted and recompiled ~140 of them every run)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    _codegen_cache(spark).invalidateAll()
+    out = str(tmp_path / "reports")
+    compiles = []
+    for _ in range(2):
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        pipeline.run_pipeline(
+            spark,
+            sf_dir,
+            out,
+            load_type="incremental",
+            incremental_since="2001-01-01 00:00:00",
+        )
+        compiles.append(metrics.METRIC_COMPILATION_TIME().getCount() - before)
+    assert compiles[1] <= 0.1 * compiles[0], compiles

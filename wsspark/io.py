@@ -396,17 +396,6 @@ def read_jdbc_table(
     return reader.load()
 
 
-def write_jdbc_append(
-    df: DataFrame, url: str, table: str, properties: dict[str, str] | None = None
-) -> None:
-    """S4 over a live database: batched append (the Spark analog of the
-    reference's pandas ``to_sql(append)``, etl/load/data_loader.py:89-94)."""
-    writer = df.write.format("jdbc").option("url", url).option("dbtable", table)
-    for k, v in (properties or {}).items():
-        writer = writer.option(k, v)
-    writer.mode("append").save()
-
-
 def compact_parquet(
     spark: SparkSession,
     path: str,

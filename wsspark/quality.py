@@ -60,11 +60,6 @@ def dq_filter(flagged: DataFrame) -> DataFrame:
     return flagged.filter(F.col("dq_issue") == "valid")
 
 
-def dq_reject_counts(flagged: DataFrame) -> DataFrame:
-    """Reject tally per issue class (the reference only logs a count)."""
-    return flagged.groupBy("dq_issue").count().withColumnRenamed("count", "n_rows")
-
-
 def incremental_filter(
     movements: DataFrame,
     last_run_timestamp: dt.datetime | str,
