@@ -119,8 +119,8 @@ def _codegen_cache(spark):
 def test_warm_incremental_run_reuses_compiled_code(spark, sf_dir, tmp_path):
     """The reference runs as a repeated incremental job. A cold run compiles
     ~150 generated classes; the session's codegen cache holds them all, so
-    the next run recompiles almost none (Spark's default 100-entry cache
-    evicted and recompiled ~140 of them every run)."""
+    the next run in the same JVM recompiles almost none (Spark's default
+    100-entry cache evicted and recompiled 138-146 of them every run)."""
     metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
     _codegen_cache(spark).invalidateAll()
     out = str(tmp_path / "reports")

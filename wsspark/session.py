@@ -28,25 +28,20 @@ run on local[N]):
   ~0.5-1 GiB of task heap through a hash aggregate — 4 GiB/core
   executors hold 4-8 concurrent tasks without spill.
 - Codegen cache sized to the library's working set
-  (``CODEGEN_CACHE_MAX_ENTRIES`` = 1000). Spark keeps compiled generated
-  classes in one JVM-wide LRU keyed by their source
-  (``spark.sql.codegen.cache.maxEntries``, default 100). A cold ETL unit
-  (``pipeline.run_pipeline``) fills 153 entries, on perfbench's 150k-row
-  input and on the test session's sf0.001 alike, so at 100 entries the
-  LRU evicted inside every unit: each repeated incremental run recompiled 144-146
-  classes, and the JIT then compiled every new class again. At 1000 a
-  warm unit compiles 0-8. A ``table_dml`` cycle compiled 57-60 at 100
-  and still compiles 12-20 at 1000, because per-cycle literals (BETWEEN
-  bounds, read-window timestamps) are inlined into the generated code.
-  Measured cost (Spark 4.1.2, JDK 17): filling the cache to 990 ETL
-  entries and then emptying it released 24.5 KB of heap and 8.7 KB of
-  metaspace per entry (sources up to 30 KB, classes up to 11.5 KB of
-  bytecode), so 1000 entries hold about 33 MB of driver memory.
+  (``CODEGEN_CACHE_MAX_ENTRIES`` = 1000; Spark's
+  ``spark.sql.codegen.cache.maxEntries`` defaults to 100). One ETL unit
+  (``pipeline.run_pipeline``) compiles ~153 generated classes, so at 100
+  the LRU evicts inside every unit; at 1000 a second unit in the same JVM
+  compiles 0-8 (a snapstore DML cycle: 12-20, because its per-cycle
+  predicate bounds are inlined into the generated code). Plans and
+  results do not change; the cache only memoizes compilation. The gain
+  needs several units in one long-lived driver JVM (perfbench's warm
+  units, bench.py, the tier-1 session): a one-shot CLI run compiles as
+  much either way, except for its ``--report`` pass, which then reuses
+  the unit's classes. Measured cost (Spark 4.1.2, JDK 17): about 33 KB
+  of heap plus metaspace per entry, ~33 MB at 1000.
   It is a static conf: it applies only when ``get_session`` creates the
-  SparkContext, and Spark reads it once per JVM, when it first generates
-  code. A session that reuses a running context keeps that context's
-  value. Plans and results do not change; the cache only memoizes
-  compilation.
+  SparkContext; a session that reuses a running context keeps its value.
 """
 
 from __future__ import annotations
