@@ -1,10 +1,14 @@
 """The execution primitives (``wsspark.exec``): ``overlap`` result order,
 waiting and failure semantics, the caller's job group reaching every
-overlapped job, ``persisted`` scoping — plus a source scan that keeps
-hand-rolled thread pools and caches from coming back."""
+overlapped job, ``persisted``, ``rounds`` and ``scratch_dir`` scoping, the
+iterative operators leaving O(1) checkpoints registered — plus source scans
+that keep hand-rolled thread pools, caches, temp dirs and checkpoint loops
+from coming back."""
 
 from __future__ import annotations
 
+import ast
+import os
 import pathlib
 import re
 import threading
@@ -12,11 +16,14 @@ import time
 
 import pytest
 from pyspark import StorageLevel
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wsspark import quality
 from wsspark import snapstore as ss
-from wsspark.exec import overlap, persisted
+from wsspark.exec import overlap, persisted, rounds, scratch_dir
+from wsspark.llmops import dedup, similarity
+from wsspark.ops import graph
 
 _WSSPARK = pathlib.Path(__file__).resolve().parent.parent / "wsspark"
 
@@ -183,18 +190,178 @@ def test_snapstore_dml_jobs_stay_in_the_callers_job_group(spark, tmp_path):
     )
 
 
+def _registered(spark, frames) -> int:
+    """How many of ``frames`` (local checkpoints) are still registered."""
+    ids = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    return sum(
+        f._jdf.queryExecution().analyzed().rdd().id() in ids for f in frames
+    )
+
+
+@pytest.fixture
+def checkpoints(spark, monkeypatch):
+    """Every frame ``localCheckpoint`` returns while the test runs. Holding
+    them keeps a JVM GC from dropping a leaked round behind the test's
+    back."""
+    made: list[DataFrame] = []
+    frame_type = type(spark.range(0))
+    original = frame_type.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        made.append(original(self, *args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(frame_type, "localCheckpoint", recording)
+    return made
+
+
+def test_rounds_keep_the_previous_round_for_the_convergence_check(spark):
+    made = []
+    with rounds() as barrier:
+        prev = barrier(spark.range(4).select("id", F.col("id").alias("v")))
+        made.append(prev)
+        for _ in range(3):
+            new = barrier(prev.select("id", (F.col("v") + 1).alias("v")))
+            made.append(new)
+            # the check reads the round before the newest one
+            diff = new.alias("n").join(prev.alias("o"), "id")
+            assert diff.filter("n.v != o.v + 1").count() == 0
+            prev = new
+        out = prev.select("id", (F.col("v") * 10).alias("v"))
+    assert sorted(r.v for r in out.collect()) == [30, 40, 50, 60]
+    assert _registered(spark, made) == 1
+    with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        made[0].collect()
+
+
+def test_rounds_release_every_round_on_a_raising_exit(spark):
+    made = []
+    with pytest.raises(RuntimeError, match="boom"):
+        with rounds() as barrier:
+            made.append(barrier(spark.range(3)))
+            made.append(barrier(spark.range(5)))
+            raise RuntimeError("boom")
+    assert _registered(spark, made) == 0
+
+
+def test_scratch_dir_is_removed_on_every_exit():
+    with scratch_dir("exec-test-") as d:
+        os.mkdir(os.path.join(d, "sub"))
+        open(os.path.join(d, "sub", "f"), "w").close()
+        assert os.path.basename(d).startswith("exec-test-")
+    assert not os.path.exists(d)
+    with pytest.raises(KeyError):
+        with scratch_dir("exec-test-") as d:
+            raise KeyError("x")
+    assert not os.path.exists(d)
+
+
+def _chain(spark, n, cols="src long, dst long"):
+    return spark.createDataFrame([(i, i + 1) for i in range(n)], cols)
+
+
+def test_connected_components_leaves_one_round(spark, checkpoints):
+    pairs = _chain(spark, 12, "doc_a long, doc_b long")
+    got = dedup.connected_components(pairs, driver_threshold=0)
+    assert {r.cluster_id for r in got.collect()} == {0}
+    assert _registered(spark, checkpoints) == 1
+
+
+def test_connected_components_exhausted_releases_every_round(
+    spark, checkpoints
+):
+    pairs = _chain(spark, 40, "doc_a long, doc_b long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.connected_components(pairs, max_iter=1, driver_threshold=0)
+    assert checkpoints and _registered(spark, checkpoints) == 0
+
+
+def _left_after(spark, checkpoints, run, sizes) -> list[int]:
+    """The checkpoints still registered after ``run(n).collect()``, per
+    ``n`` in ``sizes``."""
+    left = []
+    for n in sizes:
+        checkpoints.clear()
+        run(n).collect()
+        left.append(_registered(spark, checkpoints))
+    return left
+
+
+def test_pagerank_checkpoints_do_not_grow_with_iterations(spark, checkpoints):
+    edges = _chain(spark, 3).withColumn("w", F.lit(1.0))
+    short, long = _left_after(
+        spark,
+        checkpoints,
+        lambda n: graph.pagerank(edges, n_iter=n, checkpoint_interval=1),
+        (2, 6),
+    )
+    assert short == long
+
+
+def test_shortest_paths_checkpoints_do_not_grow_with_depth(spark, checkpoints):
+    short, long = _left_after(
+        spark,
+        checkpoints,
+        lambda n: graph.shortest_paths(
+            _chain(spark, n), 0, max_iter=n + 2, checkpoint_interval=2
+        ),
+        (4, 10),
+    )
+    assert short == long
+
+
+def test_kmeans_checkpoints_do_not_grow_with_iterations(spark, checkpoints):
+    emb = spark.createDataFrame(
+        [(i, [float(i % 5), float(i // 5)]) for i in range(20)],
+        ["vec_id", "embedding"],
+    )
+    short, long = _left_after(
+        spark,
+        checkpoints,
+        lambda n: similarity.kmeans_embeddings(emb, k=3, n_iter=n),
+        (2, 6),
+    )
+    assert short == long
+
+
 # ``pipeline.Reports`` hands its caches to the caller, who releases them
 # with ``Reports.release`` — the one cache not scoped to a block.
 _ALLOWED = {("pipeline.py", "cached.append(df.cache())")}
 
 
-def test_no_thread_pool_or_cache_outside_exec():
-    pattern = re.compile(r"ThreadPoolExecutor|\.persist\(|\.cache\(\)")
-    found = []
+def _library_sources():
     for path in sorted(_WSSPARK.rglob("*.py")):
-        if path.name == "exec.py" and path.parent == _WSSPARK:
-            continue
+        if not (path.name == "exec.py" and path.parent == _WSSPARK):
+            yield path
+
+
+def test_no_thread_pool_or_cache_outside_exec():
+    pattern = re.compile(
+        r"ThreadPoolExecutor|\.persist\(|\.cache\(\)|mkdtemp\(|\batexit\b"
+    )
+    found = []
+    for path in _library_sources():
         for no, line in enumerate(path.read_text().splitlines(), 1):
             if pattern.search(line) and (path.name, line.strip()) not in _ALLOWED:
                 found.append(f"{path.relative_to(_WSSPARK)}:{no}: {line.strip()}")
-    assert not found, "use wsspark.exec.overlap / persisted:\n" + "\n".join(found)
+    assert not found, (
+        "use wsspark.exec.overlap / persisted / scratch_dir:\n" + "\n".join(found)
+    )
+
+
+def test_no_checkpoint_in_a_loop_outside_exec():
+    """A one-shot ``localCheckpoint`` barrier is fine; one in a loop body
+    makes a round per iteration and belongs in ``exec.rounds``."""
+    found = []
+    for path in _library_sources():
+        for loop in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(loop, (ast.For, ast.While)):
+                continue
+            for node in ast.walk(loop):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "localCheckpoint"
+                ):
+                    found.append(f"{path.relative_to(_WSSPARK)}:{node.lineno}")
+    assert not found, "use wsspark.exec.rounds:\n" + "\n".join(found)

@@ -70,35 +70,6 @@ def test_empty_graph_raises(spark):
         pagerank(df)
 
 
-def test_reliable_checkpoint_dir_matches_local(spark, toy_edges, tmp_path):
-    """checkpoint_dir engages the storage-backed checkpoint() path (the
-    cluster/fault-tolerance mode for billion-edge graphs): results must be
-    bit-identical to the localCheckpoint default, and RDD checkpoint data
-    must actually land under the given directory."""
-    import os
-
-    ckdir = str(tmp_path / "pr_ck")
-    df = spark.createDataFrame(toy_edges, "src long, dst long, w double")
-    # checkpoint_interval=1 so the mid-loop rank state checkpoints too
-    got = {
-        r.node: r.rank
-        for r in pagerank(
-            df, n_iter=4, checkpoint_interval=1, checkpoint_dir=ckdir
-        ).collect()
-    }
-    want = {
-        r.node: r.rank
-        for r in pagerank(df, n_iter=4, checkpoint_interval=1).collect()
-    }
-    assert got == want
-    written = [
-        os.path.join(root, f)
-        for root, _, files in os.walk(ckdir)
-        for f in files
-    ]
-    assert written, "no reliable checkpoint files were written"
-
-
 def test_triangle_stats_exact_on_known_graph(spark):
     """K4 (4 triangles) + a 10-leaf star hub (0 triangles) + duplicate /
     reversed / self-loop edges: orientation dedups and the hub adds

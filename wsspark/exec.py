@@ -10,10 +10,31 @@ caller's span. ``overlap`` carries them into every thread it uses.
 
 ``persisted`` scopes a cache to a ``with`` block: the frames are released
 on every exit, raising ones included.
+
+``rounds`` scopes the checkpoints of an iterative operator. Each
+``barrier(df)`` is an eager local checkpoint, one round. A local checkpoint
+is not a cache: ``df.unpersist()`` does not release it, and until a JVM GC
+lets Spark's ContextCleaner drop it every round stays in the block store,
+so the memory held grows with the round count. ``rounds`` releases rounds
+itself, by unpersisting the checkpointed RDD under the frame's analyzed
+plan (a private API, used nowhere else). Those blocks are the only copy of
+a round: its lineage is cut, so a released round can no longer be read
+(``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``). Round *k* is computed from round
+*k-1*'s blocks until it has materialized, and the loop's convergence check
+then compares the two. So round *k-1* may go only after round *k* has
+materialized and that check has run: ``barrier`` keeps the two newest
+rounds and releases every older one, because the next round it is handed
+reads only the newest. A raising exit releases every round; a normal exit
+keeps the newest, which the returned frame reads.
+
+``scratch_dir`` scopes a temporary directory to a ``with`` block. A query
+that needs several directories takes subdirectories of one.
 """
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from typing import Any, Callable, Iterator
@@ -68,3 +89,44 @@ def persisted(*dfs: DataFrame) -> Iterator[Any]:
     finally:
         for df in owned:
             df.unpersist()
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks of a local checkpoint made by ``localCheckpoint``;
+    reading ``df`` afterwards fails."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+@contextmanager
+def rounds() -> Iterator[Callable[[DataFrame], DataFrame]]:
+    """Yield ``barrier(df)``, which returns ``df`` eagerly local-checkpointed
+    as the next round. Once the next round has materialized, the round
+    before the previous one is released; on a raising exit every round is,
+    on a normal exit every round but the newest."""
+    made: list[DataFrame] = []
+
+    def barrier(df: DataFrame) -> DataFrame:
+        made.append(df.localCheckpoint())
+        while len(made) > 2:
+            _release_checkpoint(made.pop(0))
+        return made[-1]
+
+    try:
+        yield barrier
+    except BaseException:
+        for df in made:
+            _release_checkpoint(df)
+        raise
+    for df in made[:-1]:
+        _release_checkpoint(df)
+
+
+@contextmanager
+def scratch_dir(prefix: str) -> Iterator[str]:
+    """Yield a new temporary directory, removed with everything in it when
+    the block exits, however it exits."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)

@@ -26,7 +26,7 @@ import contextlib
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from wsspark.exec import persisted
+from wsspark.exec import persisted, rounds
 
 DEFAULT_NUM_HASHES = 32
 DEFAULT_BANDS = 8
@@ -500,10 +500,11 @@ def connected_components(
     rounds O(log diameter) instead of O(diameter): a 1M-node path converges
     in ~20 rounds, not 1M. All shuffles are keyed by node id,
     AQE-skew-splittable. Per round the driver sees ONE scalar (the
-    changed-label count) for the convergence test, and ``localCheckpoint``
-    truncates the growing lineage — the standard Spark iterative-algorithm
-    pattern (same shape GraphFrames uses). Returns (node, cluster_id),
-    nodes = every id appearing in ``pairs``.
+    changed-label count) for the convergence test, and each round's labels
+    are an ``exec.rounds`` checkpoint that truncates the growing lineage
+    (the standard Spark iterative-algorithm pattern, same shape GraphFrames
+    uses) and is released once two newer rounds exist. Returns
+    (node, cluster_id), nodes = every id appearing in ``pairs``.
 
     Raises ``RuntimeError`` if labels are still changing after ``max_iter``
     rounds — a partially-propagated labeling would silently split real
@@ -578,16 +579,15 @@ def connected_components(
             ).alias("e")
         ).select("e.src", "e.dst")
         sym_scope.enter_context(persisted(sym))
-        labels = (
+        barrier = sym_scope.enter_context(rounds())
+        labels = barrier(
             sym.select(F.col("src").alias("node"))
             .distinct()
             .select("node", F.col("node").alias("cluster_id"))
-            .localCheckpoint()
         )
-        # the eager localCheckpoint above materialized sym (filling ITS
+        # the eager seed checkpoint above materialized sym (filling ITS
         # cache), so the probe-time pairs cache has served its purpose
         probe_scope.close()
-        converged = False
         for _ in range(max_iter):
             nbr = sym.join(labels, sym["dst"] == labels["node"]).select(
                 sym["src"].alias("node"), "cluster_id"
@@ -603,7 +603,7 @@ def connected_components(
             parent = mins.select(
                 F.col("node").alias("_cid"), F.col("cluster_id").alias("_parent")
             )
-            new = (
+            new = barrier(
                 mins.join(parent, mins["cluster_id"] == parent["_cid"], "left")
                 .select(
                     "node",
@@ -612,7 +612,6 @@ def connected_components(
                         F.coalesce(F.col("_parent"), F.col("cluster_id")),
                     ).alias("cluster_id"),
                 )
-                .localCheckpoint()
             )
             changed = (
                 new.alias("n")
@@ -622,16 +621,13 @@ def connected_components(
             )
             labels = new
             if changed == 0:
-                converged = True
-                break
-    if not converged:
+                return labels
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds; "
             "labels were still changing — raise max_iter (rounds are "
             "O(log diameter) with pointer jumping, so this indicates a "
             "pathological graph or a bug, not a long chain)"
         )
-    return labels
 
 
 def blocked_fuzzy_pairs(

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from wsspark.exec import persisted
+from wsspark.exec import persisted, rounds
 
 
 def as_double(vec: Column) -> Column:
@@ -206,55 +206,55 @@ def kmeans_centroids(
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    for _ in range(n_iter):
-        assigned = (
-            corpus.crossJoin(F.broadcast(cents))
-            .select(F.col(id_col), "_vec", "centroid_id", d2.alias("_d2"))
-            .groupBy(id_col)
-            .agg(
-                F.min(F.struct("_d2", "centroid_id")).alias("_best"),
-                F.first("_vec").alias("_vec"),
+    with rounds() as barrier:
+        for _ in range(n_iter):
+            assigned = (
+                corpus.crossJoin(F.broadcast(cents))
+                .select(F.col(id_col), "_vec", "centroid_id", d2.alias("_d2"))
+                .groupBy(id_col)
+                .agg(
+                    F.min(F.struct("_d2", "centroid_id")).alias("_best"),
+                    F.first("_vec").alias("_vec"),
+                )
+                .select("_vec", F.col("_best.centroid_id").alias("cluster_id"))
             )
-            .select("_vec", F.col("_best.centroid_id").alias("cluster_id"))
+            means = (
+                assigned.select("cluster_id", F.posexplode("_vec").alias("dim", "x"))
+                .groupBy("cluster_id", "dim")
+                .agg(F.round(F.avg("x"), 9).alias("m"))
+                .groupBy("cluster_id")
+                .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("_dm"))
+                .select(
+                    "cluster_id",
+                    F.transform(F.col("_dm"), lambda s: s["m"]).alias("_cvec"),
+                )
+            )
+            cents = barrier(
+                cents.alias("old")
+                .join(
+                    means.select(
+                        F.col("cluster_id").alias("centroid_id"),
+                        F.col("_cvec").alias("_new"),
+                    ),
+                    "centroid_id",
+                    "left",
+                )
+                .select(
+                    "centroid_id",
+                    F.coalesce(F.col("_new"), F.col("old._cvec")).alias("_m"),
+                )
+                .select("centroid_id", "_m", norm(F.col("_m")).alias("_mn"))
+                .select(
+                    "centroid_id",
+                    F.transform(
+                        F.col("_m"),
+                        lambda x: x / F.greatest(F.col("_mn"), F.lit(1e-12)),
+                    ).alias("_cvec"),
+                )
+            )
+        return cents.select(
+            "centroid_id", F.col("_cvec").alias("_vec"), norm(F.col("_cvec")).alias("_norm")
         )
-        means = (
-            assigned.select("cluster_id", F.posexplode("_vec").alias("dim", "x"))
-            .groupBy("cluster_id", "dim")
-            .agg(F.round(F.avg("x"), 9).alias("m"))
-            .groupBy("cluster_id")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("_dm"))
-            .select(
-                "cluster_id",
-                F.transform(F.col("_dm"), lambda s: s["m"]).alias("_cvec"),
-            )
-        )
-        cents = (
-            cents.alias("old")
-            .join(
-                means.select(
-                    F.col("cluster_id").alias("centroid_id"),
-                    F.col("_cvec").alias("_new"),
-                ),
-                "centroid_id",
-                "left",
-            )
-            .select(
-                "centroid_id",
-                F.coalesce(F.col("_new"), F.col("old._cvec")).alias("_m"),
-            )
-            .select("centroid_id", "_m", norm(F.col("_m")).alias("_mn"))
-            .select(
-                "centroid_id",
-                F.transform(
-                    F.col("_m"),
-                    lambda x: x / F.greatest(F.col("_mn"), F.lit(1e-12)),
-                ).alias("_cvec"),
-            )
-            .localCheckpoint()
-        )
-    return cents.select(
-        "centroid_id", F.col("_cvec").alias("_vec"), norm(F.col("_cvec")).alias("_norm")
-    )
 
 
 def auto_n_probe(n_cells: int) -> int:
@@ -567,10 +567,11 @@ def kmeans_embeddings(
     array — no window, no shuffle); the mean update is a posexplode +
     (cluster, dim) combinable average — ONE shuffle at k x dim cardinality.
     No driver-side collect anywhere; centroids live as a k-row DataFrame
-    that AQE broadcasts. localCheckpoint truncates the per-round lineage
-    (same pattern as connected_components). Fixed n_iter keeps the op
-    deterministic and plannable; convergence-based stopping would add one
-    scalar action per round like the dedup clustering does.
+    that AQE broadcasts. Each round's centroids are an ``exec.rounds``
+    checkpoint that truncates the per-round lineage (same pattern as
+    connected_components). Fixed n_iter keeps the op deterministic and
+    plannable; convergence-based stopping would add one scalar action per
+    round like the dedup clustering does.
     """
     corpus = with_norm(vectors, vec_col).select(F.col(id_col), "_vec", "_norm")
     corpus = corpus.localCheckpoint()
@@ -598,37 +599,37 @@ def kmeans_embeddings(
             .select(id_col, "_vec", F.col("_best.centroid_id").alias("cluster_id"))
         )
 
-    for _ in range(n_iter):
-        assigned = assign(cents)
-        means = (
-            assigned.select("cluster_id", F.posexplode("_vec").alias("dim", "x"))
-            # 9dp round absorbs partition-merge-order float jitter so the
-            # assignment boundaries (and thus the output) stay deterministic
-            .groupBy("cluster_id", "dim")
-            .agg(F.round(F.avg("x"), 9).alias("m"))
-            .groupBy("cluster_id")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("_dm"))
-            .select(
-                "cluster_id",
-                F.transform(F.col("_dm"), lambda s: s["m"]).alias("_cvec"),
+    with rounds() as barrier:
+        for _ in range(n_iter):
+            assigned = assign(cents)
+            means = (
+                assigned.select("cluster_id", F.posexplode("_vec").alias("dim", "x"))
+                # 9dp round absorbs partition-merge-order float jitter so the
+                # assignment boundaries (and thus the output) stay deterministic
+                .groupBy("cluster_id", "dim")
+                .agg(F.round(F.avg("x"), 9).alias("m"))
+                .groupBy("cluster_id")
+                .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("_dm"))
+                .select(
+                    "cluster_id",
+                    F.transform(F.col("_dm"), lambda s: s["m"]).alias("_cvec"),
+                )
             )
-        )
-        # a cluster that lost every member keeps its previous centroid
-        # (standard Lloyd treatment; without this the cluster would vanish
-        # and k would silently shrink)
-        cents = (
-            cents.alias("old")
-            .join(
-                means.select(F.col("cluster_id").alias("centroid_id"),
-                             F.col("_cvec").alias("_new")),
-                "centroid_id",
-                "left",
+            # a cluster that lost every member keeps its previous centroid
+            # (standard Lloyd treatment; without this the cluster would vanish
+            # and k would silently shrink)
+            cents = barrier(
+                cents.alias("old")
+                .join(
+                    means.select(F.col("cluster_id").alias("centroid_id"),
+                                 F.col("_cvec").alias("_new")),
+                    "centroid_id",
+                    "left",
+                )
+                .select("centroid_id",
+                        F.coalesce(F.col("_new"), F.col("old._cvec")).alias("_cvec"))
             )
-            .select("centroid_id",
-                    F.coalesce(F.col("_new"), F.col("old._cvec")).alias("_cvec"))
-            .localCheckpoint()
-        )
-    return assign(cents).select(id_col, "cluster_id")
+        return assign(cents).select(id_col, "cluster_id")
 
 
 def write_ivf_store(

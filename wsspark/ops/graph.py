@@ -26,9 +26,9 @@ Design for scale (the llmops dup_clusters pointer-jumping rules apply):
   query; the fixed job/stage overhead dominates wall time on
   dimension-sized graphs. On a billion-edge graph the trade reverses
   toward more frequent checkpoints (lineage replay cost dominates), so
-  the cadence is a parameter, and ``checkpoint_dir=`` switches every
-  materialization point to the storage-backed ``checkpoint()`` for
-  cluster fault tolerance (tests/test_graph.py pins result equality).
+  the cadence is a parameter. The rank checkpoints are ``exec.rounds``
+  rounds: each is released once two newer ones exist, and the call
+  leaves only the newest registered.
 - Dangling mass is folded in via a 1-row aggregate cross-joined onto the
   update — NO driver-side collect inside the loop. The dangling-node
   flag is STATIC, so it is computed once and carried as a column of the
@@ -44,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from wsspark.exec import overlap
+from wsspark.exec import overlap, rounds
 
 
 def pagerank(
@@ -55,28 +55,9 @@ def pagerank(
     dst: str = "dst",
     weight: str = "w",
     checkpoint_interval: int = 3,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Weighted PageRank over ``edges`` (src, dst, weight); returns
-    (node, rank) with Σ rank = 1 at every step.
-
-    ``checkpoint_dir``: when set, every materialization point uses a
-    RELIABLE storage-backed ``checkpoint()`` rooted there instead of
-    ``localCheckpoint()`` — the billion-edge cluster mode, where executor
-    loss must not force a full lineage replay (localCheckpoint blocks are
-    gone with the executor; reliable checkpoints live in shared storage).
-    Sets the context's checkpoint dir as a side effect (a
-    SparkContext-global setting)."""
-    if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.checkpoint()
-    else:
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint()
-
+    (node, rank) with Σ rank = 1 at every step."""
     # The node set and the transition matrix are INDEPENDENT derivations
     # of the edge frame — two eager checkpoints that each re-execute the
     # caller's edge plan. Overlap them (guide §2.6): the transition
@@ -84,22 +65,24 @@ def pagerank(
     # run here, so the setup wall time is max(nodes, trans) instead of
     # their sum.
     def _build_nodes() -> tuple[DataFrame, int]:
-        nodes = _ckpt(
+        nodes = (
             edges.select(F.col(src).alias("node"))
             .unionByName(edges.select(F.col(dst).alias("node")))
             .distinct()
+            .localCheckpoint()
         )
         return nodes, nodes.count()
 
     def _build_trans() -> DataFrame:
         out_w = edges.groupBy(src).agg(F.sum(weight).alias("_ow"))
-        return _ckpt(
+        return (
             edges.join(out_w, src)
             .select(
                 F.col(src).alias("_src"),
                 F.col(dst).alias("_dst"),
                 (F.col(weight).cast("double") / F.col("_ow")).alias("_p"),
             )
+            .localCheckpoint()
         )
 
     (nodes, n), trans = overlap(_build_nodes, _build_trans)
@@ -111,12 +94,13 @@ def pagerank(
     # the dangling FLAG is static — resolve it once and carry it as a
     # column of the rank state, so each iteration's dangling mass is a
     # plain filtered aggregate (no join)
-    nodes_f = _ckpt(
+    nodes_f = (
         nodes.join(has_out, "node", "left")
         .select(
             "node",
             (~F.coalesce(F.col("_has_out"), F.lit(False))).alias("_dang"),
         )
+        .localCheckpoint()
     )
     ranks = nodes_f.select("node", "_dang", F.lit(1.0 / n).alias("rank"))
     base = (1.0 - damping) / n
@@ -129,34 +113,35 @@ def pagerank(
     # billion-node rank frames must never ride the driver.
     bcast_nodes = n <= 1_000_000
     _maybe_b = F.broadcast if bcast_nodes else (lambda d: d)
-    for it in range(n_iter):
-        contrib = (
-            trans.join(_maybe_b(ranks), trans["_src"] == ranks["node"])
-            .groupBy("_dst")
-            .agg(F.sum(F.col("rank") * F.col("_p")).alias("_c"))
-        )
-        dangling = ranks.filter("_dang").agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
-        )
-        ranks = (
-            nodes_f.join(
-                _maybe_b(contrib), nodes_f["node"] == contrib["_dst"], "left"
+    with rounds() as barrier:
+        for it in range(n_iter):
+            contrib = (
+                trans.join(_maybe_b(ranks), trans["_src"] == ranks["node"])
+                .groupBy("_dst")
+                .agg(F.sum(F.col("rank") * F.col("_p")).alias("_c"))
             )
-            .crossJoin(dangling)
-            .select(
-                "node",
-                "_dang",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("_c"), F.lit(0.0)) + F.col("_dm") / n)
-                ).alias("rank"),
+            dangling = ranks.filter("_dang").agg(
+                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
             )
-        )
-        # bound plan depth without a materialization job per iteration
-        if (it + 1) % checkpoint_interval == 0 and it != n_iter - 1:
-            ranks = _ckpt(ranks)
-    return ranks.select("node", "rank")
+            ranks = (
+                nodes_f.join(
+                    _maybe_b(contrib), nodes_f["node"] == contrib["_dst"], "left"
+                )
+                .crossJoin(dangling)
+                .select(
+                    "node",
+                    "_dang",
+                    (
+                        F.lit(base)
+                        + F.lit(damping)
+                        * (F.coalesce(F.col("_c"), F.lit(0.0)) + F.col("_dm") / n)
+                    ).alias("rank"),
+                )
+            )
+            # bound plan depth without a materialization job per iteration
+            if (it + 1) % checkpoint_interval == 0 and it != n_iter - 1:
+                ranks = barrier(ranks)
+        return ranks.select("node", "rank")
 
 
 def triangle_stats(
@@ -272,8 +257,8 @@ def shortest_paths(
     Bellman-Ford with negative cycles diverges, and float distances
     would break exact cross-engine replay); ``None`` means hop counts
     (weight 1). Unreachable nodes keep NULL distance. Distance state is
-    localCheckpoint-ed every ``checkpoint_interval`` iterations — the
-    pagerank cadence note applies. Iteration count needed is the
+    an ``exec.rounds`` checkpoint every ``checkpoint_interval`` iterations —
+    the pagerank cadence note applies. Iteration count needed is the
     shortest-path tree depth, NOT the node count: on real route graphs
     that is the diameter (single digits); the DuckDB twin unrolls
     ``max_iter`` rounds, which agrees because relaxation past
@@ -291,41 +276,40 @@ def shortest_paths(
                 f"weights must be positive integers, got {bad[0]['_w']!r}"
             )
     e = e.localCheckpoint()
-    dist = (
-        e.select(F.col("_s").alias("node"))
-        .unionByName(e.select(F.col("_d").alias("node")))
-        .distinct()
-        .select(
-            "node",
-            F.when(F.col("node") == F.lit(source), F.lit(0).cast("long")).alias(
-                "dist"
-            ),
+    with rounds() as barrier:
+        dist = barrier(
+            e.select(F.col("_s").alias("node"))
+            .unionByName(e.select(F.col("_d").alias("node")))
+            .distinct()
+            .select(
+                "node",
+                F.when(F.col("node") == F.lit(source), F.lit(0).cast("long"))
+                .alias("dist"),
+            )
         )
-        .localCheckpoint()
-    )
-    for it in range(max_iter):
-        cand = (
-            dist.filter(F.col("dist").isNotNull())
-            .join(e, F.col("node") == F.col("_s"))
-            .groupBy(F.col("_d").alias("node"))
-            .agg(F.min(F.col("dist") + F.col("_w")).alias("_best"))
+        for it in range(max_iter):
+            cand = (
+                dist.filter(F.col("dist").isNotNull())
+                .join(e, F.col("node") == F.col("_s"))
+                .groupBy(F.col("_d").alias("node"))
+                .agg(F.min(F.col("dist") + F.col("_w")).alias("_best"))
+            )
+            new = (
+                dist.join(cand, "node", "left_outer")
+                .select("node", F.least("dist", "_best").alias("dist"))
+            )
+            if (it + 1) % checkpoint_interval == 0:
+                new = barrier(new)
+            improved = (
+                new.alias("n")
+                .join(dist.alias("o"), "node")
+                .filter(~F.col("n.dist").eqNullSafe(F.col("o.dist")))
+                .limit(1)
+                .count()
+            )
+            dist = new
+            if improved == 0:
+                return dist
+        raise RuntimeError(
+            f"shortest_paths did not converge in {max_iter} iterations"
         )
-        new = (
-            dist.join(cand, "node", "left_outer")
-            .select("node", F.least("dist", "_best").alias("dist"))
-        )
-        if (it + 1) % checkpoint_interval == 0:
-            new = new.localCheckpoint()
-        improved = (
-            new.alias("n")
-            .join(dist.alias("o"), "node")
-            .filter(~F.col("n.dist").eqNullSafe(F.col("o.dist")))
-            .limit(1)
-            .count()
-        )
-        dist = new
-        if improved == 0:
-            return dist
-    raise RuntimeError(
-        f"shortest_paths did not converge in {max_iter} iterations"
-    )

@@ -10,10 +10,12 @@ tests/test_llmops.py and tests/test_dedup.py.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from wsspark.exec import overlap
+from wsspark.exec import overlap, scratch_dir
 from wsspark.io import read_table
 from wsspark.llmops import corpus, dedup, fingerprint, hashvec, pii, similarity, srp, textstats
 from wsspark.queries import Query
@@ -2074,8 +2076,6 @@ SNAPSTORE_RESULT_CAP = 1_000_000
 
 
 def _result_cap() -> int:
-    import os
-
     return int(
         os.environ.get("WSSPARK_SNAPSTORE_RESULT_CAP", SNAPSTORE_RESULT_CAP)
     )
@@ -2134,16 +2134,12 @@ def q_snapstore_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bloom false NEGATIVE (a dropped file that held a row) or any
     commit/read corruption goes red — driver-grade evidence for the
     skipping soundness contract beyond the pytest invariants."""
-    import shutil
-    import tempfile
-
     from wsspark import snapstore as ss
 
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_quantity"
     )
-    root = tempfile.mkdtemp(prefix="snaplookup-")
-    try:
+    with scratch_dir("snaplookup-") as root:
         ss.snap_commit(
             li.repartition(8, "l_orderkey"), root, bloom_cols=["l_orderkey"]
         )
@@ -2151,10 +2147,7 @@ def q_snapstore_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, root, "l_orderkey", list(LOOKUP_ORDERKEYS)
         )
         # materialize before the store is deleted (capped: see above)
-        pinned = _pin_result(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return pinned
+        return _pin_result(out)
 
 
 SNAPSTORE_LOOKUP_SQL = f"""
@@ -2172,9 +2165,6 @@ def q_snapstore_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     computes the same upsert relationally (source ∪ base-anti-source),
     so any merge defect — lost update, duplicated row, dropped
     untouched row, wrong clause routing — goes red on row hashes."""
-    import shutil
-    import tempfile
-
     from wsspark import snapstore as ss
 
     cols = ["l_orderkey", "l_linenumber", "l_partkey", "l_quantity"]
@@ -2191,17 +2181,13 @@ def q_snapstore_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.min("l_quantity") * 2).alias("l_quantity"),
         )
     )
-    root = tempfile.mkdtemp(prefix="snapmerge-")
-    try:
+    with scratch_dir("snapmerge-") as root:
         ss.snap_commit(base.repartition(8, "l_orderkey"), root)
         ss.snap_merge(
             spark, root, delta, on=["l_orderkey", "l_linenumber"]
         )
         out = ss.snap_read(spark, root)
-        pinned = _pin_result(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return pinned
+        return _pin_result(out)
 
 
 SNAPSTORE_MERGE_SQL = """
@@ -2240,15 +2226,11 @@ def q_snapstore_cdc_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     (etl/config/config.yaml --load_type full|incremental via a timestamp
     watermark); version-diff CDC is what that becomes when the store
     itself records lineage."""
-    import shutil
-    import tempfile
-
     from wsspark import snapstore as ss
 
     cols = ["l_orderkey", "l_linenumber", "l_partkey", "l_quantity"]
     li = read_table(spark, sf_dir, "lineitem").select(*cols)
-    root = tempfile.mkdtemp(prefix="snapcdc-")
-    try:
+    with scratch_dir("snapcdc-") as root:
         ss.snap_commit(
             li.filter(F.col("l_linenumber") <= 2).repartition(4, "l_orderkey"),
             root,
@@ -2268,10 +2250,7 @@ def q_snapstore_cdc_span(spark: SparkSession, sf_dir: str) -> DataFrame:
             mode="append",
         )
         out = ss.snap_read_changes(spark, root, since=0, until=2)
-        pinned = _pin_result(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return pinned
+        return _pin_result(out)
 
 
 SNAPSTORE_CDC_SQL = """
@@ -2291,25 +2270,18 @@ def q_snapstore_optimize_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows) or a stats false-drop on the rewritten files goes red. The
     pruning EFFECT (kept < total on both dimensions) is pinned in
     tests/test_snapstore.py; this query pins the SOUNDNESS."""
-    import shutil
-    import tempfile
-
     from wsspark import snapstore as ss
 
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_quantity"
     )
-    root = tempfile.mkdtemp(prefix="snapopt-")
-    try:
+    with scratch_dir("snapopt-") as root:
         ss.snap_commit(li.repartition(8), root, stats_cols=["l_partkey"])
         ss.snap_optimize(
             spark, root, zorder_by=("l_partkey", "l_quantity"), n_files=8
         )
         out = ss.snap_read_between(spark, root, "l_partkey", 100, 300)
-        pinned = _pin_result(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return pinned
+        return _pin_result(out)
 
 
 SNAPSTORE_OPTIMIZE_SQL = """
@@ -2331,16 +2303,12 @@ def q_snapstore_zorder_nd_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lost/dup rows) or a stats false-drop on ANY of the three dimensions
     goes red independent of pruning-fraction seed variance; the pruning
     EFFECT on all three dimensions is pinned in tests/test_snapstore.py."""
-    import shutil
-    import tempfile
-
     from wsspark import snapstore as ss
 
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity"
     )
-    root = tempfile.mkdtemp(prefix="snapoptnd-")
-    try:
+    with scratch_dir("snapoptnd-") as root:
         ss.snap_commit(li.repartition(8), root, stats_cols=["l_partkey"])
         ss.snap_optimize(
             spark,
@@ -2357,10 +2325,7 @@ def q_snapstore_zorder_nd_read(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "l_quantity": (10, 40),
             },
         )
-        pinned = _pin_result(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return pinned
+        return _pin_result(out)
 
 
 def q_snapstore_dv_delete_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2372,24 +2337,17 @@ def q_snapstore_dv_delete_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     false positive (row wrongly deleted), false negative (row
     resurrected), or overlap double-count goes red. The no-rewrite
     property and footer-exact count are pinned in tests/test_snapstore.py."""
-    import shutil
-    import tempfile
-
     from wsspark import snapstore as ss
 
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_quantity"
     )
-    root = tempfile.mkdtemp(prefix="snapdv-")
-    try:
+    with scratch_dir("snapdv-") as root:
         ss.snap_commit(li.repartition(8), root)
         ss.snap_delete_dv(spark, root, "l_quantity <= 5")
         ss.snap_delete_dv(spark, root, "l_quantity <= 10 AND l_partkey < 1000")
         out = ss.snap_read(spark, root)
-        pinned = _pin_result(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return pinned
+        return _pin_result(out)
 
 
 SNAPSTORE_DV_SQL = """
@@ -2409,17 +2367,13 @@ def q_snapstore_wap_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the audit would see them twice), lost/duplicated rows at publish,
     schema drift — breaks the hash. The abort path and the publish-time
     gates are pinned in tests/test_snapstore.py."""
-    import shutil
-    import tempfile
-
     from wsspark import snapstore as ss
 
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_quantity", "l_shipdate"
     )
     split = F.lit(DRIFT_SPLIT).cast("timestamp")
-    root = tempfile.mkdtemp(prefix="snapwap-")
-    try:
+    with scratch_dir("snapwap-") as root:
         ss.snap_commit(li.filter(F.col("l_shipdate") < split).repartition(4), root)
         sid = ss.snap_stage(
             li.filter(F.col("l_shipdate") >= split).repartition(4), root
@@ -2434,10 +2388,7 @@ def q_snapstore_wap_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             ss.snap_publish_staged(root, sid, mode="append")
         out = ss.snap_read(spark, root).drop("l_shipdate")
-        pinned = _pin_result(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return pinned
+        return _pin_result(out)
 
 
 SNAPSTORE_WAP_SQL = """
@@ -2467,19 +2418,15 @@ def q_snapstore_pruned_dml_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata-plane slowdown a tracked wall-clock regression instead of
     a tool-only number."""
     import math
-    import shutil
-    import tempfile
-
     from wsspark import snapstore as ss
 
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag"
     )
-    root = tempfile.mkdtemp(prefix="snapbig-")
-    # Scoped O(1)-head forcing: contextvar-local, so a concurrent
-    # snapstore commit elsewhere in this driver keeps the defaults
-    # (mutating the env var here would silently flip its metadata mode).
-    try:
+    with scratch_dir("snapbig-") as root:
+        # Scoped O(1)-head forcing: contextvar-local, so a concurrent
+        # snapstore commit elsewhere in this driver keeps the defaults
+        # (mutating the env var here would silently flip its metadata mode).
         with ss.snap_metadata_thresholds(files_inline_max=0):
             # Task-side combined write (r17, guide §6 small-files): the
             # same ~600-file range-clustered layout, but written from
@@ -2526,10 +2473,7 @@ def q_snapstore_pruned_dml_read(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("revenue_cents"),
             )
         )
-        pinned = _pin_result(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return pinned
+        return _pin_result(out)
 
 
 SNAPSTORE_PRUNED_DML_SQL = """
@@ -2564,25 +2508,18 @@ def q_snapstore_restore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     CURRENT. The twin is the delete-complement filter — a restore that
     loses the dv state, resurrects the overwrite, or points at the wrong
     manifest content goes red."""
-    import shutil
-    import tempfile
-
     from wsspark import snapstore as ss
 
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_quantity"
     )
-    root = tempfile.mkdtemp(prefix="snaprestore-")
-    try:
+    with scratch_dir("snaprestore-") as root:
         ss.snap_commit(li.repartition(4), root)                    # v0
         ss.snap_delete_dv(spark, root, "l_partkey < 300")          # v1
         ss.snap_commit(li.limit(7), root, mode="overwrite")        # v2
         ss.snap_restore(root, 1)                                   # v3 == v1
         out = ss.snap_read(spark, root)
-        pinned = _pin_result(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return pinned
+        return _pin_result(out)
 
 
 SNAPSTORE_RESTORE_SQL = """
@@ -2601,16 +2538,12 @@ def q_snapstore_update_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     update rewriting a dv-deleted row back to life), a missed/extra
     update, or an expression evaluated against post-update state goes
     red."""
-    import shutil
-    import tempfile
-
     from wsspark import snapstore as ss
 
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_quantity"
     )
-    root = tempfile.mkdtemp(prefix="snapupd-")
-    try:
+    with scratch_dir("snapupd-") as root:
         ss.snap_commit(li.repartition(8), root)
         ss.snap_delete_dv(spark, root, "l_partkey < 200")
         ss.snap_update_where(
@@ -2620,10 +2553,7 @@ def q_snapstore_update_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"l_quantity": "l_quantity * 2"},
         )
         out = ss.snap_read(spark, root)
-        pinned = _pin_result(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return pinned
+        return _pin_result(out)
 
 
 SNAPSTORE_UPDATE_SQL = """
@@ -2645,16 +2575,12 @@ def q_snapstore_cdf_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     missing sidecar row, a pre/post image computed against the wrong
     state, a wrong _commit_version, or a feed row leaking from the
     compaction-free span goes red."""
-    import shutil
-    import tempfile
-
     from wsspark import snapstore as ss
 
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_quantity"
     )
-    root = tempfile.mkdtemp(prefix="snapcdf-")
-    try:
+    with scratch_dir("snapcdf-") as root:
         ss.snap_commit(li.filter("l_partkey >= 100").repartition(8), root)
         since = ss.snap_enable_cdf(root)                         # v1
         ss.snap_commit(
@@ -2668,10 +2594,7 @@ def q_snapstore_cdf_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         )                                                        # v3
         ss.snap_delete_where(spark, root, "l_quantity > 45")     # v4
         out = ss.snap_read_changes_cdf(spark, root, since)
-        pinned = _pin_result(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return pinned
+        return _pin_result(out)
 
 
 SNAPSTORE_CDF_SQL = """
@@ -3076,9 +2999,6 @@ def q_snapstore_merge_sync_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin replays the three clause routes relationally — a wrong
     condition polarity, a lost by-source delete, or a collapsed
     kept-row goes red."""
-    import shutil
-    import tempfile
-
     from wsspark import snapstore as ss
 
     li = read_table(spark, sf_dir, "lineitem")
@@ -3094,8 +3014,7 @@ def q_snapstore_merge_sync_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg((F.sum("l_quantity") * 2).alias("qty"))
         .withColumnRenamed("l_partkey", "part")
     )
-    root = tempfile.mkdtemp(prefix="snapsync-")
-    try:
+    with scratch_dir("snapsync-") as root:
         ss.snap_commit(store_df.repartition(4), root)
         ss.snap_merge(
             spark,
@@ -3106,10 +3025,7 @@ def q_snapstore_merge_sync_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             when_not_matched_by_source="delete",
         )
         out = ss.snap_read(spark, root)
-        pinned = _pin_result(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return pinned
+        return _pin_result(out)
 
 
 SNAPSTORE_MERGE_SYNC_SQL = """
@@ -3147,9 +3063,6 @@ def q_snapstore_replace_where_read(spark: SparkSession, sf_dir: str) -> DataFram
     relationally — a resurrection of dv-deleted rows through the COW
     carryover, a kept row inside the replaced region, or a lost
     replacement row goes red."""
-    import shutil
-    import tempfile
-
     from wsspark import snapstore as ss
 
     li = read_table(spark, sf_dir, "lineitem")
@@ -3164,16 +3077,12 @@ def q_snapstore_replace_where_read(spark: SparkSession, sf_dir: str) -> DataFram
         .agg((F.sum("l_quantity") * 3).alias("qty"))
         .withColumnRenamed("l_partkey", "part")
     )
-    root = tempfile.mkdtemp(prefix="snaprepl-")
-    try:
+    with scratch_dir("snaprepl-") as root:
         ss.snap_commit(store_df.repartition(4), root)
         ss.snap_delete_dv(spark, root, "part % 7 = 1")
         ss.snap_overwrite_where(spark, root, "part % 5 = 0", repl)
         out = ss.snap_read(spark, root)
-        pinned = _pin_result(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return pinned
+        return _pin_result(out)
 
 
 SNAPSTORE_REPLACE_WHERE_SQL = """
@@ -3203,10 +3112,6 @@ def q_snapstore_clone_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     The twin replays source = untouched store, clone = store minus the
     deleted region — a clone DML that leaks into the source, or a
     clone read that misses the source snapshot, goes red."""
-    import os
-    import shutil
-    import tempfile
-
     from wsspark import snapstore as ss
 
     li = read_table(spark, sf_dir, "lineitem")
@@ -3215,9 +3120,8 @@ def q_snapstore_clone_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("l_quantity").alias("qty"))
         .withColumnRenamed("l_partkey", "part")
     )
-    base = tempfile.mkdtemp(prefix="snapclone-")
-    src, dst = os.path.join(base, "src"), os.path.join(base, "dst")
-    try:
+    with scratch_dir("snapclone-") as base:
+        src, dst = os.path.join(base, "src"), os.path.join(base, "dst")
         ss.snap_commit(store_df.repartition(4), src)
         ss.snap_clone(src, dst)
         ss.snap_delete_where(spark, dst, "part % 4 = 2")
@@ -3228,10 +3132,7 @@ def q_snapstore_clone_read(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ss.snap_read(spark, src).withColumn("side", F.lit("src"))
             )
         )
-        pinned = _pin_result(out)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return pinned
+        return _pin_result(out)
 
 
 SNAPSTORE_CLONE_SQL = """
@@ -3254,18 +3155,14 @@ def q_mv_refresh_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the post-DML fact replayed relationally, so a wrong retraction
     weight, a lost update image, a leaked 0-count group, or a stale
     cursor goes red."""
-    import shutil
-    import tempfile
-
     from wsspark import adapters as ad
     from wsspark import snapstore as ss
     from wsspark.ops import incremental as ivm
 
     li = read_table(spark, sf_dir, "lineitem")
     mvs = ad.movements_from_lineitem(li)
-    fact_root = tempfile.mkdtemp(prefix="snapmvf-")
-    mv_root = tempfile.mkdtemp(prefix="snapmvv-")
-    try:
+    with scratch_dir("snapmv-") as d:
+        fact_root, mv_root = os.path.join(d, "fact"), os.path.join(d, "mv")
         ss.snap_commit(mvs.repartition(8), fact_root)
         ss.snap_enable_cdf(fact_root)
         ivm.snapstore_mv_refresh_cdf(spark, fact_root, mv_root)  # initial
@@ -3278,11 +3175,7 @@ def q_mv_refresh_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ss.snap_delete_where(spark, fact_root, "reference_id % 7 = 3")
         ivm.snapstore_mv_refresh_cdf(spark, fact_root, mv_root)
         out = ss.snap_read(spark, mv_root)
-        pinned = _pin_result(out)
-    finally:
-        shutil.rmtree(fact_root, ignore_errors=True)
-        shutil.rmtree(mv_root, ignore_errors=True)
-    return pinned
+        return _pin_result(out)
 
 
 from wsspark.adapters import MOVEMENTS_SQL as _MOVEMENTS_SQL  # noqa: E402
@@ -3316,9 +3209,6 @@ def q_drift_ivm_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     PSI from the pre-DML snapshot vs the post-DML state replayed
     relationally, so a wrong retraction weight, a moved edge, a stale
     cursor, or a leaked zero-count bucket goes red."""
-    import shutil
-    import tempfile
-
     from wsspark import adapters as ad
     from wsspark import snapstore as ss
     from wsspark.quality import (
@@ -3328,10 +3218,9 @@ def q_drift_ivm_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = read_table(spark, sf_dir, "lineitem")
     mvs = ad.movements_from_lineitem(li)
-    fact_root = tempfile.mkdtemp(prefix="snapdriftf-")
-    state_root = tempfile.mkdtemp(prefix="snapdrifts-")
     cols = dict(numeric_cols=["quantity"], cat_cols=["movement_type"])
-    try:
+    with scratch_dir("snapdrift-") as d:
+        fact_root, state_root = os.path.join(d, "fact"), os.path.join(d, "state")
         ss.snap_commit(mvs.repartition(8), fact_root)
         ss.snap_enable_cdf(fact_root)
         snapstore_drift_ivm_refresh(spark, fact_root, state_root, **cols)
@@ -3341,11 +3230,7 @@ def q_drift_ivm_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ss.snap_delete_where(spark, fact_root, "reference_id % 7 = 3")
         snapstore_drift_ivm_refresh(spark, fact_root, state_root, **cols)
         out = snapstore_drift_ivm_report(spark, state_root)
-        pinned = _pin_result(out)  # O(columns) rows
-    finally:
-        shutil.rmtree(fact_root, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
-    return pinned
+        return _pin_result(out)  # O(columns) rows
 
 
 DRIFT_IVM_SQL = f"""

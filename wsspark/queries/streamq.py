@@ -25,6 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from wsspark import streaming
+from wsspark.exec import scratch_dir
 from wsspark.io import read_table
 from wsspark.queries import Query
 from wsspark.queries import core as coreq
@@ -49,27 +50,16 @@ def _run_to_table(df: DataFrame, spark: SparkSession, name: str) -> DataFrame:
     return spark.table(name)
 
 
-_STREAM_SRC_DIRS: dict[tuple[str, str], str] = {}
-
-
-def _stage_stream_dir(sf_dir: str, table: str = "events") -> str:
+def _stage_stream_dir(sf_dir: str, scratch: str, table: str = "events") -> str:
     """The parquet file-stream source requires a DIRECTORY; testdata ships
-    one file per table. Symlink <table>.parquet into a per-session temp dir
-    (a driver-side metadata op — no data is copied or mutated), reused
-    across invocations for the same (sf_dir, table) and removed at exit."""
-    d = _STREAM_SRC_DIRS.get((sf_dir, table))
-    if d is not None and os.path.isdir(d):
-        return d
-    import atexit
-    import shutil
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="wsspark_stream_src_")
+    one file per table. Symlink <table>.parquet into ``src/`` of the
+    calling query's scratch dir (a driver-side metadata op — no data is
+    copied or mutated), so it goes when the query's scratch dir does."""
+    d = os.path.join(scratch, "src")
+    os.mkdir(d)
     os.symlink(
         os.path.join(sf_dir, f"{table}.parquet"), os.path.join(d, f"{table}.parquet")
     )
-    _STREAM_SRC_DIRS[(sf_dir, table)] = d
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
     return d
 
 
@@ -93,10 +83,11 @@ def q_streaming_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-day window counts per event_type, computed by the STREAM
     path (file source -> withWatermark -> window() agg) and verified against
     the batch date_trunc twin."""
-    stream = streaming.read_event_stream(spark, _stage_stream_dir(sf_dir))
-    return _run_to_table(
-        streaming.windowed_event_counts(stream), spark, "q_stream_daily_counts"
-    )
+    with scratch_dir("wsspark_stream_") as d:
+        stream = streaming.read_event_stream(spark, _stage_stream_dir(sf_dir, d))
+        return _run_to_table(
+            streaming.windowed_event_counts(stream), spark, "q_stream_daily_counts"
+        )
 
 
 STREAMING_DAILY_SQL = """
@@ -113,10 +104,11 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native session_window sessionization computed by the STREAM path,
     verified against the lag-based gaps-and-islands SQL twin (session_end =
     last event + gap, per session_window semantics)."""
-    stream = streaming.read_event_stream(spark, _stage_stream_dir(sf_dir))
-    return _run_to_table(
-        streaming.session_window_stats(stream), spark, "q_stream_sessions"
-    )
+    with scratch_dir("wsspark_stream_") as d:
+        stream = streaming.read_event_stream(spark, _stage_stream_dir(sf_dir, d))
+        return _run_to_table(
+            streaming.session_window_stats(stream), spark, "q_stream_sessions"
+        )
 
 
 STREAMING_SESSIONIZE_SQL = """
@@ -150,10 +142,11 @@ def q_streaming_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame
     """Stream-stream interval join (purchase <- clicks in the prior hour)
     computed by the STREAM path and verified against the batch inner-join
     twin — the streaming counterpart of purchase_click_window_counts."""
-    stream = streaming.read_event_stream(spark, _stage_stream_dir(sf_dir))
-    return _run_append_to_table(
-        streaming.stream_click_attribution(stream), spark, "q_stream_click_attr"
-    )
+    with scratch_dir("wsspark_stream_") as d:
+        stream = streaming.read_event_stream(spark, _stage_stream_dir(sf_dir, d))
+        return _run_append_to_table(
+            streaming.stream_click_attribution(stream), spark, "q_stream_click_attr"
+        )
 
 
 STREAMING_CLICK_ATTR_SQL = """
@@ -199,21 +192,22 @@ def q_streaming_low_stock_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("l_returnflag", T.StringType()),
         ]
     )
-    src = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("path", _stage_stream_dir(sf_dir, "lineitem"))
-        .load()
-    )
-    movements = src.select(
-        F.col("l_partkey").alias("product_id"),
-        F.col("l_suppkey").alias("warehouse_id"),
-        F.when(F.col("l_returnflag") == "R", -F.col("l_quantity"))
-        .otherwise(F.col("l_quantity"))
-        .alias("quantity"),
-    )
-    alerts = streaming.low_stock_alerts(movements, reorder_points=LOW_STOCK_RP)
-    return _run_append_to_table(alerts, spark, "q_stream_low_stock")
+    with scratch_dir("wsspark_stream_") as d:
+        src = (
+            spark.readStream.schema(schema)
+            .format("parquet")
+            .option("path", _stage_stream_dir(sf_dir, d, "lineitem"))
+            .load()
+        )
+        movements = src.select(
+            F.col("l_partkey").alias("product_id"),
+            F.col("l_suppkey").alias("warehouse_id"),
+            F.when(F.col("l_returnflag") == "R", -F.col("l_quantity"))
+            .otherwise(F.col("l_quantity"))
+            .alias("quantity"),
+        )
+        alerts = streaming.low_stock_alerts(movements, reorder_points=LOW_STOCK_RP)
+        return _run_append_to_table(alerts, spark, "q_stream_low_stock")
 
 
 STREAMING_LOW_STOCK_SQL = f"""
@@ -241,10 +235,6 @@ def q_streaming_snapshot_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the driver's vanilla session. Multi-batch replay/idempotence
     semantics stay pinned by tests/test_streaming.py (explicit files and
     a forced batch replay there)."""
-    import atexit
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -256,30 +246,28 @@ def q_streaming_snapshot_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("l_returnflag", T.StringType()),
         ]
     )
-    src = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("path", _stage_stream_dir(sf_dir, "lineitem"))
-        .load()
-    )
-    movements = src.select(
-        F.col("l_partkey").alias("product_id"),
-        F.col("l_suppkey").alias("warehouse_id"),
-        F.when(F.col("l_returnflag") == "R", -F.col("l_quantity"))
-        .otherwise(F.col("l_quantity"))
-        .cast("long")
-        .alias("quantity"),
-    )
-    store = tempfile.mkdtemp(prefix="wsspark_snapq_store_")
-    ckpt = tempfile.mkdtemp(prefix="wsspark_snapq_ckpt_")
-    for d in (store, ckpt):
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    maintainer = streaming.SnapshotMaintainer(spark, store)
-    q = maintainer.attach(movements, ckpt)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("snapshot upsert stream did not finish within 300s")
-    return maintainer.snapshot()
+    with scratch_dir("wsspark_snapq_") as d:
+        src = (
+            spark.readStream.schema(schema)
+            .format("parquet")
+            .option("path", _stage_stream_dir(sf_dir, d, "lineitem"))
+            .load()
+        )
+        movements = src.select(
+            F.col("l_partkey").alias("product_id"),
+            F.col("l_suppkey").alias("warehouse_id"),
+            F.when(F.col("l_returnflag") == "R", -F.col("l_quantity"))
+            .otherwise(F.col("l_quantity"))
+            .cast("long")
+            .alias("quantity"),
+        )
+        maintainer = streaming.SnapshotMaintainer(spark, os.path.join(d, "store"))
+        q = maintainer.attach(movements, os.path.join(d, "ckpt"))
+        if not q.awaitTermination(300):
+            q.stop()
+            raise RuntimeError("snapshot upsert stream did not finish within 300s")
+        # materialize before the store is deleted
+        return llmq._pin_result(maintainer.snapshot())
 
 
 STREAMING_SNAPSHOT_SQL = """
@@ -302,10 +290,6 @@ def q_streaming_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~0.89), equals the quadratic 3-shingle jaccard twin that also oracles
     the batch minhash_dedup_pairs query. Cross-batch arrival ordering and
     replay idempotence stay pinned by tests/test_streaming_dedup.py."""
-    import atexit
-    import shutil
-    import tempfile
-
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -317,34 +301,34 @@ def q_streaming_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("n_chars", T.LongType()),
         ]
     )
-    src = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("path", _stage_stream_dir(sf_dir, "documents"))
-        .load()
-    )
-    store = tempfile.mkdtemp(prefix="wsspark_dedupq_store_")
-    ckpt = tempfile.mkdtemp(prefix="wsspark_dedupq_ckpt_")
-    for d in (store, ckpt):
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    index = streaming.StreamingDedupIndex(spark, store, threshold=0.6)
-    q = index.attach(src, ckpt)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("dedup index stream did not finish within 300s")
-    return spark.read.parquet(os.path.join(store, "dup_pairs")).select(
-        "doc_a", "doc_b", "jaccard"
-    )
+    with scratch_dir("wsspark_dedupq_") as d:
+        src = (
+            spark.readStream.schema(schema)
+            .format("parquet")
+            .option("path", _stage_stream_dir(sf_dir, d, "documents"))
+            .load()
+        )
+        index = streaming.StreamingDedupIndex(
+            spark, os.path.join(d, "store"), threshold=0.6
+        )
+        q = index.attach(src, os.path.join(d, "ckpt"))
+        if not q.awaitTermination(300):
+            q.stop()
+            raise RuntimeError("dedup index stream did not finish within 300s")
+        return llmq._pin_result(
+            spark.read.parquet(index.pairs_path).select("doc_a", "doc_b", "jaccard")
+        )
 
 
 def q_streaming_event_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark-evicted streaming dropDuplicates computed by the STREAM
     path and verified against batch SELECT DISTINCT — the stateful dedup
     twin of the batch event_dedup_first_daily operator."""
-    stream = streaming.read_event_stream(spark, _stage_stream_dir(sf_dir))
-    return _run_append_to_table(
-        streaming.distinct_daily_actors(stream), spark, "q_stream_event_dedup"
-    )
+    with scratch_dir("wsspark_stream_") as d:
+        stream = streaming.read_event_stream(spark, _stage_stream_dir(sf_dir, d))
+        return _run_append_to_table(
+            streaming.distinct_daily_actors(stream), spark, "q_stream_event_dedup"
+        )
 
 
 STREAMING_DEDUP_SQL = """
@@ -358,13 +342,14 @@ def q_streaming_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static broadcast join computed by the STREAM path (events
     stream enriched with the static customer dimension per micro-batch)
     and verified against the batch join twin."""
-    stream = streaming.read_event_stream(spark, _stage_stream_dir(sf_dir))
     dim = read_table(spark, sf_dir, "customer")
-    return _run_to_table(
-        streaming.stream_static_enrichment(stream, dim),
-        spark,
-        "q_stream_seg_counts",
-    )
+    with scratch_dir("wsspark_stream_") as d:
+        stream = streaming.read_event_stream(spark, _stage_stream_dir(sf_dir, d))
+        return _run_to_table(
+            streaming.stream_static_enrichment(stream, dim),
+            spark,
+            "q_stream_seg_counts",
+        )
 
 
 STREAMING_SEGMENT_SQL = """
@@ -385,10 +370,6 @@ def q_streaming_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-occurrence window the oracle computes; cross-batch arrival
     ordering and replay idempotence stay pinned by
     tests/test_streaming_dedup.py."""
-    import atexit
-    import shutil
-    import tempfile
-
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -400,27 +381,27 @@ def q_streaming_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("n_chars", T.LongType()),
         ]
     )
-    src = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("path", _stage_stream_dir(sf_dir, "documents"))
-        .load()
-    )
-    store = tempfile.mkdtemp(prefix="wsspark_chunkdedup_store_")
-    ckpt = tempfile.mkdtemp(prefix="wsspark_chunkdedup_ckpt_")
-    for d in (store, ckpt):
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    dedup = streaming.StreamingChunkDedup(
-        spark, store, chunk_size=llmq.CHUNK_SIZE, overlap=llmq.CHUNK_OVERLAP
-    )
-    q = dedup.attach(src, ckpt)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("chunk dedup stream did not finish within 300s")
-    return spark.read.parquet(dedup.assignments_path).select(
-        "doc_id", "chunk_id", "chunk_hash", "is_dup",
-        "first_doc_id", "first_chunk_id",
-    )
+    with scratch_dir("wsspark_chunkdedup_") as d:
+        src = (
+            spark.readStream.schema(schema)
+            .format("parquet")
+            .option("path", _stage_stream_dir(sf_dir, d, "documents"))
+            .load()
+        )
+        dedup = streaming.StreamingChunkDedup(
+            spark, os.path.join(d, "store"),
+            chunk_size=llmq.CHUNK_SIZE, overlap=llmq.CHUNK_OVERLAP,
+        )
+        q = dedup.attach(src, os.path.join(d, "ckpt"))
+        if not q.awaitTermination(300):
+            q.stop()
+            raise RuntimeError("chunk dedup stream did not finish within 300s")
+        return llmq._pin_result(
+            spark.read.parquet(dedup.assignments_path).select(
+                "doc_id", "chunk_id", "chunk_hash", "is_dup",
+                "first_doc_id", "first_chunk_id",
+            )
+        )
 
 
 # single-batch twin: dup = an earlier (doc_id, chunk_id) with the same
@@ -470,9 +451,6 @@ def q_streaming_drift_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     report hash-checks against the SAME DuckDB twin as the batch
     drift_ivm_report (llm.DRIFT_IVM_SQL) — one oracle pins the batch
     refresh and the streaming maintainer."""
-    import shutil
-    import tempfile
-
     from wsspark import adapters as ad
     from wsspark import snapstore as ss
     from wsspark.snapsource import register
@@ -480,15 +458,13 @@ def q_streaming_drift_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     register(spark)
     li = read_table(spark, sf_dir, "lineitem")
     mvs = ad.movements_from_lineitem(li)
-    fact_root = tempfile.mkdtemp(prefix="snapsdriftf-")
-    store = tempfile.mkdtemp(prefix="snapsdrifts-")
-    ckpt = tempfile.mkdtemp(prefix="snapsdriftc-")
-    try:
+    with scratch_dir("snapsdrift-") as d:
+        fact_root = os.path.join(d, "fact")
         ss.snap_commit(mvs.repartition(8), fact_root)
         ss.snap_enable_cdf(fact_root)
         baseline = ss.snap_read(spark, fact_root, 0)
         monitor = streaming.StreamingCdfDriftMonitor(
-            spark, store, baseline,
+            spark, os.path.join(d, "store"), baseline,
             numeric_cols=["quantity"], cat_cols=["movement_type"],
         )
         ss.snap_update_where(
@@ -499,17 +475,13 @@ def q_streaming_drift_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.readStream.format("snapstore")
             .option("readChangeFeed", "true")
             .load(fact_root),
-            ckpt,
+            os.path.join(d, "ckpt"),
         )
         if not q.awaitTermination(300):
             q.stop()
             raise RuntimeError("drift feed stream did not finish within 300s")
         out = monitor.report()
         rows = out.collect()  # O(columns) rows
-    finally:
-        shutil.rmtree(fact_root, ignore_errors=True)
-        shutil.rmtree(store, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.createDataFrame(rows, out.schema)
 
 
@@ -522,10 +494,6 @@ def q_streaming_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch operator (core.INCREMENTAL_MV_SQL) — one oracle pins both
     the batch and the streaming refresh paths. Multi-batch merge + replay
     idempotence are pinned in tests/test_streaming_mv.py."""
-    import atexit
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -538,40 +506,38 @@ def q_streaming_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("l_shipdate", T.TimestampType()),
         ]
     )
-    src = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("path", _stage_stream_dir(sf_dir, "lineitem"))
-        .load()
-    )
-    movements = src.select(
-        F.col("l_partkey").alias("product_id"),
-        F.col("l_suppkey").alias("warehouse_id"),
-        F.when(F.col("l_returnflag") == "R", -F.col("l_quantity"))
-        .otherwise(F.col("l_quantity"))
-        .alias("quantity"),
-        F.col("l_shipdate").alias("movement_date"),
-    )
-    store = tempfile.mkdtemp(prefix="wsspark_mvq_store_")
-    ckpt = tempfile.mkdtemp(prefix="wsspark_mvq_ckpt_")
-    for d in (store, ckpt):
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    maintainer = streaming.StreamingMVMaintainer(spark, store)
-    q = maintainer.attach(movements, ckpt)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("MV refresh stream did not finish within 300s")
-    mv = maintainer.mv()
-    return mv.select(
-        "warehouse_id",
-        "product_id",
-        "n_movements",
-        "net_qty",
-        "last_movement_at",
-        F.round(
-            F.col("net_qty").cast("double") / F.col("n_movements"), 4
-        ).alias("avg_qty"),
-    )
+    with scratch_dir("wsspark_mvq_") as d:
+        src = (
+            spark.readStream.schema(schema)
+            .format("parquet")
+            .option("path", _stage_stream_dir(sf_dir, d, "lineitem"))
+            .load()
+        )
+        movements = src.select(
+            F.col("l_partkey").alias("product_id"),
+            F.col("l_suppkey").alias("warehouse_id"),
+            F.when(F.col("l_returnflag") == "R", -F.col("l_quantity"))
+            .otherwise(F.col("l_quantity"))
+            .alias("quantity"),
+            F.col("l_shipdate").alias("movement_date"),
+        )
+        maintainer = streaming.StreamingMVMaintainer(spark, os.path.join(d, "store"))
+        q = maintainer.attach(movements, os.path.join(d, "ckpt"))
+        if not q.awaitTermination(300):
+            q.stop()
+            raise RuntimeError("MV refresh stream did not finish within 300s")
+        return llmq._pin_result(
+            maintainer.mv().select(
+                "warehouse_id",
+                "product_id",
+                "n_movements",
+                "net_qty",
+                "last_movement_at",
+                F.round(
+                    F.col("net_qty").cast("double") / F.col("n_movements"), 4
+                ).alias("avg_qty"),
+            )
+        )
 
 
 
@@ -585,10 +551,6 @@ def q_streaming_bloom_ngram_index(spark: SparkSession, sf_dir: str) -> DataFrame
     oracle's first-occurrence computation; cross-batch bloom behavior
     (no false negatives vs history, constant state size, replay
     idempotence) is pinned by tests/test_streaming_dedup.py."""
-    import atexit
-    import shutil
-    import tempfile
-
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -600,29 +562,26 @@ def q_streaming_bloom_ngram_index(spark: SparkSession, sf_dir: str) -> DataFrame
             T.StructField("n_chars", T.LongType()),
         ]
     )
-    src = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("path", _stage_stream_dir(sf_dir, "documents"))
-        .load()
-    )
-    store = tempfile.mkdtemp(prefix="wsspark_ngrambloom_store_")
-    ckpt = tempfile.mkdtemp(prefix="wsspark_ngrambloom_ckpt_")
-    for d in (store, ckpt):
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    idx = streaming.StreamingBloomNgramIndex(
-        spark, store, n=llmq.NGRAM_DUP_N, n_bits=llmq.BLOOM_BITS,
-        k=llmq.BLOOM_K,
-    )
-    q = idx.attach(src, ckpt)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("ngram bloom stream did not finish within 300s")
-    return (
-        spark.read.parquet(idx.profiles_path)
-        .select("doc_id", "n_windows", "n_seen_windows", "seen_ratio")
-        .orderBy("doc_id")
-    )
+    with scratch_dir("wsspark_ngrambloom_") as d:
+        src = (
+            spark.readStream.schema(schema)
+            .format("parquet")
+            .option("path", _stage_stream_dir(sf_dir, d, "documents"))
+            .load()
+        )
+        idx = streaming.StreamingBloomNgramIndex(
+            spark, os.path.join(d, "store"), n=llmq.NGRAM_DUP_N,
+            n_bits=llmq.BLOOM_BITS, k=llmq.BLOOM_K,
+        )
+        q = idx.attach(src, os.path.join(d, "ckpt"))
+        if not q.awaitTermination(300):
+            q.stop()
+            raise RuntimeError("ngram bloom stream did not finish within 300s")
+        return llmq._pin_result(
+            spark.read.parquet(idx.profiles_path)
+            .select("doc_id", "n_windows", "n_seen_windows", "seen_ratio")
+            .orderBy("doc_id")
+        )
 
 
 # single-batch twin: a window is "seen" iff an EARLIER doc (smaller
