@@ -365,3 +365,31 @@ def test_no_checkpoint_in_a_loop_outside_exec():
                 ):
                     found.append(f"{path.relative_to(_WSSPARK)}:{node.lineno}")
     assert not found, "use wsspark.exec.rounds:\n" + "\n".join(found)
+
+
+# Library behaviour is set by arguments and module constants, not by the
+# process environment or a contextvar that a thread may not inherit.
+# Allowed: ``session.py`` reads deployment settings (cores, driver
+# memory, UI); ``narrative.py`` reads an API credential; q32's result
+# cap is still an env read.
+_ENV_ALLOWED = {
+    "session.py": "",
+    "report/narrative.py": "OPENAI_API_KEY",
+    "queries/llm.py": "WSSPARK_SNAPSTORE_RESULT_CAP",
+}
+
+
+def test_no_env_read_or_contextvar_in_the_library():
+    pattern = re.compile(r"\b(environ|getenv|contextvars)\b")
+    found = []
+    for path in sorted(_WSSPARK.rglob("*.py")):
+        rel = path.relative_to(_WSSPARK).as_posix()
+        for no, line in enumerate(path.read_text().splitlines(), 1):
+            if not pattern.search(line):
+                continue
+            allowed = _ENV_ALLOWED.get(rel)
+            if allowed is None or allowed not in line:
+                found.append(f"{rel}:{no}: {line.strip()}")
+    assert not found, "pass a parameter or use a module constant:\n" + "\n".join(
+        found
+    )

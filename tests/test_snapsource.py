@@ -819,7 +819,7 @@ def test_batch_pushdown_vectorized_on_detail_backed_store(
     reconstruction). Planned partitions must cover every matching file
     (superset contract — strict bounds widen to inclusive) and results
     stay exact end to end."""
-    monkeypatch.setenv("WSSPARK_SNAP_DETAIL_INLINE_MAX", "0")
+    monkeypatch.setattr(ss, "DETAIL_INLINE_MAX", 0)
     root = str(tmp_path / "sdet")
     ss.snap_commit(
         _df(spark, 0, 2000).repartitionByRange(8, "id"),

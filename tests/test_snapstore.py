@@ -2738,8 +2738,8 @@ def test_unrelated_fnf_is_not_blamed_on_vacuum(spark, tmp_path, monkeypatch):
     corruption, an unrelated missing file) must propagate as the hard
     error it is — retrying would re-write data forever against damage
     no retry can fix."""
-    monkeypatch.setenv("WSSPARK_SNAP_DETAIL_INLINE_MAX", "0")
-    monkeypatch.setenv("WSSPARK_SNAP_DETAIL_PARTS_MAX", "1")
+    monkeypatch.setattr(ss, "DETAIL_INLINE_MAX", 0)
+    monkeypatch.setattr(ss, "DETAIL_PARTS_MAX", 1)
     root = str(tmp_path / "t")
     df = spark.createDataFrame([(i, i) for i in range(50)], "id long, v long")
     ss.snap_commit(df.coalesce(2), root, stats_cols=["id"])
@@ -2798,37 +2798,6 @@ def test_partially_collected_cdf_reports_zero(spark, tmp_path):
         r for r in ss.snap_history(root) if r["version"] == v
     )["n_change_rows"]
     assert partial == 0
-
-
-def test_metadata_thresholds_are_context_local(spark, tmp_path):
-    """r15 advisor fix: snap_metadata_thresholds overrides are scoped to
-    the calling context — a concurrent committer thread keeps the
-    process defaults instead of silently inheriting forced O(1)-head
-    mode (the old env-mutation hazard)."""
-    import threading
-
-    seen: dict = {}
-
-    def other_thread():
-        seen["files"] = ss._files_inline_max()
-        seen["detail"] = ss._detail_inline_max()
-
-    with ss.snap_metadata_thresholds(detail_inline_max=0, files_inline_max=0):
-        assert ss._files_inline_max() == 0
-        assert ss._detail_inline_max() == 0
-        t = threading.Thread(target=other_thread)
-        t.start()
-        t.join()
-    assert seen["files"] == 10000 and seen["detail"] == 512
-    assert ss._files_inline_max() == 10000  # reset on exit
-    # and the override actually drives a commit into O(1)-head mode
-    root = str(tmp_path / "t")
-    df = spark.createDataFrame([(i,) for i in range(20)], "id long")
-    with ss.snap_metadata_thresholds(detail_inline_max=0, files_inline_max=0):
-        ss.snap_commit(df.coalesce(2), root, stats_cols=["id"])
-    head = json.load(open(ss._manifest_path(root, 0)))
-    assert head.get("files_in_detail") and "files" not in head
-    assert ss.snap_count(root) == 20
 
 
 def test_rewrite_commit_concurrent_data_cdf_order_independent(

@@ -1,6 +1,6 @@
 """Manifest DETAIL sidecar — the metadata plane at scale.
 
-Above ``WSSPARK_SNAP_DETAIL_INLINE_MAX`` files, a commit's per-file
+Above ``ss.DETAIL_INLINE_MAX`` files, a commit's per-file
 metadata (min/max stats, Bloom bitmaps, rows/bytes) moves out of the
 version JSON into one parquet sidecar; the head stays O(1)+paths and
 readers reconstruct/prune lazily. These tests force sidecar mode with
@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import json
 import os
+from unittest import mock
 
 import pytest
 from pyspark.sql import functions as F
@@ -31,7 +32,7 @@ from wsspark import snapstore as ss
 
 @pytest.fixture()
 def detail_mode(monkeypatch):
-    monkeypatch.setenv("WSSPARK_SNAP_DETAIL_INLINE_MAX", "0")
+    monkeypatch.setattr(ss, "DETAIL_INLINE_MAX", 0)
 
 
 def _df(spark, rows, cols=("id", "v")):
@@ -80,9 +81,9 @@ def test_roundtrip_bit_identical_with_inline(spark, tmp_path, monkeypatch):
     df = _df(spark, rows, ("id", "k", "ts")).repartition(4)
     inline_root = str(tmp_path / "inline")
     detail_root = str(tmp_path / "detail")
-    monkeypatch.setenv("WSSPARK_SNAP_DETAIL_INLINE_MAX", "100000")
+    monkeypatch.setattr(ss, "DETAIL_INLINE_MAX", 100_000)
     ss.snap_commit(df, inline_root, stats_cols=["id", "ts"], bloom_cols=["k"])
-    monkeypatch.setenv("WSSPARK_SNAP_DETAIL_INLINE_MAX", "0")
+    monkeypatch.setattr(ss, "DETAIL_INLINE_MAX", 0)
     ss.snap_commit(df, detail_root, stats_cols=["id", "ts"], bloom_cols=["k"])
 
     mi = ss._read_manifest(inline_root, 0)
@@ -474,15 +475,8 @@ def _mk_manifest(tmpdir, file_stats, blooms, n_bits):
     }
     root = str(tmpdir)
     os.makedirs(ss._manifest_dir(root), exist_ok=True)
-    old = os.environ.get("WSSPARK_SNAP_DETAIL_INLINE_MAX")
-    os.environ["WSSPARK_SNAP_DETAIL_INLINE_MAX"] = "0"
-    try:
+    with mock.patch.object(ss, "DETAIL_INLINE_MAX", 0):
         ss._write_manifest_file(root, manifest)
-    finally:
-        if old is None:
-            os.environ.pop("WSSPARK_SNAP_DETAIL_INLINE_MAX", None)
-        else:
-            os.environ["WSSPARK_SNAP_DETAIL_INLINE_MAX"] = old
     ss._advance_current(root, 0)
     return root
 
@@ -655,7 +649,7 @@ def test_threshold_drop_falls_back_to_inline(spark, tmp_path, monkeypatch):
     """If the inline threshold RISES past the table size between
     commits, the append atop a detail-backed parent reconstructs the
     dicts and publishes inline — correctness over the fast path."""
-    monkeypatch.setenv("WSSPARK_SNAP_DETAIL_INLINE_MAX", "0")
+    monkeypatch.setattr(ss, "DETAIL_INLINE_MAX", 0)
     root = str(tmp_path / "t")
     ss.snap_commit(
         spark.range(0, 200).select(F.col("id")).repartition(2),
@@ -663,7 +657,7 @@ def test_threshold_drop_falls_back_to_inline(spark, tmp_path, monkeypatch):
         stats_cols=["id"],
     )
     assert _parts(_head(root, 0))
-    monkeypatch.setenv("WSSPARK_SNAP_DETAIL_INLINE_MAX", "100000")
+    monkeypatch.setattr(ss, "DETAIL_INLINE_MAX", 100_000)
     v = ss.snap_commit(
         spark.range(200, 300).select(F.col("id")).repartition(2),
         root,
@@ -861,7 +855,7 @@ def test_meta_sum_falls_back_on_sidecar_path_mismatch(
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    monkeypatch.setenv("WSSPARK_SNAP_FILES_INLINE_MAX", "1000000")
+    monkeypatch.setattr(ss, "FILES_INLINE_MAX", 1_000_000)
     root = str(tmp_path / "t")
     ss.snap_commit(
         spark.range(0, 400).select(F.col("id")).repartition(4),
@@ -948,8 +942,8 @@ def test_cdf_path_domain_skew_fails_loudly(spark, tmp_path, monkeypatch):
 
 @pytest.fixture()
 def o1_head_mode(monkeypatch):
-    monkeypatch.setenv("WSSPARK_SNAP_DETAIL_INLINE_MAX", "0")
-    monkeypatch.setenv("WSSPARK_SNAP_FILES_INLINE_MAX", "0")
+    monkeypatch.setattr(ss, "DETAIL_INLINE_MAX", 0)
+    monkeypatch.setattr(ss, "FILES_INLINE_MAX", 0)
 
 
 def test_append_writes_incremental_part_chain(spark, detail_mode, tmp_path):
@@ -987,7 +981,7 @@ def test_append_writes_incremental_part_chain(spark, detail_mode, tmp_path):
 
 
 def test_part_chain_compacts_past_max(spark, detail_mode, tmp_path, monkeypatch):
-    monkeypatch.setenv("WSSPARK_SNAP_DETAIL_PARTS_MAX", "3")
+    monkeypatch.setattr(ss, "DETAIL_PARTS_MAX", 3)
     root = str(tmp_path / "t")
     for i in range(5):
         ss.snap_commit(
@@ -1140,7 +1134,7 @@ def test_exactness_gate_blocks_lossy_chains(spark, tmp_path, monkeypatch):
     above the files threshold — vacuum's referenced-set may never
     derive from a possibly-lossy sidecar. A full re-profile
     (snap_analyze -> dict path) re-earns the flag."""
-    monkeypatch.setenv("WSSPARK_SNAP_DETAIL_INLINE_MAX", "0")
+    monkeypatch.setattr(ss, "DETAIL_INLINE_MAX", 0)
     root = str(tmp_path / "t")
     ss.snap_commit(
         spark.range(0, 200).select(F.col("id")).repartition(2),
@@ -1155,7 +1149,7 @@ def test_exactness_gate_blocks_lossy_chains(spark, tmp_path, monkeypatch):
     os.remove(ss._manifest_path(root, 0))
     with open(ss._manifest_path(root, 0), "w") as f:
         json.dump(h, f)
-    monkeypatch.setenv("WSSPARK_SNAP_FILES_INLINE_MAX", "0")
+    monkeypatch.setattr(ss, "FILES_INLINE_MAX", 0)
     v = ss.snap_commit(
         spark.range(200, 300).select(F.col("id")).repartition(1),
         root,
@@ -1243,104 +1237,6 @@ def test_shared_part_vanishing_mid_append_is_retryable(
     assert ss.snap_current_version(root) == 0
 
 
-def test_deferred_compaction_and_explicit_fold(spark, detail_mode, tmp_path):
-    """r15: detail_parts_max=0 disables the inline compaction rung —
-    appends never pay the fold spike and the chain grows — and
-    snap_compact_details folds it explicitly as a metadata-only,
-    content-preserving commit. Reads are identical in all three states
-    (growing chain / post-fold / post-vacuum), the fold moves zero data
-    bytes, and feeds cross the fold commit as zero-change."""
-    root = str(tmp_path / "t")
-    df0 = spark.createDataFrame(
-        [(i, i * 3) for i in range(40)], "id long, v long"
-    )
-    expected = [(i, i * 3) for i in range(40)]
-    with ss.snap_metadata_thresholds(detail_parts_max=0):
-        ss.snap_commit(df0.coalesce(2), root, stats_cols=["id"])
-        for b in range(6):
-            extra = spark.createDataFrame(
-                [(100 + b * 10 + j, (100 + b * 10 + j) * 3) for j in range(4)],
-                "id long, v long",
-            ).coalesce(1)
-            expected += [(r[0], r[1]) for r in extra.collect()]
-            ss.snap_commit(extra, root, stats_cols=["id"])
-    v = ss.snap_current_version(root)
-    head = _head(root, v)
-    assert len(_parts(head)) == 7, "inline rung stayed disabled"
-    got = sorted(
-        (r.id, r.v) for r in ss.snap_read(spark, root).collect()
-    )
-    assert got == sorted(expected)
-    data_files_before = set(ss._read_manifest(root, v)["files"])
-    # explicit fold: one part, content-preserving, same rows
-    v2 = ss.snap_compact_details(root)
-    assert v2 == v + 1
-    head2 = _head(root, v2)
-    assert len(_parts(head2)) == 1
-    assert head2.get("content_preserving") is True
-    m2 = ss._read_manifest(root, v2)
-    assert set(m2["files"]) == data_files_before, "zero data movement"
-    got2 = sorted((r.id, r.v) for r in ss.snap_read(spark, root).collect())
-    assert got2 == sorted(expected)
-    # reconstructed detail identical to the pre-fold chain
-    m1 = ss._read_manifest(root, v)
-    assert m1["file_stats"] == m2["file_stats"]
-    assert m1["file_meta"] == m2["file_meta"]
-    # idempotent: single-part chain has nothing to fold
-    assert ss.snap_compact_details(root) is None
-    # pruning still drives off the folded part
-    kept, total = ss.snap_prune_files(root, "id", 0, 5)
-    assert 0 < len(kept) < total
-    # vacuum collects the superseded chain parts once the old manifests
-    # age out, and the folded store reads intact
-    ss.snap_vacuum(root, keep_last=1, staged_grace_minutes=0)
-    got3 = sorted((r.id, r.v) for r in ss.snap_read(spark, root).collect())
-    assert got3 == sorted(expected)
-    mdir = ss._manifest_dir(root)
-    live_parts = [
-        f for f in os.listdir(mdir) if f.endswith(".detail.parquet")
-    ]
-    assert live_parts == _parts(head2), "superseded parts collected"
-
-
-def test_compact_details_loses_race_cleanly(spark, detail_mode, tmp_path, monkeypatch):
-    """A commit landing between snap_compact_details' read and publish
-    wins the version; the fold surfaces the retryable conflict and
-    leaves no orphan part behind (beyond what vacuum sweeps)."""
-    root = str(tmp_path / "t")
-    with ss.snap_metadata_thresholds(detail_parts_max=0):
-        ss.snap_commit(
-            spark.createDataFrame([(i,) for i in range(20)], "id long").coalesce(2),
-            root, stats_cols=["id"],
-        )
-        ss.snap_commit(
-            spark.createDataFrame([(i,) for i in range(20, 30)], "id long").coalesce(1),
-            root, stats_cols=["id"],
-        )
-    real_write = ss._write_manifest_file
-
-    def racing_write(r, manifest, pre_publish=None):
-        # restore FIRST so the racing append below publishes through the
-        # real writer (leaving the patch in place would recurse forever)
-        monkeypatch.setattr(ss, "_write_manifest_file", real_write)
-        # a racing append steals the version first
-        with ss.snap_metadata_thresholds(detail_parts_max=0):
-            ss.snap_commit(
-                spark.createDataFrame([(99,)], "id long").coalesce(1),
-                r, stats_cols=["id"],
-            )
-        return real_write(r, manifest, pre_publish=pre_publish)
-
-    monkeypatch.setattr(ss, "_write_manifest_file", racing_write)
-    with pytest.raises(ss.SnapshotConflict):
-        ss.snap_compact_details(root)
-    monkeypatch.setattr(ss, "_write_manifest_file", real_write)
-    assert ss.snap_count(root) == 31
-    # retry after the lost race succeeds
-    assert ss.snap_compact_details(root) is not None
-    assert ss.snap_count(root) == 31
-
-
 # ---------------------------------------------------------------------------
 # The stats type matrix through a forced-sidecar commit
 
@@ -1379,7 +1275,9 @@ def _typed_df(spark, n=800, parts=6):
 
 
 @pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
-def test_type_matrix_sidecar_stats_bracket_and_prune(spark, tmp_path, tz):
+def test_type_matrix_sidecar_stats_bracket_and_prune(
+    spark, tmp_path, tz, monkeypatch
+):
     """Every supported stats type through the driver pass into a forced
     sidecar with an O(1) head: each file's recorded [min, max] brackets
     every value it holds (in the session-tz text domain for temporal
@@ -1391,12 +1289,13 @@ def test_type_matrix_sidecar_stats_bracket_and_prune(spark, tmp_path, tz):
     spark.conf.set("spark.sql.session.timeZone", tz)
     try:
         root = str(tmp_path / "t")
-        with ss.snap_metadata_thresholds(detail_inline_max=0, files_inline_max=0):
-            v = ss.snap_commit(
-                _typed_df(spark), root, mode="overwrite",
-                stats_cols=MATRIX_STATS, bloom_cols=MATRIX_BLOOMS,
-                bloom_bits=1 << 12, bloom_k=4,
-            )
+        monkeypatch.setattr(ss, "DETAIL_INLINE_MAX", 0)
+        monkeypatch.setattr(ss, "FILES_INLINE_MAX", 0)
+        v = ss.snap_commit(
+            _typed_df(spark), root, mode="overwrite",
+            stats_cols=MATRIX_STATS, bloom_cols=MATRIX_BLOOMS,
+            bloom_bits=1 << 12, bloom_k=4,
+        )
         head = _head(root, v)
         assert _parts(head) and head.get("files_in_detail")
         assert head.get("detail_exact") and "file_stats" not in head
@@ -1450,7 +1349,9 @@ def test_type_matrix_sidecar_stats_bracket_and_prune(spark, tmp_path, tz):
         spark.conf.set("spark.sql.session.timeZone", old)
 
 
-def test_unparseable_session_timezone_keeps_timestamp_stats(spark, tmp_path):
+def test_unparseable_session_timezone_keeps_timestamp_stats(
+    spark, tmp_path, monkeypatch
+):
     """A session timezone Spark accepts but zoneinfo cannot parse
     (``GMT+08:00``) leaves timestamp stats in the system domain instead
     of guessing — and the sidecar commit, its stats and its reads all
@@ -1460,11 +1361,11 @@ def test_unparseable_session_timezone_keeps_timestamp_stats(spark, tmp_path):
     try:
         assert ss._session_ts_normalizer(spark) is None
         root = str(tmp_path / "t")
-        with ss.snap_metadata_thresholds(detail_inline_max=0):
-            v = ss.snap_commit(
-                _typed_df(spark, n=100, parts=2), root, mode="overwrite",
-                stats_cols=["ts", "id"],
-            )
+        monkeypatch.setattr(ss, "DETAIL_INLINE_MAX", 0)
+        v = ss.snap_commit(
+            _typed_df(spark, n=100, parts=2), root, mode="overwrite",
+            stats_cols=["ts", "id"],
+        )
         stats = ss._read_manifest(root, v)["file_stats"]
         assert len(stats) == 2
         assert all("ts" in per and "id" in per for per in stats.values())

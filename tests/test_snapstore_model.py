@@ -23,6 +23,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+from unittest import mock
 
 import pytest
 from hypothesis import HealthCheck, settings
@@ -154,23 +155,6 @@ class SnapstoreMachine(RuleBasedStateMachine):
         os.rmdir(new_root)
         shutil.move(self.root, new_root)
         self.root = new_root
-
-    @precondition(lambda self: self.versions)
-    @rule()
-    def compact_details(self):
-        """Explicit sidecar-chain fold (r15, snap_compact_details): a
-        metadata-only content-preserving commit — rows, schema,
-        constraints, cdf flag, and the change-feed span must all survive
-        it; an inline or single-part chain is a no-op. Interleaved with
-        appends/DML/vacuum/restore by the machine, this is the
-        shared-part-chain concurrency surface the r14 review only
-        probed by hand."""
-        v = ss.snap_compact_details(self.root)
-        if v is None:
-            assert ss.snap_current_version(self.root) == len(self.versions) - 1
-        else:
-            assert v == len(self.versions)
-            self._push(*self._cur())
 
     @precondition(lambda self: self.versions)
     @rule()
@@ -787,12 +771,12 @@ class TestSnapstoreModel:
 
     def test_stateful_multipart_chains(self, spark):
         """The same machine under FORCED multipart pressure: every
-        commit is sidecar-backed with an O(1) head, parts_max=2 makes
-        the inline compaction rung fire every few appends, and the
-        compact_details rule interleaves explicit folds — so shared
-        part chains are created, shared (restore/metadata commits),
-        folded, and vacuumed in arbitrary orders while the part-files-
-        alive invariant and every content check hold. This is the
+        commit is sidecar-backed with an O(1) head and
+        DETAIL_PARTS_MAX=2 makes the inline compaction rung fire every
+        few appends — so shared part chains are created, shared
+        (restore/metadata commits), folded, and vacuumed in arbitrary
+        orders while the part-files-alive invariant and every content
+        check hold. This is the
         model-rule coverage for the race class the r14 review found by
         hand (test_shared_part_vanishing_mid_append_is_retryable)."""
         SnapstoreMachine.spark = spark
@@ -803,8 +787,8 @@ class TestSnapstoreModel:
             derandomize=True,
             suppress_health_check=list(HealthCheck),
         )
-        with ss.snap_metadata_thresholds(
-            detail_inline_max=0, files_inline_max=0, detail_parts_max=2
+        with mock.patch.multiple(
+            ss, DETAIL_INLINE_MAX=0, FILES_INLINE_MAX=0, DETAIL_PARTS_MAX=2
         ):
             case = SnapstoreMachine.TestCase()
             case.runTest()

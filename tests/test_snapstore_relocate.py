@@ -1,7 +1,7 @@
 """Store relocatability (r15): a snapstore directory moved with
 ``shutil.move`` (mv/cp/remount semantics) keeps working — reads, pruning,
 metadata counts, DV-masked deletes, CDF feeds, appends, DML, restore,
-explicit sidecar folds, and vacuum all operate under the new root.
+sidecar folds, and vacuum all operate under the new root.
 
 Mechanism under test: heads record the root they were published under
 (``root`` key) and readers rebase path lists at load; sidecar parts
@@ -29,8 +29,8 @@ from wsspark import snapstore as ss
 
 @pytest.fixture()
 def sidecar_mode(monkeypatch):
-    monkeypatch.setenv("WSSPARK_SNAP_DETAIL_INLINE_MAX", "0")
-    monkeypatch.setenv("WSSPARK_SNAP_FILES_INLINE_MAX", "0")
+    monkeypatch.setattr(ss, "DETAIL_INLINE_MAX", 0)
+    monkeypatch.setattr(ss, "FILES_INLINE_MAX", 0)
 
 
 def _df(spark, lo, hi):
@@ -95,7 +95,7 @@ def test_relocated_store_full_lifecycle(spark, tmp_path, sidecar_mode):
     os.makedirs(os.path.dirname(dst))
     shutil.move(src, dst)
     _check_full_surface(spark, dst, feed_from)
-    # post-move WRITES: append, DML, explicit fold, restore, vacuum
+    # post-move WRITES: append, DML, restore, vacuum
     ss.snap_commit(
         _df(spark, 200, 220).coalesce(1), dst,
         stats_cols=["id"], bloom_cols=["s"],
@@ -103,12 +103,8 @@ def test_relocated_store_full_lifecycle(spark, tmp_path, sidecar_mode):
     assert ss.snap_count(dst) == 140
     ss.snap_delete_dv(spark, dst, "id >= 210")
     assert ss.snap_count(dst) == 130
-    with ss.snap_metadata_thresholds(detail_parts_max=0):
-        v_fold = ss.snap_compact_details(dst)
-    assert v_fold is not None
-    assert ss.snap_count(dst) == 130
     v_before = ss.snap_current_version(dst)
-    ss.snap_restore(dst, v_before - 3)
+    ss.snap_restore(dst, v_before - 2)
     assert ss.snap_count(dst) == 120
     ss.snap_restore(dst, v_before)
     ss.snap_vacuum(dst, keep_last=99, staged_grace_minutes=0)
@@ -267,7 +263,7 @@ def test_rootless_dv_survives_move_then_commit(spark, tmp_path):
     without restamping, the rows re-anchor there, the rebase map comes
     back empty, and the deleted rows silently resurrect while
     snap_count still subtracts them. Every by-name carry path (append,
-    dv-delete, restore, explicit fold) must restamp."""
+    dv-delete, restore, the inline fold) must restamp."""
     src = str(tmp_path / "a")
     ss.snap_commit(_df(spark, 0, 100).coalesce(2), src, stats_cols=["id"])
     ss.snap_delete_dv(spark, src, "id >= 90")
@@ -296,9 +292,15 @@ def test_rootless_dv_survives_move_then_commit(spark, tmp_path):
     assert ss.snap_read(spark, dst2).count() == 90
 
 
-def test_rootless_dv_survives_move_then_fold(spark, tmp_path, sidecar_mode):
-    """The metadata-only explicit fold (snap_compact_details) also
-    re-records the root and must restamp carried rootless DV rows."""
+def test_rootless_dv_survives_move_then_fold(
+    spark, tmp_path, sidecar_mode, monkeypatch
+):
+    """The inline sidecar fold also runs on a moved store: the first
+    append after the move pushes the part chain past
+    ``DETAIL_PARTS_MAX``, folds parts written under the OLD root into
+    one part under the new one, re-records the root, and must restamp
+    the carried rootless DV rows so they keep masking."""
+    monkeypatch.setattr(ss, "DETAIL_PARTS_MAX", 2)
     src = str(tmp_path / "a")
     ss.snap_commit(
         _df(spark, 0, 100).repartitionByRange(4, "id"), src, stats_cols=["id"]
@@ -308,12 +310,12 @@ def test_rootless_dv_survives_move_then_fold(spark, tmp_path, sidecar_mode):
     _strip_dv_root(src)
     dst = str(tmp_path / "b")
     shutil.move(src, dst)
-    with ss.snap_metadata_thresholds(detail_parts_max=0):
-        v = ss.snap_compact_details(dst)
-    assert v is not None
-    assert ss.snap_count(dst) == 120
-    assert {r.id for r in ss.snap_read(spark, dst).collect()} == set(
-        range(120)
+    v = ss.snap_commit(_df(spark, 200, 210).coalesce(1), dst, stats_cols=["id"])
+    with open(ss._manifest_path(dst, v)) as f:
+        assert len(ss._pointer_names(json.load(f))) == 1, "chain folded"
+    assert ss.snap_count(dst) == 130
+    assert {r.id for r in ss.snap_read(spark, dst).collect()} == (
+        set(range(120)) | set(range(200, 210))
     )
 
 
@@ -411,76 +413,6 @@ def test_unmoved_store_read_plan_has_no_rebase(spark, tmp_path):
     )
     assert "StartsWith(_dv_f" in plan2, "moved store reads rebase per-row"
     assert ss.snap_read(spark, dst).count() == 50
-
-
-def test_snap_context_sink_carries_thresholds_to_foreachbatch(
-    spark, tmp_path, monkeypatch
-):
-    """r16 advisor finding: foreachBatch callbacks run on py4j
-    callback-server threads with a FRESH contextvars Context, so a bare
-    ``snap_metadata_thresholds`` block around ``start()`` never reaches
-    the sink. ``snap_context_sink`` captures the block's Context at
-    wrap time and the sink runs inside it. Pinned both ways: with the
-    wrapper the inline fold stays disabled (part chain grows one part
-    per batch past the process default), without it the process default
-    fires (the documented failure mode)."""
-    monkeypatch.setenv("WSSPARK_SNAP_DETAIL_INLINE_MAX", "0")
-    monkeypatch.setenv("WSSPARK_SNAP_FILES_INLINE_MAX", "0")
-    monkeypatch.setenv("WSSPARK_SNAP_DETAIL_PARTS_MAX", "2")
-    src_dir = tmp_path / "src"
-    src_dir.mkdir()
-    for i in range(5):
-        _df(spark, i * 10, i * 10 + 10).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src_dir / f"b{i}"))
-
-    def run_stream(root, sink):
-        stream = (
-            spark.readStream.schema("id long, val long, s string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src_dir / "b*"))
-        )
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option(
-                "checkpointLocation", str(tmp_path / (root.split("/")[-1] + "-ckpt"))
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    def parts(root):
-        head = json.load(
-            open(ss._manifest_path(root, ss.snap_current_version(root)))
-        )
-        return len(ss._pointer_names(head))
-
-    # WITH the wrapper: parts_max=0 rides into the sink -> no inline
-    # fold, one part per batch (> the env default of 2)
-    root_a = str(tmp_path / "with-wrapper")
-    with ss.snap_metadata_thresholds(detail_parts_max=0):
-        sink_a = ss.snap_context_sink(
-            lambda bdf, bid: ss.snap_commit(bdf, root_a, tag=bid)
-        )
-    run_stream(root_a, sink_a)
-    assert ss.snap_count(root_a) == 50
-    assert parts(root_a) > 2, "wrapper must carry detail_parts_max=0"
-    # the explicit maintenance fold still works afterwards
-    assert ss.snap_compact_details(root_a) is not None
-    assert parts(root_a) == 1
-    assert ss.snap_read(spark, root_a).count() == 50
-
-    # WITHOUT the wrapper: the thresholds block does NOT reach the
-    # callback thread; the env default (2) folds the chain
-    root_b = str(tmp_path / "no-wrapper")
-    with ss.snap_metadata_thresholds(detail_parts_max=0):
-        sink_b = lambda bdf, bid: ss.snap_commit(bdf, root_b, tag=bid)  # noqa: E731
-        run_stream(root_b, sink_b)
-    assert ss.snap_count(root_b) == 50
-    assert parts(root_b) <= 2, (
-        "documented caveat: bare thresholds block must not reach the sink"
-    )
 
 
 def test_dv_rebase_target_votes_from_file_list(tmp_path):

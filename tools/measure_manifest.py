@@ -28,6 +28,7 @@ import shutil
 import sys
 import tempfile
 import time
+from unittest import mock
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -38,9 +39,9 @@ ROWS_PER_FILE = 100
 
 
 def _fabricate(root: str, n_files: int, inline: bool) -> None:
-    os.environ["WSSPARK_SNAP_DETAIL_INLINE_MAX"] = (
-        str(10 * n_files) if inline else "0"
-    )
+    # process-wide on purpose: the appends, republishes and stages that
+    # follow a fabricate keep its layout
+    ss.DETAIL_INLINE_MAX = 10 * n_files if inline else 0
     files = [f"/fake/data/part-{i:06d}.parquet" for i in range(n_files)]
     stats, blooms, meta = {}, {}, {}
     n_words = N_BITS // 63 + 1
@@ -147,8 +148,7 @@ def run_o1(n_files: int) -> None:
     reconstruction cost (column-projected path read), and the REAL
     per-append publish cost over a parts_max+2 chain — first append,
     median, and the compaction spike, i.e. the amortization evidence."""
-    os.environ["WSSPARK_SNAP_FILES_INLINE_MAX"] = "0"
-    try:
+    with mock.patch.object(ss, "FILES_INLINE_MAX", 0):
         root = tempfile.mkdtemp(prefix="manifest-o1-")
         try:
             t_write, _ = _t(_fabricate, root, n_files, False)
@@ -163,7 +163,7 @@ def run_o1(n_files: int) -> None:
                 root, "id", hi_id // 2, hi_id // 2 + hi_id // 100,
             )
             assert total == n_files
-            n_appends = ss._detail_parts_max() + 2
+            n_appends = ss.DETAIL_PARTS_MAX + 2
             times = []
             for v in range(1, n_appends + 1):
                 t_a, _ = _t(_append_via_publish, root, v, 4)
@@ -198,133 +198,100 @@ def run_o1(n_files: int) -> None:
             )
         finally:
             shutil.rmtree(root, ignore_errors=True)
-        # r15: the DEFERRED-compaction mode a latency-sensitive sink
-        # runs — inline rung disabled, every append is O(new files),
-        # the fold happens once on the maintenance cadence
-        root = tempfile.mkdtemp(prefix="manifest-defer-")
-        try:
-            _fabricate(root, n_files, False)
-            ss._detail_cache.clear()
-            times = []
-            with ss.snap_metadata_thresholds(detail_parts_max=0):
-                for v in range(1, 19):  # same count as the inline run
-                    t_a, _ = _t(_append_via_publish, root, v, 4)
-                    times.append(t_a)
-            t_fold, v_fold = _t(ss.snap_compact_details, root)
-            times_sorted = sorted(times)
-            print(
-                json.dumps(
-                    {
-                        "n_files": n_files,
-                        "mode": "o1_deferred_compaction",
-                        "append_publish_median_s": round(
-                            times_sorted[len(times_sorted) // 2], 4
-                        ),
-                        "append_publish_max_s": round(times_sorted[-1], 4),
-                        "appends": len(times),
-                        "explicit_fold_s": round(t_fold, 4),
-                        "fold_version": v_fold,
-                    }
-                )
-            )
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
-    finally:
-        os.environ.pop("WSSPARK_SNAP_FILES_INLINE_MAX", None)
 
 
 def run(n_files: int, spark=None) -> None:
     # pin the r13 shape (path list inline in the head) so the three
     # modes compare cleanly: inline JSON / sidecar+inline files (r13) /
     # O(1) multipart head (r14, run_o1)
-    os.environ["WSSPARK_SNAP_FILES_INLINE_MAX"] = str(100 * n_files)
-    for inline in (True, False):
-        mode = "inline" if inline else "detail"
-        root = tempfile.mkdtemp(prefix=f"manifest-{mode}-")
-        try:
-            t_write, _ = _t(_fabricate, root, n_files, inline)
-            ss._detail_cache.clear()
-            t_head, m = _t(ss._read_manifest, root, 0)
-            # range prune over ~1% of the id domain
-            hi_id = n_files * ROWS_PER_FILE
-            t_range, (kept, total) = _t(
-                ss.snap_prune_files, root, "id", hi_id // 2, hi_id // 2 + hi_id // 100
-            )
-            t_eq, (kept_eq, _) = _t(
-                ss.snap_prune_files_eq, root, "id", ROWS_PER_FILE * (n_files // 2)
-            )
-            row = {
-                "n_files": n_files,
-                "mode": mode,
-                "write_s": round(t_write, 4),
-                "head_read_s": round(t_head, 4),
-                "prune_range_s": round(t_range, 4),
-                "prune_eq_s": round(t_eq, 4),
-                "kept_range": len(kept),
-                "kept_eq": len(kept_eq),
-                "total": total,
-            }
-            if not inline:
+    with mock.patch.object(ss, "FILES_INLINE_MAX", 100 * n_files):
+        for inline in (True, False):
+            mode = "inline" if inline else "detail"
+            root = tempfile.mkdtemp(prefix=f"manifest-{mode}-")
+            try:
+                t_write, _ = _t(_fabricate, root, n_files, inline)
                 ss._detail_cache.clear()
-                # commit-time detail cost for an APPEND of 4 new files:
-                # the r13 incremental path (arrow concat + write) vs the
-                # dict path (reconstruct + merge + rebuild) it replaced
-                parent = ss._read_manifest(root, 0)
-                new_part = {
-                    "file_stats": {
-                        f"/fake/new-{i}.parquet": {"id": [0, 1]}
-                        for i in range(4)
-                    },
-                    "file_blooms": {},
-                    "file_meta": {
-                        f"/fake/new-{i}.parquet": {"rows": 1, "bytes": 1}
-                        for i in range(4)
-                    },
+                t_head, m = _t(ss._read_manifest, root, 0)
+                # range prune over ~1% of the id domain
+                hi_id = n_files * ROWS_PER_FILE
+                t_range, (kept, total) = _t(
+                    ss.snap_prune_files, root, "id", hi_id // 2, hi_id // 2 + hi_id // 100
+                )
+                t_eq, (kept_eq, _) = _t(
+                    ss.snap_prune_files_eq, root, "id", ROWS_PER_FILE * (n_files // 2)
+                )
+                row = {
+                    "n_files": n_files,
+                    "mode": mode,
+                    "write_s": round(t_write, 4),
+                    "head_read_s": round(t_head, 4),
+                    "prune_range_s": round(t_range, 4),
+                    "prune_eq_s": round(t_eq, 4),
+                    "kept_range": len(kept),
+                    "kept_eq": len(kept_eq),
+                    "total": total,
                 }
-                import pyarrow.parquet as pq
+                if not inline:
+                    ss._detail_cache.clear()
+                    # commit-time detail cost for an APPEND of 4 new files:
+                    # the r13 incremental path (arrow concat + write) vs the
+                    # dict path (reconstruct + merge + rebuild) it replaced
+                    parent = ss._read_manifest(root, 0)
+                    new_part = {
+                        "file_stats": {
+                            f"/fake/new-{i}.parquet": {"id": [0, 1]}
+                            for i in range(4)
+                        },
+                        "file_blooms": {},
+                        "file_meta": {
+                            f"/fake/new-{i}.parquet": {"rows": 1, "bytes": 1}
+                            for i in range(4)
+                        },
+                    }
+                    import pyarrow.parquet as pq
 
-                def _append_incremental():
-                    t = ss._align_detail_tables(
-                        parent._table(), ss._detail_table_from_dicts(new_part)
-                    )
-                    pq.write_table(t, os.path.join(root, "_x.detail.parquet"))
+                    def _append_incremental():
+                        t = ss._align_detail_tables(
+                            parent._table(), ss._detail_table_from_dicts(new_part)
+                        )
+                        pq.write_table(t, os.path.join(root, "_x.detail.parquet"))
 
-                def _append_dicts():
-                    st_, bl, me = ss._detail_to_dicts(parent._table())
-                    st_.update(new_part["file_stats"])
-                    me.update(new_part["file_meta"])
-                    pq.write_table(
-                        ss._detail_table_from_dicts(
-                            {"file_stats": st_, "file_blooms": bl, "file_meta": me}
-                        ),
-                        os.path.join(root, "_y.detail.parquet"),
-                    )
+                    def _append_dicts():
+                        st_, bl, me = ss._detail_to_dicts(parent._table())
+                        st_.update(new_part["file_stats"])
+                        me.update(new_part["file_meta"])
+                        pq.write_table(
+                            ss._detail_table_from_dicts(
+                                {"file_stats": st_, "file_blooms": bl, "file_meta": me}
+                            ),
+                            os.path.join(root, "_y.detail.parquet"),
+                        )
 
-                t_inc, _ = _t(_append_incremental)
-                row["append_incremental_s"] = round(t_inc, 4)
-                t_dict, _ = _t(_append_dicts)
-                row["append_dict_rebuild_s"] = round(t_dict, 4)
-                ss._detail_cache.clear()
-                t_detail, _ = _t(lambda: ss._read_manifest(root, 0)["file_stats"])
-                row["detail_reconstruct_s"] = round(t_detail, 4)
-                if spark is not None:
-                    t_spark, (kept_sp, _) = _t(
-                        ss.snap_prune_files_spark,
-                        spark,
-                        root,
-                        "id",
-                        hi_id // 2,
-                        hi_id // 2 + hi_id // 100,
-                    )
-                    assert kept_sp == kept, "spark/vectorized prune parity"
-                    row["prune_range_spark_s"] = round(t_spark, 4)
-                head_bytes = os.path.getsize(ss._manifest_path(root, 0))
-                row["head_bytes"] = head_bytes
-            else:
-                row["head_bytes"] = os.path.getsize(ss._manifest_path(root, 0))
-            print(json.dumps(row))
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
+                    t_inc, _ = _t(_append_incremental)
+                    row["append_incremental_s"] = round(t_inc, 4)
+                    t_dict, _ = _t(_append_dicts)
+                    row["append_dict_rebuild_s"] = round(t_dict, 4)
+                    ss._detail_cache.clear()
+                    t_detail, _ = _t(lambda: ss._read_manifest(root, 0)["file_stats"])
+                    row["detail_reconstruct_s"] = round(t_detail, 4)
+                    if spark is not None:
+                        t_spark, (kept_sp, _) = _t(
+                            ss.snap_prune_files_spark,
+                            spark,
+                            root,
+                            "id",
+                            hi_id // 2,
+                            hi_id // 2 + hi_id // 100,
+                        )
+                        assert kept_sp == kept, "spark/vectorized prune parity"
+                        row["prune_range_spark_s"] = round(t_spark, 4)
+                    head_bytes = os.path.getsize(ss._manifest_path(root, 0))
+                    row["head_bytes"] = head_bytes
+                else:
+                    row["head_bytes"] = os.path.getsize(ss._manifest_path(root, 0))
+                print(json.dumps(row))
+            finally:
+                shutil.rmtree(root, ignore_errors=True)
 
 
 def run_stage(n_files: int, spark) -> None:
@@ -380,8 +347,7 @@ def run_relocate(n_files: int) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    os.environ["WSSPARK_SNAP_FILES_INLINE_MAX"] = "0"
-    try:
+    with mock.patch.object(ss, "FILES_INLINE_MAX", 0):
         src = tempfile.mkdtemp(prefix="manifest-reloc-")
         _fabricate(src, n_files, False)
         # a DV sidecar with 2000 rows over the fake files (the probe and
@@ -445,8 +411,6 @@ def run_relocate(n_files: int) -> None:
             )
         )
         shutil.rmtree(dst, ignore_errors=True)
-    finally:
-        os.environ.pop("WSSPARK_SNAP_FILES_INLINE_MAX", None)
 
 
 def main() -> None:

@@ -1137,7 +1137,7 @@ def _pagerank_sql(n_iter: int = 5, d: float = 0.85) -> str:
     for k in range(1, n_iter + 1):
         prev = f"r{k - 1}"
         iters.append(f"""
-r{k} AS (
+r{k} AS MATERIALIZED (
     SELECT n.node,
            (1 - {d}) / (SELECT cnt FROM nn)
            + {d} * (COALESCE(c.contrib, 0)

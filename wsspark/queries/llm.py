@@ -1936,7 +1936,7 @@ def _sssp_sql(n_iter: int = SSSP_MAX_ITER) -> str:
     for k in range(1, n_iter + 1):
         prev = f"d{k - 1}"
         iters.append(f"""
-d{k} AS (
+d{k} AS MATERIALIZED (
     SELECT p.node,
            CASE WHEN p.dist IS NULL THEN c.best
                 WHEN c.best IS NULL THEN p.dist
@@ -2400,23 +2400,22 @@ FROM lineitem
 def q_snapstore_pruned_dml_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The r14 metadata plane under a wall-clock + hash gate: a
     ~600-file range-clustered snapstore (ceil(n/600) rows per file via a
-    task-side combined write, r17) committed in O(1)-HEAD mode
-    (files_in_detail forced — the path list lives in the parquet detail
-    sidecar, the JSON head is constant-size), then the full lifecycle
-    the plane exists for:
+    task-side combined write, r17) — past ``ss.DETAIL_INLINE_MAX``, so
+    its per-file metadata lives in the parquet detail sidecar while the
+    JSON head keeps the path list — then the full lifecycle the plane
+    exists for:
 
-    - a DEFERRED multipart append (one O(new-files) part, the parent's
-      parts shared by name, the path list never materialized);
+    - a multipart append (one O(new-files) part, the parent's parts
+      shared by name);
     - a NARROW COW update whose discovery plans O(selectivity) files
       via the vectorized typed prune index;
     - a merge-on-read DV delete (zero metadata I/O — parts shared);
     - a PRUNED range read planning ~1% of the files from the sidecar.
 
     The DuckDB twin replays append/update/delete relationally, so a
-    lossy part chain, a wrong deferred count, a DV resurrection, or a
-    false prune drop all go hash-red; the bench row (q33) makes a
-    metadata-plane slowdown a tracked wall-clock regression instead of
-    a tool-only number."""
+    lossy part chain, a DV resurrection, or a false prune drop all go
+    hash-red; the bench row (q33) makes a metadata-plane slowdown a
+    tracked wall-clock regression instead of a tool-only number."""
     import math
     from wsspark import snapstore as ss
 
@@ -2424,44 +2423,40 @@ def q_snapstore_pruned_dml_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag"
     )
     with scratch_dir("snapbig-") as root:
-        # Scoped O(1)-head forcing: contextvar-local, so a concurrent
-        # snapstore commit elsewhere in this driver keeps the defaults
-        # (mutating the env var here would silently flip its metadata mode).
-        with ss.snap_metadata_thresholds(files_inline_max=0):
-            # Task-side combined write (r17, guide §6 small-files): the
-            # same ~600-file range-clustered layout, but written from
-            # defaultParallelism range partitions with a per-file row
-            # budget (ceil(n/600)) instead of one task+commit per file —
-            # each task's locally-sorted output splits into contiguous
-            # narrow-range files, so per-file min/max stats stay exactly
-            # as tight for the prune index while the sink stops paying
-            # 600 task launches/commits (measured 2.62 -> 1.30 s at
-            # sf0.1). Scale-adaptive by construction: file count tracks
-            # the designed 600-file plane at any sf, task count tracks
-            # the cluster.
-            n_rows = li.count()
-            ss.snap_commit(
-                li.repartitionByRange(
-                    spark.sparkContext.defaultParallelism, "l_orderkey"
-                ).sortWithinPartitions("l_orderkey"),
-                root,
-                stats_cols=["l_orderkey"],
-                write_options={
-                    "maxRecordsPerFile": str(max(1, math.ceil(n_rows / 600)))
-                },
-            )
-            dup = li.filter(F.col("l_orderkey") <= 16).withColumn(
-                "l_quantity", F.lit(5.0)
-            )
-            ss.snap_commit(
-                dup.repartition(1), root, stats_cols=["l_orderkey"]
-            )
-            ss.snap_update_where(
-                spark, root, "l_orderkey <= 32", {"l_quantity": "999.0"}
-            )
-            ss.snap_delete_dv(
-                spark, root, "l_orderkey > 32 AND l_orderkey <= 64"
-            )
+        # Task-side combined write (r17, guide §6 small-files): the
+        # same ~600-file range-clustered layout, but written from
+        # defaultParallelism range partitions with a per-file row
+        # budget (ceil(n/600)) instead of one task+commit per file —
+        # each task's locally-sorted output splits into contiguous
+        # narrow-range files, so per-file min/max stats stay exactly
+        # as tight for the prune index while the sink stops paying
+        # 600 task launches/commits (measured 2.62 -> 1.30 s at
+        # sf0.1). Scale-adaptive by construction: file count tracks
+        # the designed 600-file plane at any sf, task count tracks
+        # the cluster.
+        n_rows = li.count()
+        ss.snap_commit(
+            li.repartitionByRange(
+                spark.sparkContext.defaultParallelism, "l_orderkey"
+            ).sortWithinPartitions("l_orderkey"),
+            root,
+            stats_cols=["l_orderkey"],
+            write_options={
+                "maxRecordsPerFile": str(max(1, math.ceil(n_rows / 600)))
+            },
+        )
+        dup = li.filter(F.col("l_orderkey") <= 16).withColumn(
+            "l_quantity", F.lit(5.0)
+        )
+        ss.snap_commit(
+            dup.repartition(1), root, stats_cols=["l_orderkey"]
+        )
+        ss.snap_update_where(
+            spark, root, "l_orderkey <= 32", {"l_quantity": "999.0"}
+        )
+        ss.snap_delete_dv(
+            spark, root, "l_orderkey > 32 AND l_orderkey <= 64"
+        )
         out = (
             ss.snap_read_between(spark, root, "l_orderkey", 1, 6400)
             .groupBy("l_returnflag")

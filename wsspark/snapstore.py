@@ -67,7 +67,6 @@ publishing, in ~150 lines a reviewer can actually audit.
 from __future__ import annotations
 
 import contextlib
-import contextvars
 import json
 import re
 import os
@@ -186,7 +185,7 @@ def _read_manifest(root: str, version: int) -> dict:
 # it is GIGABYTES of hex inside the version JSON, parsed on the driver for
 # EVERY read. Delta solves this with parquet checkpoints, Iceberg with avro
 # manifest files; here, any commit whose file count exceeds
-# ``_detail_inline_max()`` splits the three per-file dicts out of the JSON
+# ``DETAIL_INLINE_MAX`` (512) splits the three per-file dicts out of the JSON
 # head into one PARQUET SIDECAR (``vNNN-<uuid>.detail.parquet``, one row
 # per data file) next to the manifest. The head keeps only O(1) metadata
 # plus the file LIST (paths — the minimum any reader needs) and a pointer.
@@ -216,8 +215,8 @@ def _read_manifest(root: str, version: int) -> dict:
 # reads). An append atop a sidecar-backed parent writes ONE new part
 # holding only the NEW files' rows and shares the parent's parts by
 # name — O(new files) metadata I/O per append regardless of table size
-# — until the chain exceeds ``_detail_parts_max()`` parts, when it
-# compacts into a single part (amortized O(files / parts_max) per
+# — until the chain exceeds ``DETAIL_PARTS_MAX`` (16) parts, when it
+# compacts into a single part (amortized O(files / DETAIL_PARTS_MAX) per
 # append, the same bound as Delta's every-N-commits checkpoint).
 # Parts are path-disjoint and their concatenation, in order, is the
 # manifest's detail table; readers align-concat lazily and cache.
@@ -226,7 +225,7 @@ def _read_manifest(root: str, version: int) -> dict:
 # EXACTLY (``detail_exact`` — set when a part is built with the
 # explicit file-list universe, and inductively preserved by appends/
 # rewrites whose parent had it), a manifest with more than
-# ``_files_inline_max()`` files drops the path list from the JSON head
+# ``FILES_INLINE_MAX`` (10k) files drops the path list from the JSON head
 # too (``files_in_detail`` + ``file_count``); ``files`` reconstructs
 # from the parts' path column (a column-projected read, never the
 # bloom bytes). The head is then O(schema + constraints + pointer) at
@@ -248,120 +247,12 @@ _DETAIL_HEAD_KEYS = (
 )
 
 
-_detail_inline_override: "contextvars.ContextVar[int | None]" = (
-    contextvars.ContextVar("wsspark_detail_inline_max", default=None)
-)
-_files_inline_override: "contextvars.ContextVar[int | None]" = (
-    contextvars.ContextVar("wsspark_files_inline_max", default=None)
-)
-
-
-@contextlib.contextmanager
-def snap_metadata_thresholds(
-    detail_inline_max: int | None = None,
-    files_inline_max: int | None = None,
-    detail_parts_max: int | None = None,
-):
-    """Scoped override of the metadata-plane thresholds for the commits
-    published inside the block — the supported way for a query or test
-    to force sidecar / O(1)-head mode, or to defer inline chain
-    compaction (``detail_parts_max=0``) to an explicit
-    ``snap_compact_details`` cadence. Context-local (contextvars), so a
-    CONCURRENT commit on another thread keeps the process defaults —
-    unlike mutating WSSPARK_SNAP_*_MAX env vars, which would silently
-    switch every in-flight committer's metadata mode.
-
-    STREAMING CAVEAT (r16, advisor finding): ``foreachBatch`` callbacks
-    run on py4j callback-server threads with a FRESH contextvars
-    Context, so wrapping ``writeStream...start()`` in this block does
-    NOT reach the sink — the defaults silently stay in effect and
-    inline folds still fire. Wrap the callback with
-    ``snap_context_sink`` (captures this block's Context at wrap time)
-    or set the ``WSSPARK_SNAP_*`` env vars for streaming jobs."""
-    tokens = []
-    if detail_inline_max is not None:
-        tokens.append(
-            (_detail_inline_override, _detail_inline_override.set(detail_inline_max))
-        )
-    if files_inline_max is not None:
-        tokens.append(
-            (_files_inline_override, _files_inline_override.set(files_inline_max))
-        )
-    if detail_parts_max is not None:
-        tokens.append(
-            (_parts_max_override, _parts_max_override.set(detail_parts_max))
-        )
-    try:
-        yield
-    finally:
-        for var, token in tokens:
-            var.reset(token)
-
-
-def snap_context_sink(fn):
-    """Make a ``foreachBatch`` callback observe the contextvars Context
-    active HERE (wrap time) — in particular any enclosing
-    ``snap_metadata_thresholds`` scope. Spark invokes foreachBatch
-    callbacks on py4j callback-server threads whose Context is fresh,
-    so without this wrapper a sink built inside
-    ``snap_metadata_thresholds(detail_parts_max=0)`` silently runs with
-    the process defaults and the inline fold spike comes back (r16,
-    advisor finding). Usage::
-
-        with snap_metadata_thresholds(detail_parts_max=0):
-            sink = snap_context_sink(my_batch_fn)
-        q = df.writeStream.foreachBatch(sink).start()
-
-    One wrapper per streaming query: a captured Context cannot be
-    entered concurrently, and foreachBatch batches of one query are
-    sequential by contract."""
-    import contextvars as _cv
-
-    ctx = _cv.copy_context()
-
-    def _run_in_ctx(batch_df, batch_id):
-        return ctx.run(fn, batch_df, batch_id)
-
-    return _run_in_ctx
-
-
-def _detail_inline_max() -> int:
-    """File-count threshold above which a commit's per-file metadata
-    moves to the parquet sidecar (env-overridable; tests pin it to 0 to
-    force sidecar mode on small tables)."""
-    o = _detail_inline_override.get()
-    if o is not None:
-        return o
-    return int(os.environ.get("WSSPARK_SNAP_DETAIL_INLINE_MAX", "512"))
-
-
-def _files_inline_max() -> int:
-    """File-count threshold above which the PATH LIST also leaves the
-    JSON head (``files_in_detail``) — requires ``detail_exact``. Above
-    this, head size and head-read time are O(1) in the file count."""
-    o = _files_inline_override.get()
-    if o is not None:
-        return o
-    return int(os.environ.get("WSSPARK_SNAP_FILES_INLINE_MAX", "10000"))
-
-
-_parts_max_override: "contextvars.ContextVar[int | None]" = (
-    contextvars.ContextVar("wsspark_detail_parts_max", default=None)
-)
-
-
-def _detail_parts_max() -> int:
-    """Sidecar part-chain length that triggers inline compaction into
-    one part. Higher = cheaper appends, slower first read of a cold
-    chain. A value <= 0 DISABLES the inline rung entirely — appends
-    never pay the fold spike and the chain grows until an explicit
-    ``snap_compact_details`` call (the maintenance-cadence pattern a
-    latency-sensitive streaming sink wants; see that function)."""
-    o = _parts_max_override.get()
-    raw = o if o is not None else int(
-        os.environ.get("WSSPARK_SNAP_DETAIL_PARTS_MAX", "16")
-    )
-    return raw if raw > 0 else (1 << 62)
+# Metadata-plane thresholds (see the block comment above). The commit
+# path reads them directly; tests patch them on this module to force the
+# sidecar / O(1)-head layouts on small tables.
+DETAIL_INLINE_MAX = 512  # files above which per-file metadata -> sidecar
+FILES_INLINE_MAX = 10_000  # files above which an exact chain drops the path list
+DETAIL_PARTS_MAX = 16  # chain length past which an append folds to one part
 
 
 def _pointer_names(head: dict) -> list[str]:
@@ -869,10 +760,10 @@ def _write_manifest_file(root: str, manifest: dict, pre_publish=None) -> None:
     Incremental appends (``_parent_detail_parts``) write ONE new part
     for the new files and share the parent's parts by name — O(new)
     metadata I/O — compacting the chain into a single part past
-    ``_detail_parts_max()``. Filtered/cross-root rewrites
+    ``DETAIL_PARTS_MAX``. Filtered/cross-root rewrites
     (``_parent_detail`` as an arrow table) write one fresh part. When
     the resulting chain is EXACT (its path rows reconstruct ``files``
-    in order) and the file count exceeds ``_files_inline_max()``, the
+    in order) and the file count exceeds ``FILES_INLINE_MAX``, the
     head drops the path list too (``files_in_detail``) — O(1) head.
 
     ``pre_publish`` (optional callable) runs IMMEDIATELY before the
@@ -954,7 +845,7 @@ def _write_manifest_file(root: str, manifest: dict, pre_publish=None) -> None:
         files = []
         manifest["files"] = files
     n_total = deferred_count if deferred else len(files)
-    split = n_total > _detail_inline_max()
+    split = n_total > DETAIL_INLINE_MAX
 
     def _materialize_files(names: list[str]) -> list[str]:
         fl = _load_part_path_lists([os.path.join(mdir, n) for n in names]) + (
@@ -1033,9 +924,9 @@ def _write_manifest_file(root: str, manifest: dict, pre_publish=None) -> None:
                 parent_parts,
             )
             parent_parts, deferred = None, False
-        if part_names and len(part_names) > _detail_parts_max():
+        if part_names and len(part_names) > DETAIL_PARTS_MAX:
             # compaction rung: fold the chain into ONE part (reads
-            # O(files) once per parts_max appends — Delta's
+            # O(files) once per DETAIL_PARTS_MAX appends — Delta's
             # every-N-commits checkpoint amortization). A parent
             # part vanishing DURING this read is the same
             # vacuum-race as the touch-verify case — typed so the
@@ -1110,7 +1001,7 @@ def _write_manifest_file(root: str, manifest: dict, pre_publish=None) -> None:
     if part_names:
         head = {k: v for k, v in manifest.items() if k not in _DETAIL_KEYS}
         head["detail_files"] = part_names
-        if exact and n_total > _files_inline_max():
+        if exact and n_total > FILES_INLINE_MAX:
             head["detail_exact"] = True
             head.pop("files", None)
             head["files_in_detail"] = True
@@ -2289,12 +2180,12 @@ def _restamp_rootless_dv(
     recorded. ``_dv_read`` interprets a null origin as 'written under
     the head's recorded root' — sound only while the recorded root is
     the root those rows were actually created under. The first commit
-    after a store move (append / dv-delete / restore / explicit
-    sidecar fold) re-records the NEW root while carrying the old
-    sidecars by name: null-origin rows would then read as
-    origin==actual, the rebase map comes back empty, the raw anti-join
-    matches nothing, and the deleted rows silently RESURRECT while
-    ``snap_count`` still subtracts them (r16, advisor finding). Same
+    after a store move (append / dv-delete / restore / inline sidecar
+    fold) re-records the NEW root while carrying the old sidecars by
+    name: null-origin rows would then read as origin==actual, the
+    rebase map comes back empty, the raw anti-join matches nothing, and
+    the deleted rows silently RESURRECT while ``snap_count`` still
+    subtracts them (r16, advisor finding). Same
     exposure for ``snap_clone``, whose head records the clone root.
 
     Any carried sidecar holding null-origin rows is rewritten (they are
@@ -3526,85 +3417,6 @@ def snap_sink(root: str, stats_cols: list[str] | None = None):
         )
 
     return _apply
-
-
-def snap_compact_details(root: str) -> int | None:
-    """Fold the CURRENT version's detail-sidecar part chain into ONE
-    part and publish it as a metadata-only, content-preserving commit —
-    the EXPLICIT sibling of the every-``parts_max``-appends inline fold.
-
-    Why it exists: the inline rung lands its O(files/parts_max)
-    amortized spike synchronously on whichever append draws it (6.9 s
-    at 1M files) — a periodic latency cliff for a streaming
-    foreachBatch sink. Disable the inline rung and run this call on the
-    maintenance cadence instead, exactly as ``snap_compact`` /
-    ``snap_optimize`` handle small DATA files. For a streaming sink,
-    disable it with ``WSSPARK_SNAP_DETAIL_PARTS_MAX=0`` or by wrapping
-    the callback in ``snap_context_sink`` INSIDE a
-    ``snap_metadata_thresholds(detail_parts_max=0)`` block — a bare
-    thresholds block around ``start()`` does NOT reach the foreachBatch
-    thread (fresh contextvars Context; see ``snap_metadata_thresholds``). Zero data I/O — only
-    sidecar bytes move; reads before/after are bit-identical (the
-    merged part is the chain's align-concat, the same table readers
-    reconstruct). Returns the published version, or None when the
-    current chain is already a single part or inline.
-
-    Concurrency: the O_EXCL publish makes this a plain optimistic
-    commit — a racing append wins or loses the version like any other
-    committer, and the loser's part file is removed."""
-    import pyarrow.parquet as pq
-
-    v = snap_current_version(root)
-    if v is None:
-        return None
-    m = _read_manifest(root, v)
-    head = m.head_copy() if isinstance(m, _LazyManifest) else dict(m)
-    parts = _pointer_names(head)
-    if len(parts) <= 1:
-        return None
-    mdir = _manifest_dir(root)
-    merged = _load_detail_parts([os.path.join(mdir, n) for n in parts])
-    name = f"v{v + 1:012d}-{uuid.uuid4().hex[:8]}.detail.parquet"
-    pq.write_table(
-        _stamp_part_root(merged, root), os.path.join(mdir, name)
-    )
-    while len(_detail_cache) >= _DETAIL_CACHE_MAX:
-        _detail_cache.pop(next(iter(_detail_cache)))
-    _detail_cache[os.path.join(mdir, name)] = merged
-    manifest = dict(head)
-    manifest.pop("detail_file", None)
-    if manifest.get("dv_files"):
-        # metadata-only fold after a move still re-records the root
-        manifest["dv_files"] = _restamp_rootless_dv(
-            root, m, manifest["dv_files"], v + 1
-        )
-    manifest.update(
-        {
-            "version": v + 1,
-            "parent": v,
-            "mode": "append",
-            "tag": None,
-            # same rows, same files: feeds cross this commit as
-            # zero-change instead of refusing
-            "cdf_files": [],
-            "content_preserving": True,
-            "detail_files": [name],
-            "ts": time.time(),
-        }
-    )
-    try:
-        # pointer-only manifest (no detail dicts): _write_manifest_file
-        # publishes the pointer as-is after touch-verifying it
-        _write_manifest_file(root, manifest)
-    except (FileExistsError, SnapshotConflict):
-        with contextlib.suppress(OSError):
-            os.remove(os.path.join(mdir, name))
-        raise SnapshotConflict(
-            f"version {v + 1} already committed — reload and retry "
-            "snap_compact_details"
-        ) from None
-    _advance_current(root, v + 1)
-    return v + 1
 
 
 def snap_compact(
