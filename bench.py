@@ -410,23 +410,7 @@ def main() -> None:
     if not only and sf1_labels and os.path.isdir(sf1_dir):
         dispersion.clear()
         only.update(sf1_labels)
-        # r17: q32's MV result is itself ~O(table) rows on this synthetic
-        # keyspace, so the 10x decade legitimately exceeds the default
-        # 1M-row pin ceiling. Raise the cap FOR THE DECADE SUITE ONLY
-        # (documented in OPTIMIZATION_r17.md): the pin keeps rows in the
-        # executors' block store, never the driver, and the primary-sf
-        # rows above ran under the unchanged default.
-        _prev_cap = os.environ.get("WSSPARK_SNAPSTORE_RESULT_CAP")
-        os.environ["WSSPARK_SNAPSTORE_RESULT_CAP"] = os.environ.get(
-            "SPARK_GRAFT_SF1_RESULT_CAP", "20000000"
-        )
-        try:
-            sf1_timings = run_suite(sf1_dir)
-        finally:
-            if _prev_cap is None:
-                os.environ.pop("WSSPARK_SNAPSTORE_RESULT_CAP", None)
-            else:
-                os.environ["WSSPARK_SNAPSTORE_RESULT_CAP"] = _prev_cap
+        sf1_timings = run_suite(sf1_dir)
         only.clear()
         if sf1_timings:
             scales["1"] = {

@@ -370,12 +370,10 @@ def test_no_checkpoint_in_a_loop_outside_exec():
 # Library behaviour is set by arguments and module constants, not by the
 # process environment or a contextvar that a thread may not inherit.
 # Allowed: ``session.py`` reads deployment settings (cores, driver
-# memory, UI); ``narrative.py`` reads an API credential; q32's result
-# cap is still an env read.
+# memory, UI); ``narrative.py`` reads an API credential.
 _ENV_ALLOWED = {
     "session.py": "",
     "report/narrative.py": "OPENAI_API_KEY",
-    "queries/llm.py": "WSSPARK_SNAPSTORE_RESULT_CAP",
 }
 
 

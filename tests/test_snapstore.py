@@ -2581,14 +2581,14 @@ def test_dml_discovery_prunes_in_lists_and_temporal_eq(spark, tmp_path):
     # (the algebra snap_read_where_in plans reads with)
     expected = set()
     for v in (5, 41, 77):
-        expected.update(ss._prune_files_eq_m(m, "id", v))
+        expected.update(ss._plan_files(m, [("id", [v])]))
     cand = ss._dml_candidate_files(m, "id IN (5, 41, 77)")
     assert set(cand) == expected
     assert 0 < len(cand) < len(full)  # blooms actually pruned
     # composes with other atoms by intersection
     both = ss._dml_candidate_files(m, "id IN (5, 41, 77) AND id <= 50")
     assert set(both) == expected & set(
-        ss._prune_files_halfrange_m(m, "id", None, 50)
+        ss._plan_files(m, [("id", None, 50)])
     )
     # quoted literals with commas stay one value; sloppy types skip atom
     assert set(ss._dml_candidate_files(m, "id IN ('a,b', 'c')")) == full
@@ -2613,14 +2613,14 @@ def test_dml_discovery_prunes_in_lists_and_temporal_eq(spark, tmp_path):
     cand_eq = ss._dml_candidate_files(m2, f"ts = '{probe}'")
     iso = "2024-01-03T12:00:00"
     assert set(cand_eq) == set(
-        ss._prune_files_between_m(m2, "ts", iso, iso)
+        ss._plan_files(m2, [("ts", iso, iso)])
     )
     assert 0 < len(cand_eq) < len(m2["files"])
     # temporal IN unions the two probes' windows
     cand_in = ss._dml_candidate_files(
         m2, "ts IN ('2024-01-03 12:00:00', '2024-01-09 00:00:00')"
     )
-    assert set(ss._prune_files_between_m(m2, "ts", iso, iso)) <= set(cand_in)
+    assert set(ss._plan_files(m2, [("ts", iso, iso)])) <= set(cand_in)
     assert 0 < len(cand_in) < len(m2["files"])
     # tz-suffixed literal cannot prune (atom skipped, not wrong)
     assert set(

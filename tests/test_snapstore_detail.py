@@ -8,8 +8,8 @@ threshold 0 and pin:
 
 - exact round-trip: reconstructed dicts are bit-identical with inline
   mode (stats ride as their original JSON text, blooms re-hex exactly);
-- pruning parity: the vectorized arrow path and the distributed Spark
-  path keep EXACTLY the files the dict path keeps (and never fewer —
+- pruning parity: the planner keeps EXACTLY the same files on the
+  vectorized arrow path as on the dict path (and never fewer —
   widening may only keep more, and only for >2^53 integers);
 - every lifecycle op (append, merge, update, DV delete, constraint
   commits, restore, clone, vacuum, CDF) behaves identically on a
@@ -101,6 +101,21 @@ def test_roundtrip_bit_identical_with_inline(spark, tmp_path, monkeypatch):
 
 
 def test_prune_parity_range_eq_and_spark(spark, detail_mode, tmp_path, monkeypatch):
+    """The planner keeps EXACTLY the same files on the sidecar's typed
+    index as on the exact dicts (the inline representation), for closed
+    and half-open ranges, equality, IN lists, conjunctions, and the
+    DataSource's pushed filters (strict bounds widen to inclusive on
+    both)."""
+    from pyspark.sql.datasource import (
+        EqualTo,
+        GreaterThan,
+        GreaterThanOrEqual,
+        In,
+        LessThan,
+    )
+
+    from wsspark.snapsource import SnapstoreBatchReader
+
     root = str(tmp_path / "t")
     df = (
         spark.range(0, 4000)
@@ -109,26 +124,66 @@ def test_prune_parity_range_eq_and_spark(spark, detail_mode, tmp_path, monkeypat
     )
     ss.snap_commit(df, root, stats_cols=["id"], bloom_cols=["k"])
 
-    # dict-path ground truth: force inline semantics by reconstructing
-    m = ss._read_manifest(root, 0)
-    m._ensure()  # loaded -> prune uses the dict loop
-    dict_range = ss._prune_files_between_m(m, "id", 100, 400)
-    dict_eq = ss._prune_files_eq_m(m, "k", 42)
+    def inline():
+        # dict-path ground truth: a loaded manifest prunes on the dicts
+        m = ss._read_manifest(root, 0)
+        m._ensure()
+        return m
 
-    m2 = ss._read_manifest(root, 0)  # fresh lazy -> vectorized path
-    assert ss._prune_files_between_m(m2, "id", 100, 400) == dict_range
-    m3 = ss._read_manifest(root, 0)
-    assert ss._prune_files_eq_m(m3, "k", 42) == dict_eq
-    assert len(dict_range) < len(m["files"])  # pruning actually happened
+    def sidecar():
+        m = ss._read_manifest(root, 0)  # fresh lazy -> vectorized path
+        assert ss._detail_table_for_prune(m) is not None
+        return m
 
-    kept_spark, total = ss.snap_prune_files_spark(spark, root, "id", 100, 400)
-    assert kept_spark == dict_range and total == len(m["files"])
+    n_files = len(inline()["files"])
+    cases = {
+        "range": [("id", 100, 400)],
+        "ge": [("id", 3500, None)],
+        "le": [("id", None, 600)],
+        "eq": [("k", [42])],
+        "in": [("k", [42, 7, 96])],
+        "empty_in": [("k", [])],
+        "range_and_in": [("id", 100, 2000), ("k", [42, 7])],
+        "none": [],
+    }
+    for name, atoms in cases.items():
+        kept = ss._plan_files(inline(), atoms)
+        assert ss._plan_files(sidecar(), atoms) == kept, name
+    assert 0 < len(ss._plan_files(inline(), cases["range"])) < n_files
+    assert 0 < len(ss._plan_files(inline(), cases["ge"])) < n_files
+    assert ss._plan_files(inline(), cases["empty_in"]) == []
+    assert ss._plan_files(inline(), []) == inline()["files"]
+    # IN is the union of its values' equality plans
+    union = set()
+    for v in (42, 7, 96):
+        union |= set(ss._plan_files(inline(), [("k", [v])]))
+    assert set(ss._plan_files(inline(), cases["in"])) == union
 
-    # half-open ranges
-    m4 = ss._read_manifest(root, 0)
-    vec_half = ss._prune_files_halfrange_m(m4, "id", 3500, None)
-    assert vec_half == ss._prune_files_halfrange_m(m, "id", 3500, None)
-    assert 0 < len(vec_half) < len(m["files"])
+    def pushed(m, filters):
+        reader = SnapstoreBatchReader(root, None)
+        reader._manifest = m
+        reader.pushFilters(filters)
+        return [p.file for p in reader.partitions()]
+
+    for filters in (
+        [GreaterThanOrEqual(("id",), 1500), LessThan(("id",), 1700)],
+        [GreaterThan(("id",), 3500)],
+        [EqualTo(("id",), 1234)],
+        [In(("k",), (42, 7)), LessThan(("id",), 2000)],
+        [In(("id",), (3, 1543))],
+    ):
+        kept = pushed(inline(), filters)
+        assert pushed(sidecar(), filters) == kept, filters
+        assert 0 < len(kept) < n_files, filters
+    assert pushed(inline(), [EqualTo(("k",), 42)]) == pushed(
+        sidecar(), [EqualTo(("k",), 42)]
+    )
+    # a strict bound keeps the file whose recorded bound equals it
+    first = inline()["files"][0]
+    lo0, hi0 = inline()["file_stats"][first]["id"]
+    for m in (inline(), sidecar()):
+        assert first in pushed(m, [LessThan(("id",), lo0)])
+        assert first in pushed(m, [GreaterThan(("id",), hi0)])
 
     # results stay exact through the pruned read
     got = sorted(
@@ -149,9 +204,9 @@ def test_widening_keeps_superset_on_huge_ints(spark, detail_mode, tmp_path):
     ss.snap_commit(df, root, stats_cols=["id"])
     m = ss._read_manifest(root, 0)
     m._ensure()
-    exact = set(ss._prune_files_between_m(m, "id", base + 100, base + 200))
+    exact = set(ss._plan_files(m, [("id", base + 100, base + 200)]))
     lazy = ss._read_manifest(root, 0)
-    vec = set(ss._prune_files_between_m(lazy, "id", base + 100, base + 200))
+    vec = set(ss._plan_files(lazy, [("id", base + 100, base + 200)]))
     assert vec >= exact  # widening may only KEEP more
     got = sorted(
         r["id"]
@@ -174,9 +229,9 @@ def test_temporal_and_string_stats_prune_vectorized(spark, detail_mode, tmp_path
     lo, hi = dt.datetime(2024, 1, 3), dt.datetime(2024, 1, 5)
     m = ss._read_manifest(root, 0)
     m._ensure()
-    exact = ss._prune_files_between_m(m, "ts", lo, hi)
+    exact = ss._plan_files(m, [("ts", lo, hi)])
     lazy = ss._read_manifest(root, 0)
-    assert ss._prune_files_between_m(lazy, "ts", lo, hi) == exact
+    assert ss._plan_files(lazy, [("ts", lo, hi)]) == exact
     assert 0 < len(exact) < len(m["files"])
     got = ss.snap_read_between(spark, root, "ts", lo, hi).count()
     assert got == sum(1 for _, t in rows if lo <= t <= hi)
@@ -528,8 +583,8 @@ def test_vectorized_prune_superset_of_dict_prune(tmp_path_factory, data):
     loaded = ss._read_manifest(root, 0)
     loaded._ensure()
 
-    vec = set(ss._prune_files_between_m(lazy, "x", lo, hi))
-    exact = set(ss._prune_files_between_m(loaded, "x", lo, hi))
+    vec = set(ss._plan_files(lazy, [("x", lo, hi)]))
+    exact = set(ss._plan_files(loaded, [("x", lo, hi)]))
     assert vec >= exact  # soundness: widening may only KEEP more
     # no widening possible -> exactly equal (floats round-trip; ints
     # inside float53 are exact)
@@ -546,15 +601,24 @@ def test_vectorized_prune_superset_of_dict_prune(tmp_path_factory, data):
         assert vec == exact
 
     # half-open ranges
-    vec_h = set(ss._prune_files_halfrange_m(lazy, "x", lo, None))
-    exact_h = set(ss._prune_files_halfrange_m(loaded, "x", lo, None))
+    vec_h = set(ss._plan_files(lazy, [("x", lo, None)]))
+    exact_h = set(ss._plan_files(loaded, [("x", lo, None)]))
     assert vec_h >= exact_h
 
     # bloom equality: bit-exact, so ALWAYS equal
     probe = data.draw(st.integers(0, 60), label="eq_probe")
-    vec_eq = set(ss._prune_files_eq_m(lazy, "k", probe))
-    exact_eq = set(ss._prune_files_eq_m(loaded, "k", probe))
+    vec_eq = set(ss._plan_files(lazy, [("k", [probe])]))
+    exact_eq = set(ss._plan_files(loaded, [("k", [probe])]))
     assert vec_eq == exact_eq
+    # IN = union of its values' equality plans; atoms intersect
+    probe2 = data.draw(st.integers(0, 60), label="eq_probe2")
+    exact_eq2 = set(ss._plan_files(loaded, [("k", [probe2])]))
+    assert set(ss._plan_files(loaded, [("k", [probe, probe2])])) == (
+        exact_eq | exact_eq2
+    )
+    assert set(ss._plan_files(loaded, [("x", lo, hi), ("k", [probe])])) == (
+        exact & exact_eq
+    )
     # and a file whose bloom lacks the probe's bits is really dropped
     # only when it provably cannot contain it (no false drops by
     # construction): every file whose value list contains probe is kept
@@ -611,11 +675,11 @@ def test_append_new_stats_col_unions_typed_index(spark, detail_mode, tmp_path):
     v = ss.snap_commit(df2, root, stats_cols=["id", "v"])
     m = ss._read_manifest(root, v)
     # id prunes across BOTH halves
-    kept_id = ss._prune_files_between_m(m, "id", 100, 120)
+    kept_id = ss._plan_files(m, [("id", 100, 120)])
     assert 0 < len(kept_id) < len(m["files"])
     # v prunes only the new half; every parent file is kept (null index)
     m2 = ss._read_manifest(root, v)
-    kept_v = ss._prune_files_between_m(m2, "v", 700, 720)
+    kept_v = ss._plan_files(m2, [("v", 700, 720)])
     parent_files = set(ss._read_manifest(root, 0)["files"])
     assert parent_files <= set(kept_v)
     assert len(kept_v) < len(m["files"])  # some new files dropped
@@ -974,7 +1038,7 @@ def test_append_writes_incremental_part_chain(spark, detail_mode, tmp_path):
     assert ss.snap_count(root) == 500
     assert set(m["file_stats"]) == set(m["files"]) and len(m["files"]) == 5
     # pruning still exact across the chain
-    kept = ss._prune_files_between_m(ss._read_manifest(root, 1), "id", 350, 360)
+    kept = ss._plan_files(ss._read_manifest(root, 1), [("id", 350, 360)])
     assert 0 < len(kept) < 5
     got = ss.snap_read_between(spark, root, "id", 350, 360).count()
     assert got == 11

@@ -9,8 +9,7 @@ stats column and one small Bloom column, then times what a READER pays:
 - range prune (``snap_prune_files`` — vectorized over the sidecar's
   typed index vs the inline dict loop);
 - equality prune (``snap_prune_files_eq`` — bloom word probes);
-- full detail reconstruction (the commit-time merge path);
-- the distributed ``snap_prune_files_spark`` variant (50k+ files).
+- full detail reconstruction (the commit-time merge path).
 
 Usage: python tools/measure_manifest.py [N ...]   (default 5000 20000 50000)
 
@@ -200,7 +199,7 @@ def run_o1(n_files: int) -> None:
             shutil.rmtree(root, ignore_errors=True)
 
 
-def run(n_files: int, spark=None) -> None:
+def run(n_files: int) -> None:
     # pin the r13 shape (path list inline in the head) so the three
     # modes compare cleanly: inline JSON / sidecar+inline files (r13) /
     # O(1) multipart head (r14, run_o1)
@@ -274,17 +273,6 @@ def run(n_files: int, spark=None) -> None:
                     ss._detail_cache.clear()
                     t_detail, _ = _t(lambda: ss._read_manifest(root, 0)["file_stats"])
                     row["detail_reconstruct_s"] = round(t_detail, 4)
-                    if spark is not None:
-                        t_spark, (kept_sp, _) = _t(
-                            ss.snap_prune_files_spark,
-                            spark,
-                            root,
-                            "id",
-                            hi_id // 2,
-                            hi_id // 2 + hi_id // 100,
-                        )
-                        assert kept_sp == kept, "spark/vectorized prune parity"
-                        row["prune_range_spark_s"] = round(t_spark, 4)
                     head_bytes = os.path.getsize(ss._manifest_path(root, 0))
                     row["head_bytes"] = head_bytes
                 else:
@@ -423,7 +411,7 @@ def main() -> None:
             app_name="measure-manifest", master="local[8]", shuffle_partitions=8
         )
     for n in sizes:
-        run(n, spark)
+        run(n)
         run_o1(n)
         run_relocate(n)
         if spark is not None:

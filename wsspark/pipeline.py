@@ -226,61 +226,3 @@ def run_pipeline(
         return written
     finally:
         reports.release()
-
-
-def main(argv: list[str] | None = None) -> int:
-    """CLI twin of the reference's ``python main.py --load_type {full|incremental}``
-    (etl/main.py:117-134), plus report generation when requested."""
-    import argparse
-
-    parser = argparse.ArgumentParser(prog="wsspark.pipeline")
-    parser.add_argument("--sf-dir", default="/root/testdata/sf0.001")
-    parser.add_argument("--output-dir", required=True)
-    parser.add_argument(
-        "--load_type", choices=("full", "incremental"), default="full"
-    )
-    parser.add_argument("--since", default=None, help="incremental watermark")
-    parser.add_argument("--format", choices=("parquet", "csv"), default="parquet")
-    parser.add_argument(
-        "--html-report", action="store_true", help="also render the HTML report"
-    )
-    args = parser.parse_args(argv)
-
-    from wsspark.session import get_session
-
-    spark = get_session(app_name="wsspark-pipeline")
-    written = run_pipeline(
-        spark,
-        args.sf_dir,
-        args.output_dir,
-        load_type=args.load_type,
-        incremental_since=args.since,
-        fmt=args.format,
-    )
-    if not written:
-        print("no new movements since watermark; nothing to do")
-        return 0
-    print(f"wrote {len(written)} reports to {args.output_dir}")
-
-    if args.html_report:
-        import datetime as _dt
-
-        from wsspark.report import generate_report
-
-        reports = build_reports(
-            spark,
-            args.sf_dir,
-            incremental_since=args.since if args.load_type == "incremental" else None,
-        )
-        try:
-            arts = generate_report(
-                reports, args.output_dir, _dt.datetime.now(_dt.timezone.utc).isoformat()
-            )
-            print(f"report: {arts['html']}")
-        finally:
-            reports.release()
-    return 0
-
-
-if __name__ == "__main__":
-    raise SystemExit(main())

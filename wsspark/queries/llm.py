@@ -2068,17 +2068,9 @@ LOOKUP_ORDERKEYS = (1, 3, 100)
 # materialize the result to the driver before deleting it. That is safe
 # only while the result stays oracle-gate-sized — cap it so an sf bump
 # can never silently turn the pattern into a fact-sized driver collect.
-# WSSPARK_SNAPSTORE_RESULT_CAP overrides (r17): since the pin keeps rows
-# in the executors' block store (never the driver), a scale-extension
-# bench (the sf1 decade) may legitimately raise the ceiling for a
-# measured run; the default stays the oracle-gate bound.
+# A query whose result provably scales with its input (q_mv_refresh_cdf)
+# passes its own bound instead.
 SNAPSTORE_RESULT_CAP = 1_000_000
-
-
-def _result_cap() -> int:
-    return int(
-        os.environ.get("WSSPARK_SNAPSTORE_RESULT_CAP", SNAPSTORE_RESULT_CAP)
-    )
 
 
 def _pin_cap_guard(out, cap: int):
@@ -2115,7 +2107,7 @@ def _pin_result(out, cap: int | None = None):
     stated: localCheckpoint blocks die with their executor — acceptable
     for these oracle-gate-sized results (the failure mode is a recompute
     error, never a wrong answer)."""
-    cap = _result_cap() if cap is None else cap
+    cap = SNAPSTORE_RESULT_CAP if cap is None else cap
     pinned = _pin_cap_guard(out, cap).localCheckpoint(eager=True)
     if pinned.count() > cap:
         raise ValueError(
@@ -3170,7 +3162,11 @@ def q_mv_refresh_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ss.snap_delete_where(spark, fact_root, "reference_id % 7 = 3")
         ivm.snapstore_mv_refresh_cdf(spark, fact_root, mv_root)
         out = ss.snap_read(spark, mv_root)
-        return _pin_result(out)
+        # an MV with no 0-count groups has at most one row per live fact
+        # row, so the fact's metadata-only count bounds it at any scale
+        return _pin_result(
+            out, cap=max(SNAPSTORE_RESULT_CAP, ss.snap_count(fact_root))
+        )
 
 
 from wsspark.adapters import MOVEMENTS_SQL as _MOVEMENTS_SQL  # noqa: E402

@@ -193,97 +193,24 @@ def _read_file_as_batches(
         yield pa.RecordBatch.from_arrays(columns, schema=target)
 
 
-def _prune(manifest: dict, files: list[str], filters: list) -> list[str]:
-    """Driver-side file pruning from pushed filters: min/max stats for
-    range + equality predicates, Bloom bitmaps for equality/IN. Unknown
-    filter shapes and stat-less files prune nothing (superset contract:
-    Spark re-applies every filter exactly)."""
-    dt = ss._detail_table_for_prune(manifest)
-    if dt is not None:
-        # detail-backed manifest: prune VECTORIZED over the sidecar's
-        # typed index instead of reconstructing O(files) dicts. Strict
-        # bounds widen to inclusive (keeps at most the boundary files —
-        # superset, and Spark's re-applied filter is the semantics).
-        dropped: set[str] = set()
-        for flt in filters:
-            col = ".".join(flt.attribute) if hasattr(flt, "attribute") else None
-            if col is None:
-                continue
-            if isinstance(flt, (EqualTo, EqualNullSafe)):
-                if flt.value is not None:
-                    dropped |= ss._detail_dropped_eq(manifest, dt, col, flt.value)
-            elif isinstance(flt, In):
-                per_value = [
-                    ss._detail_dropped_eq(manifest, dt, col, v)
-                    for v in flt.value
-                    if v is not None
-                ]
-                if per_value and len(per_value) == len(flt.value):
-                    # dropped only if provably absent for EVERY value
-                    dropped |= set.intersection(*per_value)
-            elif isinstance(flt, (GreaterThan, GreaterThanOrEqual)):
-                d = ss._detail_dropped_range(
-                    dt, col, ss._json_stat(flt.value, direction=-1), None
-                )
-                dropped |= d or set()
-            elif isinstance(flt, (LessThan, LessThanOrEqual)):
-                d = ss._detail_dropped_range(
-                    dt, col, None, ss._json_stat(flt.value, direction=1)
-                )
-                dropped |= d or set()
-        return [f for f in files if f not in dropped]
-    stats = manifest.get("file_stats", {})
-    blooms = manifest.get("file_blooms", {})
-    bloom_meta = manifest.get("bloom_meta", {})
-
-    def admits_range(f: str, col: str, lo=None, hi=None, strict_lo=False, strict_hi=False) -> bool:
-        mm = stats.get(f, {}).get(col)
-        if mm is None or mm[0] is None or mm[1] is None:
-            return True
-        try:
-            if lo is not None and (mm[1] < lo or (strict_lo and mm[1] <= lo)):
-                return False
-            if hi is not None and (mm[0] > hi or (strict_hi and mm[0] >= hi)):
-                return False
-        except TypeError:
-            return True  # incomparable probe vs recorded stats: keep
-        return True
-
-    def admits_eq(f: str, col: str, value) -> bool:
-        if value is None:
-            return True
-        # canonicalize to the build-time string form; a probe with no
-        # sound canonical form (type-sloppy value) prunes nothing
-        canon = ss._canonical_eq_value(manifest["schema"], col, value)
-        v = ss._json_stat(canon if canon is not None else value)
-        if not admits_range(f, col, lo=v, hi=v):
-            return False
-        hx = blooms.get(f, {}).get(col)
-        meta = bloom_meta.get(col)
-        if hx and meta and canon is not None:
-            for p in ss._bloom_positions_py(canon, meta["n_bits"], meta["k"]):
-                word = int(hx[16 * (p // 63) : 16 * (p // 63) + 16], 16)
-                if not word & (1 << (p % 63)):
-                    return False
-        return True
-
-    def admits(f: str, flt) -> bool:
+def _prune(manifest: dict, filters: list) -> list[str]:
+    """Driver-side file pruning from pushed filters, through the
+    snapstore planner: equality/IN become IN atoms (min/max + Bloom),
+    comparisons become half-open ranges with strict bounds widened to
+    inclusive. Unknown filter shapes and stat-less files prune nothing
+    (superset contract: Spark re-applies every filter exactly)."""
+    atoms = []
+    for flt in filters:
         col = ".".join(flt.attribute) if hasattr(flt, "attribute") else None
         if isinstance(flt, (EqualTo, EqualNullSafe)):
-            return admits_eq(f, col, flt.value)
-        if isinstance(flt, In):
-            return any(admits_eq(f, col, v) for v in flt.value)
-        if isinstance(flt, GreaterThan):
-            return admits_range(f, col, lo=ss._json_stat(flt.value), strict_lo=True)
-        if isinstance(flt, GreaterThanOrEqual):
-            return admits_range(f, col, lo=ss._json_stat(flt.value))
-        if isinstance(flt, LessThan):
-            return admits_range(f, col, hi=ss._json_stat(flt.value), strict_hi=True)
-        if isinstance(flt, LessThanOrEqual):
-            return admits_range(f, col, hi=ss._json_stat(flt.value))
-        return True  # unknown shape -> prune nothing
-
-    return [f for f in files if all(admits(f, flt) for flt in filters)]
+            atoms.append((col, [flt.value]))
+        elif isinstance(flt, In):
+            atoms.append((col, list(flt.value)))
+        elif isinstance(flt, (GreaterThan, GreaterThanOrEqual)):
+            atoms.append((col, flt.value, None))
+        elif isinstance(flt, (LessThan, LessThanOrEqual)):
+            atoms.append((col, None, flt.value))
+    return ss._plan_files(manifest, atoms)
 
 
 class SnapstoreBatchReader(DataSourceReader):
@@ -299,7 +226,7 @@ class SnapstoreBatchReader(DataSourceReader):
         return filters  # all unhandled: skipping is a superset, Spark re-filters
 
     def partitions(self) -> Sequence[InputPartition]:
-        files = _prune(self._manifest, self._manifest["files"], self._filters)
+        files = _prune(self._manifest, self._filters)
         dv_map = _load_dv_map(self._manifest)
         return [
             SnapFilePartition(f, self._manifest["schema"], dv_map.get(f))

@@ -196,11 +196,10 @@ def _read_manifest(root: str, version: int) -> dict:
 # stats ride as their original JSON text, blooms as 63-bit words re-hexed
 # with the same fixed width). Pruning never needs that reconstruction: the
 # sidecar also carries a TYPED prune index (per-column min/max as widened
-# float64 or string, bloom words as list<int64>), so ``snap_prune_files`` /
-# ``snap_read_where_eq`` / DML discovery run VECTORIZED over the arrow
-# table (C-speed, no per-file Python dict work), and
-# ``snap_prune_files_spark`` runs the same filter as a distributed Spark
-# job when the manifest outgrows the driver.
+# float64 or string, bloom words as list<int64>), so ``_plan_files`` —
+# the one planner behind every skipping read, DML discovery and the
+# DataSource's pushed filters — runs VECTORIZED over the arrow table
+# (C-speed, no per-file Python dict work).
 #
 # Soundness of the typed index: numeric mins are widened DOWN and maxes UP
 # (``_widen_float``) when an exact int exceeds float64, so the stored
@@ -1882,6 +1881,20 @@ def snap_commit(
         )
 
 
+def _with_retry(attempt_fn, max_retries: int):
+    """The OCC loop: rerun ``attempt_fn`` on a lost commit race
+    (``SnapshotConflict`` / ``StagedCommitVacuumed``) up to
+    ``max_retries`` times, then let the last conflict raise."""
+    attempt = 0
+    while True:
+        try:
+            return attempt_fn()
+        except (SnapshotConflict, StagedCommitVacuumed):
+            attempt += 1
+            if attempt > max_retries:
+                raise
+
+
 def snap_commit_with_retry(
     df: DataFrame,
     root: str,
@@ -1897,14 +1910,9 @@ def snap_commit_with_retry(
     which case the retry raises the honest ValueError instead of
     spinning). The data is re-written per attempt: commit dirs are
     immutable and the loser's files were already cleaned up."""
-    attempt = 0
-    while True:
-        try:
-            return snap_commit(df, root, mode=mode, **kwargs)
-        except (SnapshotConflict, StagedCommitVacuumed):
-            attempt += 1
-            if attempt > max_retries:
-                raise
+    return _with_retry(
+        lambda: snap_commit(df, root, mode=mode, **kwargs), max_retries
+    )
 
 
 def snap_history(root: str) -> list[dict]:
@@ -2744,6 +2752,88 @@ def _detail_table_for_prune(m: dict):
     return None
 
 
+def _dict_dropped_range(m: dict, col: str, lo, hi) -> set[str]:
+    """Paths the exact stats dicts prove outside the (possibly half-open)
+    range [lo, hi]. Unknown or NULL stats, and a probe that cannot be
+    compared with them, keep the file."""
+    stats = m.get("file_stats", {})
+    dropped = set()
+    for f in m["files"]:
+        mm = stats.get(f, {}).get(col)
+        if mm is None or mm[0] is None or mm[1] is None:
+            continue
+        try:
+            if (hi is not None and mm[0] > hi) or (lo is not None and mm[1] < lo):
+                dropped.add(f)
+        except TypeError:
+            pass  # stats/probe type mismatch: must read
+    return dropped
+
+
+def _dict_dropped_eq(m: dict, col: str, value) -> set[str]:
+    """Equality-probe exclusions from the exact dicts: the min/max window
+    plus the Bloom bits (``_bloom_positions_py``, bit-exact with the
+    build). The probe is canonicalized to the build-time form first; a
+    value with no sound canonical form tests min/max only."""
+    canon = _canonical_eq_value(m["schema"], col, value)
+    probe = canon if canon is not None else value
+    # Decimal probes widen to a [v_lo, v_hi] float window so the min/max
+    # test can never falsely drop; identical values otherwise.
+    dropped = _dict_dropped_range(
+        m, col, _json_stat(probe, direction=-1), _json_stat(probe, direction=1)
+    )
+    meta = m.get("bloom_meta", {}).get(col)
+    if not meta or canon is None:
+        return dropped
+    blooms = m.get("file_blooms", {})
+    positions = _bloom_positions_py(canon, meta["n_bits"], meta["k"])
+    for f in m["files"]:
+        hx = blooms.get(f, {}).get(col)
+        if hx and any(
+            not int(hx[16 * (p // 63) : 16 * (p // 63) + 16], 16) & (1 << (p % 63))
+            for p in positions
+        ):
+            dropped.add(f)
+    return dropped
+
+
+def _plan_files(m: dict, atoms) -> list[str]:
+    """The one file-skipping planner: the files of ``m``, in manifest
+    order, that every atom may match. An atom is a RANGE ``(col, lo,
+    hi)`` — inclusive, either side None for unbounded — or an IN
+    ``(col, values)``: the union of each value's equality test (min/max
+    window plus Bloom bits), so a one-value list is plain equality and
+    an empty one keeps nothing. No atoms keeps every file. Unknown or
+    NULL stats, and a probe that cannot be compared with them, keep the
+    file: skipping is a superset, the caller's residual filter is the
+    semantics. Each atom runs on the sidecar's typed index when the
+    manifest has one and it decides the atom, else on the exact dicts."""
+    dropped: set[str] = set()
+    for atom in atoms:
+        # per atom: a dict fallback loads the dicts, which later atoms
+        # then read for free
+        dt = _detail_table_for_prune(m)
+        if len(atom) == 3:
+            col, lo, hi = atom
+            # probe window widens directionally (Decimal-safe, no-op otherwise)
+            lo, hi = _json_stat(lo, direction=-1), _json_stat(hi, direction=1)
+            d = _detail_dropped_range(dt, col, lo, hi) if dt is not None else None
+            if d is None:
+                d = _dict_dropped_range(m, col, lo, hi)
+        else:
+            col, values = atom
+            per_value = [
+                _detail_dropped_eq(m, dt, col, v)
+                if dt is not None
+                else _dict_dropped_eq(m, col, v)
+                for v in values
+            ]
+            # a file is dropped only if EVERY value is provably absent
+            d = set.intersection(*per_value) if per_value else set(m["files"])
+        dropped |= d
+    return [f for f in m["files"] if f not in dropped]
+
+
 def snap_prune_files(
     root: str, col: str, lo, hi, version: int | None = None
 ) -> tuple[list[str], int]:
@@ -2751,67 +2841,13 @@ def snap_prune_files(
     overlaps [lo, hi], total files in the manifest)``. Files with no
     recorded stats for ``col`` (written without ``stats_cols``, or an
     all-NULL file) are KEPT — skipping must never change results.
-    Driver-side dict lookups over the manifest only; no file is opened."""
+    Driver-side manifest lookups only; no file is opened."""
     if version is None:
         version = snap_current_version(root)
         if version is None:
             raise FileNotFoundError(f"no committed version in {root}")
     m = _read_manifest(root, version)
-    return _prune_files_between_m(m, col, lo, hi), len(m["files"])
-
-
-def _prune_files_between_m(m: dict, col: str, lo, hi) -> list[str]:
-    """Range pruning against a PRELOADED manifest (multi-predicate
-    planning parses the manifest once, not once per column)."""
-    # probe window widens directionally too (Decimal-safe, no-op otherwise)
-    lo, hi = _json_stat(lo, direction=-1), _json_stat(hi, direction=1)
-    dt = _detail_table_for_prune(m)
-    if dt is not None:
-        dropped = _detail_dropped_range(dt, col, lo, hi)
-        if dropped is not None:
-            return [f for f in m["files"] if f not in dropped]
-        # undecidable probe/index domain: fall through to the dict path
-        # (which reconstructs the exact stats and keeps its semantics,
-        # including raising on truly incomparable probes)
-    stats = m.get("file_stats", {})
-    kept = []
-    for f in m["files"]:
-        mm = stats.get(f, {}).get(col)
-        if mm is None or mm[0] is None or mm[1] is None:
-            kept.append(f)  # unknown -> must read
-        elif not (mm[0] > hi or mm[1] < lo):
-            kept.append(f)
-    return kept
-
-
-def _prune_files_halfrange_m(m: dict, col: str, lo, hi) -> list[str]:
-    """Half-open range pruning against a preloaded manifest: ``lo`` /
-    ``hi`` may each be None (unbounded side). Unknown stats or
-    incomparable literal types keep the file — conservative, like every
-    skipping path."""
-    lo_j = _json_stat(lo, direction=-1) if lo is not None else None
-    hi_j = _json_stat(hi, direction=1) if hi is not None else None
-    dt = _detail_table_for_prune(m)
-    if dt is not None:
-        dropped = _detail_dropped_range(dt, col, lo_j, hi_j)
-        if dropped is not None:
-            return [f for f in m["files"] if f not in dropped]
-    stats = m.get("file_stats", {})
-    kept = []
-    for f in m["files"]:
-        mm = stats.get(f, {}).get(col)
-        if mm is None or mm[0] is None or mm[1] is None:
-            kept.append(f)
-            continue
-        try:
-            if (hi_j is not None and mm[0] > hi_j) or (
-                lo_j is not None and mm[1] < lo_j
-            ):
-                continue
-        except TypeError:
-            pass  # stats/literal type mismatch: must read
-        kept.append(f)
-    return kept
+    return _plan_files(m, [(col, lo, hi)]), len(m["files"])
 
 
 _DML_LITERAL = r"-?\d+(?:\.\d+)?|'[^']*'"
@@ -2910,56 +2946,34 @@ def _dml_candidate_files(m: dict, condition) -> list[str]:
             return None
         return value, False
 
-    def _eq_kept(col: str, value, temporal: bool) -> list[str]:
-        # temporal equality prunes as the degenerate stats range
-        # [v, v] (sound without any bloom — the bloom build hashed
-        # Spark's cast-to-string form, a different domain, so the
-        # bloom side is skipped for temporal probes)
-        if temporal:
-            return _prune_files_between_m(m, col, value, value)
-        return _prune_files_eq_m(m, col, value)
-
-    kept: set[str] | None = None
+    atoms = []
     for atom in re.split(r"(?i)\band\b", condition):
         mt = _DML_ATOM.match(atom)
-        if mt is None:
-            mi = _DML_IN_ATOM.match(atom)
-            if mi is None:
-                return files
-            # col IN (v1, v2, ...): the union of each value's equality
-            # plan (a file survives if ANY value may live in it) —
-            # the same kept-set algebra snap_read_where_in uses. One
-            # un-probe-able value widens its kept-set to ALL files,
-            # making the union total — i.e. the atom contributes
-            # nothing, so just skip it.
-            col = mi.group(1)
-            ctype = col_types.get(col)
-            union: set[str] | None = set()
-            for lit in re.findall(_DML_LITERAL, mi.group(2)):
-                parsed = _literal_value(lit, ctype)
-                if parsed is None:
-                    union = None
-                    break
-                union.update(_eq_kept(col, parsed[0], parsed[1]))
-            if union is None:
-                continue
-            kept = union if kept is None else kept & union
+        mi = None if mt else _DML_IN_ATOM.match(atom)
+        if mt is None and mi is None:
+            return files
+        col = (mt or mi).group(1)
+        lits = [mt.group(3)] if mt else re.findall(_DML_LITERAL, mi.group(2))
+        parsed = [_literal_value(lit, col_types.get(col)) for lit in lits]
+        if None in parsed:
+            # no sound probe domain (for an IN, one such value makes the
+            # union total): the atom prunes nothing
             continue
-        col, op, lit = mt.group(1), mt.group(2), mt.group(3)
-        parsed = _literal_value(lit, col_types.get(col))
-        if parsed is None:
-            continue
-        value, temporal = parsed
-        if op == "=":
-            f = _eq_kept(col, value, temporal)
+        op = mt.group(2) if mt else "in"
+        value, temporal = parsed[0]
+        if op == "=" and temporal:
+            # temporal equality prunes as the degenerate stats range
+            # [v, v]: the bloom build hashed a different canonical form
+            atoms.append((col, value, value))
+        elif op in ("=", "in"):
+            # a temporal IN value canonicalizes to nothing, so its
+            # equality test is the same min/max-only window
+            atoms.append((col, [v for v, _temporal in parsed]))
         elif op in (">", ">="):
-            f = _prune_files_halfrange_m(m, col, value, None)
+            atoms.append((col, value, None))
         else:  # "<", "<="
-            f = _prune_files_halfrange_m(m, col, None, value)
-        kept = set(f) if kept is None else kept & set(f)
-    if kept is None:
-        return files
-    return [f for f in files if f in kept]
+            atoms.append((col, None, value))
+    return _plan_files(m, atoms)
 
 
 def snap_read_between(
@@ -2973,15 +2987,7 @@ def snap_read_between(
     ~selectivity x files; with random layout it degrades safely to a
     full read. At 100 TB this is the difference between a metadata
     lookup and a million footer reads."""
-    if version is None:
-        version = snap_current_version(root)
-        if version is None:
-            raise FileNotFoundError(f"no committed version in {root}")
-    files, _total = snap_prune_files(root, col, lo, hi, version)
-    m = _read_manifest(root, version)
-    return _source_frame(spark, m, files).filter(
-        F.col(col).between(F.lit(lo), F.lit(hi))
-    )
+    return snap_read_where(spark, root, {col: ("between", lo, hi)}, version)
 
 
 def snap_read_between_nd(
@@ -3041,13 +3047,12 @@ def snap_read_where(
         if version is None:
             raise FileNotFoundError(f"no committed version in {root}")
     m = _read_manifest(root, version)
-    kept: set[str] | None = None
-    conds = []
+    atoms, conds = [], []
     for col, spec in preds.items():
         op = spec[0]
         if op == "between":
             _op, lo, hi = spec
-            files = _prune_files_between_m(m, col, lo, hi)
+            atoms.append((col, lo, hi))
             conds.append(F.col(col).between(F.lit(lo), F.lit(hi)))
         elif op == "eq":
             _op, value = spec
@@ -3056,36 +3061,28 @@ def snap_read_where(
                     "snap_read_where: eq on NULL is never true — use a "
                     "full read with isNull()"
                 )
-            files = _prune_files_eq_m(m, col, value)
+            atoms.append((col, [value]))
             conds.append(F.col(col) == F.lit(value))
         elif op == "in":
             _op, values = spec
             values = list(values)
-            if not values:
-                # col IN () matches nothing: empty plan, honest result
-                files = []
-                conds.append(F.lit(False))
-            elif any(v is None for v in values):
+            if any(v is None for v in values):
                 raise ValueError(
                     "snap_read_where: NULL inside an IN list is never "
                     "matched — drop it or use a full read with isNull()"
                 )
-            else:
-                per_value: set[str] = set()
-                for v in values:
-                    per_value.update(_prune_files_eq_m(m, col, v))
-                files = sorted(per_value)
-                conds.append(F.col(col).isin(values))
+            # col IN () matches nothing: an empty plan, honest result
+            atoms.append((col, values))
+            conds.append(F.col(col).isin(values) if values else F.lit(False))
         else:
             raise ValueError(
                 f"snap_read_where: unknown predicate op {op!r} "
                 "(expected 'between' or 'eq')"
             )
-        kept = set(files) if kept is None else kept & set(files)
     cond = conds[0]
     for c in conds[1:]:
         cond = cond & c
-    return _source_frame(spark, m, sorted(kept)).filter(cond)
+    return _source_frame(spark, m, _plan_files(m, atoms)).filter(cond)
 
 
 def snap_prune_files_eq(
@@ -3113,145 +3110,7 @@ def snap_prune_files_eq(
         if version is None:
             raise FileNotFoundError(f"no committed version in {root}")
     m = _read_manifest(root, version)
-    return _prune_files_eq_m(m, col, value), len(m["files"])
-
-
-def _prune_files_eq_m(m: dict, col: str, value) -> list[str]:
-    """Equality pruning against a PRELOADED manifest (IN-list planning
-    parses the manifest once, not once per value). The probe value is
-    canonicalized to the build-time string form first; a value with no
-    sound canonical form (type-sloppy probe) prunes nothing, and a
-    min/max comparison that raises on mixed types degrades to keep —
-    the residual filter is always the semantics."""
-    dt = _detail_table_for_prune(m)
-    if dt is not None:
-        dropped = _detail_dropped_eq(m, dt, col, value)
-        return [f for f in m["files"] if f not in dropped]
-    canon = _canonical_eq_value(m["schema"], col, value)
-    probe = canon if canon is not None else value
-    # Decimal probes widen to a [v_lo, v_hi] float window so the min/max
-    # test can never falsely drop; identical values otherwise.
-    v_lo, v_hi = _json_stat(probe, direction=-1), _json_stat(probe, direction=1)
-    stats = m.get("file_stats", {})
-    blooms = m.get("file_blooms", {})
-    meta = m.get("bloom_meta", {}).get(col)
-    positions = (
-        _bloom_positions_py(canon, meta["n_bits"], meta["k"])
-        if meta and canon is not None
-        else []
-    )
-    kept = []
-    for f in m["files"]:
-        mm = stats.get(f, {}).get(col)
-        if mm is not None and mm[0] is not None and mm[1] is not None:
-            try:
-                if mm[0] > v_hi or mm[1] < v_lo:
-                    continue
-            except TypeError:
-                pass  # incomparable probe vs recorded stats: keep
-        hx = blooms.get(f, {}).get(col)
-        if hx and positions:
-            ok = True
-            for p in positions:
-                word = int(hx[16 * (p // 63) : 16 * (p // 63) + 16], 16)
-                if not word & (1 << (p % 63)):
-                    ok = False
-                    break
-            if not ok:
-                continue
-        kept.append(f)
-    return kept
-
-
-def snap_prune_files_spark(
-    spark: SparkSession,
-    root: str,
-    col: str,
-    lo,
-    hi,
-    version: int | None = None,
-) -> tuple[list[str], int]:
-    """``snap_prune_files`` as a DISTRIBUTED Spark filter over the
-    detail sidecar — the path for manifests that outgrow even the
-    vectorized driver prune (a 10M-file table's sidecar is a
-    multi-gigabyte parquet the driver should not hold). The executors
-    scan the sidecar's typed prune index and only the PROVABLY-EXCLUDED
-    paths come back to the driver; the kept list is files − dropped,
-    preserving manifest order. Same soundness contract as the arrow
-    path (widened bounds, null-stat keep, undecidable domain keeps
-    all). Requires a detail-backed manifest (inline manifests are small
-    by construction — use ``snap_prune_files``)."""
-    if version is None:
-        version = snap_current_version(root)
-        if version is None:
-            raise FileNotFoundError(f"no committed version in {root}")
-    m = _read_manifest(root, version)
-    files = m["files"]
-    if not isinstance(m, _LazyManifest):
-        return _prune_files_between_m(m, col, lo, hi), len(files)
-    lo_j, hi_j = _json_stat(lo, direction=-1), _json_stat(hi, direction=1)
-    # mergeSchema: parts of a chain may differ (a stats column added by
-    # evolve-append exists only in later parts) — the union schema is
-    # the same shape the arrow align-concat produces
-    d = spark.read.option("mergeSchema", "true").parquet(*m._part_paths())
-    if "smin" not in d.columns or col not in d.select("smin.*").columns:
-        return list(files), len(files)
-    kind = (
-        "num"
-        if dict(d.select(F.col("smin").getField(col).alias("_s")).dtypes)["_s"]
-        == "double"
-        else "str"
-    )
-    for v in (lo_j, hi_j):
-        if v is not None and not _probe_in_kind(v, kind):
-            return list(files), len(files)
-    if kind == "num":
-        lo_c, hi_c = _widen_float(lo_j, -1), _widen_float(hi_j, 1)
-    else:
-        lo_c, hi_c = lo_j, hi_j
-    smin, smax = F.col("smin").getField(col), F.col("smax").getField(col)
-    drop = F.lit(False)
-    if hi_c is not None:
-        drop = drop | (smin > F.lit(hi_c))
-    if lo_c is not None:
-        drop = drop | (smax < F.lit(lo_c))
-    # null stats -> null predicate -> filter false -> kept, exactly the
-    # dict path's None-stat keep
-    dropped = {
-        r["path"]
-        for r in d.filter(smin.isNotNull() & smax.isNotNull() & drop)
-        .select("path")
-        .collect()
-    }
-    # RELOCATABILITY: the Spark read returns the parts' RECORDED paths;
-    # after a store move those live in the origin-root domain while
-    # ``files`` was rebased at manifest load. Rebase the (small,
-    # provably-excluded) dropped set driver-side from each part's
-    # recorded origin — a miss here only KEEPS a file, never drops one.
-    import pyarrow.parquet as pq
-
-    actual = os.path.abspath(root)
-    origins = sorted(
-        {
-            md.decode()
-            for p in m._part_paths()
-            for md in [
-                (pq.read_schema(p).metadata or {}).get(b"wsspark_part_root")
-            ]
-            if md is not None and md.decode() != actual
-        },
-        key=len,
-        reverse=True,
-    )
-    if origins:
-        def _reb(x: str) -> str:
-            for o in origins:
-                if x.startswith(o + os.sep):
-                    return actual + x[len(o):]
-            return x
-
-        dropped = {_reb(x) for x in dropped}
-    return [f for f in files if f not in dropped], len(files)
+    return _plan_files(m, [(col, [value])]), len(m["files"])
 
 
 def snap_read_where_eq(
@@ -3263,13 +3122,7 @@ def snap_read_where_eq(
     optimization — bloom false positives cost a scanned file, never a
     wrong row). On a hash-clustered write (``df.repartition(n, col)``)
     a needle lookup plans ~1 file; on any layout it degrades safely."""
-    if version is None:
-        version = snap_current_version(root)
-        if version is None:
-            raise FileNotFoundError(f"no committed version in {root}")
-    files, _total = snap_prune_files_eq(root, col, value, version)
-    m = _read_manifest(root, version)
-    return _source_frame(spark, m, files).filter(F.col(col) == F.lit(value))
+    return snap_read_where(spark, root, {col: ("eq", value)}, version)
 
 
 def snap_count(root: str, version: int | None = None) -> int:
@@ -3384,12 +3237,9 @@ def snap_read_where_in(
     if not values:
         schema = T.StructType.fromJson(json.loads(m["schema"]))
         return spark.createDataFrame([], schema)
-    keep: set[str] = set()
-    for v in values:
-        keep.update(_prune_files_eq_m(m, col, v))
-    ordered = [f for f in m["files"] if f in keep]  # stable plan order
-    return _source_frame(spark, m, ordered).filter(
-        F.col(col).isin(list(values))
+    values = list(values)
+    return _source_frame(spark, m, _plan_files(m, [(col, values)])).filter(
+        F.col(col).isin(values)
     )
 
 
@@ -4001,14 +3851,7 @@ def snap_compact_with_retry(
     concurrent commit's rows are included, never erased. This differs
     from ``snap_commit_with_retry``, which can re-publish the same frame
     but cannot re-pin a maintenance read."""
-    attempt = 0
-    while True:
-        try:
-            return snap_compact(spark, root, **kwargs)
-        except (SnapshotConflict, StagedCommitVacuumed):
-            attempt += 1
-            if attempt > max_retries:
-                raise
+    return _with_retry(lambda: snap_compact(spark, root, **kwargs), max_retries)
 
 
 def snap_optimize_with_retry(
@@ -4017,14 +3860,7 @@ def snap_optimize_with_retry(
     """``snap_optimize`` under the same maintenance OCC loop as
     ``snap_compact_with_retry`` (each attempt re-pins CURRENT, re-derives
     the z-key bounds from the advanced snapshot, and re-clusters it)."""
-    attempt = 0
-    while True:
-        try:
-            return snap_optimize(spark, root, **kwargs)
-        except (SnapshotConflict, StagedCommitVacuumed):
-            attempt += 1
-            if attempt > max_retries:
-                raise
+    return _with_retry(lambda: snap_optimize(spark, root, **kwargs), max_retries)
 
 
 def snap_optimize(
@@ -4690,17 +4526,15 @@ def snap_merge(
             for f in source.schema.fields
             if isinstance(f.dataType, T.TimestampType)
         }
-        kept: set[str] | None = None
+        atoms = []
         for i, c in enumerate(on):
             lo, hi = bounds[f"_lo{i}"], bounds[f"_hi{i}"]
             if lo is None or hi is None:
                 continue  # empty/all-NULL source keys: no pruning signal
             if norm is not None and c in ts_keys:
                 lo, hi = norm(lo), norm(hi)  # stats' session-tz domain
-            per = _prune_files_halfrange_m(m, c, lo, hi)
-            kept = set(per) if kept is None else kept & set(per)
-        if kept is not None:
-            cand = [f for f in m["files"] if f in kept]
+            atoms.append((c, lo, hi))
+        cand = _plan_files(m, atoms)
     else:
         _dup_check()
     touched_rows = _source_frame(spark, m, cand, file_col="_sf").select(
