@@ -1,13 +1,16 @@
 """The execution primitives (``wsspark.exec``): ``overlap`` result order,
 waiting and failure semantics, the caller's job group reaching every
 overlapped job, ``persisted``, ``rounds`` and ``scratch_dir`` scoping, the
-iterative operators leaving O(1) checkpoints registered — plus source scans
-that keep hand-rolled thread pools, caches, temp dirs and checkpoint loops
-from coming back."""
+iterative operators leaving O(1) checkpoints registered, ``local_frame``
+building the list path's frame as a local relation — plus source scans
+that keep hand-rolled thread pools, caches, temp dirs, checkpoint loops and
+list-built frames from coming back."""
 
 from __future__ import annotations
 
 import ast
+import datetime as dt
+import decimal
 import os
 import pathlib
 import re
@@ -16,12 +19,13 @@ import time
 
 import pytest
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from wsspark import quality
 from wsspark import snapstore as ss
-from wsspark.exec import overlap, persisted, rounds, scratch_dir
+from wsspark.exec import local_frame, overlap, persisted, rounds, scratch_dir
 from wsspark.llmops import dedup, similarity
 from wsspark.ops import graph
 
@@ -190,6 +194,119 @@ def test_snapstore_dml_jobs_stay_in_the_callers_job_group(spark, tmp_path):
     )
 
 
+_MATRIX = T.StructType(
+    [
+        T.StructField("s", T.StringType()),
+        T.StructField("i", T.IntegerType()),
+        T.StructField("l", T.LongType(), nullable=False),
+        T.StructField("d", T.DoubleType()),
+        T.StructField("dec", T.DecimalType(10, 2)),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("ntz", T.TimestampNTZType()),
+        T.StructField("day", T.DateType()),
+        T.StructField("b", T.BooleanType()),
+        T.StructField("arr", T.ArrayType(T.LongType())),
+        T.StructField(
+            "st",
+            T.StructType(
+                [
+                    T.StructField("x", T.LongType()),
+                    T.StructField("t", T.TimestampType()),
+                ]
+            ),
+        ),
+        T.StructField("m", T.MapType(T.StringType(), T.DoubleType())),
+    ]
+)
+_MATRIX_ROWS = [
+    (
+        "a", 1, 2, 1.5, decimal.Decimal("3.14"),
+        dt.datetime(2024, 3, 10, 2, 30, 0, 123456), dt.datetime(2024, 1, 1, 5),
+        dt.date(2024, 2, 29), True, [1, 2], (5, dt.datetime(2020, 1, 1)),
+        {"k": 1.0},
+    ),
+    # a decimal past its scale rounds half-up on both paths
+    (
+        "", -7, 3, -0.0, decimal.Decimal("-2.345"),
+        dt.datetime(2024, 11, 3, 1, 30, tzinfo=dt.timezone.utc),
+        dt.datetime(1969, 12, 31, 23, 59, 59), dt.date(1969, 12, 31), False,
+        [], (None, None), {},
+    ),
+    (None, None, 4, None, None, None, None, None, None, None, None, None),
+    Row(
+        s="row", i=2**31 - 1, l=-(2**63), d=float("inf"),
+        dec=decimal.Decimal("0.10"), ts=dt.datetime(1900, 1, 1),
+        ntz=None, day=dt.date(9999, 12, 31), b=None, arr=[None, 3],
+        st=None, m={"x": None},
+    ),
+    {"s": "dict", "l": 9},
+]
+
+
+def _same_as_list_path(spark, rows, schema):
+    want = spark.createDataFrame(rows, schema)
+    got = local_frame(spark, rows, schema)
+    assert got.schema == want.schema
+    assert repr(got.collect()) == repr(want.collect())
+    return got, want
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [_MATRIX_ROWS, [(None,) * 2 + (1,) + (None,) * 9] * 2, []],
+    ids=["values", "all-null", "empty"],
+)
+def test_local_frame_matches_the_list_path(spark, rows):
+    got, _ = _same_as_list_path(spark, rows, _MATRIX)
+    assert got.count() == len(rows)
+    assert not got.schema["l"].nullable
+    _same_as_list_path(spark, [(1, 2, 0.5)], "i int, j int, cov double")
+
+
+def test_local_frame_naive_timestamps_follow_the_process_zone(
+    spark, monkeypatch
+):
+    """A naive datetime is read in the Python process's local zone on
+    both paths, whatever the session zone: the Spark-side micros agree."""
+    rows = [
+        (dt.datetime(2024, 3, 10, 2, 30), dt.datetime(2024, 3, 10, 2, 30)),
+        (dt.datetime(2024, 7, 1, 12, 0, 0, 5), None),
+    ]
+    schema = "ts timestamp, ntz timestamp_ntz"
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        got, want = _same_as_list_path(spark, rows, schema)
+        micros = [F.unix_micros("ts"), F.col("ntz").cast("string")]
+        assert got.select(micros).collect() == want.select(micros).collect()
+        # 12:00 EDT is 16:00 UTC
+        assert got.select(F.unix_micros("ts")).collect()[1][0] == 1719849600000005
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
+def _executed_plan(df: DataFrame) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_local_frame_is_a_local_table_scan(spark, tmp_path):
+    plan = _executed_plan(local_frame(spark, [(1, "a")], "k long, v string"))
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    empty = _executed_plan(local_frame(spark, [], "k long, v string"))
+    assert "LocalTableScan" in empty and "ExistingRDD" not in empty
+    # the (path -> commit version) map of the change feed
+    root = str(tmp_path / "cdf")
+    ss.snap_commit(spark.range(0, 20), root)
+    since = ss.snap_enable_cdf(root)
+    ss.snap_commit(spark.range(20, 30), root)
+    ss.snap_update_where(spark, root, "id < 3", {"id": "id + 100"})
+    feed = ss.snap_read_changes_cdf(spark, root, since)
+    plan = _executed_plan(feed)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert feed.count() == 16
+
+
 def _registered(spark, frames) -> int:
     """How many of ``frames`` (local checkpoints) are still registered."""
     ids = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
@@ -347,6 +464,18 @@ def test_no_thread_pool_or_cache_outside_exec():
     assert not found, (
         "use wsspark.exec.overlap / persisted / scratch_dir:\n" + "\n".join(found)
     )
+
+
+def test_no_create_dataframe_outside_exec():
+    """A frame built from a Python list runs a Python-worker job; the
+    library builds its driver-side frames with ``exec.local_frame``."""
+    found = [
+        f"{path.relative_to(_WSSPARK)}:{no}: {line.strip()}"
+        for path in _library_sources()
+        for no, line in enumerate(path.read_text().splitlines(), 1)
+        if "createDataFrame(" in line
+    ]
+    assert not found, "use wsspark.exec.local_frame:\n" + "\n".join(found)
 
 
 def test_no_checkpoint_in_a_loop_outside_exec():

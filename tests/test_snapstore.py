@@ -2136,6 +2136,87 @@ def test_dml_discovery_prunes_with_stats(spark, tmp_path):
     assert got[82] == 165 and got[50] == 100
 
 
+def _between_store(spark, root):
+    """100 rows, ten files range-clustered on ``id``, with ``id`` and
+    ``t`` stats: ``t`` is 2024-01-01 plus ``id`` hours, ``note`` text."""
+    df = _df(spark, 0, 100).select(
+        "id",
+        "val",
+        F.expr(
+            "timestamp'2024-01-01 00:00:00' + make_interval(0,0,0,0,id,0,0)"
+        ).alias("t"),
+        F.concat(F.lit("n"), F.col("id").cast("string")).alias("note"),
+    )
+    ss.snap_commit(df.repartitionByRange(10, "id"), root, stats_cols=["id", "t"])
+    return ss._read_manifest(root, ss.snap_current_version(root))
+
+
+@pytest.mark.parametrize("sidecar", [False, True], ids=["inline", "sidecar"])
+def test_dml_discovery_prunes_between(spark, tmp_path, monkeypatch, sidecar):
+    """``col BETWEEN lit AND lit`` plans as one inclusive range: it keeps
+    exactly the files of ``col >= lit AND col <= lit``, on the inline
+    dicts and on the sidecar index alike, also for a quoted temporal
+    literal. Shapes it does not cover keep every file; reversed bounds
+    keep none, and an UPDATE with them changes nothing."""
+    if sidecar:
+        monkeypatch.setattr(ss, "DETAIL_INLINE_MAX", 0)
+    root = str(tmp_path / "t_between")
+    m = _between_store(spark, root)
+    assert (ss._detail_table_for_prune(m) is not None) == sidecar
+    full = m["files"]
+    cand = ss._dml_candidate_files(m, "id BETWEEN 10 AND 19")
+    assert cand == ss._dml_candidate_files(m, "id >= 10 AND id <= 19")
+    assert 0 < len(cand) <= 2
+    assert ss._dml_candidate_files(m, "id between 10 and 19 AND val >= 0") == cand
+    ts = "t BETWEEN '2024-01-02 00:00:00' AND '2024-01-02 23:00:00'"
+    ts_cand = ss._dml_candidate_files(m, ts)
+    assert ts_cand == ss._dml_candidate_files(
+        m, "t >= '2024-01-02 00:00:00' AND t <= '2024-01-02 23:00:00'"
+    )
+    assert 0 < len(ts_cand) < len(full)
+    for cond in (
+        "id NOT BETWEEN 10 AND 19",
+        "id BETWEEN 10 AND 19 OR id = 50",
+        "(id BETWEEN 10 AND 19)",
+        "id BETWEEN 10 AND val",
+        "note = 'x between 1 and 2'",
+        "id BETWEEN 10",
+    ):
+        assert ss._dml_candidate_files(m, cond) == full, cond
+    assert ss._dml_candidate_files(m, "id BETWEEN 19 AND 10") == []
+    before = sorted(ss.snap_read(spark, root).collect())
+    ss.snap_update_where(spark, root, "id BETWEEN 19 AND 10", {"val": "val + 1"})
+    assert sorted(ss.snap_read(spark, root).collect()) == before
+
+
+def test_between_dml_matches_the_unpruned_column_form(spark, tmp_path):
+    """UPDATE and DV DELETE with a pruned ``BETWEEN`` string give the same
+    table and the same change feed as the unpruned Column form."""
+    out = {}
+    for form in ("sql", "column"):
+        root = str(tmp_path / form)
+        _between_store(spark, root)
+        since = ss.snap_enable_cdf(root)
+        upd, dele = (
+            ("id BETWEEN 20 AND 29", "id BETWEEN 50 AND 54")
+            if form == "sql"
+            else (F.col("id").between(20, 29), F.col("id").between(50, 54))
+        )
+        ss.snap_update_where(spark, root, upd, {"val": "val + 1"})
+        ss.snap_delete_dv(spark, root, dele)
+        out[form] = (
+            sorted(ss.snap_read(spark, root).collect()),
+            sorted(
+                ss.snap_read_changes_cdf(spark, root, since)
+                .select("id", "val", "_change_type", "_commit_version")
+                .collect()
+            ),
+        )
+    table, changes = out["sql"]
+    assert len(table) == 95 and len(changes) == 25
+    assert out["sql"] == out["column"]
+
+
 def test_merge_discovery_key_range_prune(spark, tmp_path):
     """MERGE discovery pre-prune soundness: on a range-clustered store
     with key stats, a narrow source prunes discovery to the overlapping

@@ -12,6 +12,11 @@ from pyspark.sql import functions as F
 from wsspark import streaming
 from wsspark.io import read_table
 
+# llm first: llm and streamq import each other, and only this order
+# initializes both
+from wsspark.queries import llm  # noqa: F401, I001
+from wsspark.queries import streamq
+
 
 @pytest.fixture()
 def events_dir(spark, sf_dir, tmp_path):
@@ -504,3 +509,60 @@ def test_streaming_drift_monitor_topk_scale_path(spark, tmp_path):
             spark, str(tmp_path / "x"), baseline,
             cat_cols=["user"], topk_cols=["user"],
         )
+
+
+def test_stream_wait_outlasts_a_slice_while_the_stream_works(
+    spark, tmp_path, monkeypatch
+):
+    """The availableNow wait outlasts both one polling slice and the stall
+    limit while batches keep running, and the stream finishes."""
+    import time
+
+    src = tmp_path / "src"
+    for i in range(4):
+        spark.range(i * 10, i * 10 + 10).coalesce(1).write.parquet(
+            str(src / f"part={i}")
+        )
+    monkeypatch.setattr(streamq, "STREAM_POLL_S", 0.2)
+    monkeypatch.setattr(streamq, "STREAM_STALL_S", 1.5)
+    seen = []
+
+    def slow_batch(batch, batch_id):
+        time.sleep(1.0)
+        seen.append(batch.count())
+
+    q = (
+        spark.readStream.schema("id long, part int")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+        .writeStream.foreachBatch(slow_batch)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    t0 = time.monotonic()
+    streamq._await_stream(q, "slow")
+    assert time.monotonic() - t0 > streamq.STREAM_STALL_S
+    assert not q.isActive and sum(seen) == 40 and len(seen) == 4
+
+
+def test_stream_wait_stops_a_stalled_stream(monkeypatch):
+    """No trigger running and no progress for the stall limit: the stream
+    is stopped and the wait raises."""
+    class Stalled:
+        status = {"isTriggerActive": False}
+        lastProgress = None
+        stopped = False
+
+        def awaitTermination(self, timeout):
+            return False
+
+        def stop(self):
+            self.stopped = True
+
+    monkeypatch.setattr(streamq, "STREAM_POLL_S", 0.01)
+    monkeypatch.setattr(streamq, "STREAM_STALL_S", 0.05)
+    q = Stalled()
+    with pytest.raises(RuntimeError, match="stalled"):
+        streamq._await_stream(q, "stuck")
+    assert q.stopped

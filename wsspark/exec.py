@@ -29,18 +29,33 @@ keeps the newest, which the returned frame reads.
 
 ``scratch_dir`` scopes a temporary directory to a ``with`` block. A query
 that needs several directories takes subdirectories of one.
+
+``local_frame`` builds a small driver-side frame (a lookup map, a report
+row, an empty frame of a stored schema) as a JVM local relation. Given a
+Python list, ``createDataFrame`` parallelizes the rows as an RDD, and the
+frame then runs a Python-worker job when it executes, with one task per
+core: 250-360 ms for 6 rows and 170-235 ms for an empty list at
+``local[4]``, 480-585 / 380-435 ms at ``local[8]`` (4-vCPU VM). Handed an
+Arrow table instead, Spark plans a ``LocalTableScan`` that runs in the
+JVM: 13-22 ms (8-17 ms empty). The rows are converted with the schema's
+own type verifier and ``toInternal``, as the list path does, so the values
+are the same: naive datetimes are read in the Python process's local time
+zone, and decimals, dates and nested types are carried as Spark's
+internal values.
 """
 
 from __future__ import annotations
 
+import decimal
 import shutil
 import tempfile
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
-from typing import Any, Callable, Iterator
+from typing import Any, Callable, Iterable, Iterator
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DecimalType, StructType
 
 
 def _inheriting(thunk: Callable[[], Any]) -> Callable[[], Any]:
@@ -130,3 +145,55 @@ def scratch_dir(prefix: str) -> Iterator[str]:
         yield path
     finally:
         shutil.rmtree(path, ignore_errors=True)
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable, schema: StructType | str
+) -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` with the same schema and
+    values, built as a local relation. ``schema`` is a ``StructType`` or a
+    DDL string; each row is a tuple, list, dict or ``Row``, verified
+    against it. Meant for driver-sized row counts: the rows are held in
+    the driver and shipped in the plan. A decimal nested in an array, map
+    or struct must fit its scale: Arrow refuses to round it."""
+    # pyarrow is imported here, not at module import: most processes that
+    # import wsspark never build a local frame
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import (
+        _create_converter,
+        _make_type_verifier,
+        _parse_datatype_string,
+    )
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    verify = _make_type_verifier(schema)
+    to_tuple = _create_converter(schema)
+    internal = []
+    for row in rows:
+        verify(row)
+        internal.append(schema.toInternal(to_tuple(row)))
+    arrow = to_arrow_schema(schema)
+    # internal values are what Arrow stores: epoch microseconds for
+    # timestamps (UTC-stamped for TimestampType, so Spark does not shift
+    # them again), epoch days for dates
+    columns = [list(c) for c in zip(*internal)] or [[] for _ in arrow]
+    for i, field in enumerate(schema.fields):
+        if isinstance(field.dataType, DecimalType):
+            columns[i] = _rounded(columns[i], field.dataType.scale)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def _rounded(values: list, scale: int) -> list:
+    """Decimals rounded half-up to ``scale``, as the JVM rounds a Python
+    decimal on the list path (Arrow refuses a lossy rescale instead)."""
+    quantum = decimal.Decimal(1).scaleb(-scale)
+    ctx = decimal.Context(prec=decimal.MAX_PREC)
+    return [
+        None if v is None else v.quantize(quantum, decimal.ROUND_HALF_UP, ctx)
+        for v in values
+    ]

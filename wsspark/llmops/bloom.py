@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from wsspark.exec import local_frame
+
 
 def _halves(key_col: Column) -> tuple[Column, Column]:
     """The two 32-bit halves of a 16-hex-char key as longs (the double-
@@ -156,7 +158,8 @@ def with_bloom_test(
                 f"the new size"
             )
         dense[w] = int(r["bits"])
-    packed = df.sparkSession.createDataFrame(
+    packed = local_frame(
+        df.sparkSession,
         [(dense,)], "_bloom_arr array<long>"
     )
     cond = F.lit(True)

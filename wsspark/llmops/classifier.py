@@ -43,7 +43,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from wsspark.exec import persisted
+from wsspark.exec import local_frame, persisted
 
 
 def _standardize_moments(df: DataFrame, feature_cols: list[str]) -> dict:
@@ -419,7 +419,7 @@ def label_agreement(
         "n long, agree long, po double, pe double, kappa double"
     )
     if n == 0:
-        return spark.createDataFrame([(0, 0, None, None, None)], schema)
+        return local_frame(spark, [(0, 0, None, None, None)], schema)
     agree = sum(r["n"] for r in rows if r["_a"] == r["_b"])
     marg_a: dict[str, int] = {}
     marg_b: dict[str, int] = {}
@@ -433,7 +433,8 @@ def label_agreement(
     )
     pe = pe_num / (n * n)
     kappa = None if pe == 1.0 else (po - pe) / (1.0 - pe)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 n,

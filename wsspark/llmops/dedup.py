@@ -26,7 +26,7 @@ import contextlib
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from wsspark.exec import persisted, rounds
+from wsspark.exec import local_frame, persisted, rounds
 
 DEFAULT_NUM_HASHES = 32
 DEFAULT_BANDS = 8
@@ -548,7 +548,7 @@ def connected_components(
             if len(probe) <= driver_threshold:
                 spark = pairs.sparkSession
                 if not probe:
-                    return spark.createDataFrame([], out_schema)
+                    return local_frame(spark, [], out_schema)
                 parent: dict[int, int] = {}
 
                 def find(x: int) -> int:
@@ -565,7 +565,7 @@ def connected_components(
                         # roots ARE the canonical min labels at the end
                         parent[max(ra, rb)] = min(ra, rb)
                 rows = sorted((x, find(x)) for x in parent)
-                return spark.createDataFrame(rows, out_schema)
+                return local_frame(spark, rows, out_schema)
 
         # symmetrize with ONE evaluation of the (possibly expensive) pairs plan:
         # a union of two projections would scan the pairs subtree twice while

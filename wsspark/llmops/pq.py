@@ -46,6 +46,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from wsspark.exec import local_frame
+
 
 def _sampled_matrix(
     embs: DataFrame, vec_col: str, id_col: str, sample: int
@@ -248,7 +250,8 @@ def ivf_pq_search(
 
     q = np.asarray(query, dtype=np.float64)
     spark = embs.sparkSession
-    q_df = spark.createDataFrame(
+    q_df = local_frame(
+        spark,
         [(0, [float(v) for v in q])], f"{id_col} long, {vec_col} array<double>"
     )
     qn = with_norm(q_df, vec_col).select(
@@ -339,7 +342,8 @@ def ivf_pq_search_multi(
     qpos = {q: i for i, q in enumerate(qids)}
 
     spark = embs.sparkSession
-    q_df = spark.createDataFrame(
+    q_df = local_frame(
+        spark,
         [(int(q), [float(v) for v in queries[q]]) for q in qids],
         f"query_id long, {vec_col} array<double>",
     )
@@ -484,7 +488,8 @@ def ivf_pq_search_store(
     if shortlist is None:
         shortlist = 10 * topk
     q = np.asarray(query, dtype=np.float64)
-    q_df = spark.createDataFrame(
+    q_df = local_frame(
+        spark,
         [(0, [float(v) for v in q])], f"{id_col} long, {vec_col} array<double>"
     )
     qn = with_norm(q_df, vec_col).select(

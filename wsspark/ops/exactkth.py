@@ -79,6 +79,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from wsspark.exec import local_frame
+
 _SIGN_FLIP = -(1 << 63)  # XOR mask: flips the sign bit -> unsigned order
 _MASK16 = (1 << 16) - 1
 
@@ -214,7 +216,7 @@ def exact_group_quantiles(
                 },
                 key=_sortkey,
             )
-            path_df = F.broadcast(spark.createDataFrame(paths, path_schema))
+            path_df = F.broadcast(local_frame(spark, paths, path_schema))
             cond = F.shiftrightunsigned("_k", G) == F.col("prefix")
             for c in gcols:
                 # null-safe: NULL group values are real groups here
@@ -245,7 +247,8 @@ def exact_group_quantiles(
             # fused pass 0: group counts = bucket sums of the unfiltered
             # first histogram; build ranks, then walk the same buckets
             if not hist:
-                return spark.createDataFrame(
+                return local_frame(
+                    spark,
                     [],
                     base.drop("_k")
                     .schema.add("fraction", "double")
@@ -296,7 +299,8 @@ def _rows_to_df(spark, df, gcols, rows):
     )
     # sort only for deterministic output order; key must be None-safe and
     # type-mixed-safe (group values may be NULL)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         sorted(rows, key=lambda r: tuple((v is None, str(v)) for v in r)), schema
     )
 
@@ -329,7 +333,8 @@ def robust_outlier_stats(
     med_rows = med.collect()
     spark = df.sparkSession
     med_frame = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [tuple(r[c] for c in gcols) + (int(round(r["value"] * scale)),) for r in med_rows],
             ", ".join(
                 [f"`{c}` {df.schema[c].dataType.simpleString()}" for c in gcols]
@@ -348,7 +353,8 @@ def robust_outlier_stats(
     )
     mad = exact_group_quantiles(devs, "_dev", (0.5,), group_cols, scale=1)
     mad_frame = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 tuple(r[c] for c in gcols) + (int(round(r["value"])),)
                 for r in mad.collect()

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from wsspark.exec import local_frame
+
 ABC_THRESHOLD_A = 0.8   # cumulative revenue share -> class A
 ABC_THRESHOLD_B = 0.95  # -> class B, else C (etl/config/config.yaml:19-22)
 
@@ -123,7 +125,7 @@ def abc_analysis_partitioned(
     for r in bucket_totals:
         offsets.append((r["_bucket"], acc))
         acc += r["_bsum"]
-    off_df = spark.createDataFrame(offsets, "_bucket int, _off double")
+    off_df = local_frame(spark, offsets, "_bucket int, _off double")
     w_cum = (
         Window.partitionBy("_bucket")
         .orderBy(F.desc("revenue"), F.asc(key))

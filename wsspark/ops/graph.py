@@ -44,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from wsspark.exec import overlap, rounds
+from wsspark.exec import local_frame, overlap, rounds
 
 
 def pagerank(
@@ -229,7 +229,8 @@ def triangle_stats(
     )
     coeff = round(3.0 * tri / n_wedges, 6) if n_wedges else 0.0
     spark = edges.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_nodes, n_edges, int(n_wedges), tri, coeff)],
         "n_nodes long, n_edges long, n_wedges long, n_triangles long, "
         "clustering_coefficient double",

@@ -19,7 +19,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from wsspark.exec import overlap, persisted
+from wsspark.exec import local_frame, overlap, persisted
 
 BAD_REFERENCE_ID = 9_999_999  # injected sentinel (gen/generate_data.py:344-348)
 POSITIVE_MOVEMENT_TYPES = ("IN", "RETURN")
@@ -334,7 +334,8 @@ def drift_report(
 
     cc, bc = overlap(lambda: _counts(current), lambda: _counts(base))
     out = _psi_rows(numeric_cols, cat_cols, edges, bc, cc, psi_alert)
-    return base.sparkSession.createDataFrame(
+    return local_frame(
+        base.sparkSession,
         sorted(out),
         "column string, kind string, n_base long, n_current long, "
         "psi double, drifted boolean",
@@ -382,7 +383,8 @@ def drift_topk(
         _cat_value_counts(current, cat_cols), topk_rows, cat_cols, k
     )
     out = _psi_rows([], cat_cols, {}, bc, cc, psi_alert)
-    return base.sparkSession.createDataFrame(
+    return local_frame(
+        base.sparkSession,
         sorted(out),
         "column string, kind string, n_base long, n_current long, "
         "psi double, drifted boolean",
@@ -464,7 +466,8 @@ def _fold_to_buckets(
     """Fold a (col, val, n) counts frame onto the pinned top-k bucket set
     (tail -> OTHER) via a broadcast join; collects <= cols x (k+1) rows."""
     spark = counts.sparkSession
-    topk = spark.createDataFrame(
+    topk = local_frame(
+        spark,
         topk_rows or [(None, None)], "col string, val string"
     ).filter(F.col("col").isNotNull())
     bucketed = (
@@ -549,7 +552,8 @@ def _ks_bucketed_uniform(
     the small path gives them)."""
     spark = pooled.sparkSession
     bounds = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(c, float(meta[c]["lo"]), float(meta[c]["hi"])) for c in big],
             "col string, _lo double, _hi double",
         )
@@ -618,7 +622,8 @@ def _ks_bucketed_quantile(
         for i in range(len(ladder) - 1):
             span_rows.append((c, i, ladder[i], ladder[i + 1]))
     bounds = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             span_rows, "col string, _span int, _blo double, _bhi double"
         )
     )
@@ -734,7 +739,8 @@ def ks_drift(
         raise ValueError("ks_drift: alpha must be in (0, 1)")
     with persisted(_ks_pooled(base, current, cols)) as pooled:
         rows = _ks_stat_rows(pooled, alpha, small_distinct)
-    return base.sparkSession.createDataFrame(
+    return local_frame(
+        base.sparkSession,
         rows,
         "column string, n_base long, n_current long, ks_stat double, "
         "threshold double, drifted boolean",
@@ -820,7 +826,8 @@ def _ks_stat_rows(
     }
     big = sorted(c for c, r in meta.items() if r["nd"] > small_distinct)
     totals = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(c, meta[c]["nb"], meta[c]["nc"]) for c in meta],
             "col string, nb long, nc long",
         )
@@ -906,7 +913,8 @@ def _ks_offset_fold(
             ob += sb
             oc += sc
     offsets = F.broadcast(
-        grouped.sparkSession.createDataFrame(
+        local_frame(
+            grouped.sparkSession,
             off_rows,
             "col string, _bk int, _ob long, _oc long",
         )
@@ -985,7 +993,8 @@ def embedding_drift(
     if not (0.0 < alpha < 1.0):
         raise ValueError("embedding_drift: alpha must be in (0, 1)")
     row = _embedding_drift_row(base, current, col, alpha)
-    return base.sparkSession.createDataFrame(
+    return local_frame(
+        base.sparkSession,
         [row],
         "n_base long, n_current long, dim int, centroid_cosine double, "
         "max_dim_z double, mean_dim_z double, z_crit double, "
@@ -1406,7 +1415,8 @@ def drift_suite(
             if wanted
         ]
         out = [row for rows in overlap(*families) for row in rows]
-    return base.sparkSession.createDataFrame(
+    return local_frame(
+        base.sparkSession,
         sorted(out),
         "family string, column string, kind string, n_base long, "
         "n_current long, statistic double, threshold double, "
@@ -1567,7 +1577,7 @@ def snapstore_drift_ivm_refresh(
             (r.side, r.col, r.bucket, r.n) for r in prev if r.side != "cur"
         ] + _rows("cur", cur)
     ss.snap_commit(
-        spark.createDataFrame(state, _DRIFT_IVM_SCHEMA).coalesce(1),
+        local_frame(spark, state, _DRIFT_IVM_SCHEMA).coalesce(1),
         counts_root,
         mode="overwrite",
         tag=fact_version,
@@ -1597,7 +1607,8 @@ def snapstore_drift_ivm_report(
     numeric = [c for c in cols if c in edges]
     cat = [c for c in cols if c not in edges]
     out = _psi_rows(numeric, cat, edges, bc, cc, psi_alert)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         sorted(out),
         "column string, kind string, n_base long, n_current long, "
         "psi double, drifted boolean",

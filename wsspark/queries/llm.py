@@ -15,7 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from wsspark.exec import overlap, scratch_dir
+from wsspark.exec import local_frame, overlap, scratch_dir
 from wsspark.io import read_table
 from wsspark.llmops import corpus, dedup, fingerprint, hashvec, pii, similarity, srp, textstats
 from wsspark.queries import Query
@@ -4602,7 +4602,7 @@ def q_embedding_covariance_block(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in range(8)
         for j in range(i, 8)
     ]
-    return spark.createDataFrame(rows, "i int, j int, cov double")
+    return local_frame(spark, rows, "i int, j int, cov double")
 
 
 def _covariance_block_sql(block: int = 8) -> str:

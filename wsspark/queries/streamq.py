@@ -21,15 +21,44 @@ batch twin row-for-row.
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 from wsspark import streaming
-from wsspark.exec import scratch_dir
+from wsspark.exec import local_frame, scratch_dir
 from wsspark.io import read_table
 from wsspark.queries import Query
 from wsspark.queries import core as coreq
 from wsspark.queries import llm as llmq
+
+
+# A stream is waited for in slices of STREAM_POLL_S seconds for as long as
+# it works — a trigger is running, or its progress moved since the last
+# slice — so a busy host finishes late instead of failing. It is stopped
+# and reported only after STREAM_STALL_S seconds of neither.
+STREAM_POLL_S = 5.0
+STREAM_STALL_S = 300.0
+
+
+def _await_stream(q: StreamingQuery, what: str) -> None:
+    """Block until the availableNow stream ``q`` terminates (a failed
+    stream raises its own error); stop it and raise once it has stalled."""
+    seen = None
+    idle_since = time.monotonic()
+    while not q.awaitTermination(STREAM_POLL_S):
+        progress = q.lastProgress or {}
+        mark = (progress.get("batchId"), progress.get("timestamp"))
+        if q.status["isTriggerActive"] or mark != seen:
+            seen = mark
+            idle_since = time.monotonic()
+        elif time.monotonic() - idle_since >= STREAM_STALL_S:
+            q.stop()
+            raise RuntimeError(
+                f"{what} stream stalled: no trigger ran and no progress "
+                f"for {STREAM_STALL_S:.0f}s"
+            )
 
 
 def _run_to_table(df: DataFrame, spark: SparkSession, name: str) -> DataFrame:
@@ -44,9 +73,7 @@ def _run_to_table(df: DataFrame, spark: SparkSession, name: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError(f"stream {name} did not finish within 300s")
+    _await_stream(q, name)
     return spark.table(name)
 
 
@@ -73,9 +100,7 @@ def _run_append_to_table(df: DataFrame, spark: SparkSession, name: str) -> DataF
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError(f"stream {name} did not finish within 300s")
+    _await_stream(q, name)
     return spark.table(name)
 
 
@@ -263,9 +288,7 @@ def q_streaming_snapshot_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         maintainer = streaming.SnapshotMaintainer(spark, os.path.join(d, "store"))
         q = maintainer.attach(movements, os.path.join(d, "ckpt"))
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("snapshot upsert stream did not finish within 300s")
+        _await_stream(q, "snapshot upsert")
         # materialize before the store is deleted
         return llmq._pin_result(maintainer.snapshot())
 
@@ -312,9 +335,7 @@ def q_streaming_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, os.path.join(d, "store"), threshold=0.6
         )
         q = index.attach(src, os.path.join(d, "ckpt"))
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("dedup index stream did not finish within 300s")
+        _await_stream(q, "dedup index")
         return llmq._pin_result(
             spark.read.parquet(index.pairs_path).select("doc_a", "doc_b", "jaccard")
         )
@@ -393,9 +414,7 @@ def q_streaming_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             chunk_size=llmq.CHUNK_SIZE, overlap=llmq.CHUNK_OVERLAP,
         )
         q = dedup.attach(src, os.path.join(d, "ckpt"))
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("chunk dedup stream did not finish within 300s")
+        _await_stream(q, "chunk dedup")
         return llmq._pin_result(
             spark.read.parquet(dedup.assignments_path).select(
                 "doc_id", "chunk_id", "chunk_hash", "is_dup",
@@ -477,12 +496,10 @@ def q_streaming_drift_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
             .load(fact_root),
             os.path.join(d, "ckpt"),
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("drift feed stream did not finish within 300s")
+        _await_stream(q, "drift feed")
         out = monitor.report()
         rows = out.collect()  # O(columns) rows
-    return spark.createDataFrame(rows, out.schema)
+    return local_frame(spark, rows, out.schema)
 
 
 def q_streaming_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -523,9 +540,7 @@ def q_streaming_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         maintainer = streaming.StreamingMVMaintainer(spark, os.path.join(d, "store"))
         q = maintainer.attach(movements, os.path.join(d, "ckpt"))
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("MV refresh stream did not finish within 300s")
+        _await_stream(q, "MV refresh")
         return llmq._pin_result(
             maintainer.mv().select(
                 "warehouse_id",
@@ -574,9 +589,7 @@ def q_streaming_bloom_ngram_index(spark: SparkSession, sf_dir: str) -> DataFrame
             n_bits=llmq.BLOOM_BITS, k=llmq.BLOOM_K,
         )
         q = idx.attach(src, os.path.join(d, "ckpt"))
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("ngram bloom stream did not finish within 300s")
+        _await_stream(q, "ngram bloom")
         return llmq._pin_result(
             spark.read.parquet(idx.profiles_path)
             .select("doc_id", "n_windows", "n_seen_windows", "seen_ratio")

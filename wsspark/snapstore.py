@@ -78,7 +78,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from wsspark.exec import overlap
+from wsspark.exec import local_frame, overlap
 
 
 class SnapshotConflict(RuntimeError):
@@ -2278,7 +2278,7 @@ def _source_frame(
     schema = T.StructType.fromJson(json.loads(m["schema"]))
     files = m["files"] if files is None else files
     if not files:
-        out = spark.createDataFrame([], schema)
+        out = local_frame(spark, [], schema)
         return out.withColumn(file_col, F.lit(None).cast("string")) if file_col else out
     df = spark.read.schema(schema).parquet(*files)
     dv_paths = m.get("dv_files") or []
@@ -2412,7 +2412,7 @@ def snap_read_changes(
     new_files = [f for f in m["files"] if f not in base]
     schema = T.StructType.fromJson(json.loads(m["schema"]))
     if not new_files:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return spark.read.schema(schema).parquet(*new_files)
 
 
@@ -2568,7 +2568,8 @@ def snap_read_changes_cdf(
         # would silently match nothing (older manifests predating
         # absolute _list_parquet included)
         vmap = F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(os.path.abspath(p), v) for p, v in pairs],
                 f"{key} string, _commit_version long",
             )
@@ -2629,7 +2630,7 @@ def snap_read_changes_cdf(
             )
         )
     if not frames:
-        return spark.createDataFrame([], full)
+        return local_frame(spark, [], full)
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f, allowMissingColumns=True)
@@ -2860,14 +2861,33 @@ _DML_IN_ATOM = re.compile(
     rf"^\s*([A-Za-z_][A-Za-z0-9_]*)\s+[Ii][Nn]\s*\("
     rf"(\s*(?:{_DML_LITERAL})(?:\s*,\s*(?:{_DML_LITERAL}))*\s*)\)\s*$"
 )
-# Coarse rejection of shapes the conjunctive-atom parser must never see
-# mid-atom. Parentheses and IN left this list when the anchored IN-atom
-# shape became prunable — any OTHER parenthesized/IN form still fails
-# the per-atom match and returns the full list (never a skipped atom:
-# an unparsed disjunct inside a conjunct would make skipping unsound).
-_DML_UNPRUNABLE = re.compile(
-    r"[%]|\bor\b|\bnot\b|\bbetween\b|\bis\b|\blike\b|`", re.I
+# col BETWEEN lit AND lit — one inclusive range; its AND is not a
+# conjunction, so _dml_conjuncts keeps the atom whole
+_DML_BETWEEN_ATOM = re.compile(
+    rf"^\s*([A-Za-z_][A-Za-z0-9_]*)\s+between\s+({_DML_LITERAL})\s+and\s+"
+    rf"({_DML_LITERAL})\s*$",
+    re.I,
 )
+# Coarse rejection of shapes the conjunctive-atom parser must never see
+# mid-atom. Parentheses, IN and BETWEEN left this list when their
+# anchored atom shapes became prunable — any OTHER parenthesized, IN or
+# BETWEEN form (NOT BETWEEN included: NOT stays here) still fails the
+# per-atom match and returns the full list (never a skipped atom: an
+# unparsed disjunct inside a conjunct would make skipping unsound).
+_DML_UNPRUNABLE = re.compile(r"[%]|\bor\b|\bnot\b|\bis\b|\blike\b|`", re.I)
+
+
+def _dml_conjuncts(condition: str) -> list[str]:
+    """``condition`` split on AND, with each ``col BETWEEN lit AND lit``
+    kept whole."""
+    pieces = re.split(r"(?i)\band\b", condition)
+    out = []
+    while pieces:
+        piece = pieces.pop(0)
+        if pieces and _DML_BETWEEN_ATOM.match(f"{piece}AND{pieces[0]}"):
+            piece = f"{piece}AND{pieces.pop(0)}"
+        out.append(piece)
+    return out
 
 
 def _dml_temporal_literal(value: str, ctype: str) -> str | None:
@@ -2891,16 +2911,18 @@ def _dml_candidate_files(m: dict, condition) -> list[str]:
     optimization where ``UPDATE/DELETE ... WHERE id >= a AND id <= b``
     plans its matching scan from file metadata instead of reading the
     whole table. When ``condition`` is a SQL STRING that is a pure
-    conjunction of ``col <op> literal`` / ``col IN (literal, ...)``
-    atoms (ops ``= < <= > >=``, int/float/'string'/temporal literals),
-    intersect each atom's manifest kept-set: ``=`` uses min/max AND
+    conjunction of ``col <op> literal`` / ``col IN (literal, ...)`` /
+    ``col BETWEEN literal AND literal`` atoms (ops ``= < <= > >=``,
+    int/float/'string'/temporal literals), intersect each atom's
+    manifest kept-set: ``BETWEEN`` is the inclusive range ``[lo, hi]``
+    (reversed bounds keep no file), ``=`` uses min/max AND
     Bloom pruning (temporal equality: min/max only, as the degenerate
     [v, v] range — the bloom hashed a different canonical form),
     ``IN`` unions its values' equality plans (the point-DML / GDPR
     delete shape), inequalities use half-range min/max pruning with
     strict ops widened to inclusive (conservative). ANY other shape —
-    a Column object, OR/NOT/parenthesized groups, arithmetic,
-    functions, IS NULL — returns every file: pruning is a superset
+    a Column object, OR/NOT/parenthesized groups (NOT BETWEEN too),
+    arithmetic, functions, IS NULL — returns every file: pruning is a superset
     optimization, never the semantics. On a range-clustered 100 TB
     table this turns a narrow-region DML's discovery from a full scan
     into a ~selectivity-sized one; on random layout it degrades safely
@@ -2947,21 +2969,30 @@ def _dml_candidate_files(m: dict, condition) -> list[str]:
         return value, False
 
     atoms = []
-    for atom in re.split(r"(?i)\band\b", condition):
+    for atom in _dml_conjuncts(condition):
         mt = _DML_ATOM.match(atom)
-        mi = None if mt else _DML_IN_ATOM.match(atom)
-        if mt is None and mi is None:
+        mb = None if mt else _DML_BETWEEN_ATOM.match(atom)
+        mi = None if mt or mb else _DML_IN_ATOM.match(atom)
+        if mt is None and mb is None and mi is None:
             return files
-        col = (mt or mi).group(1)
-        lits = [mt.group(3)] if mt else re.findall(_DML_LITERAL, mi.group(2))
+        col = (mt or mb or mi).group(1)
+        if mt:
+            op, lits = mt.group(2), [mt.group(3)]
+        elif mb:
+            op, lits = "between", [mb.group(2), mb.group(3)]
+        else:
+            op, lits = "in", re.findall(_DML_LITERAL, mi.group(2))
         parsed = [_literal_value(lit, col_types.get(col)) for lit in lits]
         if None in parsed:
             # no sound probe domain (for an IN, one such value makes the
             # union total): the atom prunes nothing
             continue
-        op = mt.group(2) if mt else "in"
         value, temporal = parsed[0]
-        if op == "=" and temporal:
+        if op == "between":
+            hi = parsed[1][0]
+            # lo > hi matches no row; the empty IN keeps no file
+            atoms.append((col, []) if value > hi else (col, value, hi))
+        elif op == "=" and temporal:
             # temporal equality prunes as the degenerate stats range
             # [v, v]: the bloom build hashed a different canonical form
             atoms.append((col, value, value))
@@ -3236,7 +3267,7 @@ def snap_read_where_in(
     m = _read_manifest(root, version)
     if not values:
         schema = T.StructType.fromJson(json.loads(m["schema"]))
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     values = list(values)
     return _source_frame(spark, m, _plan_files(m, [(col, values)])).filter(
         F.col(col).isin(values)
@@ -3561,7 +3592,7 @@ def snap_read_staged(
     _touch(os.path.join(st["commit_dir"], "_heartbeat"))
     schema = T.StructType.fromJson(json.loads(st["schema"]))
     if not st["files"]:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return spark.read.schema(schema).parquet(*st["files"])
 
 
@@ -4584,18 +4615,18 @@ def snap_merge(
         store_keys = touched_rows.select(*on).distinct()
         parts.append(source.join(store_keys, on, "left_anti"))
     if not parts:
-        new_data = spark.createDataFrame([], schema)
+        new_data = local_frame(spark, [], schema)
     else:
         new_data = parts[0]
         for p in parts[1:]:
             new_data = new_data.unionByName(p)
     changes = None
     if m.get("cdf"):
-        cparts = [spark.createDataFrame([], _cdf_schema(schema))]
+        cparts = [local_frame(spark, [], _cdf_schema(schema))]
         matched_all = (
             _source_frame(spark, m, touched).join(keys, on, "left_semi")
             if touched
-            else spark.createDataFrame([], schema)
+            else local_frame(spark, [], schema)
         )
         matched_hit = matched_all.filter(hit)
         if when_matched == "update":
@@ -4668,7 +4699,7 @@ def snap_update_where(
         )
     if not m["files"]:
         return _rewrite_commit(
-            spark, root, m, [], spark.createDataFrame([], schema), "merge", tag
+            spark, root, m, [], local_frame(spark, [], schema), "merge", tag
         )
     store = _source_frame(
         spark, m, _dml_candidate_files(m, condition), file_col="_sf"
@@ -4682,9 +4713,9 @@ def snap_update_where(
         raise RuntimeError(f"discovered files outside the manifest: {unknown}")
     changes = None
     if not touched:
-        new_data = spark.createDataFrame([], schema)
+        new_data = local_frame(spark, [], schema)
         if m.get("cdf"):
-            changes = spark.createDataFrame([], _cdf_schema(schema))
+            changes = local_frame(spark, [], _cdf_schema(schema))
     else:
         hit = F.coalesce(cond, F.lit(False))
         exprs = []
@@ -4900,7 +4931,7 @@ def snap_delete_where(
     schema = T.StructType.fromJson(json.loads(m["schema"]))
     if not m["files"]:
         return _rewrite_commit(
-            spark, root, m, [], spark.createDataFrame([], schema), "merge", tag
+            spark, root, m, [], local_frame(spark, [], schema), "merge", tag
         )
     store = _source_frame(
         spark, m, _dml_candidate_files(m, condition), file_col="_sf"
@@ -4914,9 +4945,9 @@ def snap_delete_where(
         raise RuntimeError(f"discovered files outside the manifest: {unknown}")
     changes = None
     if not touched:
-        new_data = spark.createDataFrame([], schema)
+        new_data = local_frame(spark, [], schema)
         if m.get("cdf"):
-            changes = spark.createDataFrame([], _cdf_schema(schema))
+            changes = local_frame(spark, [], _cdf_schema(schema))
     else:
         # NULL-condition rows are NOT deletes (same as the discovery
         # filter): keep everything except rows where cond is TRUE
@@ -5030,7 +5061,7 @@ def snap_overwrite_where(
             .filter(F.coalesce(cond, F.lit(False)))
             .withColumn("_change_type", F.lit("delete"))
             if touched
-            else spark.createDataFrame([], _cdf_schema(schema))
+            else local_frame(spark, [], _cdf_schema(schema))
         )
         changes = deleted.unionByName(
             new_data.withColumn("_change_type", F.lit("insert"))

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from wsspark.exec import persisted
+from wsspark.exec import local_frame, persisted
 from wsspark.io import configure_timestamp_reads, convert_ns_timestamp
 from wsspark.ops.audit import snapshot_diff
 from wsspark.ops.functions import apply_movements
@@ -324,7 +324,7 @@ class SnapshotMaintainer:
             return df
         fields = [T.StructField(k, T.LongType()) for k in self.keys]
         fields.append(T.StructField("quantity_on_hand", T.LongType()))
-        return self.spark.createDataFrame([], T.StructType(fields))
+        return local_frame(self.spark, [], T.StructType(fields))
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         # foreachBatch is at-least-once: a crash between the sink write and
@@ -1030,7 +1030,8 @@ class StreamingMVMaintainer:
         df = self._state.read(self.spark)
         if df is not None:
             return df
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [],
             T.StructType(
                 [
@@ -1085,7 +1086,8 @@ class StreamingCdfMVMaintainer:
         df = self._state.read(self.spark)
         if df is not None:
             return df
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [],
             T.StructType(
                 [
@@ -1190,7 +1192,8 @@ class StreamingCdfDriftMonitor:
         cur = {k: n for k, n in cur.items() if n != 0}
         rows = [(c, b, int(n)) for (c, b), n in sorted(cur.items())]
         self._state.commit(
-            self.spark.createDataFrame(
+            local_frame(
+                self.spark,
                 rows, "col string, bucket string, n long"
             ).coalesce(1),
             batch_id,
@@ -1203,7 +1206,8 @@ class StreamingCdfDriftMonitor:
             self.numeric_cols, self.cat_cols, self.edges,
             self.base_counts, self._cur(), psi_alert,
         )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             sorted(out),
             "column string, kind string, n_base long, n_current long, "
             "psi double, drifted boolean",
@@ -1363,7 +1367,8 @@ class StreamingDriftMonitor:
                 tc,
                 self.psi_alert,
             )
-        self.spark.createDataFrame(
+        local_frame(
+            self.spark,
             sorted(rows),
             "column string, kind string, n_base long, n_current long, "
             "psi double, drifted boolean",
@@ -1396,7 +1401,8 @@ class StreamingDriftMonitor:
                 if bid <= last:
                     dirs.append(os.path.join(self.drift_path, name))
         if not dirs:
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [],
                 "column string, kind string, n_base long, n_current long, "
                 "psi double, drifted boolean, batch_id int",
