@@ -2,23 +2,23 @@
 
     python tools/ab.py --base main --workload table_dml --seeds 501-510
 
-Checks the base ref out into a detached ``git worktree`` under the system
-temp dir (or uses ``--base-dir``, an existing checkout of it), then runs
+Extracts the tree of the base ref (``git archive``) into a directory under
+the system temp dir, then runs
 ``perfbench/run.py --workload W --seed S --seconds N --trace T`` once per
 side for every seed, each run a fresh process and a cold JVM started from
-that side's own files. The side that runs first alternates per seed: the
-base on the 1st, 3rd, ... seed, the change on the 2nd, 4th, ...
+that side's own files. ``N`` is BENCHMARK.json's ``run_seconds``. The side
+that runs first alternates per seed: the base on the 1st, 3rd, ... seed,
+the change on the 2nd, 4th, ...
 
 The steal-exclusion rule is printed before any run: a pair whose base or
-change run spent more than ``--max-steal`` of the host's CPU time on
+change run spent more than ``MAX_STEAL`` of the host's CPU time on
 hypervisor steal (perfbench's ``steal_share`` stamp) is excluded from the
 summary and listed. For every metric of the run's list in BENCHMARK.json
 (``end_to_end`` untraced, ``per_layer`` traced) the summary prints each
 side's median, quartiles, min and max over the kept pairs, and how many
 kept pairs the change won. Every run's ``steal_share`` and
-``external_cpu_share`` is printed, excluded pairs included. ``--json``
-also writes the runs and the summary to a file. The worktree is removed
-on exit.
+``external_cpu_share`` is printed, excluded pairs included. The extracted
+base tree is removed on exit.
 """
 
 from __future__ import annotations
@@ -33,6 +33,8 @@ import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 STAMP = "perfbench stamp: "
+MAX_STEAL = 0.02  # steal_share above which a pair is excluded
+RUN_TIMEOUT_S = 1800
 
 
 def parse_seeds(text: str) -> list[int]:
@@ -51,17 +53,25 @@ def quartiles(values: list[float]) -> tuple[float, float]:
     return q1, q3
 
 
-def run_side(root: str, args, seed: int) -> dict:
+def extract_tree(ref: str, dest: str) -> None:
+    """The files of ``ref`` under ``dest``: a plain directory, no git state."""
+    tar = subprocess.run(
+        ["git", "-C", REPO, "archive", ref], check=True, capture_output=True
+    ).stdout
+    subprocess.run(["tar", "-x", "-C", dest], input=tar, check=True)
+
+
+def run_side(root: str, args, seconds: float, seed: int) -> dict:
     """One cold perfbench run from ``root``; its JSON result plus stamp."""
     cmd = [
         sys.executable, "perfbench/run.py", "--workload", args.workload,
-        "--seed", str(seed), "--seconds", str(args.seconds),
+        "--seed", str(seed), "--seconds", str(seconds),
         "--trace", str(args.trace),
     ]
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     proc = subprocess.run(
         cmd, cwd=root, env=env, capture_output=True, text=True,
-        timeout=args.timeout,
+        timeout=RUN_TIMEOUT_S,
     )
     lines = proc.stdout.strip().splitlines()
     stamp = next(
@@ -120,39 +130,29 @@ def fmt(v) -> str:
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--base", required=True, help="git ref of the base side")
-    p.add_argument("--base-dir", help="an existing checkout of the base ref")
     p.add_argument("--workload", required=True)
     p.add_argument("--seeds", required=True, type=parse_seeds)
-    p.add_argument("--seconds", type=float, default=12)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    p.add_argument("--max-steal", type=float, default=0.02)
-    p.add_argument("--timeout", type=float, default=1800, help="per run, seconds")
-    p.add_argument("--json", help="also write runs and summary here")
     args = p.parse_args(argv)
 
     with open(os.path.join(REPO, "BENCHMARK.json")) as f:
-        metrics = json.load(f)["per_layer" if args.trace else "end_to_end"]
+        bench = json.load(f)
+    seconds = bench["run_seconds"]
+    metrics = bench["per_layer" if args.trace else "end_to_end"]
     print(
         f"exclusion rule: a pair is excluded when its base or change run has "
-        f"steal_share > {args.max_steal}",
+        f"steal_share > {MAX_STEAL}",
         flush=True,
     )
-    worktree = None
-    base_root = args.base_dir
-    if base_root is None:
-        worktree = tempfile.mkdtemp(prefix="wsspark-ab-")
-        subprocess.run(
-            ["git", "-C", REPO, "worktree", "add", "--detach", worktree, args.base],
-            check=True, capture_output=True,
-        )
-        base_root = worktree
     pairs = []
-    try:
+    with tempfile.TemporaryDirectory(prefix="wsspark-ab-") as base_root:
+        extract_tree(args.base, base_root)
         for i, seed in enumerate(args.seeds):
             order = ("base", "change") if i % 2 == 0 else ("change", "base")
             pair = {"seed": seed, "first": order[0]}
             for side in order:
-                pair[side] = run_side(base_root if side == "base" else REPO, args, seed)
+                root = base_root if side == "base" else REPO
+                pair[side] = run_side(root, args, seconds, seed)
             pairs.append(pair)
             print(
                 f"seed {seed} ({order[0]} first): "
@@ -166,19 +166,10 @@ def main(argv=None) -> int:
                 ),
                 flush=True,
             )
-    finally:
-        if worktree is not None:
-            subprocess.run(
-                ["git", "-C", REPO, "worktree", "remove", "--force", worktree],
-                capture_output=True,
-            )
-            subprocess.run(
-                ["git", "-C", REPO, "worktree", "prune"], capture_output=True
-            )
 
     def excluded(pair) -> bool:
         return any(
-            (pair[s]["steal_share"] or 0.0) > args.max_steal for s in ("base", "change")
+            (pair[s]["steal_share"] or 0.0) > MAX_STEAL for s in ("base", "change")
         )
 
     kept = [x for x in pairs if not excluded(x)]
@@ -217,10 +208,6 @@ def main(argv=None) -> int:
             vals = " ".join(fmt(r["metrics"].get(k)) for k in shown)
             print(f"  {x['seed']} {side:6s} {vals} steal={fmt(r['steal_share'])} "
                   f"ext_cpu={fmt(r['external_cpu_share'])}")
-    if args.json:
-        with open(args.json, "w") as f:
-            json.dump({"args": vars(args), "excluded": dropped, "pairs": pairs,
-                       "summary": rows}, f, indent=1)
     return 1 if bad else 0
 
 

@@ -37,7 +37,11 @@ from wsspark.queries import llm as llmq
 # A stream is waited for in slices of STREAM_POLL_S seconds for as long as
 # it works — a trigger is running, or its progress moved since the last
 # slice — so a busy host finishes late instead of failing. It is stopped
-# and reported only after STREAM_STALL_S seconds of neither.
+# and reported only after STREAM_STALL_S seconds of neither. A trigger that
+# hangs (a deadlocked foreachBatch, a stuck task) stays active, so nothing
+# here bounds it: the wait then ends only with the caller's own timeout.
+# Counting a stall from progress alone would fail a single availableNow
+# batch that is slow on a busy host, which is what this wait is for.
 STREAM_POLL_S = 5.0
 STREAM_STALL_S = 300.0
 
