@@ -1321,7 +1321,7 @@ def test_pin_result_cap_bounds_work_and_raises(spark, tmp_path):
     counting — while any in-cap result passes through bit-identical."""
     from pyspark.sql import functions as F
 
-    from wsspark.queries.llm import _pin_cap_guard, _pin_result
+    from wsspark.queries.shared import _pin_cap_guard, _pin_result
 
     big = spark.range(0, 300).repartition(3)
     # bounded-work property: the guard keeps at most cap+1 rows PER

@@ -4,8 +4,10 @@ CDC reads, manifest-stats file skipping, exactly-once streaming sink."""
 
 from __future__ import annotations
 
+import ast
 import json
 import os
+import pathlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -509,15 +511,6 @@ def test_metadata_count_bytes_and_schema_diff(spark, tmp_path):
     )
     d = ss.snap_schema_diff(root, 0, ss.snap_current_version(root))
     assert d == {"added": [("note", "string")], "removed": [], "changed": []}
-    # older-manifest fallback: strip file_meta and re-count via footers
-    # (_materialize so the rewrite is a plain inline JSON in both the
-    # inline and detail-sidecar modes)
-    v = ss.snap_current_version(root)
-    m = ss._materialize(ss._read_manifest(root, v))
-    del m["file_meta"]
-    with open(ss._manifest_path(root, v), "w") as f:
-        json.dump(m, f)
-    assert ss.snap_count(root) == 210
 
 
 def test_vacuum_spares_in_flight_writer_staging(spark, tmp_path):
@@ -2985,3 +2978,85 @@ def test_delete_dv_concurrent_sidecars_order_independent(
     assert got_delayed == got_default
     assert got_delayed[0] == 6 and got_delayed[1] == list(range(6))
     assert got_delayed[2] == [(i, "delete") for i in range(6, 10)]
+
+
+def test_table_props_follow_the_commit_mode(spark, tmp_path):
+    """The table properties (CHECK constraints, the CDF flag) ride one
+    record, and each commit mode keeps its rule: append, DML, DV delete,
+    maintenance and metadata commits carry them, a user overwrite resets
+    them, a restore takes the restored version's, and a clone carries
+    the constraints but starts without the change feed."""
+    root = str(tmp_path / "t")
+
+    def props(r, v):
+        m = ss._read_manifest(r, v)
+        return {"constraints": m["constraints"], "cdf": m["cdf"]}
+
+    ss.snap_commit(_df(spark, 0, 10), root)
+    ss.snap_add_constraint(spark, root, "pos", "id >= 0")
+    v_meta = ss.snap_enable_cdf(root)
+    both = {"constraints": {"pos": "id >= 0"}, "cdf": True}
+    assert props(root, v_meta) == both
+    carried = [
+        ss.snap_commit(_df(spark, 10, 20), root, mode="append"),
+        ss.snap_update_where(spark, root, "id = 1", {"val": "val + 1"}),
+        ss.snap_delete_dv(spark, root, "id = 2"),
+        ss.snap_compact(spark, root),
+    ]
+    for v in carried:
+        assert props(root, v) == both, v
+    clone = str(tmp_path / "c")
+    ss.snap_clone(root, clone)
+    assert props(clone, 0) == {"constraints": {"pos": "id >= 0"}, "cdf": False}
+    v_ow = ss.snap_commit(_df(spark, 0, 5), root, mode="overwrite")
+    assert props(root, v_ow) == {"constraints": {}, "cdf": False}
+    v_re = ss.snap_restore(root, carried[0])
+    assert props(root, v_re) == both
+
+
+def _commit_building_dict(node) -> bool:
+    """A dict literal that names a ``parent`` — every manifest head and
+    every commit context does."""
+    return isinstance(node, ast.Dict) and any(
+        isinstance(k, ast.Constant) and k.value == "parent" for k in node.keys
+    )
+
+
+def test_only_the_props_helper_names_table_properties():
+    """``_props`` is the one place a commit builds the table properties:
+    no commit-building dict elsewhere in snapstore.py names
+    ``constraints`` or ``cdf`` as a key, no code stores them by
+    subscript, and no call but ``_props`` passes them as keywords."""
+    path = pathlib.Path(ss.__file__)
+    tree = ast.parse(path.read_text())
+    inside = {
+        id(n)
+        for f in tree.body
+        if isinstance(f, ast.FunctionDef) and f.name == "_props"
+        for n in ast.walk(f)
+    }
+    names = {"constraints", "cdf"}
+    found = []
+    for node in ast.walk(tree):
+        if id(node) in inside:
+            continue
+        if _commit_building_dict(node):
+            found += [
+                k.lineno for k in node.keys
+                if isinstance(k, ast.Constant) and k.value in names
+            ]
+        elif (
+            isinstance(node, ast.Subscript)
+            and isinstance(node.ctx, (ast.Store, ast.Del))
+            and isinstance(node.slice, ast.Constant)
+            and node.slice.value in names
+        ):
+            found.append(node.lineno)
+        elif isinstance(node, ast.Call) and not (
+            isinstance(node.func, ast.Name) and node.func.id == "_props"
+        ):
+            found += [kw.value.lineno for kw in node.keywords if kw.arg in names]
+    assert not found, (
+        "build table properties with snapstore._props, lines: "
+        + ", ".join(map(str, sorted(found)))
+    )

@@ -389,28 +389,65 @@ def test_stage_publish_on_detail_backed_store(spark, detail_mode, tmp_path):
     assert ss.snap_count(root) == 200
 
 
-def test_retired_part_stage_format_asks_for_restage(spark, tmp_path):
-    """A staged JSON whose metadata rides in ``detail_parts`` (the
-    retired task-written stage format) fails read and publish with a
-    clear re-stage error, and abort still removes it."""
+@pytest.mark.parametrize(
+    "case", ["head_without_format", "head_format_2", "staged_without_format"]
+)
+def test_format_gate_refuses_other_formats(spark, tmp_path, case):
+    """A manifest head or staged JSON whose ``format`` is not
+    ``ss.FORMAT`` is refused by every reader with one ValueError — no
+    reader keeps a fallback for another shape."""
     root = str(tmp_path / "t")
     ss.snap_commit(spark.range(0, 10).select(F.col("id")), root)
-    sid = ss.snap_stage(spark.range(10, 20).select(F.col("id")), root)
-    path = ss._staged_path(root, sid)
+    if case == "staged_without_format":
+        sid = ss.snap_stage(spark.range(10, 20).select(F.col("id")), root)
+        path = ss._staged_path(root, sid)
+    else:
+        path = ss._manifest_path(root, 0)
     with open(path) as f:
-        st = json.load(f)
-    for k in ("files", "file_stats", "file_blooms"):
-        st.pop(k)
-    st.update({"detail_parts": ["s-x-00000.detail.parquet"], "file_count": 1})
+        doc = json.load(f)
+    if case == "head_format_2":
+        doc["format"] = 2
+    else:
+        del doc["format"]
     with open(path, "w") as f:
-        json.dump(st, f)
-    with pytest.raises(ValueError, match="re-stage"):
-        ss.snap_read_staged(spark, root, sid)
-    with pytest.raises(ValueError, match="re-stage"):
-        ss.snap_publish_staged(root, sid)
-    ss.snap_abort_staged(root, sid)
-    assert not os.path.exists(path) and not os.path.exists(st["commit_dir"])
-    assert ss.snap_current_version(root) == 0 and ss.snap_count(root) == 10
+        json.dump(doc, f)
+    if case == "staged_without_format":
+        calls = [
+            lambda: ss.snap_read_staged(spark, root, sid),
+            lambda: ss.snap_publish_staged(root, sid),
+        ]
+    else:
+        calls = [
+            lambda: ss.snap_count(root),
+            lambda: ss.snap_read(spark, root),
+            lambda: ss.snap_commit(
+                spark.range(10, 20).select(F.col("id")), root
+            ),
+        ]
+    for call in calls:
+        with pytest.raises(ValueError, match="snapstore format"):
+            call()
+    assert ss.snap_current_version(root) == 0
+
+
+@pytest.mark.parametrize("sidecar", [False, True])
+def test_every_head_writer_stamps_format(spark, tmp_path, monkeypatch, sidecar):
+    """A fresh commit, a staged publish (and its staged JSON), a restore
+    and a clone each write ``format: 1``, inline and sidecar-backed."""
+    if sidecar:
+        monkeypatch.setattr(ss, "DETAIL_INLINE_MAX", 0)
+    root = str(tmp_path / "t")
+    v0 = ss.snap_commit(spark.range(0, 10).select(F.col("id")), root)
+    sid = ss.snap_stage(spark.range(10, 20).select(F.col("id")), root)
+    with open(ss._staged_path(root, sid)) as f:
+        assert json.load(f)["format"] == 1
+    v1 = ss.snap_publish_staged(root, sid)
+    v2 = ss.snap_restore(root, v0)
+    clone = str(tmp_path / "c")
+    ss.snap_clone(root, clone, v1)
+    for r, v in [(root, v0), (root, v1), (root, v2), (clone, 0)]:
+        assert _head(r, v)["format"] == ss.FORMAT == 1
+    assert ss.snap_count(root) == 10 and ss.snap_count(clone) == 20
 
 
 def test_lost_race_removes_its_sidecar(spark, detail_mode, tmp_path):
@@ -964,8 +1001,7 @@ def test_shared_sidecar_vanishing_mid_publish_is_retryable(
     m = ss._read_manifest(root, 0)
     manifest = m.head_copy()
     manifest.update({"version": 1, "parent": 0, "ts": 1.0})
-    side = m._detail_path() if hasattr(m, "_detail_path") else None
-    sides = [side] if side else list(m._part_paths())
+    sides = list(m._part_paths())
 
     def _sweep():  # the vacuum unlink landing inside the syscall gap
         for s in sides:
@@ -1160,44 +1196,14 @@ def test_files_in_detail_vacuum_never_deletes_live(spark, o1_head_mode, tmp_path
     assert ss.snap_read(spark, root).count() == 30
 
 
-def test_legacy_single_pointer_head_still_reads(spark, detail_mode, tmp_path):
-    """r13 heads carry a single ``detail_file`` string: they must read,
-    prune, and accept appends (which extend them into a parts chain)
-    unchanged."""
-    root = str(tmp_path / "t")
-    ss.snap_commit(
-        spark.range(0, 200).select(F.col("id")).repartition(2),
-        root,
-        stats_cols=["id"],
-    )
-    # rewrite the head into the legacy single-pointer form
-    h = _head(root, 0)
-    name = h.pop("detail_files")[0]
-    h.pop("detail_exact", None)
-    h["detail_file"] = name
-    os.remove(ss._manifest_path(root, 0))
-    with open(ss._manifest_path(root, 0), "w") as f:
-        json.dump(h, f)
-    m = ss._read_manifest(root, 0)
-    assert isinstance(m, ss._LazyManifest)
-    assert set(m["file_stats"]) == set(m["files"])
-    assert ss.snap_count(root) == 200
-    v = ss.snap_commit(
-        spark.range(200, 300).select(F.col("id")).repartition(1),
-        root,
-        stats_cols=["id"],
-    )
-    h1 = _parts(_head(root, v))
-    assert h1[0] == name and len(h1) == 2
-    assert ss.snap_count(root) == 300
-
-
 def test_exactness_gate_blocks_lossy_chains(spark, tmp_path, monkeypatch):
-    """A chain whose exactness is UNPROVEN (legacy head without
-    ``detail_exact``) must keep the file list inline in the head even
-    above the files threshold — vacuum's referenced-set may never
-    derive from a possibly-lossy sidecar. A full re-profile
-    (snap_analyze -> dict path) re-earns the flag."""
+    """A chain whose exactness is UNPROVEN must keep the file list
+    inline in the head even above the files threshold — vacuum's
+    referenced-set may never derive from a possibly-lossy sidecar. The
+    serializer builds such a chain when the detail dicts it is handed
+    hold an entry outside the file list: it keeps every entry and
+    forfeits ``detail_exact``. Appends atop it stay non-exact; a full
+    rewrite (compaction) re-earns the flag."""
     monkeypatch.setattr(ss, "DETAIL_INLINE_MAX", 0)
     root = str(tmp_path / "t")
     ss.snap_commit(
@@ -1205,14 +1211,14 @@ def test_exactness_gate_blocks_lossy_chains(spark, tmp_path, monkeypatch):
         root,
         stats_cols=["id"],
     )
-    # forge a legacy, exactness-unknown head
-    h = _head(root, 0)
-    name = h.pop("detail_files")[0]
-    h.pop("detail_exact", None)
-    h["detail_file"] = name
-    os.remove(ss._manifest_path(root, 0))
-    with open(ss._manifest_path(root, 0), "w") as f:
-        json.dump(h, f)
+    m = ss._materialize(ss._read_manifest(root, 0))
+    stray = os.path.join(ss._data_dir(root), "stray.parquet")
+    m["file_stats"][stray] = {"id": [0, 0]}
+    m.update(version=1, parent=0)
+    ss._write_manifest_file(root, m)
+    ss._advance_current(root, 1)
+    h = _head(root, 1)
+    assert "detail_exact" not in h and "files" in h
     monkeypatch.setattr(ss, "FILES_INLINE_MAX", 0)
     v = ss.snap_commit(
         spark.range(200, 300).select(F.col("id")).repartition(1),
@@ -1221,8 +1227,10 @@ def test_exactness_gate_blocks_lossy_chains(spark, tmp_path, monkeypatch):
     )
     h1 = _head(root, v)
     assert "files" in h1 and "files_in_detail" not in h1  # gate held
-    # a full re-profile rebuilds the part with the exact universe
-    v2 = ss.snap_analyze(spark, root, stats_cols=["id"])
+    assert "detail_exact" not in h1
+    assert ss.snap_count(root) == 300
+    # a compaction rewrites every file and rebuilds one exact part
+    v2 = ss.snap_compact(spark, root)
     h2 = _head(root, v2)
     assert h2.get("detail_exact") and "files" not in h2
     assert ss.snap_count(root) == 300

@@ -10,9 +10,6 @@ deletion-vector rows carry a per-row origin root so deletes recorded
 before a move keep masking rows after it (Delta/Iceberg reach the same
 property with root-relative paths; rebase-on-read preserves this
 store's absolute-path in-memory invariants instead).
-
-Legacy stores (heads from before the ``root`` key) keep the documented
-non-relocatable behavior — pinned here too.
 """
 
 from __future__ import annotations
@@ -141,30 +138,6 @@ def test_relocated_inline_store(spark, tmp_path):
     assert ss.snap_count(dst) == 50
 
 
-def test_legacy_heads_stay_non_relocatable(spark, tmp_path):
-    """A head WITHOUT the root key (pre-r15 store) must behave exactly
-    as before: no rebase is attempted, and the documented failure mode
-    (dangling absolute paths after a move) is unchanged."""
-    src = str(tmp_path / "a")
-    ss.snap_commit(_df(spark, 0, 30).coalesce(1), src)
-    # strip the root key, simulating a pre-r15 manifest
-    hp = ss._manifest_path(src, 0)
-    head = json.load(open(hp))
-    head.pop("root")
-    tmp = hp + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(head, f)
-    os.replace(tmp, hp)
-    dst = str(tmp_path / "b")
-    shutil.move(src, dst)
-    m = ss._read_manifest(dst, 0)
-    assert all(f.startswith(src + os.sep) for f in m["files"]), (
-        "legacy heads keep their recorded absolute paths"
-    )
-    with pytest.raises(Exception):
-        ss.snap_read(spark, dst).collect()
-
-
 def test_rebase_leaves_external_paths_untouched(spark, tmp_path):
     """Paths outside the recorded root (externally-registered files)
     pass through the rebase unchanged rather than being mangled."""
@@ -237,35 +210,15 @@ def test_staged_wap_survives_relocation(spark, tmp_path, sidecar_mode):
     assert ss.snap_count(dst) == 70
 
 
-def _strip_dv_root(root):
-    """Rewrite the CURRENT version's DV sidecars without the per-row
-    ``root`` column, simulating sidecars from before it existed."""
-    import pyarrow.parquet as pq
-
-    m = ss._read_manifest(root, ss.snap_current_version(root))
-    for p in m["dv_files"]:
-        t = pq.read_table(p).select(["file", "idx"])
-        pq.write_table(t, p + ".tmp")
-        os.replace(p + ".tmp", p)
-        crc = os.path.join(
-            os.path.dirname(p), "." + os.path.basename(p) + ".crc"
-        )
-        if os.path.exists(crc):
-            os.remove(crc)
-
-
 def test_rootless_dv_survives_move_then_commit(spark, tmp_path):
-    """r16 advisor HIGH: rootless (pre-r15) DV rows are interpreted as
-    'written under the head's recorded root'. The first commit after a
-    move re-records the NEW root while carrying the old sidecars —
-    without restamping, the rows re-anchor there, the rebase map comes
-    back empty, and the deleted rows silently resurrect while
-    snap_count still subtracts them. Every by-name carry path (append,
-    dv-delete, restore, the inline fold) must restamp."""
+    """The first commit after a move re-records the NEW root while
+    carrying the old DV sidecars by name; their rows keep the OLD root
+    as their origin, which now dangles and rebases, so the deletes keep
+    masking and agree with snap_count. Covers every by-name carry path:
+    append, dv-delete and restore (the inline fold has its own test)."""
     src = str(tmp_path / "a")
     ss.snap_commit(_df(spark, 0, 100).coalesce(2), src, stats_cols=["id"])
     ss.snap_delete_dv(spark, src, "id >= 90")
-    _strip_dv_root(src)
     dst = str(tmp_path / "b")
     shutil.move(src, dst)
     assert ss.snap_read(spark, dst).count() == 90  # pre-commit: rebased read
@@ -283,8 +236,8 @@ def test_rootless_dv_survives_move_then_commit(spark, tmp_path):
     ss.snap_restore(dst, 1)
     assert ss.snap_count(dst) == 90
     assert ss.snap_read(spark, dst).count() == 90
-    # a SECOND move after the restamp still resolves (stamped origins
-    # dangle -> suffix-resolved rebase)
+    # a SECOND move still resolves (the recorded origins dangle ->
+    # suffix-resolved rebase)
     dst2 = str(tmp_path / "c")
     shutil.move(dst, dst2)
     assert ss.snap_read(spark, dst2).count() == 90
@@ -296,8 +249,8 @@ def test_rootless_dv_survives_move_then_fold(
     """The inline sidecar fold also runs on a moved store: the first
     append after the move pushes the part chain past
     ``DETAIL_PARTS_MAX``, folds parts written under the OLD root into
-    one part under the new one, re-records the root, and must restamp
-    the carried rootless DV rows so they keep masking."""
+    one part under the new one and re-records the root; the carried DV
+    rows keep their old origin root and keep masking."""
     monkeypatch.setattr(ss, "DETAIL_PARTS_MAX", 2)
     src = str(tmp_path / "a")
     ss.snap_commit(
@@ -305,7 +258,6 @@ def test_rootless_dv_survives_move_then_fold(
     )
     ss.snap_commit(_df(spark, 100, 130).coalesce(1), src, stats_cols=["id"])
     ss.snap_delete_dv(spark, src, "id >= 120")
-    _strip_dv_root(src)
     dst = str(tmp_path / "b")
     shutil.move(src, dst)
     v = ss.snap_commit(_df(spark, 200, 210).coalesce(1), dst, stats_cols=["id"])
@@ -343,15 +295,12 @@ def test_clone_of_moved_source_keeps_dv_mask(spark, tmp_path):
 
 
 def test_clone_restamps_rootless_dv(spark, tmp_path):
-    """A clone's head records the CLONE root, so carried rootless DV
-    rows would re-anchor under it; the clone restamps them with the
-    source's recorded root. Correctness is observable once the source
-    moves after cloning: the stamped origin dangles and suffix-resolves
-    to the source's new location."""
+    """A clone's head records the CLONE root while the carried DV rows
+    keep the source's root as their origin, on every row, so the clone
+    reads them as recorded and masks the deleted rows."""
     src = str(tmp_path / "src")
     ss.snap_commit(_df(spark, 0, 60).coalesce(1), src, stats_cols=["id"])
     ss.snap_delete_dv(spark, src, "id >= 50")
-    _strip_dv_root(src)
     clone = str(tmp_path / "clone")
     ss.snap_clone(src, clone)
     assert ss.snap_read(spark, clone).count() == 50
@@ -360,7 +309,7 @@ def test_clone_restamps_rootless_dv(spark, tmp_path):
 
     for p in m["dv_files"]:
         col = pq.read_table(p, columns=["root"]).column("root")
-        assert col.null_count == 0, "clone stamps rootless DV rows"
+        assert col.null_count == 0, "every carried DV row has its root"
 
 
 def test_moved_store_dv_read_with_file_root_columns(spark, tmp_path):

@@ -5,17 +5,35 @@ from __future__ import annotations
 
 import os
 import shutil
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
 
 from wsspark import streaming
 from wsspark.io import read_table
-
-# llm first: llm and streamq import each other, and only this order
-# initializes both
-from wsspark.queries import llm  # noqa: F401, I001
 from wsspark.queries import streamq
+
+
+def test_streamq_imports_first_in_a_fresh_process():
+    """``llm`` builds its registry from ``streamq`` at import, so
+    ``streamq`` must import on its own in a fresh interpreter (it takes
+    the shared pin and parameters from ``queries.shared``, not ``llm``)."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "from wsspark.queries import streamq; "
+            "streamq.q_streaming_event_dedup",
+        ],
+        cwd=repo,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert r.returncode == 0, r.stderr
 
 
 @pytest.fixture()

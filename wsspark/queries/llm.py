@@ -20,6 +20,15 @@ from wsspark.io import read_table
 from wsspark.llmops import corpus, dedup, fingerprint, hashvec, pii, similarity, srp, textstats
 from wsspark.queries import Query
 from wsspark.queries import exactsum as ex
+from wsspark.queries.shared import (
+    BLOOM_BITS,
+    BLOOM_K,
+    CHUNK_OVERLAP,
+    CHUNK_SIZE,
+    NGRAM_DUP_N,
+    SNAPSTORE_RESULT_CAP,
+    _pin_result,
+)
 
 SESSION_GAP_MIN = 30
 JACCARD_THRESHOLD = 0.6
@@ -2064,59 +2073,6 @@ ORDER BY lang
 
 LOOKUP_ORDERKEYS = (1, 3, 100)
 
-# The snapstore driver queries must outlive their tempdir store, so they
-# materialize the result to the driver before deleting it. That is safe
-# only while the result stays oracle-gate-sized — cap it so an sf bump
-# can never silently turn the pattern into a fact-sized driver collect.
-# A query whose result provably scales with its input (q_mv_refresh_cdf)
-# passes its own bound instead.
-SNAPSTORE_RESULT_CAP = 1_000_000
-
-
-def _pin_cap_guard(out, cap: int):
-    """Per-partition row-position guard (LocalLimit semantics as a pure
-    JVM expression): keep only the first ``cap + 1`` rows of EACH
-    partition. ``monotonically_increasing_id`` is ``partition_id << 33 |
-    row_in_partition``, so its low 33 bits are the 0-based position
-    within the partition — no shuffle, no extra pass. Any result with
-    <= cap TOTAL rows necessarily has <= cap rows per partition, so the
-    guard passes it through bit-identical; an oversized result is
-    truncated at (cap+1) rows per partition BEFORE materialization, and
-    the truncated count still provably exceeds ``cap`` (either some
-    partition was cut at cap+1 > cap, or nothing was cut and the full
-    count rides through), so the overflow check below fires exactly when
-    the unguarded one would — it just no longer pays to materialize the
-    whole oversized result first."""
-    row_pos = F.monotonically_increasing_id().bitwiseAND(
-        F.lit((1 << 33) - 1)
-    )
-    return out.where(row_pos <= F.lit(cap))
-
-
-def _pin_result(out, cap: int | None = None):
-    """Materialize a result that must outlive its backing tempdir store
-    WITHOUT a driver round-trip (r16 optimization): an eager
-    ``localCheckpoint`` pins the computed partitions in the block store
-    and truncates lineage, so the source files can be deleted while the
-    frame stays readable, and no row passes through the driver. The
-    row-count ceiling is a count over the already-materialized blocks
-    (one cheap job), and the pin itself runs under a per-partition
-    ``cap + 1`` row guard (``_pin_cap_guard``), so an sf bump raises
-    loudly after pinning at most (cap+1) x n_partitions rows instead of
-    first materializing the full oversized result. Cluster caveat,
-    stated: localCheckpoint blocks die with their executor — acceptable
-    for these oracle-gate-sized results (the failure mode is a recompute
-    error, never a wrong answer)."""
-    cap = SNAPSTORE_RESULT_CAP if cap is None else cap
-    pinned = _pin_cap_guard(out, cap).localCheckpoint(eager=True)
-    if pinned.count() > cap:
-        raise ValueError(
-            f"snapstore driver query result exceeds the {cap}-row "
-            "materialization cap — rescope the query or stream the result"
-        )
-    return pinned
-
-
 def q_snapstore_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The table format under the driver hash gate: commit lineitem into
     a fresh hash-clustered snapstore with manifest Blooms on l_orderkey,
@@ -4153,10 +4109,6 @@ HAVING COUNT(DISTINCT source) > 1
 """
 
 
-CHUNK_SIZE = 200
-CHUNK_OVERLAP = 50
-
-
 def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """llmops.textstats.doc_chunks over the documents table. The full
     chunk text rides in the output so the driver hash covers the substring
@@ -4299,9 +4251,6 @@ FROM assigned
 GROUP BY pack_group, pack_seq
 ORDER BY pack_group, pack_seq
 """
-
-
-NGRAM_DUP_N = 5
 
 
 def q_dup_ngram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4488,10 +4437,6 @@ SELECT CAST((SELECT COUNT(*) FROM documents) AS BIGINT) AS n_docs,
              / ((SELECT COUNT(*) FROM packs) * {PACK_BUDGET}), 4)
            AS overall_fill_ratio
 """
-
-
-BLOOM_BITS = 1 << 20
-BLOOM_K = 4
 
 
 def q_dup_ngram_bloom_profile(spark: SparkSession, sf_dir: str) -> DataFrame:

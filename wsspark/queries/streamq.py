@@ -31,7 +31,7 @@ from wsspark.exec import local_frame, scratch_dir
 from wsspark.io import read_table
 from wsspark.queries import Query
 from wsspark.queries import core as coreq
-from wsspark.queries import llm as llmq
+from wsspark.queries import shared
 
 
 # A stream is waited for in slices of STREAM_POLL_S seconds for as long as
@@ -294,7 +294,7 @@ def q_streaming_snapshot_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = maintainer.attach(movements, os.path.join(d, "ckpt"))
         _await_stream(q, "snapshot upsert")
         # materialize before the store is deleted
-        return llmq._pin_result(maintainer.snapshot())
+        return shared._pin_result(maintainer.snapshot())
 
 
 STREAMING_SNAPSHOT_SQL = """
@@ -340,7 +340,7 @@ def q_streaming_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q = index.attach(src, os.path.join(d, "ckpt"))
         _await_stream(q, "dedup index")
-        return llmq._pin_result(
+        return shared._pin_result(
             spark.read.parquet(index.pairs_path).select("doc_a", "doc_b", "jaccard")
         )
 
@@ -415,11 +415,11 @@ def q_streaming_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         dedup = streaming.StreamingChunkDedup(
             spark, os.path.join(d, "store"),
-            chunk_size=llmq.CHUNK_SIZE, overlap=llmq.CHUNK_OVERLAP,
+            chunk_size=shared.CHUNK_SIZE, overlap=shared.CHUNK_OVERLAP,
         )
         q = dedup.attach(src, os.path.join(d, "ckpt"))
         _await_stream(q, "chunk dedup")
-        return llmq._pin_result(
+        return shared._pin_result(
             spark.read.parquet(dedup.assignments_path).select(
                 "doc_id", "chunk_id", "chunk_hash", "is_dup",
                 "first_doc_id", "first_chunk_id",
@@ -434,15 +434,15 @@ STREAMING_CHUNK_DEDUP_SQL = f"""
 WITH starts AS (
     SELECT doc_id, text,
            UNNEST(generate_series(
-               0, GREATEST(LENGTH(text) - {llmq.CHUNK_OVERLAP} - 1, 0),
-               {llmq.CHUNK_SIZE - llmq.CHUNK_OVERLAP})) AS chunk_start
+               0, GREATEST(LENGTH(text) - {shared.CHUNK_OVERLAP} - 1, 0),
+               {shared.CHUNK_SIZE - shared.CHUNK_OVERLAP})) AS chunk_start
     FROM documents
 ),
 hashed AS (
     SELECT doc_id,
            CAST(ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY chunk_start)
                 - 1 AS INTEGER) AS chunk_id,
-           md5(SUBSTRING(text, chunk_start + 1, {llmq.CHUNK_SIZE}))
+           md5(SUBSTRING(text, chunk_start + 1, {shared.CHUNK_SIZE}))
                AS chunk_hash
     FROM starts
 ),
@@ -545,7 +545,7 @@ def q_streaming_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         maintainer = streaming.StreamingMVMaintainer(spark, os.path.join(d, "store"))
         q = maintainer.attach(movements, os.path.join(d, "ckpt"))
         _await_stream(q, "MV refresh")
-        return llmq._pin_result(
+        return shared._pin_result(
             maintainer.mv().select(
                 "warehouse_id",
                 "product_id",
@@ -589,12 +589,12 @@ def q_streaming_bloom_ngram_index(spark: SparkSession, sf_dir: str) -> DataFrame
             .load()
         )
         idx = streaming.StreamingBloomNgramIndex(
-            spark, os.path.join(d, "store"), n=llmq.NGRAM_DUP_N,
-            n_bits=llmq.BLOOM_BITS, k=llmq.BLOOM_K,
+            spark, os.path.join(d, "store"), n=shared.NGRAM_DUP_N,
+            n_bits=shared.BLOOM_BITS, k=shared.BLOOM_K,
         )
         q = idx.attach(src, os.path.join(d, "ckpt"))
         _await_stream(q, "ngram bloom")
-        return llmq._pin_result(
+        return shared._pin_result(
             spark.read.parquet(idx.profiles_path)
             .select("doc_id", "n_windows", "n_seen_windows", "seen_ratio")
             .orderBy("doc_id")
@@ -611,10 +611,10 @@ WITH t AS (
 grams AS (
     SELECT doc_id,
            substring(md5(array_to_string(
-               list_slice(toks, i, i + {llmq.NGRAM_DUP_N - 1}), ' ')), 1, 16)
+               list_slice(toks, i, i + {shared.NGRAM_DUP_N - 1}), ' ')), 1, 16)
                AS gram_key
     FROM t, LATERAL (SELECT UNNEST(generate_series(
-        1, len(toks) - {llmq.NGRAM_DUP_N - 1})) AS i) s
+        1, len(toks) - {shared.NGRAM_DUP_N - 1})) AS i) s
 ),
 first AS (
     SELECT gram_key, MIN(doc_id) AS first_doc FROM grams GROUP BY 1

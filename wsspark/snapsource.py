@@ -122,9 +122,6 @@ def _load_dv_map(manifest: dict) -> dict[str, list[int]]:
 
     import pyarrow.parquet as pq
 
-    reb = manifest.get("_rebase")
-    actual = reb[1] if reb else manifest.get("root")
-    recorded = reb[0] if reb else actual
     # origins whose recorded paths dangle under this manifest (store
     # moved away) rebase; origins still anchoring live files (shallow
     # clones) stay — the same classification the batch read uses
@@ -132,18 +129,14 @@ def _load_dv_map(manifest: dict) -> dict[str, list[int]]:
     out: dict[str, list[int]] = {}
     for p in dv_paths:
         t = pq.read_table(p)
-        roots = (
-            t.column("root").to_pylist()
-            if "root" in t.column_names
-            else [None] * t.num_rows
-        )
-        for f_, i_, r_ in zip(
-            t.column("file").to_pylist(), t.column("idx").to_pylist(), roots
+        for f_, i_, origin in zip(
+            t.column("file").to_pylist(),
+            t.column("idx").to_pylist(),
+            t.column("root").to_pylist(),
         ):
             # full URI normalization (scheme strip + percent-decode) so
             # encoded paths (spaces etc.) still mask their deleted rows
             k = ss._norm_dv_path(f_)
-            origin = r_ if r_ is not None else recorded
             target = rmap.get(origin)
             if target is not None and k.startswith(origin + _os.sep):
                 k = target + k[len(origin):]
@@ -588,7 +581,7 @@ class SnapstoreBatchWriter(DataSourceArrowWriter):
             ctx = ss._resolve_commit(
                 self._root, self._mode, self._schema, None, 0, 0, self._evolve
             )
-            if ctx.get("constraints") and files:
+            if ctx["props"]["constraints"] and files:
                 # table CHECK constraints gate this writer too: one scan
                 # of the staged files before the manifest publishes
                 from pyspark.sql import SparkSession
@@ -599,7 +592,7 @@ class SnapstoreBatchWriter(DataSourceArrowWriter):
                 )
                 ss._check_constraints(
                     spark.read.schema(self._schema).parquet(*files),
-                    ctx["constraints"],
+                    ctx["props"]["constraints"],
                 )
             ss._publish_commit(
                 self._root,
@@ -660,7 +653,7 @@ class SnapstoreStreamWriter(DataSourceStreamArrowWriter):
             ctx = ss._resolve_commit(
                 self._root, "append", self._schema, None, 0, 0, False
             )
-            if ctx.get("constraints") and files:
+            if ctx["props"]["constraints"] and files:
                 # table CHECK constraints gate the streaming writer too:
                 # one scan of the staged files BEFORE the tagged manifest
                 # publishes — on violation the cursor never advances (the
@@ -674,7 +667,7 @@ class SnapstoreStreamWriter(DataSourceStreamArrowWriter):
                 )
                 ss._check_constraints(
                     spark.read.schema(self._schema).parquet(*files),
-                    ctx["constraints"],
+                    ctx["props"]["constraints"],
                 )
             ss._publish_commit(
                 self._root,

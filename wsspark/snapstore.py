@@ -159,20 +159,38 @@ def _rebase_head(head: dict, recorded: str, actual: str) -> None:
             }
 
 
+# ON-DISK FORMAT: every manifest head and every staged JSON carries
+# ``format: FORMAT``, stamped at its one serialization point
+# (``_write_manifest_file``, ``snap_stage``). Readers accept exactly this
+# version and refuse anything else with one error — a head has one shape,
+# so no reader keeps a fallback for an earlier one (the protocol-version
+# gate Delta and Iceberg use in place of per-field fallbacks).
+FORMAT = 1
+
+
+def _check_format(doc: dict, path: str) -> None:
+    if doc.get("format") != FORMAT:
+        raise ValueError(
+            f"{path} has snapstore format {doc.get('format')!r}, but this "
+            f"reader reads format {FORMAT} only — rewrite the table (or "
+            "re-stage the data) with this version"
+        )
+
+
 def _read_manifest(root: str, version: int) -> dict:
-    with open(_manifest_path(root, version)) as f:
+    path = _manifest_path(root, version)
+    with open(path) as f:
         head = json.load(f)
+    _check_format(head, path)
     # RELOCATABILITY: a head published under a different root than it is
     # being read under (store moved/copied/remounted) rebases every
     # recorded path into the actual root's domain — all in-memory
     # invariants stay absolute-path-based and every compare site is
-    # untouched. Heads from before the ``root`` key existed keep the
-    # documented non-relocatable behavior.
-    recorded = head.get("root")
+    # untouched.
     actual = os.path.abspath(root)
-    if recorded and recorded != actual:
-        _rebase_head(head, recorded, actual)
-    if "detail_file" in head or "detail_files" in head:
+    if head["root"] != actual:
+        _rebase_head(head, head["root"], actual)
+    if "detail_files" in head:
         return _LazyManifest(head, root)
     return head
 
@@ -210,10 +228,9 @@ def _read_manifest(root: str, version: int) -> dict:
 #
 # MULTIPART sidecars (r14 — Iceberg's manifest-list / Delta's
 # incremental-checkpoint precedent): the head's pointer is a LIST of
-# part files (``detail_files``; legacy single ``detail_file`` still
-# reads). An append atop a sidecar-backed parent writes ONE new part
-# holding only the NEW files' rows and shares the parent's parts by
-# name — O(new files) metadata I/O per append regardless of table size
+# part files (``detail_files``). An append atop a sidecar-backed
+# parent writes ONE new part holding only the NEW files' rows and
+# shares the parent's parts by name — O(new files) metadata I/O per append regardless of table size
 # — until the chain exceeds ``DETAIL_PARTS_MAX`` (16) parts, when it
 # compacts into a single part (amortized O(files / DETAIL_PARTS_MAX) per
 # append, the same bound as Delta's every-N-commits checkpoint).
@@ -231,14 +248,21 @@ def _read_manifest(root: str, version: int) -> dict:
 # ANY file count. The exactness gate matters because vacuum's
 # referenced-set and every DML set-membership derive from the
 # reconstructed list — a lossy sidecar must never be its source of
-# truth, so legacy chains without the flag keep their inline list.
+# truth, so a chain without the flag keeps its inline list. The
+# serializer still builds such chains: detail dicts holding an entry
+# outside the manifest's file list make ``_write_manifest_file`` keep
+# every entry and forfeit the flag, and appends or rewrites atop a
+# non-exact chain stay non-exact until a full rewrite re-earns it.
+#
+# Every head also records the store ``root`` it was published under
+# and the on-disk ``format`` (see FORMAT above); both are stamped in
+# ``_write_manifest_file``, the single serialization point.
 # ---------------------------------------------------------------------------
 
 _DETAIL_KEYS = ("file_stats", "file_blooms", "file_meta")
 
 # head bookkeeping for the sidecar plane — stripped by _materialize
 _DETAIL_HEAD_KEYS = (
-    "detail_file",
     "detail_files",
     "detail_exact",
     "files_in_detail",
@@ -256,12 +280,8 @@ DETAIL_PARTS_MAX = 16  # chain length past which an append folds to one part
 
 def _pointer_names(head: dict) -> list[str]:
     """The sidecar part names a manifest head references, in
-    concatenation order (legacy single-pointer heads read as one part)."""
-    if "detail_files" in head:
-        return list(head["detail_files"])
-    if "detail_file" in head:
-        return [head["detail_file"]]
-    return []
+    concatenation order."""
+    return list(head.get("detail_files", ()))
 
 
 def _widen_float(v, direction: int) -> float | None:
@@ -294,7 +314,7 @@ def _detail_table_from_dicts(manifest: dict, paths: list[str] | None = None):
     as the manifest's file list (or an append's new-file list) so the
     part's path column reconstructs it exactly, which is what licenses
     dropping the list from the JSON head (``detail_exact``). Default:
-    the sorted union of the dict keys (legacy behavior)."""
+    the sorted union of the dict keys (a non-exact part)."""
     import pyarrow as pa
 
     stats = manifest.get("file_stats") or {}
@@ -399,13 +419,10 @@ def _detail_table_from_dicts(manifest: dict, paths: list[str] | None = None):
     )
 
 
-def _detail_stats_cols(table) -> list[str] | None:
+def _detail_stats_cols(table) -> list[str]:
     """The profiled stats columns recorded in the sidecar's schema
-    metadata, or None for sidecars from before the key existed (caller
-    derives exactly from the reconstructed dicts)."""
-    md = table.schema.metadata or {}
-    raw = md.get(b"wsspark_stats_cols")
-    return None if raw is None else json.loads(raw.decode())
+    metadata (every part is born in ``_detail_table_from_dicts``)."""
+    return json.loads(table.schema.metadata[b"wsspark_stats_cols"].decode())
 
 
 def _align_detail_tables(parent, new):
@@ -455,20 +472,11 @@ def _align_detail_tables(parent, new):
             nc = n_struct.field(c) if c in nf else pa.nulls(n_new, typ)
             children.append(pa.concat_arrays([pc.cast(typ), nc.cast(typ)]))
         out_cols[name] = pa.StructArray.from_arrays(children, fields)
-    out = pa.table(out_cols)
-    # profiled-column metadata: the union of both sides (None on either
-    # side = pre-metadata sidecar; propagate None so the rewrite config
-    # falls back to the exact dict derivation)
-    p_cols, n_cols = _detail_stats_cols(parent), _detail_stats_cols(new)
-    if p_cols is not None and n_cols is not None:
-        out = out.replace_schema_metadata(
-            {
-                b"wsspark_stats_cols": json.dumps(
-                    sorted(set(p_cols) | set(n_cols))
-                ).encode()
-            }
-        )
-    return out
+    # profiled-column metadata: the union of both sides
+    cols = set(_detail_stats_cols(parent)) | set(_detail_stats_cols(new))
+    return pa.table(out_cols).replace_schema_metadata(
+        {b"wsspark_stats_cols": json.dumps(sorted(cols)).encode()}
+    )
 
 
 _detail_cache: dict = {}  # abs detail path -> pyarrow Table (manifests are immutable)
@@ -479,8 +487,7 @@ def _stamp_part_root(table, root: str):
     """Record the store root a sidecar part was written under in its
     schema metadata — the part's path rows are absolute, so a moved
     store rebases them at load by replacing exactly this prefix
-    (``_rebase_part``). Parts written before the key existed cannot
-    self-describe and keep today's non-relocatable behavior."""
+    (``_rebase_part``)."""
     md = dict(table.schema.metadata or {})
     md[b"wsspark_part_root"] = os.path.abspath(root).encode()
     return table.replace_schema_metadata(md)
@@ -650,16 +657,6 @@ class _LazyManifest(dict):
         mdir = _manifest_dir(self._root)
         return [os.path.join(mdir, n) for n in self._part_names()]
 
-    def _detail_path(self) -> str:
-        """Legacy single-part accessor (kept for callers/tests that
-        predate multipart chains)."""
-        paths = self._part_paths()
-        if len(paths) != 1:
-            raise ValueError(
-                f"manifest has {len(paths)} sidecar parts — use _part_paths()"
-            )
-        return paths[0]
-
     def _table(self):
         return _load_detail_parts(self._part_paths())
 
@@ -752,7 +749,7 @@ def _write_manifest_file(root: str, manifest: dict, pre_publish=None) -> None:
     race, this call's parts removed). Part names carry a uuid so two
     racing committers of the same version can never cross-wire each
     other's detail files. A manifest that arrives with a pointer
-    (``detail_files``/``detail_file``) and NO detail dicts publishes
+    (``detail_files``) and NO detail dicts publishes
     the pointer as-is (shared parts — the metadata-commit / restore
     zero-copy path).
 
@@ -772,12 +769,13 @@ def _write_manifest_file(root: str, manifest: dict, pre_publish=None) -> None:
     call wrote are removed first."""
     version = manifest["version"]
     mdir = _manifest_dir(root)
-    # RELOCATABILITY (r15): every head records the store root it was
-    # published under. Readers compare it against the root they were
-    # given and rebase the head's path lists when the store has been
-    # moved (mv/cp/remount) — see _read_manifest. Internal rebase
-    # bookkeeping never serializes.
+    # Every head records the on-disk FORMAT and the store root it was
+    # published under. Readers refuse any other format, compare the
+    # root against the one they were given and rebase the head's path
+    # lists when the store has been moved (mv/cp/remount) — see
+    # _read_manifest. Internal rebase bookkeeping never serializes.
     manifest.pop("_rebase", None)
+    manifest["format"] = FORMAT
     manifest["root"] = os.path.abspath(root)
 
     def _touch_verify_shared(names: list[str]) -> None:
@@ -986,8 +984,8 @@ def _write_manifest_file(root: str, manifest: dict, pre_publish=None) -> None:
         else:
             # full dict path: ONE part whose rows are EXACTLY the file
             # list, in order — this is what licenses files_in_detail,
-            # and every chain re-earns exactness here on its next full
-            # rewrite even if born before the flag existed
+            # and a non-exact chain re-earns exactness here on its next
+            # full rewrite
             try:
                 table = _detail_table_from_dicts(manifest, paths=list(files))
                 exact = True
@@ -1060,8 +1058,9 @@ def _list_parquet(d: str) -> list[str]:
     file lists are born.
 
     FORMAT CONTRACT (explicit, by design): manifests persist ABSOLUTE
-    data-file paths, and every head additionally records the store root
-    it was published under (``root`` key, r15). Relocatability comes
+    data-file paths, and every head additionally records the on-disk
+    ``format`` (``FORMAT``; readers refuse any other) and the store root
+    it was published under (``root`` key). Relocatability comes
     from REBASE-ON-READ rather than root-relative storage: readers
     compare the recorded root against the root they were handed and
     rewrite path prefixes at load (heads in ``_rebase_head``, sidecar
@@ -1071,10 +1070,8 @@ def _list_parquet(d: str) -> list[str]:
     keeps reading, while every in-memory invariant and compare site
     stays in the absolute-path domain. Delta/Iceberg reach the same
     property with root-relative paths; rebase-on-read was chosen so the
-    on-disk form and all set-membership comparisons stay unchanged.
-    Heads from before the ``root`` key keep the documented
-    non-relocatable behavior (tests/test_snapstore_relocate.py pins
-    both)."""
+    on-disk form and all set-membership comparisons stay unchanged
+    (tests/test_snapstore_relocate.py pins it)."""
     return sorted(
         os.path.abspath(os.path.join(d, f))
         for f in os.listdir(d)
@@ -1275,8 +1272,8 @@ def _collect_file_stats(
 def _footer_meta(path: str) -> dict:
     """{rows, bytes} for one parquet file from its footer + inode — no
     data pages touched. Called at commit time for just-written files (the
-    footer is hot), and lazily for files older stores committed before
-    row metadata existed."""
+    footer is hot) and for deletion-vector / change-feed sidecar row
+    counts."""
     import pyarrow.parquet as pq
 
     return {
@@ -1417,6 +1414,27 @@ def _collect_file_blooms(
     return blooms
 
 
+# TABLE PROPERTIES — the per-table settings a head carries beside its
+# data: the CHECK ``constraints`` and the change-data-feed flag ``cdf``.
+# ``_props`` is the one place a commit builds them; every commit site
+# publishes its record, so a new property is one entry here.
+_PROP_DEFAULTS = {"constraints": {}, "cdf": False}
+
+
+def _props(src: dict | None, **changes) -> dict:
+    """The table-properties record a commit publishes: ``src``'s
+    properties with ``changes`` applied, or the defaults for no source.
+    The per-mode rule: appends, maintenance overwrites, DML and metadata
+    commits pass their parent; a restore passes the version it restores;
+    a user overwrite passes None (a new shape starts bare); a clone
+    passes its source with ``cdf=False`` (its lineage starts without a
+    change feed)."""
+    out = {k: (src or {}).get(k, v) for k, v in _PROP_DEFAULTS.items()}
+    out.update(changes)
+    out["constraints"] = dict(out["constraints"])
+    return out
+
+
 def _resolve_commit(
     root: str,
     mode: str,
@@ -1465,8 +1483,9 @@ def _resolve_commit(
         # deletes stay deleted across appends; an overwrite replaces the
         # lineage and with it every deletion vector
         "dv_files": [],
-        "constraints": {},
-        "cdf": False,
+        # an explicit user overwrite is a new shape: it drops the table
+        # properties (re-add deliberately); the branches below carry them
+        "props": _props(None),
     }
     if mode == "overwrite" and maintenance and parent is not None:
         # A MAINTENANCE rewrite republishes the same logical data
@@ -1479,9 +1498,7 @@ def _resolve_commit(
         # expected_parent alone: a user overwrite published under a
         # concurrency guard (e.g. a WAP overwrite) is a deliberate new
         # shape whose changes a feed must refuse, not skip.
-        pm_pin = _read_manifest(root, parent)
-        ctx["constraints"] = pm_pin.get("constraints", {})
-        ctx["cdf"] = pm_pin.get("cdf", False)
+        ctx["props"] = _props(_read_manifest(root, parent))
         ctx["content_preserving"] = True
     if mode == "append" and parent is not None:
         pm = _read_manifest(root, parent)
@@ -1573,16 +1590,8 @@ def _resolve_commit(
             ctx["parent_blooms"] = pm.get("file_blooms", {})
             ctx["parent_file_meta"] = pm.get("file_meta", {})
         ctx["parent_bloom_meta"] = pm.get("bloom_meta", {})
-        # carried sidecars' rootless rows must not re-anchor under the
-        # root THIS head records — see _restamp_rootless_dv
-        ctx["dv_files"] = _restamp_rootless_dv(
-            root, pm, pm.get("dv_files") or [], ctx["version"]
-        )
-        # table CHECK constraints ride appends (and, above, pinned
-        # maintenance overwrites); only an explicit user overwrite is a
-        # new shape that drops them (re-add deliberately)
-        ctx["constraints"] = pm.get("constraints", {})
-        ctx["cdf"] = pm.get("cdf", False)
+        ctx["dv_files"] = pm.get("dv_files") or []
+        ctx["props"] = _props(pm)
         for c in bloom_cols or []:
             meta = ctx["parent_bloom_meta"].get(c)
             if meta and (meta["n_bits"], meta["k"]) != (bloom_bits, bloom_k):
@@ -1658,8 +1667,7 @@ def _publish_commit(
         "bloom_meta": bloom_meta,
         "file_meta": file_meta,
         "dv_files": ctx.get("dv_files", []),
-        "constraints": ctx.get("constraints", {}),
-        "cdf": ctx.get("cdf", False),
+        **ctx["props"],
         "cdf_files": ctx.get("cdf_files", []),
         "content_preserving": ctx.get("content_preserving", False),
         # wall-clock publish instant: TIMESTAMP AS OF + time-based
@@ -1833,7 +1841,7 @@ def snap_commit(
     )
     # table CHECK constraints gate the incoming rows BEFORE any file is
     # written (one fused aggregation; ConstraintViolation, not a publish)
-    _check_constraints(df, ctx.get("constraints", {}))
+    _check_constraints(df, ctx["props"]["constraints"])
     commit_dir = os.path.join(
         _data_dir(root), f"commit-{ctx['version']:012d}-{uuid.uuid4().hex[:8]}"
     )
@@ -1920,14 +1928,13 @@ def snap_history(root: str) -> list[dict]:
     version — ``{version, mode, tag, n_files, n_new_files, rows, bytes,
     n_deleted_rows, n_constraints, cdf, n_change_rows}`` — no data file
     opened (dv/cdf sidecar footers count deleted/changed rows; rows is
-    the LIVE count, matching ``snap_count``). Rows/bytes fall back to
-    lazy footer reads for pre-metadata stores."""
+    the LIVE count, matching ``snap_count``)."""
     out = []
     prev_files: set[str] = set()
     for v in snap_versions(root):
         m = _read_manifest(root, v)
-        meta = m.get("file_meta", {})
-        fm = [(meta.get(f) or _footer_meta(f)) for f in m["files"]]
+        meta = m["file_meta"]
+        fm = [meta[f] for f in m["files"]]
         n_deleted = sum(
             _footer_meta(f)["rows"] for f in m.get("dv_files") or []
         )
@@ -2035,10 +2042,8 @@ def _norm_dv_path_col(col) -> F.Column:
 def _dv_read(spark: SparkSession, dv_paths: list[str]) -> DataFrame:
     """Schema-stable deletion-vector sidecar read: ``file`` (the raw
     ``_metadata.file_path`` URI recorded at delete time), ``idx``, and
-    ``root`` — the store root the DV was written under (r15; null for
-    sidecars from before the column existed — they read as 'written
-    under the head's recorded root'). The explicit schema makes mixed
-    old/new sidecar sets read uniformly without mergeSchema."""
+    ``root`` — the store root the DV was written under, stamped on
+    every row by every DV writer."""
     return spark.read.schema("file string, idx long, root string").parquet(
         *dv_paths
     )
@@ -2069,27 +2074,20 @@ def _dv_rebase_map(m: dict) -> dict[str, str]:
     clone root, and rebasing origin->clone-root would dangle every
     delete and silently resurrect the rows (r16)."""
     reb = m.get("_rebase")
-    actual = reb[1] if reb else m.get("root")
-    if actual is None:
-        return {}  # legacy head: non-relocatable, unchanged behavior
-    recorded = reb[0] if reb else actual
+    actual = reb[1] if reb else m["root"]
     import pyarrow.parquet as pq
 
     origins: set = set()
-    sidecars: list[tuple[str, bool]] = []
+    sidecars: list[str] = []
     for p in m.get("dv_files") or []:
         try:
-            schema_names = pq.read_schema(p).names
+            origins.update(
+                pq.read_table(p, columns=["root"]).column("root").to_pylist()
+            )
         except OSError:
             continue
-        if "root" not in schema_names:
-            origins.add(recorded)
-            sidecars.append((p, False))
-            continue
-        sidecars.append((p, True))
-        for r in pq.read_table(p, columns=["root"]).column("root").to_pylist():
-            origins.add(r if r is not None else recorded)
-    alien = {o for o in origins if o and o != actual}
+        sidecars.append(p)
+    alien = {o for o in origins if o != actual}
     if not alien:
         return {}
     files = m["files"]
@@ -2104,21 +2102,16 @@ def _dv_rebase_map(m: dict) -> dict[str, str]:
         by_base.setdefault(os.path.basename(f), []).append(f)
     votes: dict[str, dict[str, int]] = {o: {} for o in dangling}
     budget = {o: 64 for o in dangling}  # bounded sample per origin
-    for p, has_root in sidecars:
+    for p in sidecars:
         if all(b <= 0 for b in budget.values()):
             break
         try:
-            t = pq.read_table(
-                p, columns=["file", "root"] if has_root else ["file"]
-            )
+            t = pq.read_table(p, columns=["file", "root"])
         except OSError:
             continue
-        fvals = t.column("file").to_pylist()
-        rvals = (
-            t.column("root").to_pylist() if has_root else [None] * len(fvals)
-        )
-        for fv, rv in zip(fvals, rvals):
-            o = rv if rv is not None else recorded
+        for fv, o in zip(
+            t.column("file").to_pylist(), t.column("root").to_pylist()
+        ):
             if o not in dangling or budget[o] <= 0:
                 continue
             plain = _norm_dv_path(fv)
@@ -2136,7 +2129,7 @@ def _dv_rebase_map(m: dict) -> dict[str, str]:
     }
 
 
-def _dv_plain_expr(m: dict, rebase_map: dict[str, str], dv: DataFrame | None = None):
+def _dv_plain_expr(rebase_map: dict[str, str], dv: DataFrame | None = None):
     """The Column lifting a DV frame's ``file`` into the manifest's
     current plain-path domain: normalize (scheme strip + unquote), then
     rebase rows whose per-row origin root is in ``rebase_map`` (the
@@ -2145,13 +2138,8 @@ def _dv_plain_expr(m: dict, rebase_map: dict[str, str], dv: DataFrame | None = N
     Pass the dv frame to QUALIFY the column references — in a join
     against a user table that itself has ``file``/``root`` columns, an
     unqualified reference is AMBIGUOUS_REFERENCE (r16)."""
-    reb = m.get("_rebase")
-    actual = reb[1] if reb else m.get("root")
-    recorded = reb[0] if reb else actual
     plain = _norm_dv_path_col(dv["file"] if dv is not None else F.col("file"))
-    origin = F.coalesce(
-        dv["root"] if dv is not None else F.col("root"), F.lit(recorded)
-    )
+    origin = dv["root"] if dv is not None else F.col("root")
     out = plain
     for o, target in rebase_map.items():
         pre = o + os.sep
@@ -2176,87 +2164,8 @@ def _dv_anti_join(src: DataFrame, dv: DataFrame, m: dict) -> DataFrame:
     if not rmap:
         key = src["_dv_f"] == dv["file"]
     else:
-        key = _norm_dv_path_col(src["_dv_f"]) == _dv_plain_expr(m, rmap, dv)
+        key = _norm_dv_path_col(src["_dv_f"]) == _dv_plain_expr(rmap, dv)
     return src.join(dv, key & (src["_dv_i"] == dv["idx"]), "left_anti")
-
-
-def _restamp_rootless_dv(
-    dest_root: str, m: dict, dv_paths: list, version: int
-) -> list:
-    """Make rootless (pre-per-row-``root``) deletion-vector rows safe to
-    carry into a head published under a DIFFERENT root than the parent
-    recorded. ``_dv_read`` interprets a null origin as 'written under
-    the head's recorded root' — sound only while the recorded root is
-    the root those rows were actually created under. The first commit
-    after a store move (append / dv-delete / restore / inline sidecar
-    fold) re-records the NEW root while carrying the old sidecars by
-    name: null-origin rows would then read as origin==actual, the
-    rebase map comes back empty, the raw anti-join matches nothing, and
-    the deleted rows silently RESURRECT while ``snap_count`` still
-    subtracts them (r16, advisor finding). Same
-    exposure for ``snap_clone``, whose head records the clone root.
-
-    Any carried sidecar holding null-origin rows is rewritten (they are
-    delete-count-sized — a cheap driver pass) with ``root`` stamped to
-    the PARENT'S recorded root — the root the rows were created under,
-    by the same head-recorded-root invariant — into a fresh sidecar
-    under ``dest_root``'s data dir; sidecars whose rows all carry an
-    origin ride by name untouched, as does everything when the parent's
-    recorded root IS the destination (the unmoved common case — zero
-    extra I/O). The superseded sidecar stays referenced by the parent
-    head, so time travel and vacuum retention are unaffected; a
-    restamped sidecar orphaned by a lost commit race is unreferenced
-    data vacuum collects like any staged leftover.
-
-    ``_rewrite_commit`` (COW) already stamps null origins when it
-    consolidates survivors — this is the by-name-carry twin."""
-    if not dv_paths:
-        return list(dv_paths)
-    reb = m.get("_rebase")
-    recorded = reb[0] if reb else m.get("root")
-    if recorded is None:
-        return list(dv_paths)  # legacy head: non-relocatable, unchanged
-    if recorded == os.path.abspath(dest_root) and not reb:
-        return list(dv_paths)  # unmoved in-place commit: nothing shifts
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    out: list = []
-    stamp_dir: str | None = None
-    for p in dv_paths:
-        try:
-            t = pq.read_table(p)
-        except OSError:
-            out.append(p)  # unreadable here: ride by name, reads surface it
-            continue
-        names = t.schema.names
-        if "root" in names and t.column("root").null_count == 0:
-            out.append(p)
-            continue
-        if "root" in names:
-            import pyarrow.compute as pc
-
-            filled = pc.fill_null(
-                t.column("root").cast(pa.string()), recorded
-            )
-            t = t.set_column(names.index("root"), "root", filled)
-        else:
-            t = t.append_column(
-                "root", pa.array([recorded] * len(t), pa.string())
-            )
-        if stamp_dir is None:
-            stamp_dir = os.path.join(
-                _data_dir(dest_root),
-                f"commit-{version:012d}-dvrestamp-{uuid.uuid4().hex[:8]}",
-                "_dv",
-            )
-            os.makedirs(stamp_dir, exist_ok=True)
-        newp = os.path.join(
-            stamp_dir, f"restamp-{uuid.uuid4().hex[:8]}.parquet"
-        )
-        pq.write_table(t.select(["file", "idx", "root"]), newp)
-        out.append(newp)
-    return out
 
 
 def _source_frame(
@@ -2434,9 +2343,7 @@ def snap_enable_cdf(root: str) -> int:
     m = _read_manifest(root, cur)
     if m.get("cdf"):
         raise ValueError("change data feed already enabled")
-    return _publish_metadata_commit(
-        root, m, m.get("constraints", {}), extra={"cdf": True}
-    )
+    return _publish_metadata_commit(root, m, _props(m, cdf=True))
 
 
 def snap_disable_cdf(root: str) -> int:
@@ -2448,9 +2355,7 @@ def snap_disable_cdf(root: str) -> int:
     m = _read_manifest(root, cur)
     if not m.get("cdf"):
         raise ValueError("change data feed is not enabled")
-    return _publish_metadata_commit(
-        root, m, m.get("constraints", {}), extra={"cdf": False}
-    )
+    return _publish_metadata_commit(root, m, _props(m, cdf=False))
 
 
 CDF_TYPES = ("insert", "delete", "update_preimage", "update_postimage")
@@ -2562,15 +2467,12 @@ def snap_read_changes_cdf(
         key = "_cdf_path"
         while key in df.columns:
             key += "_"
-        # abspath on the map side: _metadata.file_path is always an
-        # absolute URI, while manifests from stores addressed by a
-        # RELATIVE root carry relative entries — without this the join
-        # would silently match nothing (older manifests predating
-        # absolute _list_parquet included)
+        # manifest paths are absolute (_list_parquet), the same domain
+        # as the normalized _metadata.file_path URI
         vmap = F.broadcast(
             local_frame(
                 spark,
-                [(os.path.abspath(p), v) for p, v in pairs],
+                pairs,
                 f"{key} string, _commit_version long",
             )
         )
@@ -2602,17 +2504,11 @@ def snap_read_changes_cdf(
         )
 
     frames = []
-    # scan paths abspath'd to the SAME (driver-cwd) domain as the map:
-    # legacy relative manifest entries would otherwise resolve against
-    # the JVM's user.dir while the vmap anchors to Python's cwd —
-    # silent empty-feed skew whenever the two differ
     for schema_json, pairs in append_groups.items():
         schema_v = T.StructType.fromJson(json.loads(schema_json))
         frames.append(
             _with_version(
-                spark.read.schema(schema_v).parquet(
-                    *[os.path.abspath(p) for p, _ in pairs]
-                ),
+                spark.read.schema(schema_v).parquet(*[p for p, _ in pairs]),
                 pairs,
             ).withColumn("_change_type", F.lit("insert"))
         )
@@ -2623,9 +2519,7 @@ def snap_read_changes_cdf(
         )
         frames.append(
             _with_version(
-                spark.read.schema(schema_v).parquet(
-                    *[os.path.abspath(p) for p, _ in pairs]
-                ),
+                spark.read.schema(schema_v).parquet(*[p for p, _ in pairs]),
                 pairs,
             )
         )
@@ -3159,8 +3053,7 @@ def snap_read_where_eq(
 def snap_count(root: str, version: int | None = None) -> int:
     """``COUNT(*)`` as a manifest lookup — zero data scanned, any table
     size. Per-file row counts are recorded from the parquet footers at
-    commit time; files from stores committed before row metadata existed
-    fall back to a lazy footer read (still no data pages). The lakehouse
+    commit time, for every file of every version. The lakehouse
     metadata-count optimization (Delta/Iceberg answer SELECT COUNT(*)
     the same way) as one dict sum."""
     if version is None:
@@ -3180,11 +3073,11 @@ def snap_count(root: str, version: int | None = None) -> int:
 def _meta_column_sum(m: dict, col: str) -> int:
     """Sum of a per-file meta column (rows/bytes) over the manifest's
     files. Detail-backed manifests answer from the sidecar's vectorized
-    column — NOT the O(files x bloom_bits) dict reconstruction — with a
-    per-file footer fallback only for entries the sidecar lacks
-    (pre-metadata stores)."""
+    column — NOT the O(files x bloom_bits) dict reconstruction — and
+    read the files' footers instead when the sidecar does not match the
+    file list."""
     dt = _detail_table_for_prune(m)
-    if dt is not None and col in dt.column_names:
+    if dt is not None:
         import pyarrow.compute as pc
 
         vals = dt.column(col)
@@ -3212,8 +3105,9 @@ def _meta_column_sum(m: dict, col: str) -> int:
             )
         ):
             return pc.sum(vals).as_py() or 0
-    meta = m.get("file_meta", {})
-    return sum((meta.get(f) or _footer_meta(f))[col] for f in m["files"])
+        return sum(_footer_meta(f)[col] for f in m["files"])
+    meta = m["file_meta"]
+    return sum(meta[f][col] for f in m["files"])
 
 
 def snap_bytes(root: str, version: int | None = None) -> int:
@@ -3398,12 +3292,12 @@ def snap_add_constraint(
     if cur is None:
         raise FileNotFoundError(f"no committed version in {root}")
     m = _read_manifest(root, cur)
-    constraints = dict(m.get("constraints", {}))
-    if name in constraints:
+    props = _props(m)
+    if name in props["constraints"]:
         raise ValueError(f"constraint {name!r} already exists")
     _check_constraints(_source_frame(spark, m), {name: expr})
-    constraints[name] = expr
-    return _publish_metadata_commit(root, m, constraints)
+    props["constraints"][name] = expr
+    return _publish_metadata_commit(root, m, props)
 
 
 def snap_drop_constraint(root: str, name: str) -> int:
@@ -3413,20 +3307,20 @@ def snap_drop_constraint(root: str, name: str) -> int:
     if cur is None:
         raise FileNotFoundError(f"no committed version in {root}")
     m = _read_manifest(root, cur)
-    constraints = dict(m.get("constraints", {}))
-    if name not in constraints:
+    props = _props(m)
+    if name not in props["constraints"]:
         raise ValueError(f"no constraint {name!r} on this table")
-    del constraints[name]
-    return _publish_metadata_commit(root, m, constraints)
+    del props["constraints"][name]
+    return _publish_metadata_commit(root, m, props)
 
 
 def _publish_metadata_commit(
-    root: str, m: dict, constraints: dict, extra: dict | None = None
+    root: str, m: dict, props: dict, extra: dict | None = None
 ) -> int:
-    """Publish a same-content manifest with updated metadata (constraints
-    and/or ``extra`` keys like the CDF flag) — a metadata-only commit
-    through the O_EXCL gate (empty file delta, so CDC treats it as a
-    zero-row append)."""
+    """Publish a same-content manifest with updated metadata (the table
+    ``props`` record and/or ``extra`` keys like snap_analyze's per-file
+    detail) — a metadata-only commit through the O_EXCL gate (empty file
+    delta, so CDC treats it as a zero-row append)."""
     version = m["version"] + 1
     # zero-copy for detail-backed tables: the file set is unchanged, so
     # the new version SHARES the parent's sidecar pointer instead of
@@ -3446,7 +3340,7 @@ def _publish_metadata_commit(
             "parent": m["version"],
             "mode": "append",
             "tag": None,
-            "constraints": constraints,
+            **props,
             # a metadata commit changes no rows: it must not inherit the
             # parent's change-feed sidecar as its own
             "cdf_files": [],
@@ -3512,11 +3406,12 @@ def snap_stage(
             else {}
         )
         head = {
+            # same format stamp and relocation provenance as manifest heads
+            "format": FORMAT,
+            "root": os.path.abspath(root),
             "schema": df.schema.json(),
             "bloom_meta": geometry,
             "commit_dir": commit_dir,
-            # relocation provenance, same contract as manifest heads
-            "root": os.path.abspath(root),
             "files": files,
             "file_stats": (
                 _collect_file_stats(
@@ -3543,19 +3438,20 @@ def snap_stage(
     return staged_id
 
 
-def _load_staged(root: str, staged_id: str) -> dict:
+def _read_staged(root: str, staged_id: str) -> dict:
+    """The staged JSON, ready to audit, publish or abort — format-gated
+    like a manifest head."""
     p = _staged_path(root, staged_id)
     if not os.path.exists(p):
         raise FileNotFoundError(f"no staged commit {staged_id} in {root}")
     with open(p) as f:
         st = json.load(f)
+    _check_format(st, p)
     # staged commits survive a store relocation the same way manifests
     # do: rebase the recorded paths into the actual root's domain
-    # (pre-r15 staged JSONs without the root key keep the old
-    # loudly-failing behavior after a move)
-    recorded = st.get("root")
+    recorded = st["root"]
     actual = os.path.abspath(root)
-    if recorded and recorded != actual:
+    if recorded != actual:
         st["files"] = [
             _rebase_path(f, recorded, actual) for f in st.get("files") or []
         ]
@@ -3566,20 +3462,6 @@ def _load_staged(root: str, staged_id: str) -> dict:
                     for x, v in st[k].items()
                 }
         st["commit_dir"] = _rebase_path(st["commit_dir"], recorded, actual)
-    return st
-
-
-def _read_staged(root: str, staged_id: str) -> dict:
-    """The staged JSON, ready to audit or publish. A JSON whose per-file
-    metadata lives in task-written ``detail_parts`` comes from a retired
-    stage format that nothing reads or publishes any more: it is
-    rejected here (``snap_abort_staged`` still removes it)."""
-    st = _load_staged(root, staged_id)
-    if "detail_parts" in st:
-        raise ValueError(
-            f"staged commit {staged_id} in {root} uses the retired "
-            "sidecar-part stage format — abort it and re-stage the data"
-        )
     return st
 
 
@@ -3625,14 +3507,15 @@ def snap_publish_staged(
         evolve,
         expected_parent=expected_parent,
     )
-    if ctx.get("constraints"):
+    if ctx["props"]["constraints"]:
         # the audit may not have checked the table's own CHECKs —
         # enforce them at publish like every data-introducing commit
         from pyspark.sql import SparkSession as _S
 
         spark = _S.getActiveSession() or _S.builder.getOrCreate()
         _check_constraints(
-            snap_read_staged(spark, root, staged_id), ctx["constraints"]
+            snap_read_staged(spark, root, staged_id),
+            ctx["props"]["constraints"],
         )
     version = _publish_commit(
         root,
@@ -3655,7 +3538,7 @@ def snap_abort_staged(root: str, staged_id: str) -> None:
     failed and no reader ever saw the batch."""
     import shutil
 
-    st = _load_staged(root, staged_id)
+    st = _read_staged(root, staged_id)
     os.remove(_staged_path(root, staged_id))
     shutil.rmtree(st["commit_dir"], ignore_errors=True)
 
@@ -3702,16 +3585,13 @@ def snap_restore(root: str, to_version: int | str) -> int:
         "schema": src["schema"],
         **detail,
         "bloom_meta": src.get("bloom_meta", {}),
-        "dv_files": _restamp_rootless_dv(
-            root, src, src.get("dv_files") or [], version
-        ),
+        "dv_files": src.get("dv_files") or [],
         # RESTORE restores versioned METADATA too (Delta semantics): the
-        # restored-to version's CHECK constraints come back with its data
-        "constraints": src.get("constraints", {}),
-        # the CDF table setting rides the rollback; the restore commit
-        # itself is a lineage reset with no sidecar (readers refuse
-        # crossing it, same as a user overwrite)
-        "cdf": src.get("cdf", False),
+        # restored-to version's table properties (CHECK constraints, the
+        # CDF setting) come back with its data; the restore commit itself
+        # is a lineage reset with no sidecar (readers refuse crossing it,
+        # same as a user overwrite)
+        **_props(src),
         "cdf_files": [],
         "ts": time.time(),
     }
@@ -3763,10 +3643,8 @@ def snap_layout_report(
         if version is None:
             raise FileNotFoundError(f"no committed version in {root}")
     m = _read_manifest(root, version)
-    meta = m.get("file_meta", {})
-    sizes = sorted(
-        (meta.get(f) or _footer_meta(f))["bytes"] for f in m["files"]
-    )
+    meta = m["file_meta"]
+    sizes = sorted(meta[f]["bytes"] for f in m["files"])
     n = len(sizes)
     target = target_file_mb * 1024 * 1024
     report: dict = {
@@ -4238,16 +4116,8 @@ def _rewrite_config(m: dict) -> dict:
         # arrow fast path: the COMPLETE profiled column list rides in
         # the sidecar's schema metadata (the typed index alone would
         # omit all-NULL / mixed-domain columns — review-found silent
-        # metadata narrowing); sidecars from before the metadata key
-        # fall through to the exact dict derivation.
-        t = m._table()
-        cols = _detail_stats_cols(t)
-        if cols is not None:
-            return _rewrite_config_tail(m, sorted(cols))
-        import pyarrow.compute as pc
-
-        if pc.count(t.column("stats_json")).as_py() == 0:
-            return _rewrite_config_tail(m, [])
+        # metadata narrowing)
+        return _rewrite_config_tail(m, sorted(_detail_stats_cols(m._table())))
     stats_cols = sorted(
         {c for per_file in m.get("file_stats", {}).values() for c in per_file}
     )
@@ -4288,13 +4158,9 @@ def _rewrite_commit(
     ``cdf_files`` when the table's CDF flag is on — callers pass it
     lazily so a disabled feed costs nothing."""
     version = m["version"] + 1
-    # abspath compare: touched paths come from scan metadata (absolute)
-    # while legacy manifests may hold relative entries — a mismatch here
-    # would silently rewrite NOTHING and duplicate the merged rows
-    touched_abs = {os.path.abspath(t) for t in touched}
-    untouched = [
-        f for f in m["files"] if os.path.abspath(f) not in touched_abs
-    ]
+    # touched paths are manifest entries (every discovery checks that)
+    touched_set = set(touched)
+    untouched = [f for f in m["files"] if f not in touched_set]
     cfg = _rewrite_config(m)
     schema = T.StructType.fromJson(json.loads(m["schema"]))
     ctx = {
@@ -4327,11 +4193,10 @@ def _rewrite_commit(
         ctx["parent_file_meta"] = {
             f: fm for f, fm in m.get("file_meta", {}).items() if f in set(untouched)
         }
-    # constraints survive COW rewrites; UPDATE/MERGE-produced rows must
-    # satisfy them like any other incoming rows
-    ctx["constraints"] = m.get("constraints", {})
-    ctx["cdf"] = m.get("cdf", False)
-    _check_constraints(new_data, ctx["constraints"])
+    # table properties survive COW rewrites; UPDATE/MERGE-produced rows
+    # must satisfy the constraints like any other incoming rows
+    ctx["props"] = _props(m)
+    _check_constraints(new_data, ctx["props"]["constraints"])
     commit_dir = os.path.join(
         _data_dir(root), f"commit-{version:012d}-{uuid.uuid4().hex[:8]}"
     )
@@ -4343,7 +4208,7 @@ def _rewrite_commit(
     # uuid-suffixed path raises FileExistsError exactly where
     # mode("error") would have (a concurrent CDF write landing first
     # would otherwise trip the data job's existence check).
-    if ctx["cdf"] and changes is not None:
+    if ctx["props"]["cdf"] and changes is not None:
         os.makedirs(commit_dir, exist_ok=False)
         # belt-and-braces for the mode("append") data write below: the
         # makedirs just created this uuid-suffixed dir, so no pre-existing
@@ -4369,19 +4234,11 @@ def _rewrite_commit(
         dv = _dv_read(spark, dv_paths)
         # dv 'file' is the raw _metadata URI form; normalize (scheme strip
         # + percent-decode) AND rebase relocated rows so encoded or
-        # moved paths keep their entries alive — and abspath the
-        # manifest side so legacy relative entries can't silently drop
-        # the whole sidecar (resurrecting deleted rows). Surviving rows
-        # keep their recorded file/root values (still interpretable by
-        # the per-row rebase on every later read); null origins are
-        # stamped with the head's recorded root so the provenance is
-        # explicit from here on.
-        plain = _dv_plain_expr(m, _dv_rebase_map(m))
-        live = dv.filter(
-            plain.isin([os.path.abspath(f) for f in untouched])
-        ).withColumn(
-            "root", F.coalesce(F.col("root"), F.lit(m.get("root")))
-        )
+        # moved paths keep their entries alive. Surviving rows keep
+        # their recorded file/root values (still interpretable by the
+        # per-row rebase on every later read).
+        plain = _dv_plain_expr(_dv_rebase_map(m))
+        live = dv.filter(plain.isin(untouched))
         dv_dir = os.path.join(commit_dir, "_dv")
         live.coalesce(1).write.mode("error").parquet(dv_dir)
         kept_dv = _list_parquet(dv_dir)
@@ -4842,13 +4699,10 @@ def snap_delete_dv(
         "version": m["version"] + 1,
         "parent_bloom_meta": m.get("bloom_meta", {}),
         "manifest_schema": T.StructType.fromJson(json.loads(m["schema"])),
-        "dv_files": _restamp_rootless_dv(
-            root, m, m.get("dv_files") or [], m["version"] + 1
-        ) + new_dv,
+        "dv_files": (m.get("dv_files") or []) + new_dv,
         # a dv-delete introduces no rows (nothing to validate) but the
-        # table's CHECK constraints must ride the manifest forward
-        "constraints": m.get("constraints", {}),
-        "cdf": m.get("cdf", False),
+        # table's properties must ride the manifest forward
+        "props": _props(m),
         "cdf_files": new_cdf,
     }
     if isinstance(m, _LazyManifest) and not m._loaded:
@@ -5131,12 +4985,9 @@ def snap_clone(
         "parent_files": list(m["files"]),
         "parent_bloom_meta": dict(m.get("bloom_meta", {})),
         "manifest_schema": T.StructType.fromJson(json.loads(m["schema"])),
-        # the clone head records the CLONE root: rootless rows must keep
-        # their source-recorded origin or they re-anchor under it
-        "dv_files": _restamp_rootless_dv(
-            root_dst, m, list(m.get("dv_files") or []), 0
-        ),
-        "constraints": dict(m.get("constraints", {})),
+        "dv_files": list(m.get("dv_files") or []),
+        # constraints transfer, the change feed does not (see docstring)
+        "props": _props(m, cdf=False),
     }
     if isinstance(m, _LazyManifest) and not m._loaded:
         # the clone's sidecar is the source's table re-written under
@@ -5264,4 +5115,4 @@ def snap_analyze(
             {c: {"n_bits": bloom_bits, "k": bloom_k} for c in bloom_cols}
         )
         extra["bloom_meta"] = geom
-    return _publish_metadata_commit(root, m, m.get("constraints", {}), extra)
+    return _publish_metadata_commit(root, m, _props(m), extra)
